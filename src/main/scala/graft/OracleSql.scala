@@ -2434,7 +2434,7 @@ object OracleSql {
 
     // the exact EMA recursion replayed as a recursive CTE stepping row rank
     // rn -> rn+1 per series: 0.5·x + 0.5·prev is the same IEEE op sequence
-    // the EmaExact window aggregate runs, so doubles match bit-for-bit
+    // the Recurrence.ema window aggregate runs, so doubles match bit-for-bit
     // (alpha = 0.5 is exact in binary; no decimal-literal drift)
     "q_ema_exact" ->
       """WITH RECURSIVE t AS (
@@ -3854,7 +3854,8 @@ object OracleSql {
     // Bloom replay: positions from the same hash family, 31-bit words so
     // mask arithmetic stays exact in BIGINTs; the word OR is a
     // distinct-sum of power-of-two masks in both engines. q_stream_bloom
-    // shares it verbatim: the emit-once bit changelog sum-rolls to the
+    // shares it verbatim: its bit changelog may carry a bit more than once,
+    // so the query folds it with bit_or (idempotent), which lands on the
     // identical word masks.
     "q_bloom" -> bloomSql,
     "q_stream_bloom" -> bloomSql,

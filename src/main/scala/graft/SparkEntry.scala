@@ -2912,9 +2912,10 @@ object SparkEntry {
   }
 
   /** Streaming KMV distinct-token sketch ([[graft.streaming.StreamingTSDF
-    * .kmvMins]]): per-source running k-min sets as a changelog — every
-    * hash that ever ENTERS the running set is emitted once, the sink is a
-    * superset of the final k-min set, and the batch k-min fold
+    * .kmvMins]]): each (input partition, micro-batch) emits its own k
+    * smallest distinct hashes per source — a hash may be emitted by
+    * several of them, the sink is a superset of the final k-min set, and
+    * the batch k-min fold
     * ([[graft.pipeline.Sketch.kmvFromHashes]]) over the sink reproduces
     * the batch sketch exactly for any micro-batch split — so the query
     * shares q_kmv_distinct's oracle verbatim. */
@@ -2946,8 +2947,9 @@ object SparkEntry {
   }
 
   /** Streaming Count-Min heavy hitters: token cell-count DELTAS from the
-    * ingest stream ([[graft.streaming.StreamingTSDF.cmsDeltas]], corpus-
-    * global series spread over 32 salt groups) sum-rolled into the exact
+    * ingest stream ([[graft.streaming.StreamingTSDF.cmsDeltas]], one
+    * corpus-global series, emitted per input partition and micro-batch)
+    * sum-rolled into the exact
     * batch grid, probed with the unchanged batch reader — CMS counters are
     * additive, so the roll equals [[graft.pipeline.Sketch.cmsBuild]] for
     * any micro-batching and the query shares q_cms_heavy's oracle
@@ -2973,9 +2975,11 @@ object SparkEntry {
   }
 
   /** Streaming Bloom filter build: the history corpus's set bits emitted
-    * as an emit-once CHANGELOG ([[graft.streaming.StreamingTSDF
-    * .bloomBits]]), sum-rolled per word into the exact batch filter (each
-    * bit arrives once, so the sum IS the bitwise OR), then probed with the
+    * as a CHANGELOG ([[graft.streaming.StreamingTSDF.bloomBits]]) in which
+    * a bit may arrive more than once (once per input partition and
+    * micro-batch that sets it), so the sink is folded per word with
+    * `bit_or` — idempotent, unlike `sum` — into the exact batch filter, then
+    * probed with the
     * unchanged batch [[graft.pipeline.Sketch.bloomProbe]] — the streaming
     * face of q_bloom's incremental-dedup prefilter, sharing its oracle
     * verbatim. */
@@ -3000,8 +3004,8 @@ object SparkEntry {
 
   /** Streaming Gram trainer feed: exact integer second-moment DELTAS from
     * the embedding ingest stream ([[graft.streaming.StreamingTSDF
-    * .gramDeltas]], corpus-global accumulation spread over 32 salt
-    * groups) sum-rolled per cell into the exact batch grid — Gram sums
+    * .gramDeltas]], corpus-global accumulation emitted per input partition
+    * and micro-batch) sum-rolled per cell into the exact batch grid — Gram sums
     * are additive, so the roll equals [[graft.pipeline.Pca.gramMatrix]]
     * for any micro-batching and the query shares q_gram_matrix's oracle
     * verbatim. This is the streaming face of the one-pass PCA/covariance

@@ -1,10 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+  KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.functions.Recurrence
 import graft.tsdf.Resample
 
 /** Structured Streaming counterparts of the core time-series operators.
@@ -211,218 +215,197 @@ object StreamingTSDF {
           rightMetricCols.map(m => col(s"r.$m").alias(s"right_$m"))): _*)
   }
 
-  // ------------------------------------------------ streaming EMA
+  // ------------------------------------------------ the per-series fold
+  /** A fold input row: its packed series key and event time (micros), plus
+    * a tie-breaker for operators whose order needs one. */
+  trait SeriesEvent { def series: String; def tsUs: Long; def tie: Long = 0L }
+  /** A fold state, stamped with the event time of the last row folded in;
+    * `isLate` is the late-row test against it. */
+  trait Stamped {
+    def lastTsUs: Long
+    def isLate(e: SeriesEvent): Boolean = e.tsUs < lastTsUs
+  }
+
+  /** The one per-series stream fold every stateful twin below runs on. It
+    * owns the scaffold once: project (series key, event micros, the
+    * operator's `payload` columns, raw event time), key, timeout, and per
+    * group and micro-batch:
+    *   - rows fold in event-time order ((ts, tie) — `tie` is 0 unless the
+    *     event carries one);
+    *   - LATE-ROW CONTRACT: a row late against the state
+    *     ([[Stamped.isLate]]: strictly older than the last folded
+    *     timestamp, unless the state says otherwise) is DROPPED — folding
+    *     it in would rewind per-series state that on-time history already
+    *     advanced; size the source watermark to the expected lateness if
+    *     late rows must count;
+    *   - `step` maps (key, state so far, row) to the next state and the
+    *     row's output rows; a series with no state yet gets None;
+    *   - TTL CONTRACT: with `stateTtl`, the event-time watermark is set on
+    *     the raw event time (it must sit on a column that survives into the
+    *     stateful operator) and a series' state is evicted once the
+    *     watermark passes its last folded row by the TTL — bounding state
+    *     by the ACTIVE series. An evicted series restarts from no state.
+    * Operators outside this contract stay hand-written: [[asofJoin]] and
+    * [[disjointIntervals]] keep late rows, [[stateIntervalRuns]] flushes
+    * on timeout, [[patternDfa]] and [[transitionDeltas]] emit one delta per
+    * micro-batch rather than per row. */
+  private def seriesFold[E <: Product with SeriesEvent: TypeTag,
+      S <: Product with Stamped: TypeTag, O <: Product: TypeTag](
+      df: DataFrame, tsCol: String, seriesCols: Seq[String],
+      stateTtl: Option[String], payload: Column*)(
+      step: (String, Option[S], E) => (Option[S], IterableOnce[O]))
+      : Dataset[O] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val projected = df.select(Seq(seriesKey(seriesCols).alias("series"),
+      unix_micros(col(tsCol)).alias("tsUs")) ++ payload :+
+      col(tsCol).alias("eventTime"): _*)
+    val timeoutConf =
+      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
+      else GroupStateTimeout.NoTimeout()
+    stateTtl.fold(projected)(ttl => projected.withWatermark("eventTime", ttl))
+      .as[E]
+      .groupByKey(_.series)
+      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
+        (key: String, rows: Iterator[E], state: GroupState[S]) =>
+          if (state.hasTimedOut) {
+            state.remove()
+            Iterator.empty
+          } else {
+            var cur = state.getOption
+            val out = rows.toSeq.sortBy(e => (e.tsUs, e.tie)).flatMap { e =>
+              if (cur.exists(_.isLate(e))) None
+              else { val (next, o) = step(key, cur, e); cur = next; o }
+            }
+            cur.foreach { s =>
+              state.update(s)
+              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
+                math.max(s.lastTsUs / 1000, state.getCurrentWatermarkMs() + 1), ttl))
+            }
+            out.iterator
+          }
+      }
+  }
+
+  /** A fold's (series, tsUs, value, outputs...) rows as the typed series
+    * columns, the event timestamp, the value and the named outputs. */
+  private def valueRows(out: Dataset[_], df: DataFrame, tsCol: String,
+      seriesCols: Seq[String], valueCol: String, outCols: String*): DataFrame =
+    out.toDF(Seq("series", "tsUs", "value") ++ outCols: _*)
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        timestamp_micros(col("tsUs")).alias(tsCol),
+        col("value").alias(valueCol)) ++ outCols.map(col): _*)
+
+  // not private: encoder-generated code must be able to access these
   case class EmaEvent(series: String, tsUs: Long, value: Double,
-      eventTime: java.sql.Timestamp)
-  case class EmaState(ema: Double, lastTsUs: Long)
+      eventTime: java.sql.Timestamp) extends SeriesEvent
+  /** A nullable value row: the shared recurrences skip nulls like batch. */
+  case class ValueEvent(series: String, tsUs: Long, value: Option[Double],
+      eventTime: java.sql.Timestamp) extends SeriesEvent
+
+  private def doubleValue(valueCol: String): Column =
+    col(valueCol).cast(DoubleType).alias("value")
+
+  /** The stream runner of a shared [[graft.functions.Recurrence]]: the
+    * batch twin's `init`/`step`/`emit` run per series on the fold, so the
+    * two are bit-identical by construction. `toState`/`fromState` carry the
+    * recurrence state in the operator's own state record. A null value
+    * keeps the state (and its timestamp) and the row emits the current
+    * output — null before the series' first non-null value — exactly as
+    * the batch window does. */
+  private def recurrenceFold[R, S <: Product with Stamped: TypeTag](
+      df: DataFrame, tsCol: String, seriesCols: Seq[String], valueCol: String,
+      stateTtl: Option[String], rec: Recurrence[R], outCols: Seq[String])(
+      toState: (R, Long) => S)(fromState: S => R): DataFrame = {
+    val out = seriesFold[ValueEvent, S,
+        (String, Long, Option[Double], Option[Seq[Double]])](
+        df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
+      val r = e.value match {
+        case Some(x) => Some(cur.fold(rec.init(x))(s => rec.step(fromState(s), x)))
+        case None => cur.map(fromState)
+      }
+      val next = if (e.value.isDefined) r.map(toState(_, e.tsUs)) else cur
+      (next, Some((key, e.tsUs, e.value, r.flatMap(rec.emit).map(_.toSeq))))
+    }
+    valueRows(out.toDF("series", "tsUs", "value", "out")
+      .select(col("series") +: col("tsUs") +: col("value") +:
+        outCols.indices.map(i => col("out").getItem(i)): _*),
+      df, tsCol, seriesCols, valueCol, outCols: _*)
+  }
+
+  // ------------------------------------------------ streaming EMA
+  case class EmaState(ema: Double, lastTsUs: Long) extends Stamped
 
   /** Streaming exponential moving average: ema' = α·x + (1−α)·ema per
-    * series, one double of state. This is the EXACT infinite-horizon
-    * recursion — the batch operator approximates it with a 5-term lag
-    * window (reference semantics), so the two converge as the window grows
-    * but are not bit-equal by design. Rows inside a micro-batch process in
-    * event-time order; a row arriving strictly older than the last
-    * processed timestamp is DROPPED, not folded in — folding it would
-    * rewind per-series state that on-time history already advanced (use a
-    * watermark sized to the expected lateness if late rows must count).
+    * series, one double of state — the [[graft.functions.Recurrence.ema]]
+    * recursion shared with [[graft.tsdf.Stats.emaExact]]. This is the
+    * EXACT infinite-horizon recursion; the batch `ema` operator
+    * approximates it with a 5-term lag window (reference semantics), so the
+    * two converge as the window grows but are not bit-equal by design.
     * Optional `stateTtl` evicts idle series. */
   def ema(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, alpha: Double,
-      stateTtl: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[EmaState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                cur = if (cur == null) EmaState(e.value, e.tsUs)
-                  else EmaState(alpha * e.value + (1 - alpha) * cur.ema, e.tsUs)
-                Some((key, e.tsUs, e.value, cur.ema))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "ema")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("ema").alias(s"ema_$valueCol")): _*)
-  }
+      stateTtl: Option[String] = None): DataFrame =
+    recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
+      Recurrence.ema(alpha), Seq(s"ema_$valueCol"))(
+      (r, ts) => EmaState(r.ema, ts))(s => Recurrence.Ema(s.ema))
 
   case class EwmVarState(mean: Double, variance: Double, lastTsUs: Long)
+    extends Stamped
 
-  /** Streaming EW mean + variance: the [[graft.functions.EwmVarExact]]
+  /** Streaming EW mean + variance: the [[graft.functions.Recurrence.ewmVar]]
     * recursion carried as two doubles of per-series state — bit-identical
-    * to the batch window aggregate (same IEEE ops in the same order;
-    * asserted differentially). Late rows are DROPPED (state cannot
-    * rewind). Output: series + ts + value + `ewm_mean_<col>` +
-    * `ewm_var_<col>`. */
+    * to the batch window aggregate by construction. Output: series + ts +
+    * value + `ewm_mean_<col>` + `ewm_var_<col>`. */
   def ewmVolatility(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, alpha: Double,
-      stateTtl: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[EwmVarState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                cur = if (cur == null) EwmVarState(e.value, 0.0, e.tsUs)
-                else {
-                  val d = e.value - cur.mean
-                  EwmVarState(
-                    alpha * e.value + (1 - alpha) * cur.mean,
-                    (1 - alpha) * cur.variance + alpha * d * d * (1 - alpha),
-                    e.tsUs)
-                }
-                Some((key, e.tsUs, e.value, cur.mean, cur.variance))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "mean", "variance")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("mean").alias(s"ewm_mean_$valueCol"),
-      col("variance").alias(s"ewm_var_$valueCol")): _*)
-  }
+      stateTtl: Option[String] = None): DataFrame =
+    recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
+      Recurrence.ewmVar(alpha), Seq(s"ewm_mean_$valueCol", s"ewm_var_$valueCol"))(
+      (r, ts) => EwmVarState(r.mean, r.variance, ts))(
+      s => Recurrence.EwmVar(s.mean, s.variance))
 
   case class RsiState(avgGain: Double, avgLoss: Double, lastValue: Double,
-      nMoves: Long, lastTsUs: Long)
+      nMoves: Long, lastTsUs: Long) extends Stamped
 
   /** Streaming Wilder RSI (EMA-seeded, the [[graft.tsdf.Stats.rsi]]
     * variant): per-series state is the two EMA accumulators + the previous
     * value — bit-identical to the batch form (differentially asserted).
-    * The first row of a series emits a null rsi (no move yet); late rows
-    * are DROPPED. Output: series + ts + value + `rsi_<col>`. */
+    * The first row of a series emits a null rsi (no move yet). Output:
+    * series + ts + value + `rsi_<col>`. */
   def rsi(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, n: Int,
       stateTtl: Option[String] = None): DataFrame = {
     require(n >= 1, "n must be >= 1")
     val alpha = 1.0 / n
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[RsiState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                cur = if (cur == null)
-                  RsiState(0.0, 0.0, e.value, 0L, e.tsUs)
-                else {
-                  val d = e.value - cur.lastValue
-                  val g = math.max(d, 0.0)
-                  val l = math.max(-d, 0.0)
-                  if (cur.nMoves == 0L)
-                    RsiState(g, l, e.value, 1L, e.tsUs)
-                  else RsiState(
-                    alpha * g + (1 - alpha) * cur.avgGain,
-                    alpha * l + (1 - alpha) * cur.avgLoss,
-                    e.value, cur.nMoves + 1L, e.tsUs)
-                }
-                val rsi: java.lang.Double =
-                  if (cur.nMoves == 0L || cur.avgGain + cur.avgLoss == 0.0)
-                    null
-                  else 100.0 * cur.avgGain / (cur.avgGain + cur.avgLoss)
-                Some((key, e.tsUs, e.value, Option(rsi).map(_.doubleValue)))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
+    valueRows(seriesFold[EmaEvent, RsiState, (String, Long, Double, Option[Double])](
+        df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
+      val s = cur match {
+        case None => RsiState(0.0, 0.0, e.value, 0L, e.tsUs)
+        case Some(c) =>
+          val d = e.value - c.lastValue
+          val g = math.max(d, 0.0)
+          val l = math.max(-d, 0.0)
+          if (c.nMoves == 0L) RsiState(g, l, e.value, 1L, e.tsUs)
+          else RsiState(alpha * g + (1 - alpha) * c.avgGain,
+            alpha * l + (1 - alpha) * c.avgLoss, e.value, c.nMoves + 1L, e.tsUs)
       }
-      .toDF("series", "tsUs", "value", "rsi")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("rsi").alias(s"rsi_$valueCol")): _*)
+      val rsi =
+        if (s.nMoves == 0L || s.avgGain + s.avgLoss == 0.0) None
+        else Some(100.0 * s.avgGain / (s.avgGain + s.avgLoss))
+      (Some(s), Some((key, e.tsUs, e.value, rsi)))
+    }, df, tsCol, seriesCols, valueCol, s"rsi_$valueCol")
   }
 
   case class MacdState(fast: Double, slow: Double, signal: Double,
-      lastTsUs: Long)
+      lastTsUs: Long) extends Stamped
 
   /** Streaming MACD: the three exact-EMA recursions of
     * [[graft.tsdf.Stats.macd]] carried as three doubles of per-series
     * state — bit-identical to the batch form (the signal EMA consumes the
     * just-updated fast−slow difference, exactly as the batch second window
-    * pass consumes the materialized macd column). Late rows are DROPPED.
-    * Output: series + ts + value + `macd_<col>` + `macd_signal_<col>` +
-    * `macd_hist_<col>`. */
+    * pass consumes the materialized macd column). Output: series + ts +
+    * value + `macd_<col>` + `macd_signal_<col>` + `macd_hist_<col>`. */
   def macd(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, fast: Int = 12, slow: Int = 26, signal: Int = 9,
       stateTtl: Option[String] = None): DataFrame = {
@@ -430,380 +413,118 @@ object StreamingTSDF {
     val af = 2.0 / (fast + 1)
     val as = 2.0 / (slow + 1)
     val asig = 2.0 / (signal + 1)
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[MacdState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                cur = if (cur == null) {
-                  val f = e.value; val s = e.value
-                  MacdState(f, s, f - s, e.tsUs)
-                } else {
-                  val f = af * e.value + (1 - af) * cur.fast
-                  val s = as * e.value + (1 - as) * cur.slow
-                  val m = f - s
-                  MacdState(f, s, asig * m + (1 - asig) * cur.signal, e.tsUs)
-                }
-                val m = cur.fast - cur.slow
-                Some((key, e.tsUs, e.value, m, cur.signal, m - cur.signal))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
+    valueRows(seriesFold[EmaEvent, MacdState,
+        (String, Long, Double, Double, Double, Double)](
+        df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
+      val s = cur match {
+        case None => MacdState(e.value, e.value, e.value - e.value, e.tsUs)
+        case Some(c) =>
+          val f = af * e.value + (1 - af) * c.fast
+          val sl = as * e.value + (1 - as) * c.slow
+          MacdState(f, sl, asig * (f - sl) + (1 - asig) * c.signal, e.tsUs)
       }
-      .toDF("series", "tsUs", "value", "macd", "signal", "hist")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("macd").alias(s"macd_$valueCol"),
-      col("signal").alias(s"macd_signal_$valueCol"),
-      col("hist").alias(s"macd_hist_$valueCol")): _*)
+      val m = s.fast - s.slow
+      (Some(s), Some((key, e.tsUs, e.value, m, s.signal, m - s.signal)))
+    }, df, tsCol, seriesCols, valueCol,
+      s"macd_$valueCol", s"macd_signal_$valueCol", s"macd_hist_$valueCol")
   }
 
-  case class PeakState(peak: Double, lastTsUs: Long)
+  case class PeakState(peak: Double, lastTsUs: Long) extends Stamped
 
   /** Streaming running peak + drawdown: one double of per-series state (the
     * high-water mark). Max is order-independent so the twin matches
-    * [[graft.tsdf.Stats.drawdown]] bit-for-bit on raw doubles; rows inside
-    * a micro-batch process in event-time order and a row strictly older
-    * than the last processed timestamp is DROPPED (state cannot rewind —
-    * same late-data contract as [[ema]]). Output: series + ts + value +
-    * `peak_<col>` + `drawdown_<col>`. */
+    * [[graft.tsdf.Stats.drawdown]] bit-for-bit on raw doubles. Output:
+    * series + ts + value + `peak_<col>` + `drawdown_<col>`. */
   def drawdown(df: DataFrame, tsCol: String, seriesCols: Seq[String],
-      valueCol: String, stateTtl: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[PeakState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                cur = if (cur == null) PeakState(e.value, e.tsUs)
-                  else PeakState(math.max(cur.peak, e.value), e.tsUs)
-                Some((key, e.tsUs, e.value, cur.peak, cur.peak - e.value))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "peak", "drawdown")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("peak").alias(s"peak_$valueCol"),
-      col("drawdown").alias(s"drawdown_$valueCol")): _*)
-  }
+      valueCol: String, stateTtl: Option[String] = None): DataFrame =
+    valueRows(seriesFold[EmaEvent, PeakState, (String, Long, Double, Double, Double)](
+        df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
+      val s = PeakState(cur.fold(e.value)(c => math.max(c.peak, e.value)), e.tsUs)
+      (Some(s), Some((key, e.tsUs, e.value, s.peak, s.peak - e.value)))
+    }, df, tsCol, seriesCols, valueCol, s"peak_$valueCol", s"drawdown_$valueCol")
 
   case class HoltState(level: Double, trend: Double, lastTsUs: Long)
+    extends Stamped
 
   /** Streaming Holt double-exponential smoothing: the level/trend recursion
-    * of [[graft.functions.HoltExact]] carried as two doubles of per-series
-    * state — bit-identical to the batch window aggregate on the same data
-    * (same IEEE ops in the same order; asserted differentially). Rows
-    * inside a micro-batch process in event-time order; a row strictly older
-    * than the last processed timestamp is DROPPED (state cannot rewind —
-    * see [[ema]]). Optional `stateTtl` evicts idle series. */
+    * of [[graft.functions.Recurrence.holt]] carried as two doubles of
+    * per-series state — bit-identical to the batch window aggregate by
+    * construction. Optional `stateTtl` evicts idle series. */
   def holt(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, alpha: Double, beta: Double,
-      stateTtl: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[HoltState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                cur = if (cur == null) HoltState(e.value, 0.0, e.tsUs)
-                  else {
-                    val newLevel = alpha * e.value + (1 - alpha) * (cur.level + cur.trend)
-                    HoltState(newLevel,
-                      beta * (newLevel - cur.level) + (1 - beta) * cur.trend, e.tsUs)
-                  }
-                Some((key, e.tsUs, e.value, cur.level, cur.trend))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "level", "trend")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("level").alias(s"holt_level_$valueCol"),
-      col("trend").alias(s"holt_trend_$valueCol")): _*)
-  }
+      stateTtl: Option[String] = None): DataFrame =
+    recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
+      Recurrence.holt(alpha, beta),
+      Seq(s"holt_level_$valueCol", s"holt_trend_$valueCol"))(
+      (r, ts) => HoltState(r.level, r.trend, ts))(
+      s => Recurrence.Holt(s.level, s.trend))
 
   case class KalmanState(m: Double, p: Double, k: Double, lastTsUs: Long)
+    extends Stamped
 
   /** Streaming 1-D local-level Kalman filter: the predict/update recursion
-    * of [[graft.functions.KalmanExact]] carried as three doubles of
-    * per-series state — bit-identical to the batch window aggregate on the
-    * same data (same IEEE ops in the same order; asserted differentially).
-    * Rows inside a micro-batch process in event-time order; a row strictly
-    * older than the last processed timestamp is DROPPED (state cannot
-    * rewind — see [[ema]]). Optional `stateTtl` evicts idle series. */
+    * of [[graft.functions.Recurrence.kalman]] carried as three doubles of
+    * per-series state — bit-identical to the batch window aggregate by
+    * construction. Optional `stateTtl` evicts idle series. */
   def kalmanLevel(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, q: Double, r: Double, p0: Option[Double] = None,
-      stateTtl: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val initP = p0.getOrElse(r)
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[KalmanState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                cur = if (cur == null) KalmanState(e.value, initP, 1.0, e.tsUs)
-                  else {
-                    val pPred = cur.p + q
-                    val k = pPred / (pPred + r)
-                    KalmanState(cur.m + k * (e.value - cur.m),
-                      (1.0 - k) * pPred, k, e.tsUs)
-                  }
-                Some((key, e.tsUs, e.value, cur.m, cur.p, cur.k))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "level", "variance", "gain")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("level").alias(s"kalman_level_$valueCol"),
-      col("variance").alias(s"kalman_var_$valueCol"),
-      col("gain").alias(s"kalman_gain_$valueCol")): _*)
-  }
+      stateTtl: Option[String] = None): DataFrame =
+    recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
+      Recurrence.kalman(q, r, p0.getOrElse(r)),
+      Seq("level", "var", "gain").map(f => s"kalman_${f}_$valueCol"))(
+      (k, ts) => KalmanState(k.m, k.p, k.k, ts))(
+      s => Recurrence.Kalman(s.m, s.p, s.k))
 
-  case class RollMedState(recent: Seq[Double], lastTsUs: Long)
+  case class RollMedState(recent: Seq[Double], lastTsUs: Long) extends Stamped
 
   /** Streaming rolling median over the trailing `window` observations per
     * series — bounded state (window−1 doubles per series), the streaming
     * twin of [[graft.tsdf.Stats.rollingMedian]] (same lower-median rank on
     * the same frame multiset, so bit-identical on the same data; asserted
-    * differentially). Rows inside a micro-batch process in event-time
-    * order; a row strictly older than the last processed timestamp is
-    * DROPPED (state cannot rewind — see [[ema]]). Optional `stateTtl`
-    * evicts idle series. */
+    * differentially). Optional `stateTtl` evicts idle series. */
   def rollingMedian(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, window: Int,
       stateTtl: Option[String] = None): DataFrame = {
     require(window >= 1, "window must be >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[RollMedState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var recent = state.getOption.map(_.recent.toVector).getOrElse(Vector.empty)
-            var lastTs = state.getOption.map(_.lastTsUs).getOrElse(Long.MinValue)
-            val outRows = sorted.flatMap { e =>
-              if (e.tsUs < lastTs) None
-              else {
-                val frame = (recent :+ e.value).takeRight(window)
-                val fs = frame.sorted
-                val med = fs(math.max(1, math.ceil(fs.size / 2.0).toInt) - 1)
-                recent = (recent :+ e.value).takeRight(window - 1)
-                lastTs = e.tsUs
-                Some((key, e.tsUs, e.value, med))
-              }
-            }
-            if (outRows.nonEmpty || state.exists) {
-              state.update(RollMedState(recent, lastTs))
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(lastTs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "med")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("med").alias(s"rolling_median_$valueCol")): _*)
+    valueRows(seriesFold[EmaEvent, RollMedState, (String, Long, Double, Double)](
+        df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
+      val recent = cur.fold(Vector.empty[Double])(_.recent.toVector) :+ e.value
+      val fs = recent.takeRight(window).sorted
+      val med = fs(math.max(1, math.ceil(fs.size / 2.0).toInt) - 1)
+      (Some(RollMedState(recent.takeRight(window - 1), e.tsUs)),
+        Some((key, e.tsUs, e.value, med)))
+    }, df, tsCol, seriesCols, valueCol, s"rolling_median_$valueCol")
   }
 
-  case class GapState(lastTsUs: Long)
+  case class GapState(lastTsUs: Long) extends Stamped
 
   /** Streaming observation-gap detector: emits one row per inter-event hole
     * longer than `minGapSeconds`, per series — one long of state (the last
     * seen timestamp), the streaming twin of [[graft.tsdf.Stats.gaps]]
     * (asserted differentially). The gap row emits when the closing event
-    * arrives. A row strictly older than the last processed timestamp is
-    * DROPPED (state cannot rewind — see [[ema]]). Optional `stateTtl`
-    * evicts idle series — note an evicted
-    * series forgets its last timestamp, so a hole spanning the eviction is
-    * not reported (the TTL bounds both state and lookback by design). */
+    * arrives; a dropped late row cannot report a gap that on-time history
+    * already closed. An evicted series forgets its last timestamp, so a
+    * hole spanning the eviction is not reported (the TTL bounds both state
+    * and lookback by design). */
   def gaps(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       minGapSeconds: Long, stateTtl: Option[String] = None): DataFrame = {
     require(minGapSeconds >= 0, "minGapSeconds must be >= 0")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      lit(0.0).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
     val minGapUs = minGapSeconds * 1000000L
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[GapState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var last = state.getOption.map(_.lastTsUs)
-            val outRows = sorted.flatMap { e =>
-              // a row strictly older than the processed history is dropped:
-              // folding it in would rewind `last`, and the next on-time row
-              // could then report a gap that on-time history already closed
-              if (last.exists(e.tsUs < _)) None
-              else {
-                val gap = last.filter(l => e.tsUs - l > minGapUs)
-                  .map(l => (key, l, e.tsUs))
-                last = Some(e.tsUs)
-                gap
-              }
-            }
-            last.foreach { l =>
-              state.update(GapState(l))
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(l / 1000, state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "startUs", "endUs")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("startUs")).alias("gap_start"),
-      timestamp_micros(col("endUs")).alias("gap_end"),
-      ((col("endUs") - col("startUs")) / lit(1000000L)).alias("gap_seconds")): _*)
+    seriesFold[EmaEvent, GapState, (String, Long, Long)](
+        df, tsCol, seriesCols, stateTtl, lit(0.0).alias("value")) { (key, cur, e) =>
+      (Some(GapState(e.tsUs)), cur.filter(l => e.tsUs - l.lastTsUs > minGapUs)
+        .map(l => (key, l.lastTsUs, e.tsUs)))
+    }.toDF("series", "startUs", "endUs")
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        timestamp_micros(col("startUs")).alias("gap_start"),
+        timestamp_micros(col("endUs")).alias("gap_end"),
+        ((col("endUs") - col("startUs")) / lit(1000000L)).alias("gap_seconds")): _*)
   }
 
   case class CusumEvent(series: String, tsUs: Long, value: Long)
+    extends SeriesEvent
   case class CusumState(sumHi: Long, minHi: Long, sumLo: Long, minLo: Long,
-      lastTsUs: Long)
+      lastTsUs: Long) extends Stamped
 
   /** Streaming Page's CUSUM control chart: the sequential drift detector
     * [[graft.tsdf.Stats.cusumControl]] as four longs of per-series state —
@@ -811,71 +532,28 @@ object StreamingTSDF {
     * reflection identity S_t = P_t − min(0, min_j P_j) turns into the
     * clamped CUSUM recursion with no recomputation. Exact integer
     * arithmetic end to end, so the stream is bit-identical to the batch
-    * window plan on the same data (asserted differentially). Rows inside
-    * a micro-batch process in event-time order; a row strictly older than
-    * the last processed timestamp is DROPPED (state cannot rewind — see
-    * [[ema]]). Optional `stateTtl` evicts idle series (an evicted series
-    * restarts its chart from zero — TTL bounds state by design). */
+    * window plan on the same data (asserted differentially). Optional
+    * `stateTtl` evicts idle series (an evicted series restarts its chart
+    * from zero — TTL bounds state by design). */
   def cusumControl(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, target: Long, slack: Long, threshold: Long,
       stateTtl: Option[String] = None): DataFrame = {
     require(slack >= 0, "slack must be >= 0")
     require(threshold > 0, "threshold must be > 0")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      graft.tsdf.Stats.integralOrFail(col(valueCol), "cusumControl")
-        .alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[CusumEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[CusumEvent], state: GroupState[CusumState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                val pHi = (if (cur == null) 0L else cur.sumHi) +
-                  (e.value - target - slack)
-                val pLo = (if (cur == null) 0L else cur.sumLo) +
-                  (target - slack - e.value)
-                val mHi = if (cur == null) pHi else math.min(cur.minHi, pHi)
-                val mLo = if (cur == null) pLo else math.min(cur.minLo, pLo)
-                cur = CusumState(pHi, mHi, pLo, mLo, e.tsUs)
-                val sHi = pHi - math.min(0L, mHi)
-                val sLo = pLo - math.min(0L, mLo)
-                Some((key, e.tsUs, e.value, sHi, sLo,
-                  sHi > threshold || sLo > threshold))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "cusumHi", "cusumLo", "alert")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("cusumHi").alias("cusum_hi"),
-      col("cusumLo").alias("cusum_lo"),
-      col("alert")): _*)
+    valueRows(seriesFold[CusumEvent, CusumState,
+        (String, Long, Long, Long, Long, Boolean)](
+        df, tsCol, seriesCols, stateTtl,
+        graft.tsdf.Stats.integralOrFail(col(valueCol), "cusumControl")
+          .alias("value")) { (key, cur, e) =>
+      val pHi = cur.fold(0L)(_.sumHi) + (e.value - target - slack)
+      val pLo = cur.fold(0L)(_.sumLo) + (target - slack - e.value)
+      val mHi = cur.fold(pHi)(c => math.min(c.minHi, pHi))
+      val mLo = cur.fold(pLo)(c => math.min(c.minLo, pLo))
+      val sHi = pHi - math.min(0L, mHi)
+      val sLo = pLo - math.min(0L, mLo)
+      (Some(CusumState(pHi, mHi, pLo, mLo, e.tsUs)), Some((key, e.tsUs,
+        e.value, sHi, sLo, sHi > threshold || sLo > threshold)))
+    }, df, tsCol, seriesCols, valueCol, "cusum_hi", "cusum_lo", "alert")
   }
 
   /** Streaming VWAP: volume-weighted average price per tumbling event-time
@@ -942,6 +620,21 @@ object StreamingTSDF {
       .dropDuplicatesWithinWatermark("__fp")
       .drop("__fp")
 
+  /** Stateless per-PARTITION pre-aggregation (a map-side combine): each
+    * input partition folds its rows of a micro-batch into one `V` per key
+    * (`add` from `zero`) and emits them in key order, which keeps the output
+    * deterministic per input partition (task-retry safe). No exchange, no
+    * sort, no state stores. Exact for any partitioning and any micro-batch
+    * split whenever the sink fold is additive (sums, counts) or idempotent
+    * (max, OR) — the discipline of every `*Deltas` operator below. */
+  private def partitionCombine[E, K: Ordering, V, O: Encoder](events: Dataset[E])(
+      key: E => K, zero: V)(add: (V, E) => V)(out: ((K, V)) => O): Dataset[O] =
+    events.mapPartitions { it =>
+      val acc = scala.collection.mutable.SortedMap.empty[K, V]
+      it.foreach { e => val k = key(e); acc(k) = add(acc.getOrElse(k, zero), e) }
+      acc.iterator.map(out)
+    }
+
   // ------------------------------------------------ streaming HLL registers
   case class HllEvent(series: String, bucket: Long, rho: Int,
       eventTime: java.sql.Timestamp)
@@ -994,15 +687,8 @@ object StreamingTSDF {
     // below survives only for the TTL path, whose eviction semantics
     // genuinely require remembered state.
     val out = (if (stateTtl.isEmpty)
-      events.mapPartitions { it =>
-        val regs = scala.collection.mutable.SortedMap.empty[(String, Int), Int]
-        it.foreach { e =>
-          val k = (e.series, e.bucket.toInt)
-          val cur = regs.getOrElse(k, 0)
-          if (e.rho > cur) regs(k) = e.rho
-        }
-        regs.iterator.map { case ((s, b), r) => (s, b.toLong, r) }
-      }
+      partitionCombine(events)((e: HllEvent) => (e.series, e.bucket), 0)(
+        (r, e) => math.max(r, e.rho)) { case ((s, b), r) => (s, b, r) }
     else events
       .groupByKey(_.series)
       .flatMapGroupsWithState(OutputMode.Append(),
@@ -1052,7 +738,10 @@ object StreamingTSDF {
     *
     * The in-flight buffer is ≤ k longs per series per partition — the
     * streaming face of the bounded [[graft.functions.KMinDistinctAgg]]
-    * buffer. Emission volume per (partition, batch) is ≤ k per series.
+    * buffer. Emission volume per (partition, batch) is ≤ k per series, so
+    * the SINK grows as O(batches × partitions × k) per series and does not
+    * stop growing once the sketch saturates: compact it periodically with
+    * the k-min re-fold.
     * Documents carry no event time here; the per-bucket trailing variant
     * is the place for watermark/ttl semantics. */
   def kmvMins(df: DataFrame, seriesCols: Seq[String], itemCol: Column,
@@ -1130,22 +819,8 @@ object StreamingTSDF {
       graft.pipeline.Sketch.histBin(valueCol, lo, hi, nBins).alias("bin"),
       col(tsCol).alias("eventTime"))
       .filter(col("bin").isNotNull).as[HistEvent]
-    // Stateless per-PARTITION pre-aggregation (map-side combine), not a
-    // keyed stateful operator: deltas are additive, so per-partition
-    // per-batch counts fold to the identical grid for any partitioning
-    // and any micro-batch split — and the stream plan drops its only
-    // exchange, its sort and its state-store instances (commit cost per
-    // partition per micro-batch). Sorted emission keeps the output
-    // deterministic per input partition (task-retry safe).
-    val out = projected
-      .mapPartitions { it =>
-        val acc = scala.collection.mutable.SortedMap.empty[(String, Long), Long]
-        it.foreach { e =>
-          val k = (e.series, e.bin)
-          acc(k) = acc.getOrElse(k, 0L) + 1L
-        }
-        acc.iterator.map { case ((s, b), c) => (s, b, c) }
-      }
+    val out = partitionCombine(projected)((e: HistEvent) => (e.series, e.bin),
+        0L)((c, _) => c + 1L) { case ((s, b), c) => (s, b, c) }
       .toDF("series", "bin", "cnt")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
       col("bin"), col("cnt")): _*)
@@ -1184,23 +859,9 @@ object StreamingTSDF {
         col("__a.bucket").alias("bucket"))
       .filter(col("bucket").isNotNull)
       .as[CmsEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): counter deltas are additive, so per-partition
-    // per-batch cell counts sum-fold to the identical CMS grid for any
-    // partitioning and any micro-batch split — no exchange, no sort, no
-    // state stores; parallelism comes from the input partitions instead
-    // of salt groups. Sorted emission keeps output deterministic per
-    // input partition (task-retry safe).
-    val out = projected
-      .mapPartitions { it =>
-        val acc =
-          scala.collection.mutable.SortedMap.empty[(String, Long, Long), Long]
-        it.foreach { e =>
-          val k = (e.series, e.row, e.bucket)
-          acc(k) = acc.getOrElse(k, 0L) + 1L
-        }
-        acc.iterator.map { case ((s, r, b), c) => (s, r, b, c) }
-      }
+    val out = partitionCombine(projected)(
+        (e: CmsEvent) => (e.series, e.row, e.bucket), 0L)((c, _) => c + 1L) {
+        case ((s, r, b), c) => (s, r, b, c) }
       .toDF("series", "row", "bucket", "cnt")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
       col("row"), col("bucket"), col("cnt")): _*)
@@ -1225,10 +886,12 @@ object StreamingTSDF {
     * [[histogramDeltas]] discipline): no exchange, no sort, no state
     * stores — the filter's footprint (≤ m/31 word rows per series per
     * partition per batch) bounds both the in-flight map and the sink
-    * traffic. NOTE the fold is bitwise OR, not sum: a (series, word, bit)
-    * may be emitted by several (partition, batch) pairs (the stateful
-    * emit-once form this replaced allowed a sum fold; the folded filter
-    * is bit-identical either way). Null items carry no bits. */
+    * traffic. CONTRACT: fold the sink with `bit_or(mask)`, never `sum` — a
+    * (series, word, bit) may be emitted by several (partition, batch)
+    * pairs, and only the idempotent OR lands on the batch filter. The SINK
+    * grows as O(batches × partitions × m/31) word rows per series and does
+    * not stop growing once the filter saturates: compact it periodically
+    * with the same `bit_or` fold. Null items carry no bits. */
   def bloomBits(df: DataFrame, seriesCols: Seq[String], itemCol: Column,
       mBits: Int, depth: Int, seed: Int = 97,
       wide: Boolean = false): DataFrame = {
@@ -1244,24 +907,8 @@ object StreamingTSDF {
         col("__a.mask").alias("mask"))
       .filter(col("word").isNotNull)
       .as[BloomEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): each partition emits, per (series, word), the OR of
-    // the masks it saw in the batch. Set bits are idempotent under OR,
-    // so a `bit_or(mask) per (series, word)` fold over the sink IS the
-    // filter for any partitioning and any micro-batch split — no
-    // exchange, no sort, no state stores. NOTE the fold is bitwise OR,
-    // not sum: a (series, word, bit) may now be emitted by several
-    // (partition, batch) pairs, so the old emit-once/sum contract no
-    // longer holds (the filter itself is unchanged bit-for-bit).
-    val out = projected
-      .mapPartitions { it =>
-        val words = scala.collection.mutable.SortedMap.empty[(String, Long), Long]
-        it.foreach { e =>
-          val k = (e.series, e.word)
-          words(k) = words.getOrElse(k, 0L) | e.mask
-        }
-        words.iterator.map { case ((s, w), m) => (s, w, m) }
-      }
+    val out = partitionCombine(projected)((e: BloomEvent) => (e.series, e.word),
+        0L)((m, e) => m | e.mask) { case ((s, w), m) => (s, w, m) }
       .toDF("series", "word", "mask")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
       col("word"), col("mask")): _*)
@@ -1293,18 +940,8 @@ object StreamingTSDF {
       valueCol.cast(LongType).alias("v"))
       .filter(col("key").isNotNull && col("v").isNotNull)
       .as[SumEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): sums are additive, so per-partition per-batch deltas
-    // fold identically for any partitioning and any micro-batch split.
-    val out = projected
-      .mapPartitions { it =>
-        val acc = scala.collection.mutable.SortedMap.empty[(String, Long), Long]
-        it.foreach { e =>
-          val k = (e.series, e.key)
-          acc(k) = acc.getOrElse(k, 0L) + e.v
-        }
-        acc.iterator.map { case ((s, k), v) => (s, k, v) }
-      }
+    val out = partitionCombine(projected)((e: SumEvent) => (e.series, e.key),
+        0L)((v, e) => v + e.v) { case ((s, k), v) => (s, k, v) }
       .toDF("series", "key", "s")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
       col("key"), col("s")): _*)
@@ -1331,20 +968,9 @@ object StreamingTSDF {
       eventCol.alias("ev"))
       .filter(col("t").isNotNull && col("ev").isNotNull)
       .as[KmEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): grid cells are additive, so per-partition per-batch
-    // deltas fold identically for any partitioning and micro-batching.
-    val out = projected
-      .mapPartitions { it =>
-        val acc =
-          scala.collection.mutable.SortedMap.empty[(String, Long), (Long, Long)]
-        it.foreach { e =>
-          val k = (e.series, e.t)
-          val (d, o) = acc.getOrElse(k, (0L, 0L))
-          acc(k) = (d + (if (e.ev) 1L else 0L), o + 1L)
-        }
-        acc.iterator.map { case ((s, t), (d, o)) => (s, t, d, o) }
-      }
+    val out = partitionCombine(projected)((e: KmEvent) => (e.series, e.t),
+        (0L, 0L)) { case ((d, o), e) => (d + (if (e.ev) 1L else 0L), o + 1L) } {
+        case ((s, t), (d, o)) => (s, t, d, o) }
       .toDF("series", "t", "d", "obs")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
       col("t"), col("d"), col("obs")): _*)
@@ -1397,61 +1023,57 @@ object StreamingTSDF {
       "stateTtl and eventTimeCol come together (event-time TTL eviction)")
     val spark = df.sparkSession
     import spark.implicits._
-    if (stateTtl.isEmpty) {
-      val fps = graft.pipeline.TextAnalysis.winnowFingerprints(
+    if (stateTtl.isEmpty)
+      firstOwners(graft.pipeline.TextAnalysis.winnowFingerprints(
           df, textCol, idCol, k, w)
         .select(col("fp"), col(idCol).cast(LongType).alias("doc"))
-        .as[NoveltyFp]
-      fps.groupByKey(_.fp)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.NoTimeout()) {
-          (fp: Long, rows: Iterator[NoveltyFp], state: GroupState[Long]) =>
-            val docs = rows.map(_.doc).toSet
-            if (docs.isEmpty) Iterator.empty
-            else {
-              val owner =
-                if (state.exists) state.get
-                else { val m = docs.min; state.update(m); m }
-              docs.iterator.map(d => (d, fp, d == owner))
-            }
-        }
+        .as[NoveltyFp].groupByKey(_.fp), stateTtl)(_.doc, _ => 0L)(
+        (fp, d, novel) => (d, fp, novel))
         .toDF(idCol, "fp", "novel")
-    } else {
-      val ttl = stateTtl.get
-      val fps = graft.pipeline.TextAnalysis.winnowFingerprints(
-          df, textCol, idCol, k, w, carryCols = Seq(eventTimeCol.get))
+    else
+      firstOwners(graft.pipeline.TextAnalysis.winnowFingerprints(
+          df, textCol, idCol, k, w, carryCols = eventTimeCol.toSeq)
         .select(col("fp"), col(idCol).cast(LongType).alias("doc"),
           col(eventTimeCol.get).alias("eventTime"))
-        .withWatermark("eventTime", ttl)
-        .as[NoveltyFpT]
-      fps.groupByKey(_.fp)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.EventTimeTimeout()) {
-          (fp: Long, rows: Iterator[NoveltyFpT], state: GroupState[Long]) =>
-            if (state.hasTimedOut) {
-              state.remove() // ownership forgotten past the rotation horizon
-              Iterator.empty
-            } else {
-              val batch = rows.toArray
-              if (batch.isEmpty) Iterator.empty
-              else {
-                val docs = batch.map(_.doc).toSet
-                val owner =
-                  if (state.exists) state.get
-                  else { val m = docs.min; state.update(m); m }
-                // keep-alive: eviction clock restarts at the fp's LAST
-                // sighting (floor-clamped above the current watermark,
-                // the asofJoin convention)
-                val lastMs = batch.map(_.eventTime.getTime).max
-                state.setTimeoutTimestamp(
-                  math.max(lastMs, state.getCurrentWatermarkMs() + 1), ttl)
-                docs.iterator.map(d => (d, fp, d == owner))
-              }
-            }
-        }
+        .withWatermark("eventTime", stateTtl.get)
+        .as[NoveltyFpT].groupByKey(_.fp), stateTtl)(
+        _.doc, _.eventTime.getTime)((fp, d, novel) => (d, fp, novel))
         .toDF(idCol, "fp", "novel")
-    }
   }
+
+  /** The first-owner state shared by [[noveltyOwnership]] and
+    * [[fingerprintOwnership]]: ONE long per key (its owner's id), first
+    * arrival wins and ties within a micro-batch break to the minimum id.
+    * Every arriving (key, doc) is emitted once with its `novel` flag. With
+    * `stateTtl` (the rows then carry a watermarked event time, `eventMs`)
+    * ownership is forgotten once the watermark passes the key's LAST
+    * sighting by the TTL: the eviction clock restarts at each sighting,
+    * floor-clamped above the current watermark (the [[asofJoin]]
+    * convention). */
+  private def firstOwners[K, E, O: Encoder](grouped: KeyValueGroupedDataset[K, E],
+      stateTtl: Option[String])(doc: E => Long, eventMs: E => Long)(
+      out: (K, Long, Boolean) => O): Dataset[O] =
+    grouped.flatMapGroupsWithState(OutputMode.Append(),
+      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
+      else GroupStateTimeout.NoTimeout()) {
+      (key: K, rows: Iterator[E], state: GroupState[Long]) =>
+        if (state.hasTimedOut) {
+          state.remove() // ownership forgotten past the rotation horizon
+          Iterator.empty
+        } else {
+          val batch = rows.toVector
+          if (batch.isEmpty) Iterator.empty
+          else {
+            val docs = batch.map(doc).toSet
+            val owner =
+              if (state.exists) state.get
+              else { val m = docs.min; state.update(m); m }
+            stateTtl.foreach(ttl => state.setTimeoutTimestamp(math.max(
+              batch.map(eventMs).max, state.getCurrentWatermarkMs() + 1), ttl))
+            docs.iterator.map(d => out(key, d, d == owner))
+          }
+        }
+    }(Encoders.scalaLong, implicitly[Encoder[O]])
 
   case class MediaFpRow(modality: String, fp: String, nUnits: Long,
       doc: Long)
@@ -1489,63 +1111,19 @@ object StreamingTSDF {
       "stateTtl and eventTimeCol come together (event-time TTL eviction)")
     val spark = fps.sparkSession
     import spark.implicits._
-    if (stateTtl.isEmpty) {
-      fps.select(col("modality"), col("fp"),
-          col("n_units").alias("nUnits"),
-          col(idCol).cast(LongType).alias("doc"))
-        .as[MediaFpRow]
-        .groupByKey(r => (r.modality, r.fp, r.nUnits))
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.NoTimeout()) {
-          (key: (String, String, Long), rows: Iterator[MediaFpRow],
-              state: GroupState[Long]) =>
-            val docs = rows.map(_.doc).toSet
-            if (docs.isEmpty) Iterator.empty
-            else {
-              val owner =
-                if (state.exists) state.get
-                else { val m = docs.min; state.update(m); m }
-              docs.iterator.map(d => (key._1, key._2, key._3, d, d == owner))
-            }
-        }
-        .toDF("modality", "fp", "n_units", idCol, "novel")
-    } else {
-      val ttl = stateTtl.get
-      fps.select(col("modality"), col("fp"),
-          col("n_units").alias("nUnits"),
-          col(idCol).cast(LongType).alias("doc"),
-          col(eventTimeCol.get).alias("eventTime"))
-        .withWatermark("eventTime", ttl)
-        .as[MediaFpRowT]
-        .groupByKey(r => (r.modality, r.fp, r.nUnits))
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.EventTimeTimeout()) {
-          (key: (String, String, Long), rows: Iterator[MediaFpRowT],
-              state: GroupState[Long]) =>
-            if (state.hasTimedOut) {
-              state.remove() // ownership forgotten past the rotation horizon
-              Iterator.empty
-            } else {
-              val batch = rows.toArray
-              if (batch.isEmpty) Iterator.empty
-              else {
-                val docs = batch.map(_.doc).toSet
-                val owner =
-                  if (state.exists) state.get
-                  else { val m = docs.min; state.update(m); m }
-                // keep-alive: eviction clock restarts at the group's LAST
-                // sighting (floor-clamped above the current watermark,
-                // the noveltyOwnership convention)
-                val lastMs = batch.map(_.eventTime.getTime).max
-                state.setTimeoutTimestamp(
-                  math.max(lastMs, state.getCurrentWatermarkMs() + 1), ttl)
-                docs.iterator.map(d =>
-                  (key._1, key._2, key._3, d, d == owner))
-              }
-            }
-        }
-        .toDF("modality", "fp", "n_units", idCol, "novel")
-    }
+    val rows = fps.select(Seq(col("modality"), col("fp"),
+      col("n_units").alias("nUnits"), col(idCol).cast(LongType).alias("doc")) ++
+      eventTimeCol.map(col(_).alias("eventTime")): _*)
+    def out(key: (String, String, Long), d: Long, novel: Boolean) =
+      (key._1, key._2, key._3, d, novel)
+    (if (stateTtl.isEmpty)
+      firstOwners(rows.as[MediaFpRow].groupByKey(r => (r.modality, r.fp, r.nUnits)),
+        stateTtl)(_.doc, _ => 0L)(out)
+    else
+      firstOwners(rows.withWatermark("eventTime", stateTtl.get)
+        .as[MediaFpRowT].groupByKey(r => (r.modality, r.fp, r.nUnits)),
+        stateTtl)(_.doc, _.eventTime.getTime)(out))
+      .toDF("modality", "fp", "n_units", idCol, "novel")
   }
 
   /** The batch-formula rollup over a [[noveltyOwnership]] sink: per-doc
@@ -1580,19 +1158,9 @@ object StreamingTSDF {
       valueCol.cast(LongType).alias("y"))
       .filter(col("y").isNotNull)
       .as[StatEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): moments are additive, so per-partition per-batch
-    // deltas fold identically for any partitioning and micro-batching.
-    val out = projected
-      .mapPartitions { it =>
-        val acc =
-          scala.collection.mutable.SortedMap.empty[String, (Long, Long, Long)]
-        it.foreach { e =>
-          val (n, s1, s2) = acc.getOrElse(e.series, (0L, 0L, 0L))
-          acc(e.series) = (n + 1, s1 + e.y, s2 + e.y * e.y)
-        }
-        acc.iterator.map { case (k, (n, s1, s2)) => (k, n, s1, s2) }
-      }
+    val out = partitionCombine(projected)((e: StatEvent) => e.series,
+        (0L, 0L, 0L)) { case ((n, s1, s2), e) => (n + 1, s1 + e.y, s2 + e.y * e.y) } {
+        case (k, (n, s1, s2)) => (k, n, s1, s2) }
       .toDF("series", "n", "s1", "s2")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
       col("n"), col("s1"), col("s2")): _*)
@@ -1664,21 +1232,8 @@ object StreamingTSDF {
       aCol.cast(StringType).alias("w1"), bCol.cast(StringType).alias("w2"))
       .filter(col("w1").isNotNull && col("w2").isNotNull)
       .as[PairEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): count deltas are additive, so per-partition per-batch
-    // pair counts sum-fold to the identical grid for any partitioning and
-    // any micro-batch split — no exchange, no sort, no state stores;
-    // parallelism comes from the input partitions instead of salt groups.
-    projected
-      .mapPartitions { it =>
-        val acc =
-          scala.collection.mutable.SortedMap.empty[(String, String), Long]
-        it.foreach { e =>
-          val k = (e.w1, e.w2)
-          acc(k) = acc.getOrElse(k, 0L) + 1L
-        }
-        acc.iterator.map { case ((a, b), c) => (a, b, c) }
-      }
+    partitionCombine(projected)((e: PairEvent) => (e.w1, e.w2), 0L)(
+        (c, _) => c + 1L) { case ((a, b), c) => (a, b, c) }
       .toDF("w1", "w2", "cnt")
   }
 
@@ -1886,8 +1441,11 @@ object StreamingTSDF {
 
   // ------------------------------------------------ streaming interpolation
   case class InterpEvent(series: String, tsUs: Long, value: Double,
-      eventTime: java.sql.Timestamp)
-  case class LastObs(tsUs: Long, value: Double)
+      eventTime: java.sql.Timestamp) extends SeriesEvent
+  /** The last emitted bucket: rows before it are late. */
+  case class LastObs(tsUs: Long, value: Double) extends Stamped {
+    def lastTsUs: Long = tsUs
+  }
   case class InterpOut(series: String, tsUs: Long, value: Double,
       isInterpolated: Boolean)
 
@@ -1915,60 +1473,29 @@ object StreamingTSDF {
       stateTtl: Option[String] = None): DataFrame = {
     require(method == "ffill" || method == "linear",
       s"streaming interpolate supports ffill|linear, got '$method'")
-    val spark = df.sparkSession
-    import spark.implicits._
     val stepUs = Resample.parseFreq(freq).micros
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[InterpEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[InterpEvent], state: GroupState[LastObs]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var last = state.getOption.orNull
-            val outRows = Seq.newBuilder[InterpOut]
-            sorted.foreach { e =>
-              val bucket = Math.floorDiv(e.tsUs, stepUs) * stepUs
-              if (last != null && bucket > last.tsUs) {
-                var t = last.tsUs + stepUs
-                while (t < bucket) {
-                  val v = method match {
-                    case "ffill" => last.value
-                    case "linear" => last.value + (e.value - last.value) *
-                      ((t - last.tsUs).toDouble / (bucket - last.tsUs).toDouble)
-                  }
-                  outRows += InterpOut(key, t, v, isInterpolated = true)
-                  t += stepUs
-                }
+    seriesFold[InterpEvent, LastObs, InterpOut](df, tsCol, seriesCols,
+        stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
+      val bucket = Math.floorDiv(e.tsUs, stepUs) * stepUs
+      // strictly greater: a second observation in an already-emitted
+      // bucket must not re-emit it (append sinks would see duplicates)
+      if (cur.exists(bucket <= _.tsUs)) (cur, None)
+      else {
+        val fills = cur.toSeq.flatMap { last =>
+          Iterator.iterate(last.tsUs + stepUs)(_ + stepUs).takeWhile(_ < bucket)
+            .map { t =>
+              val v = method match {
+                case "ffill" => last.value
+                case "linear" => last.value + (e.value - last.value) *
+                  ((t - last.tsUs).toDouble / (bucket - last.tsUs).toDouble)
               }
-              // strictly greater: a second observation in an already-emitted
-              // bucket must not re-emit it (append sinks would see duplicates)
-              if (last == null || bucket > last.tsUs) {
-                outRows += InterpOut(key, bucket, e.value, isInterpolated = false)
-                last = LastObs(bucket, e.value)
-              }
+              InterpOut(key, t, v, isInterpolated = true)
             }
-            if (last != null) {
-              state.update(last)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(last.tsUs / 1000, state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.result().iterator
-          }
+        }
+        (Some(LastObs(bucket, e.value)),
+          fills :+ InterpOut(key, bucket, e.value, isInterpolated = false))
       }
-    out.toDF()
+    }.toDF()
       .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
         timestamp_micros(col("tsUs")).alias(tsCol),
         col("value").alias(valueCol),
@@ -2047,298 +1574,109 @@ object StreamingTSDF {
       .select(typedSeriesCols(df.schema, seriesCols) :+ col("start_ts") :+ col("end_ts"): _*)
   }
 
-  case class ThreshState(lastValue: Double, lastTsUs: Long)
+  case class ThreshState(lastValue: Double, lastTsUs: Long) extends Stamped
 
   /** Streaming threshold-crossing detector: one (value, ts) pair of state
     * per series, the twin of [[graft.tsdf.Stats.thresholdCrossings]] —
     * emits a row only when the series crosses `threshold` between
-    * consecutive observations. Late rows (older than the last processed
-    * timestamp) are DROPPED, matching the in-order contract of the other
-    * indicator twins. Output: series + (ts, prev_ts, prev_value, value,
-    * direction). */
+    * consecutive observations. Output: series + (ts, prev_ts, prev_value,
+    * value, direction). */
   def thresholdCrossings(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, threshold: Double,
-      stateTtl: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[ThreshState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                val emit =
-                  if (cur == null) None
-                  else {
-                    val up = cur.lastValue < threshold && e.value >= threshold
-                    val down = cur.lastValue >= threshold && e.value < threshold
-                    if (up || down)
-                      Some((key, e.tsUs, cur.lastTsUs, cur.lastValue,
-                        e.value, if (up) "up" else "down"))
-                    else None
-                  }
-                cur = ThreshState(e.value, e.tsUs)
-                emit
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
+      stateTtl: Option[String] = None): DataFrame =
+    seriesFold[EmaEvent, ThreshState, (String, Long, Long, Double, Double, String)](
+        df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
+      val crossing = cur.flatMap { c =>
+        val up = c.lastValue < threshold && e.value >= threshold
+        val down = c.lastValue >= threshold && e.value < threshold
+        if (up || down) Some((key, e.tsUs, c.lastTsUs, c.lastValue, e.value,
+          if (up) "up" else "down"))
+        else None
       }
-      .toDF("series", "tsUs", "prevTsUs", "prev_value", "value", "direction")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      timestamp_micros(col("prevTsUs")).alias("prev_ts"),
-      col("prev_value"), col("value").alias(valueCol), col("direction")): _*)
-  }
+      (Some(ThreshState(e.value, e.tsUs)), crossing)
+    }.toDF("series", "tsUs", "prevTsUs", "prev_value", "value", "direction")
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        timestamp_micros(col("tsUs")).alias(tsCol),
+        timestamp_micros(col("prevTsUs")).alias("prev_ts"),
+        col("prev_value"), col("value").alias(valueCol), col("direction")): _*)
 
   case class StochState(recent: Seq[Double], k1: Option[Double],
-      k2: Option[Double], lastTsUs: Long)
+      k2: Option[Double], lastTsUs: Long) extends Stamped
 
   /** Streaming stochastic oscillator: per-series state is the trailing
     * `window − 1` values (the frame buffer, like [[rollingMedian]]) plus
     * the previous two %K values for the %D mean — bit-identical to
     * [[graft.tsdf.Stats.stochastic]] (same selections, same fixed-order
-    * IEEE assembly; differentially asserted). Late rows are DROPPED.
-    * Output: series + ts + value + pct_k + pct_d. */
+    * IEEE assembly; differentially asserted). Output: series + ts + value +
+    * pct_k + pct_d. */
   def stochastic(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, window: Int,
       stateTtl: Option[String] = None): DataFrame = {
     require(window >= 1, "window must be >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[StochState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.getOrElse(
-              StochState(Vector.empty, None, None, Long.MinValue))
-            var seen = state.exists
-            val outRows = sorted.flatMap { e =>
-              if (seen && e.tsUs < cur.lastTsUs) None
-              else {
-                seen = true
-                val frame = (cur.recent :+ e.value).takeRight(window)
-                val ll = frame.min
-                val hh = frame.max
-                val k: Option[Double] =
-                  if (hh == ll) None
-                  else Some(100.0 * (e.value - ll) / (hh - ll))
-                val d: Option[Double] =
-                  for (a <- cur.k2; b <- cur.k1; c <- k)
-                    yield (a + b + c) / 3.0
-                cur = StochState((cur.recent :+ e.value).takeRight(window - 1),
-                  k, cur.k1, e.tsUs)
-                Some((key, e.tsUs, e.value, k, d))
-              }
-            }
-            if (seen) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "pct_k", "pct_d")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol), col("pct_k"), col("pct_d")): _*)
+    valueRows(seriesFold[EmaEvent, StochState,
+        (String, Long, Double, Option[Double], Option[Double])](
+        df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
+      val c = cur.getOrElse(StochState(Vector.empty, None, None, Long.MinValue))
+      val frame = (c.recent :+ e.value).takeRight(window)
+      val ll = frame.min
+      val hh = frame.max
+      val k = if (hh == ll) None else Some(100.0 * (e.value - ll) / (hh - ll))
+      val d = for (a <- c.k2; b <- c.k1; x <- k) yield (a + b + x) / 3.0
+      (Some(StochState((c.recent :+ e.value).takeRight(window - 1), k, c.k1,
+        e.tsUs)), Some((key, e.tsUs, e.value, k, d)))
+    }, df, tsCol, seriesCols, valueCol, "pct_k", "pct_d")
   }
 
-  case class DonchianState(recent: Seq[Double], lastTsUs: Long)
+  case class DonchianState(recent: Seq[Double], lastTsUs: Long) extends Stamped
 
   /** Streaming Donchian channels: per-series state is the trailing
     * `window − 1` values, the twin of [[graft.tsdf.Stats.donchian]] —
     * upper/lower are frame selections, mid the same fixed-order IEEE
-    * expression (differentially asserted bit-identical). Late rows are
-    * DROPPED. Output: series + ts + value + dc_upper + dc_lower +
-    * dc_mid. */
+    * expression (differentially asserted bit-identical). Output: series +
+    * ts + value + dc_upper + dc_lower + dc_mid. */
   def donchian(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, window: Int,
       stateTtl: Option[String] = None): DataFrame = {
     require(window >= 1, "window must be >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[DonchianState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.getOrElse(
-              DonchianState(Vector.empty, Long.MinValue))
-            var seen = state.exists
-            val outRows = sorted.flatMap { e =>
-              if (seen && e.tsUs < cur.lastTsUs) None
-              else {
-                seen = true
-                val frame = (cur.recent :+ e.value).takeRight(window)
-                val upper = frame.max
-                val lower = frame.min
-                cur = DonchianState(
-                  (cur.recent :+ e.value).takeRight(window - 1), e.tsUs)
-                Some((key, e.tsUs, e.value, upper, lower,
-                  (upper + lower) / 2.0))
-              }
-            }
-            if (seen) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "dc_upper", "dc_lower", "dc_mid")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol), col("dc_upper"), col("dc_lower"),
-      col("dc_mid")): _*)
+    valueRows(seriesFold[EmaEvent, DonchianState,
+        (String, Long, Double, Double, Double, Double)](
+        df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
+      val recent = cur.fold(Seq.empty[Double])(_.recent) :+ e.value
+      val frame = recent.takeRight(window)
+      val upper = frame.max
+      val lower = frame.min
+      (Some(DonchianState(recent.takeRight(window - 1), e.tsUs)),
+        Some((key, e.tsUs, e.value, upper, lower, (upper + lower) / 2.0)))
+    }, df, tsCol, seriesCols, valueCol, "dc_upper", "dc_lower", "dc_mid")
   }
 
   case class HwState(cnt: Int, warmSum: Double, level: Double,
-      trend: Double, ring: Seq[Double], lastTsUs: Long)
+      trend: Double, ring: Seq[Double], lastTsUs: Long) extends Stamped
 
   /** Streaming additive Holt-Winters: per-series state is the warm-up
-    * accumulator plus the rotated `m`-factor seasonal ring — the twin of
-    * [[graft.tsdf.Stats.holtWinters]] / [[graft.functions
-    * .HoltWintersExact]], bit-identical by construction (same fixed-order
-    * IEEE recursion, same rotation; differentially asserted). Emits null
-    * level/trend/seasonal through the first season. Late rows are
-    * DROPPED. Output: series + ts + value + hw_level + hw_trend +
-    * hw_seasonal. */
+    * accumulator plus the rotated `m`-factor seasonal ring — the
+    * [[graft.functions.Recurrence.holtWinters]] recursion shared with
+    * [[graft.tsdf.Stats.holtWinters]], bit-identical by construction. Emits
+    * null level/trend/seasonal through the first season. Output: series +
+    * ts + value + hw_level + hw_trend + hw_seasonal. */
   def holtWinters(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, alpha: Double, beta: Double, gamma: Double, m: Int,
-      stateTtl: Option[String] = None): DataFrame = {
-    require(m >= 2, "season length m must be >= 2")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[HwState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.getOrElse(
-              HwState(0, 0.0, 0.0, 0.0, Vector.empty, Long.MinValue))
-            var seen = state.exists
-            val outRows = sorted.flatMap { e =>
-              if (seen && e.tsUs < cur.lastTsUs) None
-              else {
-                seen = true
-                val x = e.value
-                val cnt = cur.cnt + 1
-                cur =
-                  if (cnt < m)
-                    cur.copy(cnt = cnt, warmSum = cur.warmSum + x,
-                      ring = cur.ring :+ x, lastTsUs = e.tsUs)
-                  else if (cnt == m) {
-                    val ws = cur.warmSum + x
-                    val level = ws / m
-                    HwState(cnt, ws, level, 0.0,
-                      (cur.ring :+ x).map(w => w - level), e.tsUs)
-                  } else {
-                    val sPrev = cur.ring.head
-                    val nl = alpha * (x - sPrev) +
-                      (1 - alpha) * (cur.level + cur.trend)
-                    val nt = beta * (nl - cur.level) + (1 - beta) * cur.trend
-                    val sNew = gamma * (x - nl) + (1 - gamma) * sPrev
-                    HwState(cnt, cur.warmSum, nl, nt,
-                      cur.ring.tail :+ sNew, e.tsUs)
-                  }
-                val emit: (Option[Double], Option[Double], Option[Double]) =
-                  if (cnt > m)
-                    (Some(cur.level), Some(cur.trend), Some(cur.ring.last))
-                  else (None, None, None)
-                Some((key, e.tsUs, x, emit._1, emit._2, emit._3))
-              }
-            }
-            if (seen) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "hw_level", "hw_trend", "hw_seasonal")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol), col("hw_level"), col("hw_trend"),
-      col("hw_seasonal")): _*)
-  }
+      stateTtl: Option[String] = None): DataFrame =
+    recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
+      Recurrence.holtWinters(alpha, beta, gamma, m),
+      Seq("hw_level", "hw_trend", "hw_seasonal"))(
+      (r, ts) => HwState(r.cnt, r.warmSum, r.level, r.trend, r.ring, ts))(
+      s => Recurrence.HoltWinters(s.cnt, s.warmSum, s.level, s.trend,
+        s.ring.toVector))
 
   // ------------------------------------------------- streaming SCD2 changelog
-  case class Scd2Event(series: String, tsUs: Long, tie: Long,
-      attrs: Seq[String], eventTime: java.sql.Timestamp)
+  case class Scd2Event(series: String, tsUs: Long, override val tie: Long,
+      attrs: Seq[String], eventTime: java.sql.Timestamp) extends SeriesEvent
   case class Scd2State(attrs: Seq[String], lastTsUs: Long, lastTie: Long)
+    extends Stamped {
+    override def isLate(e: SeriesEvent): Boolean =
+      e.tsUs < lastTsUs || (e.tsUs == lastTsUs && e.tie <= lastTie)
+  }
 
   /** Streaming SCD2 CHANGELOG — the dimension-maintenance face of
     * [[graft.pipeline.Cdc.scd2FromLog]]: per id, emit a row whenever the
@@ -2348,65 +1686,27 @@ object StreamingTSDF {
     * rows) — `valid_to` is a derivable view (lead over the changelog), so
     * the append-only sink stays monotone and never rewrites history.
     * State per id is ONE attribute tuple (constant size; `stateTtl`
-    * evicts ids idle past the watermark). Rows arriving out of order
-    * across micro-batches (ts below the id's last change) are skipped —
-    * the same documented append-mode trade as [[asOfJoin]]; within a
-    * micro-batch, rows process in (ts, tie) order. `tieCol` totalizes the
-    * order on duplicate timestamps like the batch tieCols. */
+    * evicts ids idle past the watermark). A row at or behind the id's last
+    * (ts, tie) is late and skipped. `tieCol` totalizes the order on
+    * duplicate timestamps like the batch tieCols. */
   def scd2Changelog(df: DataFrame, idCols: Seq[String], tsCol: String,
       attrCols: Seq[String], tieCol: String,
       stateTtl: Option[String] = None): DataFrame = {
     require(attrCols.nonEmpty, "need at least one tracked attribute")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(idCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(tieCol).cast(LongType).alias("tie"),
-      array(attrCols.map(col(_).cast(StringType)): _*).alias("attrs"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[Scd2Event]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[Scd2Event], state: GroupState[Scd2State]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (e.tsUs, e.tie))
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              val late = cur != null && (e.tsUs < cur.lastTsUs ||
-                (e.tsUs == cur.lastTsUs && e.tie <= cur.lastTie))
-              if (late) None
-              else {
-                // null-safe element compare: Seq equality treats null
-                // elements as equal, mirroring the batch <=> struct
-                val changed = cur == null || cur.attrs != e.attrs
-                cur = Scd2State(e.attrs, e.tsUs, e.tie)
-                if (changed) Some((key, e.tsUs, e.attrs)) else None
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "attrs")
-    out.select(typedSeriesCols(df.schema, idCols) ++
-      (timestamp_micros(col("tsUs")).alias(tsCol) +:
-        attrCols.zipWithIndex.map { case (a, i) =>
-          col("attrs").getItem(i).cast(df.schema(a).dataType).alias(a)
-        }): _*)
+    seriesFold[Scd2Event, Scd2State, (String, Long, Seq[String])](
+        df, tsCol, idCols, stateTtl, col(tieCol).cast(LongType).alias("tie"),
+        array(attrCols.map(col(_).cast(StringType)): _*).alias("attrs")) {
+      (key, cur, e) =>
+        // null-safe element compare: Seq equality treats null elements as
+        // equal, mirroring the batch <=> struct
+        (Some(Scd2State(e.attrs, e.tsUs, e.tie)),
+          if (cur.forall(_.attrs != e.attrs)) Some((key, e.tsUs, e.attrs)) else None)
+    }.toDF("series", "tsUs", "attrs")
+      .select(typedSeriesCols(df.schema, idCols) ++
+        (timestamp_micros(col("tsUs")).alias(tsCol) +:
+          attrCols.zipWithIndex.map { case (a, i) =>
+            col("attrs").getItem(i).cast(df.schema(a).dataType).alias(a)
+          }): _*)
   }
 
   // ----------------------------------------------- streaming intervals

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.Recurrence
+
 /** Rolling, grouped and derived statistics over TSDFs.
   * Reference: /root/reference/python/tempo/tsdf.py:1000-1616. */
 object Stats {
@@ -117,40 +119,32 @@ object Stats {
     tsdf.copy(df = tsdf.df.withColumn(s"ema_$colToCalc", emaExpr))
   }
 
+  /** The running frame (unbounded preceding → current row) of each series,
+    * which the shared [[graft.functions.Recurrence]] batch runner uses. */
+  private def runningWindow(tsdf: TSDF) =
+    tsdf.baseWindow().rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
   /** Exact one-pass EMA — ema_0 = x_0, ema_t = α·x_t + (1−α)·ema_{t−1} — as
-    * a running window aggregate ([[graft.functions.EmaExact]], updated
+    * a running window aggregate ([[graft.functions.Recurrence.ema]], updated
     * incrementally over the growing frame: one pass per series, one double
     * of state). The exact batch twin of the streaming `ema` recursion,
     * complementing the reference-parity truncated-lag approximation [[ema]]. */
-  def emaExact(tsdf: TSDF, colToCalc: String, alpha: Double): TSDF = {
-    val w = tsdf.baseWindow().rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val agg = org.apache.spark.sql.GraftColumns.column(
-      graft.functions.EmaExact(
-        org.apache.spark.sql.GraftColumns.expression(col(colToCalc).cast(DoubleType)),
-        alpha).toAggregateExpression())
-    tsdf.copy(df = tsdf.df.withColumn(s"ema_exact_$colToCalc", agg.over(w)))
-  }
+  def emaExact(tsdf: TSDF, colToCalc: String, alpha: Double): TSDF =
+    tsdf.copy(df = Recurrence.ema(alpha).addColumns(tsdf.df, col(colToCalc),
+      runningWindow(tsdf), Seq(s"ema_exact_$colToCalc")))
 
   /** Exact Holt double-exponential smoothing over each series: adds
     * `holt_level_<col>` and `holt_trend_<col>` from the one-pass
-    * level/trend recursion (see [[graft.functions.HoltExact]]). */
+    * level/trend recursion (see [[graft.functions.Recurrence.holt]]). */
   def holtExact(tsdf: TSDF, colToCalc: String, alpha: Double,
-      beta: Double): TSDF = {
-    val w = tsdf.baseWindow().rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val agg = org.apache.spark.sql.GraftColumns.column(
-      graft.functions.HoltExact(
-        org.apache.spark.sql.GraftColumns.expression(col(colToCalc).cast(DoubleType)),
-        alpha, beta).toAggregateExpression())
-    tsdf.copy(df = tsdf.df
-      .withColumn("__holt", agg.over(w))
-      .withColumn(s"holt_level_$colToCalc", col("__holt.level"))
-      .withColumn(s"holt_trend_$colToCalc", col("__holt.trend"))
-      .drop("__holt"))
-  }
+      beta: Double): TSDF =
+    tsdf.copy(df = Recurrence.holt(alpha, beta).addColumns(tsdf.df,
+      col(colToCalc), runningWindow(tsdf),
+      Seq(s"holt_level_$colToCalc", s"holt_trend_$colToCalc")))
 
   /** Additive Holt-Winters (level + trend + season of `m` observations)
     * over each series: adds `hw_level`, `hw_trend`, `hw_seasonal` from the
-    * one-pass triple recursion (see [[graft.functions.HoltWintersExact]]
+    * one-pass triple recursion (see [[graft.functions.Recurrence.holtWinters]]
     * for the exact warm-up/update definition; null through the first
     * season). One series exchange — the running window shares the sort. */
   def holtWinters(df: DataFrame, tsCol: String, valueCol: String,
@@ -159,38 +153,21 @@ object Stats {
     val w = Window.partitionBy(seriesCols.map(col): _*)
       .orderBy((tsCol +: tieCols).map(col): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val agg = org.apache.spark.sql.GraftColumns.column(
-      graft.functions.HoltWintersExact(
-        org.apache.spark.sql.GraftColumns.expression(
-          col(valueCol).cast(DoubleType)),
-        alpha, beta, gamma, m).toAggregateExpression())
-    df.withColumn("__hw", agg.over(w))
-      .withColumn("hw_level", col("__hw.level"))
-      .withColumn("hw_trend", col("__hw.trend"))
-      .withColumn("hw_seasonal", col("__hw.seasonal"))
-      .drop("__hw")
+    Recurrence.holtWinters(alpha, beta, gamma, m).addColumns(df,
+      col(valueCol), w, Seq("hw_level", "hw_trend", "hw_seasonal"))
   }
 
   /** 1-D local-level Kalman filter over each series: adds
     * `kalman_level_<col>`, `kalman_var_<col>`, `kalman_gain_<col>` from
     * the one-pass predict/update recursion (see
-    * [[graft.functions.KalmanExact]]). `q` is the per-step process
+    * [[graft.functions.Recurrence.kalman]]). `q` is the per-step process
     * (drift) variance, `r` the observation-noise variance, `p0` the
     * initial level uncertainty (defaults to `r`). */
   def kalmanLevel(tsdf: TSDF, colToCalc: String, q: Double, r: Double,
-      p0: Option[Double] = None): TSDF = {
-    val w = tsdf.baseWindow().rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val agg = org.apache.spark.sql.GraftColumns.column(
-      graft.functions.KalmanExact(
-        org.apache.spark.sql.GraftColumns.expression(col(colToCalc).cast(DoubleType)),
-        q, r, p0.getOrElse(r)).toAggregateExpression())
-    tsdf.copy(df = tsdf.df
-      .withColumn("__kf", agg.over(w))
-      .withColumn(s"kalman_level_$colToCalc", col("__kf.level"))
-      .withColumn(s"kalman_var_$colToCalc", col("__kf.variance"))
-      .withColumn(s"kalman_gain_$colToCalc", col("__kf.gain"))
-      .drop("__kf"))
-  }
+      p0: Option[Double] = None): TSDF =
+    tsdf.copy(df = Recurrence.kalman(q, r, p0.getOrElse(r)).addColumns(
+      tsdf.df, col(colToCalc), runningWindow(tsdf),
+      Seq("level", "var", "gain").map(f => s"kalman_${f}_$colToCalc")))
 
   /** Per-series cross-correlation function between two metrics at lags
     * −maxLag..maxLag: r_l = Σ(x_t − μx)(y_{t−l} − μy) / √(Σ(x − μx)² ·
@@ -958,7 +935,7 @@ object Stats {
   /** Relative Strength Index (Wilder, EMA-seeded variant): moves
     * Δ_t = x_t − x_{t−1} split into gain = max(Δ, 0) and loss = max(−Δ, 0),
     * each smoothed by the exact EMA recursion with α = 1/n
-    * ([[graft.functions.EmaExact]]; the state seeds with the FIRST move
+    * ([[graft.functions.Recurrence.ema]]; the state seeds with the FIRST move
     * rather than Wilder's n-bar simple average — a documented variant that
     * keeps the whole filter a single fixed-order recursion).
     * rsi = 100·ag/(ag + al); null before the first move and while
@@ -969,21 +946,16 @@ object Stats {
   def rsi(tsdf: TSDF, colToCalc: String, n: Int): TSDF = {
     require(n >= 1, "n must be >= 1")
     val alpha = 1.0 / n
-    val lagW = tsdf.baseWindow()
-    val runW = lagW.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val runW = runningWindow(tsdf)
     val x = col(colToCalc).cast(DoubleType)
-    def ema(c: Column) = org.apache.spark.sql.GraftColumns.column(
-      graft.functions.EmaExact(
-        org.apache.spark.sql.GraftColumns.expression(c),
-        alpha).toAggregateExpression())
+    val ema = Recurrence.ema(alpha)
     // the lag must materialize BEFORE the EMA window consumes it: a window
     // expression cannot be the child of another window aggregate
-    val staged = tsdf.df.withColumn("__d", x - lag(x, 1).over(lagW))
+    val staged = tsdf.df.withColumn("__d", x - lag(x, 1).over(tsdf.baseWindow()))
     val gain = when(col("__d").isNotNull, greatest(col("__d"), lit(0.0)))
     val loss = when(col("__d").isNotNull, greatest(-col("__d"), lit(0.0)))
-    val smoothed = staged
-      .withColumn("__ag", ema(gain).over(runW))
-      .withColumn("__al", ema(loss).over(runW))
+    val smoothed = ema.addColumns(ema.addColumns(staged, gain, runW,
+      Seq("__ag")), loss, runW, Seq("__al"))
     val ag = col("__ag"); val al = col("__al")
     val out = when(ag.isNotNull && al.isNotNull && (ag + al) =!= 0.0,
       lit(100.0) * ag / (ag + al))
@@ -1002,20 +974,14 @@ object Stats {
   def macd(tsdf: TSDF, colToCalc: String, fast: Int = 12, slow: Int = 26,
       signal: Int = 9): TSDF = {
     require(fast >= 1 && slow >= 1 && signal >= 1, "spans must be >= 1")
-    val runW = tsdf.baseWindow()
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    def ema(c: Column, span: Int) = org.apache.spark.sql.GraftColumns.column(
-      graft.functions.EmaExact(
-        org.apache.spark.sql.GraftColumns.expression(c),
-        2.0 / (span + 1)).toAggregateExpression())
-    val x = col(colToCalc).cast(DoubleType)
-    val staged = tsdf.df
-      .withColumn("__f", ema(x, fast).over(runW))
-      .withColumn("__s", ema(x, slow).over(runW))
+    val runW = runningWindow(tsdf)
+    def ema(df: DataFrame, c: Column, span: Int, name: String) =
+      Recurrence.ema(2.0 / (span + 1)).addColumns(df, c, runW, Seq(name))
+    val x = col(colToCalc)
+    val staged = ema(ema(tsdf.df, x, fast, "__f"), x, slow, "__s")
       .withColumn(s"macd_$colToCalc", col("__f") - col("__s"))
-    val out = staged
-      .withColumn(s"macd_signal_$colToCalc",
-        ema(col(s"macd_$colToCalc"), signal).over(runW))
+    val out = ema(staged, col(s"macd_$colToCalc"), signal,
+        s"macd_signal_$colToCalc")
       .withColumn(s"macd_hist_$colToCalc",
         col(s"macd_$colToCalc") - col(s"macd_signal_$colToCalc"))
       .drop("__f", "__s")
@@ -1101,25 +1067,16 @@ object Stats {
     * `<col>_robust`. */
   /** Exponentially-weighted mean + variance (RiskMetrics volatility) per
     * series: adds `ewm_mean_<col>` and `ewm_var_<col>` from the one-pass
-    * recursion in [[graft.functions.EwmVarExact]] (two doubles of state;
+    * recursion in [[graft.functions.Recurrence.ewmVar]] (two doubles of state;
     * ONE series exchange, one running frame; a recursive-CTE oracle
     * replays every IEEE step). The EW stddev is `sqrt(ewm_var_<col>)` on
     * top — sqrt is correctly-rounded IEEE, so even that stays
     * engine-exact. */
   def ewmVolatility(tsdf: TSDF, colToCalc: String, alpha: Double): TSDF = {
     require(alpha > 0 && alpha <= 1, "alpha must be in (0, 1]")
-    val w = tsdf.baseWindow()
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val agg = org.apache.spark.sql.GraftColumns.column(
-      graft.functions.EwmVarExact(
-        org.apache.spark.sql.GraftColumns.expression(
-          col(colToCalc).cast(DoubleType)),
-        alpha).toAggregateExpression())
-    tsdf.copy(df = tsdf.df
-      .withColumn("__ewm", agg.over(w))
-      .withColumn(s"ewm_mean_$colToCalc", col("__ewm.mean"))
-      .withColumn(s"ewm_var_$colToCalc", col("__ewm.variance"))
-      .drop("__ewm"))
+    tsdf.copy(df = Recurrence.ewmVar(alpha).addColumns(tsdf.df,
+      col(colToCalc), runningWindow(tsdf),
+      Seq(s"ewm_mean_$colToCalc", s"ewm_var_$colToCalc")))
   }
 
   /** Hampel filter: replace a point with the window median when it sits
@@ -1202,7 +1159,7 @@ object Stats {
   /** Average true range over an OHLC bar series: true range = max(high−low,
     * |high−prevClose|, |low−prevClose|) (first bar: high−low), smoothed by
     * Wilder's recursion atr_t = (1/n)·tr_t + (1−1/n)·atr_{t−1} seeded from
-    * the first bar's TR — the [[graft.functions.EmaExact]] aggregate with
+    * the first bar's TR — the [[graft.functions.Recurrence.ema]] aggregate with
     * α = 1/n (EMA seeding, the standard streaming-friendly variant of
     * Wilder's SMA-of-first-n seed; documented divergence). OHLC values are
     * SELECTIONS of raw doubles (min/max/first/last of observations), the TR
@@ -1222,11 +1179,8 @@ object Stats {
     val pc = lag(col(closeCol).cast(DoubleType), 1).over(lagW)
     val tr = when(pc.isNull, hi - lo)
       .otherwise(greatest(hi - lo, abs(hi - pc), abs(lo - pc)))
-    val ema = org.apache.spark.sql.GraftColumns.column(
-      graft.functions.EmaExact(
-        org.apache.spark.sql.GraftColumns.expression(col("tr")),
-        1.0 / n).toAggregateExpression())
-    df.withColumn("tr", tr).withColumn("atr", ema.over(runW))
+    Recurrence.ema(1.0 / n).addColumns(df.withColumn("tr", tr), col("tr"),
+      runW, Seq("atr"))
   }
 
   /** Stochastic oscillator: %K = 100·(x − ll)/(hh − ll) with ll/hh the

@@ -822,6 +822,61 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     }
   }
 
+  test("property: the shared recurrences skip null values in stream and " +
+      "batch alike (ema, ewmVolatility, holt, kalmanLevel, holtWinters)") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def tsdf(df: DataFrame) = TSDF(df, "ts", Seq("user_id"))
+    val key = Seq("user_id")
+    val cases: Seq[(String, DataFrame => DataFrame, DataFrame => DataFrame,
+        Seq[String])] = Seq(
+      ("ema", StreamingTSDF.ema(_, "ts", key, "value", alpha = 0.3),
+        tsdf(_).emaExact("value", alpha = 0.3).df
+          .withColumnRenamed("ema_exact_value", "ema_value"),
+        Seq("ema_value")),
+      ("ewmVolatility",
+        StreamingTSDF.ewmVolatility(_, "ts", key, "value", alpha = 0.3),
+        tsdf(_).ewmVolatility("value", alpha = 0.3).df,
+        Seq("ewm_mean_value", "ewm_var_value")),
+      ("holt", StreamingTSDF.holt(_, "ts", key, "value", alpha = 0.3, beta = 0.1),
+        tsdf(_).holtExact("value", alpha = 0.3, beta = 0.1).df,
+        Seq("holt_level_value", "holt_trend_value")),
+      ("kalmanLevel",
+        StreamingTSDF.kalmanLevel(_, "ts", key, "value", q = 0.3, r = 2.7),
+        tsdf(_).kalmanLevel("value", q = 0.3, r = 2.7).df,
+        Seq("kalman_level_value", "kalman_var_value", "kalman_gain_value")),
+      ("holtWinters", StreamingTSDF.holtWinters(_, "ts", key, "value",
+          alpha = 0.5, beta = 0.25, gamma = 0.5, m = 3),
+        graft.tsdf.Stats.holtWinters(_, "ts", "value", key,
+          alpha = 0.5, beta = 0.25, gamma = 0.5, m = 3),
+        Seq("hw_level", "hw_trend", "hw_seasonal")))
+    val rnd = new scala.util.Random(83)
+    for (trial <- 0 until 3; (name, stream, batch, outs) <- cases) {
+      // every series opens with a null (no output yet), then ~1 in 4 null
+      val rows = randomSeries(rnd, pinEnds = false).groupBy(_._1).toSeq
+        .sortBy(_._1).flatMap { case (_, rs) =>
+          rs.zipWithIndex.map { case ((s, t, v), i) =>
+            (s, t, if (i == 0 || rnd.nextInt(4) == 0) None else Some(v))
+          }
+        }
+      runId += 1
+      val sink = s"null_sink_$runId"
+      val mem = MemoryStream[(String, Timestamp, Option[Double])]
+      val q = stream(mem.toDF().toDF("user_id", "ts", "value"))
+        .writeStream.format("memory").queryName(sink)
+        .outputMode(OutputMode.Append()).start()
+      mem.addData(rows: _*)
+      q.processAllAvailable()
+      q.stop()
+      val cols = (Seq("user_id", "ts", "value") ++ outs).map(col)
+      val expected = batch(rows.toDF("user_id", "ts", "value")).select(cols: _*)
+      withClue(s"$name trial $trial: ") {
+        assertDfEquality(spark.table(sink).select(cols: _*), expected)
+      }
+    }
+  }
+
   test("property: streaming ewmVolatility equals batch on random series") {
     val rnd = new scala.util.Random(67)
     (0 until 4).foreach { trial =>

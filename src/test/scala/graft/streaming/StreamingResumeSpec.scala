@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkTestBase
-import graft.tsdf.TSDF
+import graft.tsdf.{Stats, TSDF}
 
 /** Multi-micro-batch and checkpoint-restart differentials for the stateful
   * streaming twins.
@@ -50,13 +50,26 @@ class StreamingResumeSpec extends SparkTestBase {
     sorted.grouped(per).toSeq
   }
 
+  /** Appends one row per series to the LAST slice, strictly older than
+    * every row of that series in the earlier slices — a cross-batch late
+    * row the per-series fold must drop (state cannot rewind). */
+  private def withLateRows(slices: Seq[Seq[(String, Timestamp, Double)]])
+      : Seq[Seq[(String, Timestamp, Double)]] = {
+    val late = slices.init.flatten.groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (s, rs) =>
+        (s, new Timestamp(rs.map(_._2.getTime).min - 3000L), 999.0)
+      }
+    slices.init :+ (slices.last ++ late)
+  }
+
   private var runId = 0
 
   /** Feed time-ordered slices as separate micro-batches into one running
     * query (processAllAvailable between addData calls forces a batch per
     * slice). */
   private def runChunkedStream(rows: Seq[(String, Timestamp, Double)],
-      nChunks: Int, build: DataFrame => DataFrame): DataFrame = {
+      nChunks: Int, build: DataFrame => DataFrame,
+      lateRows: Boolean = false): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -67,7 +80,8 @@ class StreamingResumeSpec extends SparkTestBase {
     val q = out.writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Append()).start()
     var batches = 0
-    timeSlices(rows, nChunks).foreach { slice =>
+    val slices = timeSlices(rows, nChunks)
+    (if (lateRows) withLateRows(slices) else slices).foreach { slice =>
       mem.addData(slice: _*)
       q.processAllAvailable()
       batches += 1
@@ -84,12 +98,16 @@ class StreamingResumeSpec extends SparkTestBase {
     * nChunks−1 real restarts. Output goes to a parquet sink (memory sinks
     * don't survive restarts). */
   private def runRestartStream(rows: Seq[(String, Timestamp, Double)],
-      nChunks: Int, build: DataFrame => DataFrame): DataFrame = {
+      nChunks: Int, build: DataFrame => DataFrame,
+      lateRows: Boolean = false): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_resume_").toString
     val srcDir = s"$dir/src"; val outDir = s"$dir/out"; val chk = s"$dir/chk"
-    val slices = timeSlices(rows, nChunks)
+    val slices = {
+      val s = timeSlices(rows, nChunks)
+      if (lateRows) withLateRows(s) else s
+    }
     def writeChunk(s: Seq[(String, Timestamp, Double)]): Unit =
       s.toDF("user_id", "ts", "value").repartition(1)
         .write.mode("append").parquet(srcDir)
@@ -107,53 +125,126 @@ class StreamingResumeSpec extends SparkTestBase {
     spark.read.parquet(outDir)
   }
 
-  private def emaSelect(df: DataFrame): DataFrame =
-    df.select(col("user_id"), col("ts"), col("value"),
-      col("ema_value").alias("ema"))
+  /** One stateful twin on the per-series fold: its stream operator and
+    * its batch twin over the same (user_id, ts, value) frame, compared on
+    * `cols`. Each case runs in both harnesses — 4 micro-batches of one
+    * query, and 3 chunks with a full restart from the checkpoint between
+    * them — with a cross-batch late row per series that the stream must
+    * drop, against the batch twin over the on-time rows. */
+  private case class FoldCase(op: String, twin: String, chunkSeed: Int,
+      restartSeed: Int, stream: DataFrame => DataFrame,
+      batch: DataFrame => DataFrame, cols: Seq[String],
+      pinEnds: Boolean = false, restartTitle: Option[String] = None)
 
-  test("streaming ema over 4 micro-batches equals batch emaExact") {
-    val rnd = new scala.util.Random(91)
-    val rows = randomSeries(rnd)
-    val spark2 = spark
-    import spark2.implicits._
-    val streamed = emaSelect(runChunkedStream(rows, 4, df =>
-      StreamingTSDF.ema(df, "ts", Seq("user_id"), "value", alpha = 0.3)))
-    val batch = emaSelect(
-      TSDF(rows.toDF("user_id", "ts", "value"), "ts", Seq("user_id"))
-        .emaExact("value", alpha = 0.3).df
-        .withColumnRenamed("ema_exact_value", "ema_value"))
-    assertDfEquality(streamed, batch)
-  }
+  private def tsdf(df: DataFrame) = TSDF(df, "ts", Seq("user_id"))
+  private val key = Seq("user_id")
+  private def vcols(out: String*) = Seq("user_id", "ts", "value") ++ out
+  private def withAttr(df: DataFrame) =
+    df.withColumn("event_type", (col("value") % 3).cast("string"))
 
-  test("streaming holt over 4 micro-batches equals batch holtExact") {
-    val rnd = new scala.util.Random(92)
-    val rows = randomSeries(rnd)
-    val spark2 = spark
-    import spark2.implicits._
-    def sel(df: DataFrame) = df.select(col("user_id"), col("ts"), col("value"),
-      col("holt_level_value").alias("lvl"), col("holt_trend_value").alias("trd"))
-    val streamed = sel(runChunkedStream(rows, 4, df =>
-      StreamingTSDF.holt(df, "ts", Seq("user_id"), "value",
-        alpha = 0.3, beta = 0.1)))
-    val batch = sel(TSDF(rows.toDF("user_id", "ts", "value"), "ts", Seq("user_id"))
-      .holtExact("value", alpha = 0.3, beta = 0.1).df)
-    assertDfEquality(streamed, batch)
-  }
+  private val foldCases = Seq(
+    FoldCase("ema", "emaExact", 91, 95,
+      StreamingTSDF.ema(_, "ts", key, "value", alpha = 0.3),
+      tsdf(_).emaExact("value", alpha = 0.3).df
+        .withColumnRenamed("ema_exact_value", "ema_value"),
+      vcols("ema_value")),
+    FoldCase("holt", "holtExact", 92, 96,
+      StreamingTSDF.holt(_, "ts", key, "value", alpha = 0.3, beta = 0.1),
+      tsdf(_).holtExact("value", alpha = 0.3, beta = 0.1).df,
+      vcols("holt_level_value", "holt_trend_value")),
+    FoldCase("kalman", "kalmanLevel", 93, 97,
+      StreamingTSDF.kalmanLevel(_, "ts", key, "value", q = 0.3, r = 2.7),
+      tsdf(_).kalmanLevel("value", q = 0.3, r = 2.7).df,
+      vcols("kalman_level_value", "kalman_var_value", "kalman_gain_value")),
+    FoldCase("ewmVolatility", "ewmVolatility", 101, 102,
+      StreamingTSDF.ewmVolatility(_, "ts", key, "value", alpha = 0.3),
+      tsdf(_).ewmVolatility("value", alpha = 0.3).df,
+      vcols("ewm_mean_value", "ewm_var_value")),
+    FoldCase("holtWinters", "holtWinters", 103, 104,
+      StreamingTSDF.holtWinters(_, "ts", key, "value",
+        alpha = 0.5, beta = 0.25, gamma = 0.5, m = 5),
+      Stats.holtWinters(_, "ts", "value", key,
+        alpha = 0.5, beta = 0.25, gamma = 0.5, m = 5),
+      vcols("hw_level", "hw_trend", "hw_seasonal")),
+    FoldCase("rsi", "rsi", 105, 106,
+      StreamingTSDF.rsi(_, "ts", key, "value", n = 14),
+      tsdf(_).rsi("value", n = 14).df, vcols("rsi_value")),
+    FoldCase("macd", "macd", 107, 108,
+      StreamingTSDF.macd(_, "ts", key, "value"), tsdf(_).macd("value").df,
+      vcols("macd_value", "macd_signal_value", "macd_hist_value")),
+    FoldCase("drawdown", "drawdown", 109, 110,
+      StreamingTSDF.drawdown(_, "ts", key, "value"),
+      Stats.drawdown(_, "ts", "value", key),
+      vcols("peak_value", "drawdown_value")),
+    FoldCase("rollingMedian", "rollingMedian", 111, 112,
+      StreamingTSDF.rollingMedian(_, "ts", key, "value", window = 5),
+      Stats.rollingMedian(_, "ts", "value", key, window = 5),
+      vcols("rolling_median_value")),
+    FoldCase("gaps", "gaps", 113, 114,
+      StreamingTSDF.gaps(_, "ts", key, minGapSeconds = 30),
+      Stats.gaps(_, "ts", key, minGapSeconds = 30),
+      Seq("user_id", "gap_start", "gap_end", "gap_seconds")),
+    FoldCase("cusumControl", "cusumControl", 115, 116,
+      StreamingTSDF.cusumControl(_, "ts", key, "value",
+        target = 500L, slack = 10L, threshold = 2000L),
+      Stats.cusumControl(_, "ts", "value", key,
+        target = 500L, slack = 10L, threshold = 2000L)
+        .withColumn("value", col("value").cast("long")),
+      vcols("cusum_hi", "cusum_lo", "alert")),
+    FoldCase("thresholdCrossings", "thresholdCrossings", 117, 118,
+      StreamingTSDF.thresholdCrossings(_, "ts", key, "value",
+        threshold = 500.0),
+      Stats.thresholdCrossings(_, "ts", "value", key, threshold = 500.0),
+      Seq("user_id", "ts", "prev_ts", "prev_value", "value", "direction")),
+    FoldCase("stochastic", "stochastic", 119, 120,
+      StreamingTSDF.stochastic(_, "ts", key, "value", window = 5),
+      Stats.stochastic(_, "ts", "value", key, window = 5),
+      vcols("pct_k", "pct_d")),
+    FoldCase("donchian", "donchian", 121, 122,
+      StreamingTSDF.donchian(_, "ts", key, "value", window = 5),
+      Stats.donchian(_, "ts", "value", key, window = 5),
+      vcols("dc_upper", "dc_lower", "dc_mid")),
+    // ends pinned so the batch spine (first..last bucket per series) spans
+    // the same range the streaming operator emits
+    FoldCase("interpolate", "resample+interpolate", 123, 124,
+      StreamingTSDF.interpolate(_, "ts", key, "value", "1 minute", "linear"),
+      tsdf(_).resample("1 minute", "floor")
+        .interpolate("linear", showInterpolated = true).df,
+      vcols("is_ts_interpolated"), pinEnds = true),
+    // attr derived from the value so no-op re-emits are common; the value
+    // column doubles as the tie column (unused here — distinct ts — but
+    // exercises the tie plumbing through the state round-trip)
+    FoldCase("scd2Changelog", "scd2FromLog", 125, 97,
+      df => StreamingTSDF.scd2Changelog(withAttr(df), key, "ts",
+        Seq("event_type"), "value"),
+      df => graft.pipeline.Cdc.scd2FromLog(withAttr(df), "user_id", "ts",
+        Seq("event_type"), tieCols = Seq("value"))
+        .withColumnRenamed("valid_from", "ts"),
+      Seq("user_id", "ts", "event_type"),
+      restartTitle = Some("streaming scd2Changelog across checkpoint " +
+        "restarts equals the batch change set")))
 
-  test("streaming kalman over 4 micro-batches equals batch kalmanLevel") {
-    val rnd = new scala.util.Random(93)
-    val rows = randomSeries(rnd)
-    val spark2 = spark
-    import spark2.implicits._
-    def sel(df: DataFrame) = df.select(col("user_id"), col("ts"), col("value"),
-      col("kalman_level_value").alias("m"), col("kalman_var_value").alias("p"),
-      col("kalman_gain_value").alias("k"))
-    val streamed = sel(runChunkedStream(rows, 4, df =>
-      StreamingTSDF.kalmanLevel(df, "ts", Seq("user_id"), "value",
-        q = 0.3, r = 2.7)))
-    val batch = sel(TSDF(rows.toDF("user_id", "ts", "value"), "ts", Seq("user_id"))
-      .kalmanLevel("value", q = 0.3, r = 2.7).df)
-    assertDfEquality(streamed, batch)
+  for (c <- foldCases) {
+    def check(seed: Int, run: (Seq[(String, Timestamp, Double)], Int,
+        DataFrame => DataFrame, Boolean) => DataFrame, nChunks: Int): Unit = {
+      val rnd = new scala.util.Random(seed)
+      val rows = randomSeries(rnd) ++ (if (!c.pinEnds) Nil
+        else Seq("u1", "u2", "u3").flatMap(s =>
+          Seq((s, at(0), 500.0), (s, at(399), 500.0))))
+      val spark2 = spark
+      import spark2.implicits._
+      val streamed = run(rows, nChunks, c.stream, true).select(c.cols.map(col): _*)
+      val batch = c.batch(rows.toDF("user_id", "ts", "value"))
+        .select(c.cols.map(col): _*)
+      assertDfEquality(streamed, batch)
+    }
+    test(s"streaming ${c.op} over 4 micro-batches equals batch ${c.twin}") {
+      check(c.chunkSeed, runChunkedStream, 4)
+    }
+    test(c.restartTitle.getOrElse(
+        s"streaming ${c.op} state round-trips a checkpoint restart (file source)")) {
+      check(c.restartSeed, runRestartStream, 3)
+    }
   }
 
   test("stream-stream tolerance join fed in 3 chunk pairs equals batch join") {
@@ -260,51 +351,6 @@ class StreamingResumeSpec extends SparkTestBase {
     assert(ids == Seq(1L, 2L, 5L), s"got $ids")
   }
 
-  test("streaming ema state round-trips a checkpoint restart (file source)") {
-    val rnd = new scala.util.Random(95)
-    val rows = randomSeries(rnd)
-    val spark2 = spark
-    import spark2.implicits._
-    val streamed = emaSelect(runRestartStream(rows, 3, df =>
-      StreamingTSDF.ema(df, "ts", Seq("user_id"), "value", alpha = 0.3)))
-    val batch = emaSelect(
-      TSDF(rows.toDF("user_id", "ts", "value"), "ts", Seq("user_id"))
-        .emaExact("value", alpha = 0.3).df
-        .withColumnRenamed("ema_exact_value", "ema_value"))
-    assertDfEquality(streamed, batch)
-  }
-
-  test("streaming holt state round-trips a checkpoint restart (file source)") {
-    val rnd = new scala.util.Random(96)
-    val rows = randomSeries(rnd)
-    val spark2 = spark
-    import spark2.implicits._
-    def sel(df: DataFrame) = df.select(col("user_id"), col("ts"), col("value"),
-      col("holt_level_value").alias("lvl"), col("holt_trend_value").alias("trd"))
-    val streamed = sel(runRestartStream(rows, 3, df =>
-      StreamingTSDF.holt(df, "ts", Seq("user_id"), "value",
-        alpha = 0.3, beta = 0.1)))
-    val batch = sel(TSDF(rows.toDF("user_id", "ts", "value"), "ts", Seq("user_id"))
-      .holtExact("value", alpha = 0.3, beta = 0.1).df)
-    assertDfEquality(streamed, batch)
-  }
-
-  test("streaming kalman state round-trips a checkpoint restart (file source)") {
-    val rnd = new scala.util.Random(97)
-    val rows = randomSeries(rnd)
-    val spark2 = spark
-    import spark2.implicits._
-    def sel(df: DataFrame) = df.select(col("user_id"), col("ts"), col("value"),
-      col("kalman_level_value").alias("m"), col("kalman_var_value").alias("p"),
-      col("kalman_gain_value").alias("k"))
-    val streamed = sel(runRestartStream(rows, 3, df =>
-      StreamingTSDF.kalmanLevel(df, "ts", Seq("user_id"), "value",
-        q = 0.3, r = 2.7)))
-    val batch = sel(TSDF(rows.toDF("user_id", "ts", "value"), "ts", Seq("user_id"))
-      .kalmanLevel("value", q = 0.3, r = 2.7).df)
-    assertDfEquality(streamed, batch)
-  }
-
   test("streaming dedup state survives a checkpoint restart (file source)") {
     val spark2 = spark
     import spark2.implicits._
@@ -333,28 +379,5 @@ class StreamingResumeSpec extends SparkTestBase {
     q = startQ(); q.processAllAvailable(); q.stop()
     val ids = spark.read.parquet(outDir).collect().map(_.getLong(0)).sorted.toSeq
     assert(ids == Seq(1L, 2L, 5L), s"got $ids")
-  }
-
-  test("streaming scd2Changelog across checkpoint restarts equals the " +
-      "batch change set") {
-    val rnd = new scala.util.Random(97)
-    val rows = randomSeries(rnd)
-    val spark2 = spark
-    import spark2.implicits._
-    // attr derived from the value so no-op re-emits are common; the value
-    // column doubles as the tie column (unused here — distinct ts — but
-    // exercises the tie plumbing through the state round-trip)
-    def withAttr(df: DataFrame) =
-      df.withColumn("event_type", (col("value") % 3).cast("string"))
-    val streamed = runRestartStream(rows, 3, df =>
-      StreamingTSDF.scd2Changelog(withAttr(df), Seq("user_id"), "ts",
-        Seq("event_type"), "value"))
-      .select("user_id", "ts", "event_type")
-    val batch = graft.pipeline.Cdc.scd2FromLog(
-      withAttr(rows.toDF("user_id", "ts", "value")),
-      "user_id", "ts", Seq("event_type"), tieCols = Seq("value"))
-      .select(col("user_id"), col("valid_from").alias("ts"),
-        col("event_type"))
-    assertDfEquality(streamed, batch)
   }
 }
