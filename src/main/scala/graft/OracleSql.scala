@@ -3316,7 +3316,8 @@ object OracleSql {
     },
 
     // Char-weighted Gopher repetition replay: same token/line char-mass
-    // conventions as TextAnalysis.charRepetitionSignals (gram mass = len
+    // conventions as TextAnalysis.charRepetitionSignals, whose Spark side
+    // is the one-pass TextKernels.repetition kernel (gram mass = len
     // minus joining spaces; coverage counts a token once under any
     // duplicated window; zero denominators -> 0.0), same roundDet.
     "q_repetition" -> {

@@ -1367,21 +1367,13 @@ object SparkEntry {
       col("doc_id") +: TextAnalysis.repetitionSignals(col("text")): _*)
 
   /** Char-weighted Gopher repetition family (Table A1 thresholds) — the
-    * companion to q_quality_v2's count-based signals. The per-row work is
-    * O(G²) interpreted-HOF algebra, orders heavier than the scan bytes: a
-    * small corpus file carries all its rows in one row group and would
-    * serialize the pass on one core — which a partition-COUNT probe
-    * CANNOT detect: `spark.sql.files.minPartitionNum` splits even a
-    * single-row-group file into defaultParallelism fictional partitions,
-    * all but one empty (measured at sf1 — the probe serialized the whole
-    * pass onto one core), so the spread is unconditional, the decode
-    * family's convention. The exchange moves each row's text once
-    * (scan-sized, negligible next to the per-row compute). */
+    * companion to q_quality_v2's count-based signals, and like it a plain
+    * scan projection: the one-pass [[graft.functions.TextKernels
+    * .repetition]] kernel costs O(chars) per row, so no exchange spreads
+    * the rows. */
   private def qRepetition(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(col("doc_id"), col("text"))
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(
-        col("doc_id") +: TextAnalysis.charRepetitionSignals(col("text")): _*)
+    docs(s, dir).select(
+      col("doc_id") +: TextAnalysis.charRepetitionSignals(col("text")): _*)
 
   /** The synthetic corpus contains no PII, so every doc gets deterministic
     * id-derived addresses/numbers appended before detection — the regex

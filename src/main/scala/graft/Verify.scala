@@ -26,12 +26,14 @@ object Verify {
     SparkEntry.queries.filter(q => only.isEmpty || only(q._1)).foreach { case (name, fn) =>
       // repartition(1), NOT coalesce(1): coalesce collapses the whole
       // post-shuffle stage into the single writer task, so a query whose
-      // heavy projection sits above its last exchange (the interpreted-HOF
-      // text passes, the decode family) runs the entire corpus on ONE
-      // core inside Verify (measured: q_repetition at sf1 went from one
-      // ~500 s task to a 16-way stage). The extra shuffle moves only the
-      // RESULT rows; the single output file the comparator reads is
-      // unchanged.
+      // heavy projection sits above its last exchange (the decode family,
+      // any interpreted-HOF pass) runs the entire corpus on ONE core
+      // inside Verify. The measured case was q_repetition at sf1: one
+      // ~500 s task became a 16-way stage. That query is now a one-pass
+      // kernel with no exchange, so it no longer shows the effect; the
+      // rule still holds for the decode family. The extra shuffle moves
+      // only the RESULT rows; the single output file the comparator reads
+      // is unchanged.
       try fn(spark, sfDir).repartition(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -33,6 +34,16 @@ import graft.pipeline.Hashing
   *    window selection + consecutive dedup) in O(m) per document —
   *    replaces the interpreted closed-form `least`/`when`-chain cascade
   *    (O(m·w²) with the lambda re-evaluation constant).
+  *  - [[WordShingles]]: distinct word w-shingles as byte slices of the
+  *    normalized text — replaces the per-shingle `concat_ws` lambda.
+  *  - [[HashedGramBuckets]]: DSIR's hashed unigram + bigram buckets of a
+  *    normalized text — replaces the gram-string HOF + per-gram hash
+  *    lambda.
+  *  - [[RepetitionSignals]]: both Gopher repetition families (line,
+  *    token and word n-gram counts over the raw and normalized text) in
+  *    one pass with hash maps over byte slices — replaces the O(G²)
+  *    pairwise `filter`/`aggregate` lambda chains behind q_quality_v2
+  *    and q_repetition.
   *
   * Value parity is bit-for-bit and locked by the existing unit suites and
   * the DuckDB oracle replays (which compute the same definitions
@@ -118,17 +129,8 @@ object TextKernels {
     val bytes = s.getBytes
     val len = bytes.length
     // token boundaries; split(" ") on "" yields [""] — one empty token
-    var nTok = 1
-    var i = 0
-    while (i < len) { if (bytes(i) == ' ') nTok += 1; i += 1 }
-    val starts = new Array[Int](nTok + 1)
-    var t = 1
-    i = 0
-    while (i < len) {
-      if (bytes(i) == ' ') { starts(t) = i + 1; t += 1 }
-      i += 1
-    }
-    starts(nTok) = len + 1
+    val starts = pieceStarts(bytes, ' ')
+    val nTok = starts.length - 1
     val seen = new java.util.LinkedHashSet[UTF8String]()
     if (w == 1) {
       var j = 0
@@ -291,17 +293,8 @@ object TextKernels {
       return new GenericArrayData(out)
     }
     // token boundaries; split(" ") on "" yields [""] — one empty token
-    var nTok = 1
-    i = 0
-    while (i < len) { if (bytes(i) == ' ') nTok += 1; i += 1 }
-    val starts = new Array[Int](nTok + 1)
-    var t = 1
-    i = 0
-    while (i < len) {
-      if (bytes(i) == ' ') { starts(t) = i + 1; t += 1 }
-      i += 1
-    }
-    starts(nTok) = len + 1
+    val starts = pieceStarts(bytes, ' ')
+    val nTok = starts.length - 1
     def hashRange(from: Int, until: Int): Long = {
       var h = 0L
       var j = from
@@ -322,6 +315,175 @@ object TextKernels {
     }
     new GenericArrayData(out)
   }
+
+  /** Piece boundaries of `bytes` split on `sep` keeping every piece
+    * (Java `split(sep, -1)`: "" is one empty piece, a trailing separator
+    * leaves a trailing empty piece): piece j is `[st(j), st(j + 1) - 1)`,
+    * so `st` has one entry more than there are pieces. */
+  private def pieceStarts(bytes: Array[Byte], sep: Byte): Array[Int] = {
+    var n = 1
+    var i = 0
+    while (i < bytes.length) { if (bytes(i) == sep) n += 1; i += 1 }
+    val st = new Array[Int](n + 1)
+    var t = 1
+    i = 0
+    while (i < bytes.length) {
+      if (bytes(i) == sep) { st(t) = i + 1; t += 1 }
+      i += 1
+    }
+    st(n) = bytes.length + 1
+    st
+  }
+
+  /** Occurrence counts of the slices spanning `w` consecutive pieces
+    * (separators included), `[st(g), st(g + w) - 1)` for each start g:
+    * `id(g)` numbers the distinct slices in first-occurrence order and
+    * `count(id)` is how often each occurs. Slices hash as byte views of
+    * `bytes` — nothing is copied. */
+  private final class SliceCounts(bytes: Array[Byte], st: Array[Int], w: Int) {
+    val m: Int = math.max(st.length - w, 0)
+    val id = new Array[Int](m)
+    val count: Array[Int] = {
+      val ids = new java.util.HashMap[UTF8String, Integer](2 * m)
+      var g = 0
+      while (g < m) {
+        val key = UTF8String.fromBytes(bytes, st(g), st(g + w) - 1 - st(g))
+        val prev = ids.putIfAbsent(key, ids.size)
+        id(g) = if (prev == null) ids.size - 1 else prev.intValue
+        g += 1
+      }
+      val c = new Array[Int](ids.size)
+      g = 0
+      while (g < m) { c(id(g)) += 1; g += 1 }
+      c
+    }
+    def occ(g: Int): Int = count(id(g))
+    def len(g: Int): Int = st(g + w) - 1 - st(g)
+  }
+
+  /** The twelve Gopher repetition signals (Rae et al. 2021, §A1.1) of one
+    * document in one pass, unrounded, in [[RepetitionSignals]]' field
+    * order: the count family of [[graft.pipeline.TextAnalysis
+    * .repetitionSignals]] then the char-weighted family of
+    * [[graft.pipeline.TextAnalysis.charRepetitionSignals]].
+    *
+    * `raw` is the document; its lines split on '\n' keeping every piece,
+    * a line's char mass is its `numChars` and `trim` strips only ' '.
+    * `norm` is its normalized text (pure [a-z0-9 ], single-spaced), whose
+    * tokens split on ' ' and whose word n-grams are byte slices — byte
+    * length is char length there. Counts are hash maps over byte slices,
+    * so the cost is O(chars) per n, not the O(G²) pairwise counting of
+    * the lambda forms these values were defined by. Every value is the
+    * same Long sum, Int/Long product and IEEE division those forms take,
+    * with their zero-denominator → 0.0 guards: the top gram is the
+    * longest among those with the maximum count, and a token counts once
+    * under any duplicated window covering it. */
+  def repetition(raw: UTF8String, norm: UTF8String): InternalRow = {
+    def frac(num: Long, den: Long): Double = num.toDouble / den.toDouble
+
+    val rb = raw.getBytes
+    val lst = pieceStarts(rb, '\n')
+    val lines = new SliceCounts(rb, lst, 1)
+    val nl = lines.m
+    var nEll = 0
+    var nBul = 0
+    var lineTot = 0L
+    var lineDup = 0L
+    var j = 0
+    while (j < nl) {
+      var a = lst(j)
+      var b = lst(j + 1) - 2 // last byte of the line
+      while (a <= b && rb(a) == ' ') a += 1
+      while (b >= a && rb(b) == ' ') b -= 1
+      if (b - a >= 2 && rb(b) == '.' && rb(b - 1) == '.' && rb(b - 2) == '.')
+        nEll += 1
+      if (a <= b && (rb(a) == '-' || rb(a) == '*')) nBul += 1
+      val chars = UTF8String.fromBytes(rb, lst(j), lines.len(j)).numChars()
+      lineTot += chars
+      if (lines.occ(j) >= 2) lineDup += chars
+      j += 1
+    }
+
+    val nb = norm.getBytes
+    val tst = pieceStarts(nb, ' ')
+    val toks = new SliceCounts(nb, tst, 1)
+    val nTok = toks.m
+    var tot = 0L
+    j = 0
+    while (j < nTok) { tot += toks.len(j); j += 1 }
+
+    // the most frequent n-gram: its count over all grams, and its count ×
+    // the longest token mass among the grams with that count over `tot`
+    def top(n: Int): (Double, Double) = {
+      val gs = new SliceCounts(nb, tst, n)
+      if (gs.m == 0) return (0.0, 0.0)
+      val maxCnt = gs.count.max
+      var maxLen = 0
+      var g = 0
+      while (g < gs.m) {
+        if (gs.occ(g) == maxCnt) maxLen = math.max(maxLen, gs.len(g) - (n - 1))
+        g += 1
+      }
+      (frac(maxCnt, gs.m),
+        if (tot > 0) frac(maxCnt.toLong * maxLen.toLong, tot) else 0.0)
+    }
+    // token mass under any duplicated n-gram window over `tot`: token i
+    // is covered when a duplicated window starts in [i - n + 1, i], so
+    // track the latest duplicated start seen so far
+    def cover(n: Int): Double = {
+      val gs = new SliceCounts(nb, tst, n)
+      if (gs.m == 0 || tot == 0) return 0.0
+      var covered = 0L
+      var lastDup = Int.MinValue
+      var i = 0
+      while (i < nTok) {
+        if (i < gs.m && gs.occ(i) >= 2) lastDup = i
+        if (lastDup >= i - n + 1) covered += toks.len(i)
+        i += 1
+      }
+      frac(covered, tot)
+    }
+
+    val (t2, t2c) = top(2)
+    val (t3, t3c) = top(3)
+    new GenericInternalRow(Array[Any](
+      frac(nl - lines.count.length, nl), frac(nEll, nl), frac(nBul, nl),
+      frac(nTok - toks.count.length, nTok), t2, t3,
+      if (lineTot > 0) frac(lineDup, lineTot) else 0.0,
+      t2c, t3c, top(4)._2, cover(5), cover(10)))
+  }
+}
+
+/** Expression form of [[TextKernels.repetition]] over (raw text, its
+  * normalized text): a struct of the twelve unrounded signals. */
+case class RepetitionSignals(left: Expression, right: Expression)
+    extends BinaryExpression {
+  override def dataType: DataType = StructType(
+    (RepetitionSignals.CountFields ++ RepetitionSignals.CharFields)
+      .map(StructField(_, DoubleType, nullable = false)))
+  override def prettyName: String = "graft_repetition"
+
+  override protected def nullSafeEval(raw: Any, norm: Any): Any =
+    TextKernels.repetition(raw.asInstanceOf[UTF8String],
+      norm.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      (r, n) => s"graft.functions.TextKernels.repetition($r, $n)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): RepetitionSignals =
+    copy(left = newLeft, right = newRight)
+}
+
+object RepetitionSignals {
+  /** The count family (q_quality_v2). */
+  val CountFields: Seq[String] = Seq("dup_line_frac", "ellipsis_line_frac",
+    "bullet_line_frac", "dup_token_frac", "top2gram_frac", "top3gram_frac")
+  /** The char-weighted family (q_repetition). */
+  val CharFields: Seq[String] = Seq("dup_line_char_frac",
+    "top2gram_char_frac", "top3gram_char_frac", "top4gram_char_frac",
+    "dup5gram_char_frac", "dup10gram_char_frac")
 }
 
 /** Expression form of [[TextKernels.hashedGramBuckets]]. Input must

@@ -43,7 +43,7 @@ object Dsir {
   /** Word unigrams ++ bigrams WITH multiplicity (DSIR counts occurrences,
     * unlike [[Dedup.shingles]]' distinct sets). The token array is bound
     * once as a lambda variable — the Dedup.shingles CSE lesson. */
-  private[pipeline] def grams(textCol: Column): Column = {
+  private[graft] def grams(textCol: Column): Column = {
     val toks = split(Dedup.normalizeText(textCol), " ")
     flatten(transform(array(toks), ts =>
       concat(ts,

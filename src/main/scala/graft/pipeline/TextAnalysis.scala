@@ -133,65 +133,49 @@ object TextAnalysis {
       score.alias("quality_score"))
   }
 
-  /** Binds `a` once as a lambda variable — HOF lambdas are interpreted with
-    * no CSE, so a derived array referenced inside a per-element lambda would
-    * otherwise re-evaluate its whole producing chain per element. */
-  private def bindArr(a: Column)(f: Column => Column): Column =
-    element_at(transform(array(a), f), 1)
-
   /** Newlines become spaces before normalization so words never merge
     * across line breaks ([[Dedup.normalizeText]] strips characters outside
     * [a-z0-9 ] instead of separating on them). */
   private def joinLines(text: Column): Column =
     regexp_replace(text, "\n", " ")
 
-  /** Gopher-style repetition/boilerplate signals (Rae et al. 2021, §A1.1
-    * repetition filters — public paper): duplicate-line fraction,
-    * ellipsis-/bullet-line ratios, duplicate-token fraction and top-2/3-gram
-    * fractions. Pure per-row Column algebra over the shared
-    * normalize/tokenize kernels — no shuffle at all, so the operator is
-    * embarrassingly parallel at any scale; each document is bounded, so the
-    * per-doc O(distinct·total) gram count is constant work per row.
-    * All fractions are deterministically rounded to 6 decimals
-    * ([[roundDet]]) for cross-engine replay. */
-  def repetitionSignals(text: Column): Seq[Column] = {
-    val lineSigs = bindArr(split(text, "\n")) { lines =>
-      val nl = size(lines).cast(DoubleType)
-      val dup = (size(lines) - size(array_distinct(lines))).cast(DoubleType) / nl
-      val ell = size(filter(lines, l =>
-        endswith(trim(l), lit("...")))).cast(DoubleType) / nl
-      val bul = size(filter(lines, l =>
-        startswith(trim(l), lit("-")) || startswith(trim(l), lit("*"))))
-        .cast(DoubleType) / nl
-      struct(dup.alias("dl"), ell.alias("el"), bul.alias("bl"))
+  /** `fields` of the one codegen'd repetition kernel
+    * ([[graft.functions.RepetitionSignals]] over the raw text and its
+    * [[Dedup.normalizeText]] form), each rounded by [[roundDet]].
+    * Subexpression elimination evaluates the kernel once per row however
+    * many fields are read. */
+  private def repetitionFields(text: Column, fields: Seq[String]): Seq[Column] = {
+    import org.apache.spark.sql.GraftColumns.{column, expression}
+    val k = column(graft.functions.RepetitionSignals(expression(text),
+      expression(Dedup.normalizeText(joinLines(text)))))
+    fields.map { f =>
+      val v = if (zeroOnNullText(f)) coalesce(k.getField(f), lit(0.0))
+        else k.getField(f)
+      roundDet(v, 6).alias(f)
     }
-    val dupTok = bindArr(split(Dedup.normalizeText(joinLines(text)), " ")) { toks =>
-      (size(toks) - size(array_distinct(toks))).cast(DoubleType) / size(toks)
-    }
-    Seq(
-      roundDet(lineSigs.getField("dl"), 6).alias("dup_line_frac"),
-      roundDet(lineSigs.getField("el"), 6).alias("ellipsis_line_frac"),
-      roundDet(lineSigs.getField("bl"), 6).alias("bullet_line_frac"),
-      roundDet(dupTok, 6).alias("dup_token_frac"),
-      topNgramFraction(text, 2).alias("top2gram_frac"),
-      topNgramFraction(text, 3).alias("top3gram_frac"))
   }
 
-  /** Fraction of all word w-grams occupied by the single most frequent one
-    * — high values flag templated/boilerplate text. Counts are per-row HOF
-    * passes over the bound gram array (documents are bounded; no shuffle). */
-  def topNgramFraction(text: Column, w: Int): Column = roundDet(
-    bindArr(split(Dedup.normalizeText(joinLines(text)), " ")) { toks =>
-      bindArr(when(size(toks) >= w,
-        transform(sequence(lit(1), size(toks) - (w - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(w)))))
-        .otherwise(typedLit(Seq.empty[String]))) { grams =>
-        when(size(grams) >= 1,
-          array_max(transform(array_distinct(grams), g =>
-            size(filter(grams, x => x === g)))).cast(DoubleType) / size(grams))
-          .otherwise(lit(0.0))
-      }
-    }, 6)
+  /** The signals a null text scores 0.0 on, not null: the gram fractions
+    * and the whole char family, whose definitions guard an empty gram
+    * list or a zero total with `otherwise(0.0)`, and a null input falls
+    * through to that branch. */
+  private val zeroOnNullText: Set[String] =
+    Set("top2gram_frac", "top3gram_frac") ++
+      graft.functions.RepetitionSignals.CharFields
+
+  /** Gopher-style repetition/boilerplate signals (Rae et al. 2021, §A1.1
+    * repetition filters — public paper): duplicate-line fraction,
+    * ellipsis-/bullet-line ratios (lines `trim`med of spaces),
+    * duplicate-token fraction and top-2/3-gram fractions (the most
+    * frequent word gram's count over all grams; 0.0 below one gram).
+    * Computed by the one-pass [[graft.functions.TextKernels.repetition]]
+    * kernel: per-row hash counts over the lines and the normalized-text
+    * slices, O(chars) per document and no shuffle at all. A null text
+    * scores null on the line and token fractions and 0.0 on the gram
+    * fractions. All fractions are deterministically rounded to 6
+    * decimals ([[roundDet]]) for cross-engine replay. */
+  def repetitionSignals(text: Column): Seq[Column] =
+    repetitionFields(text, graft.functions.RepetitionSignals.CountFields)
 
   /** Character-WEIGHTED Gopher repetition signals (Rae et al. 2021 §A1.1
     * Table A1 — the char-fraction family the paper actually thresholds on;
@@ -205,69 +189,12 @@ object TextAnalysis {
     * char length — a total order both engines replay); `dupNgram_char_frac`
     * is Gopher's COVERAGE semantics: a token's chars count once if any
     * duplicated n-gram window spans it (overlaps never double-count).
-    * Pure per-row HOF algebra over bounded documents — zero shuffles, so
-    * the operator stays embarrassingly parallel at any corpus scale; the
-    * per-doc O(G²) gram counting is the same bounded work
-    * [[repetitionSignals]] already does. */
-  def charRepetitionSignals(text: Column): Seq[Column] = {
-    val dupLine = bindArr(split(text, "\n")) { lines =>
-      val tot = aggregate(lines, lit(0L), (a, l) => a + length(l).cast(LongType))
-      val dup = aggregate(lines, lit(0L), (a, l) =>
-        a + when(size(filter(lines, x => x === l)) >= 2,
-          length(l).cast(LongType)).otherwise(lit(0L)))
-      when(tot > 0, dup.cast(DoubleType) / tot.cast(DoubleType))
-        .otherwise(lit(0.0))
-    }
-    val toksCol = split(Dedup.normalizeText(joinLines(text)), " ")
-    def withToks(f: (Column, Column) => Column): Column = bindArr(toksCol) {
-      toks =>
-        val tot = aggregate(toks, lit(0L), (a, t) => a + length(t).cast(LongType))
-        when(tot > 0, f(toks, tot)).otherwise(lit(0.0))
-    }
-    def grams(toks: Column, n: Int): Column =
-      when(size(toks) >= n,
-        transform(sequence(lit(1), size(toks) - (n - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(n)))))
-        .otherwise(typedLit(Seq.empty[String]))
-    def topChar(n: Int): Column = withToks { (toks, tot) =>
-      bindArr(grams(toks, n)) { gs =>
-        val cnt = (g: Column) => size(filter(gs, x => x === g))
-        val maxCnt = array_max(transform(array_distinct(gs), g => cnt(g)))
-        val maxLen = array_max(transform(
-          filter(array_distinct(gs), g => cnt(g) === maxCnt),
-          g => length(g) - (n - 1)))
-        when(size(gs) >= 1,
-          (maxCnt.cast(LongType) * maxLen.cast(LongType)).cast(DoubleType) /
-            tot.cast(DoubleType))
-          .otherwise(lit(0.0))
-      }
-    }
-    def dupCover(n: Int): Column = withToks { (toks, tot) =>
-      bindArr(grams(toks, n)) { gs =>
-        bindArr(transform(gs, g => size(filter(gs, x => x === g)) >= 2)) {
-          flags =>
-            val nG = size(gs)
-            when(nG >= 1,
-              aggregate(sequence(lit(1), size(toks)), lit(0L), (acc, i) =>
-                acc + when(
-                  exists(
-                    sequence(greatest(lit(1), i - (n - 1)), least(i, nG)),
-                    s => element_at(flags, s)),
-                  length(element_at(toks, i)).cast(LongType))
-                  .otherwise(lit(0L)))
-                .cast(DoubleType) / tot.cast(DoubleType))
-              .otherwise(lit(0.0))
-        }
-      }
-    }
-    Seq(
-      roundDet(dupLine, 6).alias("dup_line_char_frac"),
-      roundDet(topChar(2), 6).alias("top2gram_char_frac"),
-      roundDet(topChar(3), 6).alias("top3gram_char_frac"),
-      roundDet(topChar(4), 6).alias("top4gram_char_frac"),
-      roundDet(dupCover(5), 6).alias("dup5gram_char_frac"),
-      roundDet(dupCover(10), 6).alias("dup10gram_char_frac"))
-  }
+    * Computed by the same one-pass kernel as [[repetitionSignals]]
+    * ([[graft.functions.TextKernels.repetition]]): O(chars) per document,
+    * no shuffle. A null text scores 0.0 on every signal (its zero-total
+    * guard). */
+  def charRepetitionSignals(text: Column): Seq[Column] =
+    repetitionFields(text, graft.functions.RepetitionSignals.CharFields)
 
   /** Encoding-corruption (mojibake) QA signals — the ingestion gate that
     * catches double-decoded text before it poisons a training corpus:

@@ -33,12 +33,7 @@ object DsirProfile {
     t("scan+normalize")(noop(docs.select(Dedup.normalizeText(col("text")))))
     t("tokens (split)")(noop(docs.select(
       split(Dedup.normalizeText(col("text")), " "))))
-    val g = {
-      val m = classOf[Dsir.type].getDeclaredMethod("grams",
-        classOf[org.apache.spark.sql.Column])
-      m.setAccessible(true)
-      m.invoke(Dsir, col("text")).asInstanceOf[org.apache.spark.sql.Column]
-    }
+    val g = Dsir.grams(col("text"))
     t("grams (uni+bi strings)")(noop(docs.select(g.alias("g"))))
     t("grams+size only")(noop(docs.select(size(g))))
     val ratios = Dsir.collectRatios(

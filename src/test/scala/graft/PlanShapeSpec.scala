@@ -790,6 +790,26 @@ class PlanShapeSpec extends SparkTestBase {
     assert(out.nonEmpty)
   }
 
+  test("repetition signals are one kernel per row in a plain scan " +
+      "projection: no lambda, no exchange") {
+    // a range source, not local rows, so the projection is planned, not
+    // constant-folded into a LocalTableScan
+    val docsDf = spark.range(40).select(col("id").alias("doc_id"),
+      concat(lit("alpha beta\nalpha beta\n- x "), col("id")).alias("text"))
+    for (signals <- Seq(pipeline.TextAnalysis.repetitionSignals _,
+        pipeline.TextAnalysis.charRepetitionSignals _)) {
+      val out = docsDf.select(col("doc_id") +: signals(col("text")): _*)
+      val p = plan(out)
+      assert(!p.contains("lambdafunction"), p)
+      assert(!p.contains("Exchange"), p)
+      // subexpression elimination: six fields, one kernel call per row
+      val code = org.apache.spark.sql.execution.debug
+        .codegenStringSeq(out.queryExecution.executedPlan).map(_._2).mkString
+      assert("TextKernels\\.repetition\\(".r.findAllIn(code).size == 1, code)
+      assert(out.collect().length == 40)
+    }
+  }
+
   test("BpeCount runs inside whole-stage codegen (no shuffle, no eval island)") {
     // a real file scan — a local Seq relation constant-folds the whole
     // projection into LocalTableScan and proves nothing about codegen

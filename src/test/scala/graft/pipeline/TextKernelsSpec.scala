@@ -2,16 +2,18 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
+  StringType}
 
 import graft.SparkTestBase
 
 /** Differential locks for the native text kernels (r18 optimization):
-  * [[graft.functions.CollapseNonAlnum]], [[graft.functions.WordNGrams]]
-  * and [[graft.functions.WinnowGrams]] must be bit-identical to the
-  * Column-algebra forms they replaced — the regex normalize, the
-  * split+transform n-gram assembly, and the interpreted closed-form
-  * winnow selection (reconstructed here verbatim from the pre-r18
+  * [[graft.functions.CollapseNonAlnum]], [[graft.functions.WordNGrams]],
+  * [[graft.functions.WinnowGrams]] and [[graft.functions.RepetitionSignals]]
+  * must be bit-identical to the Column-algebra forms they replaced — the
+  * regex normalize, the split+transform n-gram assembly, the interpreted
+  * closed-form winnow selection and the interpreted Gopher repetition
+  * chains (reconstructed here verbatim from the replaced
   * implementations). */
 class TextKernelsSpec extends SparkTestBase {
   import spark.implicits._
@@ -179,6 +181,162 @@ class TextKernelsSpec extends SparkTestBase {
               Dedup.normalizeText(col("text"))), buckets, seed)).alias("bs"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       assert(got == want, s"buckets=$buckets seed=$seed") // incl. ORDER
+    }
+  }
+
+  /** The pre-kernel interpreted repetition chains, verbatim: the count
+    * family (`repetitionSignals` + `topNgramFraction`) then the
+    * char-weighted family (`charRepetitionSignals`), twelve columns. */
+  private def oldRepetition(text: Column): Seq[Column] = {
+    def bindArr(a: Column)(f: Column => Column): Column =
+      element_at(transform(array(a), f), 1)
+    def joinLines(text: Column): Column =
+      regexp_replace(text, "\n", " ")
+    val roundDet = TextAnalysis.roundDet _
+    def topNgramFraction(text: Column, w: Int): Column = roundDet(
+      bindArr(split(Dedup.normalizeText(joinLines(text)), " ")) { toks =>
+        bindArr(when(size(toks) >= w,
+          transform(sequence(lit(1), size(toks) - (w - 1)),
+            i => concat_ws(" ", slice(toks, i, lit(w)))))
+          .otherwise(typedLit(Seq.empty[String]))) { grams =>
+          when(size(grams) >= 1,
+            array_max(transform(array_distinct(grams), g =>
+              size(filter(grams, x => x === g)))).cast(DoubleType) / size(grams))
+            .otherwise(lit(0.0))
+        }
+      }, 6)
+    val lineSigs = bindArr(split(text, "\n")) { lines =>
+      val nl = size(lines).cast(DoubleType)
+      val dup = (size(lines) - size(array_distinct(lines))).cast(DoubleType) / nl
+      val ell = size(filter(lines, l =>
+        endswith(trim(l), lit("...")))).cast(DoubleType) / nl
+      val bul = size(filter(lines, l =>
+        startswith(trim(l), lit("-")) || startswith(trim(l), lit("*"))))
+        .cast(DoubleType) / nl
+      struct(dup.alias("dl"), ell.alias("el"), bul.alias("bl"))
+    }
+    val dupTok = bindArr(split(Dedup.normalizeText(joinLines(text)), " ")) { toks =>
+      (size(toks) - size(array_distinct(toks))).cast(DoubleType) / size(toks)
+    }
+    val countFamily = Seq(
+      roundDet(lineSigs.getField("dl"), 6).alias("dup_line_frac"),
+      roundDet(lineSigs.getField("el"), 6).alias("ellipsis_line_frac"),
+      roundDet(lineSigs.getField("bl"), 6).alias("bullet_line_frac"),
+      roundDet(dupTok, 6).alias("dup_token_frac"),
+      topNgramFraction(text, 2).alias("top2gram_frac"),
+      topNgramFraction(text, 3).alias("top3gram_frac"))
+
+    val dupLine = bindArr(split(text, "\n")) { lines =>
+      val tot = aggregate(lines, lit(0L), (a, l) => a + length(l).cast(LongType))
+      val dup = aggregate(lines, lit(0L), (a, l) =>
+        a + when(size(filter(lines, x => x === l)) >= 2,
+          length(l).cast(LongType)).otherwise(lit(0L)))
+      when(tot > 0, dup.cast(DoubleType) / tot.cast(DoubleType))
+        .otherwise(lit(0.0))
+    }
+    val toksCol = split(Dedup.normalizeText(joinLines(text)), " ")
+    def withToks(f: (Column, Column) => Column): Column = bindArr(toksCol) {
+      toks =>
+        val tot = aggregate(toks, lit(0L), (a, t) => a + length(t).cast(LongType))
+        when(tot > 0, f(toks, tot)).otherwise(lit(0.0))
+    }
+    def grams(toks: Column, n: Int): Column =
+      when(size(toks) >= n,
+        transform(sequence(lit(1), size(toks) - (n - 1)),
+          i => concat_ws(" ", slice(toks, i, lit(n)))))
+        .otherwise(typedLit(Seq.empty[String]))
+    def topChar(n: Int): Column = withToks { (toks, tot) =>
+      bindArr(grams(toks, n)) { gs =>
+        val cnt = (g: Column) => size(filter(gs, x => x === g))
+        val maxCnt = array_max(transform(array_distinct(gs), g => cnt(g)))
+        val maxLen = array_max(transform(
+          filter(array_distinct(gs), g => cnt(g) === maxCnt),
+          g => length(g) - (n - 1)))
+        when(size(gs) >= 1,
+          (maxCnt.cast(LongType) * maxLen.cast(LongType)).cast(DoubleType) /
+            tot.cast(DoubleType))
+          .otherwise(lit(0.0))
+      }
+    }
+    def dupCover(n: Int): Column = withToks { (toks, tot) =>
+      bindArr(grams(toks, n)) { gs =>
+        bindArr(transform(gs, g => size(filter(gs, x => x === g)) >= 2)) {
+          flags =>
+            val nG = size(gs)
+            when(nG >= 1,
+              aggregate(sequence(lit(1), size(toks)), lit(0L), (acc, i) =>
+                acc + when(
+                  exists(
+                    sequence(greatest(lit(1), i - (n - 1)), least(i, nG)),
+                    s => element_at(flags, s)),
+                  length(element_at(toks, i)).cast(LongType))
+                  .otherwise(lit(0L)))
+                .cast(DoubleType) / tot.cast(DoubleType))
+              .otherwise(lit(0.0))
+        }
+      }
+    }
+    val charFamily = Seq(
+      roundDet(dupLine, 6).alias("dup_line_char_frac"),
+      roundDet(topChar(2), 6).alias("top2gram_char_frac"),
+      roundDet(topChar(3), 6).alias("top3gram_char_frac"),
+      roundDet(topChar(4), 6).alias("top4gram_char_frac"),
+      roundDet(dupCover(5), 6).alias("dup5gram_char_frac"),
+      roundDet(dupCover(10), 6).alias("dup10gram_char_frac"))
+    countFamily ++ charFamily
+  }
+
+  // multi-line rows: duplicate lines, trailing newlines, CRLF, lines of
+  // only spaces, ellipsis/bullet lines with surrounding spaces, non-ASCII
+  private val multiLineTexts = Seq(
+    "same line\nsame line\nother line",
+    "trailing newline\n",
+    "\n",
+    "\n\n\n",
+    "a b\r\na b\r\nc d...\r\n- e\r",
+    "   \n   \n  x  \n ",
+    "  ...  \n - dash \n*star\n  ...\n..\n. . .",
+    "wait...\n  -- \n ** \n...\n ...x\n-\n*",
+    "ÉCLAIR über\nÉCLAIR über\n日本語...\n日本語...\n  ¿qué?  ",
+    "- a\n- a\n* b ...\n\tindented...\n",
+    ("one two three four five six seven eight nine ten eleven\n" * 3),
+    "x y z x y z x y z\nx y z x y z\nq")
+
+  /** Doubles as (null, raw bits): equality is bit-for-bit, null-aware. */
+  private def bits(df: DataFrame): Map[Long, Seq[(Boolean, Long)]] =
+    df.collect().map { r =>
+      r.getLong(0) -> (1 until r.length).map(i =>
+        if (r.isNullAt(i)) (true, 0L)
+        else (false, java.lang.Double.doubleToRawLongBits(r.getDouble(i))))
+    }.toMap
+
+  test("RepetitionSignals matches both interpreted repetition chains " +
+      "bit-for-bit on all twelve columns, nulls included") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // seeded: a 3-word alphabet over 1-4 lines makes count ties, repeated
+    // lines and overlapping duplicated 5-/10-gram windows common
+    val line = Gen.choose(0, 14).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf("a", "bb", "ccc")).map(_.mkString(" ")))
+    val doc = Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, line))
+      .map(_.mkString("\n"))
+    val generated = Gen.listOfN(300, doc)
+      .pureApply(Gen.Parameters.default, Seed(20211208L))
+    val all: Seq[Option[String]] =
+      (texts ++ multiLineTexts ++ generated).map(Some(_)) :+ None
+    val in = all.zipWithIndex.map { case (t, i) => (i.toLong, t.orNull) }
+      .toDF("id", "text")
+    val want = bits(in.select(col("id") +: oldRepetition(col("text")): _*))
+    // a projection over the local rows runs interpreted; above an
+    // exchange it runs codegen'd — both paths must agree
+    for ((path, src) <- Seq("eval" -> in, "codegen" -> in.repartition(2))) {
+      val got = bits(src.select(col("id") +:
+        (TextAnalysis.repetitionSignals(col("text")) ++
+          TextAnalysis.charRepetitionSignals(col("text"))): _*))
+      assert(got.size == all.size, path)
+      val diff = want.keys.toSeq.sorted.filter(i => got(i) != want(i))
+      assert(diff.isEmpty, s"$path:\n" + diff.take(5).map(i =>
+        s"${all(i.toInt)}: got ${got(i)} want ${want(i)}").mkString("\n"))
     }
   }
 
