@@ -16,6 +16,11 @@ import org.apache.spark.sql.SparkSession
   * per query is the median across passes. A single-pass timing in registry
   * order conflates run-order/JIT effects with plan cost — e.g. round 5
   * measured q_dedup_exact at 3.3× its true cost purely from cold-start.
+  *
+  * A query that throws in any pass (warm-up included) is a failure, not a
+  * timing: it is left out of every time (per-query map, total, canaries,
+  * `bench_detail.json`), listed under `"failed"` / `"n_failed"`, and its
+  * message goes to stderr.
   */
 object Bench {
   /** Canary queries: plans frozen for 10+ rounds (resample/interpolate/
@@ -61,9 +66,13 @@ object Bench {
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .toSeq
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def runOnce(): Seq[(String, Double)] = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try { fn(spark, sfDir).count() } catch {
+        case e: Throwable =>
+          if (failed.add(name)) System.err.println(s"[bench] $name failed: $e")
+      }
       name -> (System.nanoTime() - t0) / 1e9
     }
     // JVM/GC + host-load telemetry around the timed region: lets a
@@ -96,22 +105,22 @@ object Bench {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
-    val results = selected.map { case (name, _) =>
-      name -> median(passes.map(_(name)))
-    }
+    val ok = selected.map(_._1).filterNot(failed.contains)
+    val results = ok.map(name => name -> median(passes.map(_(name))))
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // canary block: per-rep raw times (not just the median) for the
     // frozen-plan set, so dispersion is readable from the artifact
     val canary = Canaries
-      .filter(c => selected.exists(_._1 == c))
+      .filter(ok.contains)
       .map { c =>
         "\"" + c + "\":" + passes.map(_(c)).mkString("[", ",", "]")
       }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"canary":$canary,"telemetry":$telemetry,"sf":"$sfDir","reps":$reps,"warmup":$warmups}"""
-    val detail = selected.map { case (name, _) =>
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n_failed":${failed.size},"failed":$failedJson,"canary":$canary,"telemetry":$telemetry,"sf":"$sfDir","reps":$reps,"warmup":$warmups}"""
+    val detail = ok.map { name =>
       s"\"" + name + "\":" + passes.map(_(name)).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     try {
@@ -137,6 +146,6 @@ object Bench {
     val entries = byTime.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
     val sfName = Paths.get(sfDir).getFileName.toString
     val canarySec = results.filter(r => Canaries.contains(r._1)).map(_._2).sum
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":{${entries.mkString(",")}},"omitted_n":0,"omitted_sec":0.000,"canary_sec":${fmt(canarySec)},"gc_ms":${gcMs1 - gcMs0},"sf":"$sfName","reps":$reps,"warmup":$warmups,"full":"bench_out.json"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":{${entries.mkString(",")}},"omitted_n":0,"omitted_sec":0.000,"canary_sec":${fmt(canarySec)},"n_failed":${failed.size},"failed":$failedJson,"gc_ms":${gcMs1 - gcMs0},"sf":"$sfName","reps":$reps,"warmup":$warmups,"full":"bench_out.json"}""")
   }
 }

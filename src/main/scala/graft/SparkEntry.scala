@@ -25,9 +25,6 @@ object SparkEntry {
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** events.parquet carries TIMESTAMP(NANOS), which Spark 4 only reads via
-    * the nanos-as-long legacy conf; values are µs-precision, so convert the
-    * raw nanos to a proper µs timestamp with exact integer division. */
   /** events.ts arrives either as parquet TIMESTAMP(NANOS) read as raw longs
     * (nanosAsLong, pre-r9 testdata) or as TIMESTAMP(MICROS) read as
     * TIMESTAMP_NTZ (r9+ testdata) — normalize both to a UTC-instant
@@ -939,13 +936,22 @@ object SparkEntry {
         col("neighbor_id"), col("cosine"))
   }
 
-  /** IVF ANN on the same ground-truth query set: codebook = the 16 lowest-id
-    * quantized embeddings (deterministic, oracle-replayable; a k-means
-    * codebook drops in the same way), nprobe = 4 of 16 cells. */
+  /** The ANN fixture's codebooks over the quantized embeddings `d`: the
+    * coarse codebook is the 16 lowest-id vectors (deterministic,
+    * oracle-replayable; a k-means codebook drops in the same way), and the
+    * PQ sub-codebooks are the same 16 vectors' M = 4 subvectors of dim 16. */
+  private def annCodebooks(d: DataFrame)
+      : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = {
+    val cents = d.filter(col("vec_id") < 16).orderBy("vec_id")
+      .select("q").collect().map(_.getSeq[Double](0).toSeq).toSeq
+    (cents, (0 until 4).map(m => cents.map(_.slice(m * 16, m * 16 + 16))))
+  }
+
+  /** IVF ANN on the same ground-truth query set: the [[annCodebooks]]
+    * coarse codebook, nprobe = 4 of 16 cells. */
   private def qAnnIvf(s: SparkSession, dir: String): DataFrame = {
     val d = quantized(s, dir)
-    val centroids = d.filter(col("vec_id") < 16).orderBy("vec_id")
-      .select("q").collect().map(_.getSeq[Double](0).toSeq).toSeq
+    val (centroids, _) = annCodebooks(d)
     Similarity.ivfTopK(d.filter(col("vec_id") < 20), d, "vec_id", "q",
       k = 3, centroids = centroids, nprobe = 4)
       .select(col("query_id"), col("rank").cast(LongType).alias("rank"),
@@ -960,8 +966,7 @@ object SparkEntry {
     * PlanShapeSpec). Shares q_ann_ivf's oracle verbatim. */
   private def qAnnIvfIndexed(s: SparkSession, dir: String): DataFrame = {
     val d = quantized(s, dir)
-    val centroids = d.filter(col("vec_id") < 16).orderBy("vec_id")
-      .select("q").collect().map(_.getSeq[Double](0).toSeq).toSeq
+    val (centroids, _) = annCodebooks(d)
     // built ONCE per sf dir and reused (the postingsIndex convention: an
     // index is a materialized artifact — the bench measures the amortized
     // PROBE path, warm-up builds, corpus data under an sf dir immutable)
@@ -1059,14 +1064,11 @@ object SparkEntry {
     rows.toDF("cell", "pos", "mean_value")
   }
 
-  /** IVF-PQ: coarse codebook = the 16 lowest-id vectors (the q_ann_ivf
-    * convention); sub-codebooks = the same 16 vectors' M=4 subvectors of
-    * dim 16. Integer vectors keep every distance exact. */
+  /** IVF-PQ over the [[annCodebooks]] coarse and sub-codebooks. Integer
+    * vectors keep every distance exact. */
   private def qAnnIvfPq(s: SparkSession, dir: String): DataFrame = {
     val d = quantized(s, dir)
-    val cents = d.filter(col("vec_id") < 16).orderBy("vec_id")
-      .select("q").collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val codebooks = (0 until 4).map(m => cents.map(_.slice(m * 16, m * 16 + 16)))
+    val (cents, codebooks) = annCodebooks(d)
     Similarity.ivfPqTopK(d.filter(col("vec_id") < 20), d, "vec_id", "q",
       k = 3, centroids = cents, nprobe = 4, codebooks = codebooks)
       .select(col("query_id"), col("rank").cast(LongType).alias("rank"),
@@ -1077,9 +1079,7 @@ object SparkEntry {
     * centroid (FAISS-style IVF-ADC). Integer residuals stay exact. */
   private def qAnnIvfPqRes(s: SparkSession, dir: String): DataFrame = {
     val d = quantized(s, dir)
-    val cents = d.filter(col("vec_id") < 16).orderBy("vec_id")
-      .select("q").collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val codebooks = (0 until 4).map(m => cents.map(_.slice(m * 16, m * 16 + 16)))
+    val (cents, codebooks) = annCodebooks(d)
     Similarity.ivfPqTopK(d.filter(col("vec_id") < 20), d, "vec_id", "q",
       k = 3, centroids = cents, nprobe = 4, codebooks = codebooks,
       residual = true)
@@ -1093,9 +1093,7 @@ object SparkEntry {
     * scan, full-precision vectors are read for the shortlist only). */
   private def qAnnRerank(s: SparkSession, dir: String): DataFrame = {
     val d = quantized(s, dir)
-    val cents = d.filter(col("vec_id") < 16).orderBy("vec_id")
-      .select("q").collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val codebooks = (0 until 4).map(m => cents.map(_.slice(m * 16, m * 16 + 16)))
+    val (cents, codebooks) = annCodebooks(d)
     Similarity.ivfPqTopKRerank(d.filter(col("vec_id") < 20), d, "vec_id", "q",
       k = 3, centroids = cents, nprobe = 4, codebooks = codebooks, refine = 3)
       .select(col("query_id"), col("rank").cast(LongType).alias("rank"),
@@ -1305,9 +1303,7 @@ object SparkEntry {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = s.sqlContext
     val d = quantized(s, dir)
-    val cents = d.filter(col("vec_id") < 16).orderBy("vec_id")
-      .select("q").collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val codebooks = (0 until 4).map(m => cents.map(_.slice(m * 16, m * 16 + 16)))
+    val (cents, codebooks) = annCodebooks(d)
     val base = java.sql.Timestamp.valueOf("2024-03-01 00:00:00")
     val queryRows = d.filter(col("vec_id") < 20).orderBy("vec_id")
       .select("vec_id", "q").as[(Long, Seq[Double])].collect().toSeq
@@ -1319,7 +1315,7 @@ object SparkEntry {
     val mem = MemoryStream[(Long, java.sql.Timestamp, Seq[Double])]
     // Encode + persist the static corpus ONCE: the stream-static join
     // re-evaluates the static plan every micro-batch otherwise.
-    val encoded = graft.streaming.StreamingAnn.encodeCorpus(
+    val encoded = Similarity.pqEncodeCorpus(
       d.select(col("vec_id"), col("q").alias("v")), "vec_id", "v",
       cents, codebooks).persist()
     val out = graft.streaming.StreamingAnn.pqTopKStream(
@@ -1761,9 +1757,7 @@ object SparkEntry {
     // is bit-identical to the standalone queries', which keep their own
     // single-arm pipelines.
     val d = quantized(s, dir)
-    val cents = d.filter(col("vec_id") < 16).orderBy("vec_id")
-      .select("q").collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val codebooks = (0 until 4).map(m => cents.map(_.slice(m * 16, m * 16 + 16)))
+    val (cents, codebooks) = annCodebooks(d)
     val qs = d.filter(col("vec_id") < 20)
     val assigned = graft.pipeline.Materializer(
       Similarity.ivfAssignCorpus(d, "vec_id", "q", cents), eager = false)

@@ -13,8 +13,11 @@ import org.apache.spark.sql.types._
   * a bucket, turning the O(n²) cross join into an equi-join whose fan-in is
   * n²/2^bits per bucket.
   *
-  * Dot products use `zip_with` + `aggregate` higher-order functions — pure
-  * Catalyst expressions, sequential left-to-right summation (deterministic).
+  * Every top-k operator is candidate → score → rank, and each step is
+  * written once below: the vector side (`vectors`, `pairCosine`), the
+  * codebook steps (`argminL2`, `probeCells`, `adcTable`, `adcSum`) and
+  * the ranked tail (`topK`). An operator only chooses where its
+  * candidates come from and how they are filtered.
   */
 object Similarity {
 
@@ -35,6 +38,51 @@ object Similarity {
 
   private def asDouble(c: Column): Column = transform(c, x => x.cast(DoubleType))
 
+  /** Binds `a` once as a lambda variable: HOF lambdas are interpreted with no
+    * CSE and inline free sub-expressions, so a derived array referenced
+    * inside a per-element lambda would otherwise re-evaluate per element. */
+  private[graft] def bindArr(a: Column)(f: Column => Column): Column =
+    element_at(transform(array(a), f), 1)
+
+  /** The vector side of the cosine operators: `idCol` as `id`, then the
+    * `extra` columns, the vector as doubles in `${p}v` and its L2 norm in
+    * `${p}n`. Norms are computed per vector, not per pair — same IEEE ops
+    * on the same inputs, so the cosine stays bit-identical while the
+    * pairwise work drops from three dot products to one. */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String,
+      id: String, p: String, extra: Column*): DataFrame =
+    df.select((col(idCol).alias(id) +: extra) :+
+        asDouble(col(vecCol)).alias(p + "v"): _*)
+      .withColumn(p + "n", l2norm(col(p + "v")))
+
+  /** Cosine of the `${a}v`, `${b}v` pair from the [[vectors]] norms. */
+  private def pairCosine(a: String = "__q", b: String = "__c"): Column =
+    dot(col(a + "v"), col(b + "v")) / (col(a + "n") * col(b + "n"))
+
+  private def notSelf: Column = col("query_id") =!= col("neighbor_id")
+
+  /** The ranked tail of every top-k operator: per `query`, `row_number` by
+    * `score` (descending for a similarity, ascending for a distance) with
+    * ties to the lowest `neighbor` id, `rank <= k` — planned as a
+    * WindowGroupLimit, no full sort of a candidate list — then
+    * (query, rank, neighbor, score). Callers filter their candidates
+    * first. */
+  private def topK(cands: DataFrame, k: Int, score: String, desc: Boolean,
+      query: String = "query_id", neighbor: String = "neighbor_id"): DataFrame = {
+    val w = Window.partitionBy(col(query))
+      .orderBy(if (desc) col(score).desc else col(score).asc, col(neighbor).asc)
+    cands.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col(query), col("rank"), col(neighbor), col(score))
+  }
+
+  /** [[topK]] by [[pairCosine]] over candidates joining two [[vectors]]
+    * sides (prefixes `__q` and `__c`). */
+  private def cosineTopK(cands: DataFrame, k: Int, query: String = "query_id",
+      neighbor: String = "neighbor_id"): DataFrame =
+    topK(cands.withColumn("cosine", pairCosine()), k, "cosine", desc = true,
+      query, neighbor)
+
   /** Exact brute-force cosine top-k for every query vector.
     *
     * `queries` and `corpus`: (id, embedding). Output: (query id, rank,
@@ -43,24 +91,9 @@ object Similarity {
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
-    // norms precomputed per vector, not per pair — same IEEE ops on the same
-    // inputs, so the cosine stays bit-identical while the pairwise work
-    // drops from three dot products to one
-    val q = queries.select(col(idCol).alias("query_id"),
-      asDouble(col(vecCol)).alias("__qv"))
-      .withColumn("__qn", l2norm(col("__qv")))
-    val c = corpus.select(col(idCol).alias("neighbor_id"),
-      asDouble(col(vecCol)).alias("__cv"))
-      .withColumn("__cn", l2norm(col("__cv")))
-    val sim = dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    q.crossJoin(c)
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", sim)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    val q = vectors(queries, idCol, vecCol, "query_id", "__q")
+    val c = vectors(corpus, idCol, vecCol, "neighbor_id", "__c")
+    cosineTopK(q.crossJoin(c).filter(notSelf), k)
   }
 
   /** Hard-negative mining for contrastive training: per anchor, the top-k
@@ -115,28 +148,17 @@ object Similarity {
     * Output: (eval_id, n_hits, max_cosine, contaminated). */
   def embeddingContamination(eval: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, tau: Double): DataFrame = {
-    val q = eval.select(col(idCol).alias("eval_id"),
-      asDouble(col(vecCol)).alias("__qv"))
-      .withColumn("__qn", l2norm(col("__qv")))
-    val c = corpus.select(col(idCol).alias("__cid"),
-      asDouble(col(vecCol)).alias("__cv"))
-      .withColumn("__cn", l2norm(col("__cv")))
-    val sim = dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn"))
+    val q = vectors(eval, idCol, vecCol, "eval_id", "__q")
+    val c = vectors(corpus, idCol, vecCol, "__cid", "__c")
     broadcast(q).crossJoin(c)
       .filter(col("eval_id") =!= col("__cid"))
-      .withColumn("__cos", sim)
+      .withColumn("__cos", pairCosine())
       .groupBy(col("eval_id"))
       .agg(sum(when(col("__cos") >= tau, 1L).otherwise(0L)).alias("n_hits"),
         max(col("__cos")).alias("max_cosine"))
       .withColumn("contaminated", col("n_hits") > 0)
   }
 
-  /** Positive-pair mining — the same-label twin of [[hardNegatives]]:
-    * per anchor, the top-k most-similar OTHER vectors sharing its label
-    * (paraphrase/duplicate candidates, the positives of a contrastive
-    * pair set). Same bounded-anchor ground-truth shape; at scale the
-    * label equality composes on the IVF/LSH candidate paths the same
-    * way. */
   /** Per-group embedding centroids as EXACT integer per-dimension sums:
     * (group, dim, n, s, mean) with one correctly-rounded division per
     * cell — the embedding-space profile of a source/label cohort (drift
@@ -187,6 +209,12 @@ object Similarity {
           .alias("cosine"))
   }
 
+  /** Positive-pair mining — the same-label twin of [[hardNegatives]]:
+    * per anchor, the top-k most-similar OTHER vectors sharing its label
+    * (paraphrase/duplicate candidates, the positives of a contrastive
+    * pair set). Same bounded-anchor ground-truth shape; at scale the
+    * label equality composes on the IVF/LSH candidate paths the same
+    * way. */
   def positivePairs(anchors: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, labelCol: String, k: Int): DataFrame =
     labeledTopK(anchors, corpus, idCol, vecCol, labelCol, k,
@@ -195,25 +223,15 @@ object Similarity {
   private def labeledTopK(anchors: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, labelCol: String, k: Int,
       sameLabel: Boolean, outIdName: String): DataFrame = {
-    val q = anchors.select(col(idCol).alias("anchor_id"),
-      col(labelCol).alias("__al"), asDouble(col(vecCol)).alias("__qv"))
-      .withColumn("__qn", l2norm(col("__qv")))
-    val c = corpus.select(col(idCol).alias(outIdName),
-      col(labelCol).alias("__cl"), asDouble(col(vecCol)).alias("__cv"))
-      .withColumn("__cn", l2norm(col("__cv")))
-    val sim = dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn"))
+    val q = vectors(anchors, idCol, vecCol, "anchor_id", "__q",
+      col(labelCol).alias("__al"))
+    val c = vectors(corpus, idCol, vecCol, outIdName, "__c",
+      col(labelCol).alias("__cl"))
     val labelPred =
       if (sameLabel) col("__al") === col("__cl") &&
         col("anchor_id") =!= col(outIdName)
       else col("__al") =!= col("__cl")
-    val w = Window.partitionBy(col("anchor_id"))
-      .orderBy(col("cosine").desc, col(outIdName).asc)
-    q.crossJoin(c)
-      .filter(labelPred)
-      .withColumn("cosine", sim)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("anchor_id"), col("rank"), col(outIdName), col("cosine"))
+    cosineTopK(q.crossJoin(c).filter(labelPred), k, "anchor_id", outIdName)
   }
 
   /** Integer-valued component of pseudo-random hyperplane `p` at dimension
@@ -245,12 +263,6 @@ object Similarity {
   /** Extra hyperplane bits per vector, used only to sub-bucket oversized
     * LSH buckets deterministically (never to widen the primary bucket id). */
   val SubBucketBits = 6
-
-  /** Binds `a` once as a lambda variable: HOF lambdas are interpreted with no
-    * CSE and inline free sub-expressions, so a derived array referenced
-    * inside a per-element lambda would otherwise re-evaluate per element. */
-  private def bindArr(a: Column)(f: Column => Column): Column =
-    element_at(transform(array(a), f), 1)
 
   /** Candidate pairs within one bucket's id-sorted entries array, with a
     * deterministic sub-bucket split instead of a silent drop for oversized
@@ -385,9 +397,6 @@ object Similarity {
     else emit(subbed)
   }
 
-  /** Approximate top-k: candidates restricted to the query's LSH bucket
-    * (single equi-join on the bucket id). Recall grows with fewer bits /
-    * multiple probes; this is the 100 TB-shaped path — no cross join. */
   /** One (id, vector, norm, bucket, xh) row per vector — the shared
     * scaffolding of the bucketed operators, feeding
     * [[subBucketPairsRelational]]. No self-join (aliased self-joins
@@ -397,8 +406,7 @@ object Similarity {
   private def bucketRows(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, nBits: Int): DataFrame = {
     val full = lshBucket(col("__v"), dim, nBits + SubBucketBits)
-    df.select(col(idCol), asDouble(col(vecCol)).alias("__v"))
-      .withColumn("__n", l2norm(col("__v")))
+    vectors(df, idCol, vecCol, idCol, "__")
       .withColumn("__full", full)
       .withColumn("__bucket", col("__full").bitwiseAND(lit((1L << nBits) - 1)))
       .withColumn("__xh", shiftright(col("__full"), nBits))
@@ -408,20 +416,17 @@ object Similarity {
     struct(col(idCol).alias("id"), col("__v").alias("v"),
       col("__n").alias("n"), col("__xh").alias("xh"))
 
+  /** Approximate top-k: candidates restricted to the query's LSH bucket
+    * (single equi-join on the bucket id). Recall grows with fewer bits /
+    * multiple probes; this is the 100 TB-shaped path — no cross join. */
   def lshTopK(df: DataFrame, idCol: String, vecCol: String, dim: Int,
-      k: Int, nBits: Int = 8, maxBucketSize: Int = 4096): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    subBucketPairsRelational(bucketRows(df, idCol, vecCol, dim, nBits),
+      k: Int, nBits: Int = 8, maxBucketSize: Int = 4096): DataFrame =
+    topK(subBucketPairsRelational(bucketRows(df, idCol, vecCol, dim, nBits),
       Seq(col("__bucket")), col("__xh"), vecEntry(idCol),
       maxBucketSize, ordered = true)
       .select(col("__p.a.id").alias("query_id"), col("__p.b.id").alias("neighbor_id"),
-        (dot(col("__p.a.v"), col("__p.b.v")) / (col("__p.a.n") * col("__p.b.n")))
-          .alias("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-  }
+        pairCosine("__p.a.", "__p.b.").alias("cosine")),
+      k, "cosine", desc = true)
 
   /** The query's own sign-LSH bucket plus the first `probes` buckets of a
     * query-directed probing sequence (Lv et al., multi-probe LSH): all 1-bit
@@ -485,19 +490,13 @@ object Similarity {
   def lshTopKMultiProbe(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, dim: Int, k: Int, nBits: Int = 8, probes: Int = 8,
       maxBucketSize: Int = 4096): DataFrame = {
-    val cFull = corpus.select(col(idCol).alias("neighbor_id"),
-      asDouble(col(vecCol)).alias("__cv"))
-      .withColumn("__cn", l2norm(col("__cv")))
-      .withColumn("__full", lshBucket(col("__cv"), dim, nBits + SubBucketBits))
-      .withColumn("__bucket", col("__full").bitwiseAND(lit((1L << nBits) - 1)))
-      .withColumn("__xh", shiftright(col("__full"), nBits))
+    val cFull = bucketRows(corpus, idCol, vecCol, dim, nBits)
+      .toDF("neighbor_id", "__cv", "__cn", "__full", "__bucket", "__xh")
     val counts = cFull.groupBy(col("__bucket"))
       .agg(count(lit(1)).alias("__cnt"))
     val maxCnt = Option(counts.agg(max(col("__cnt"))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val qBase = queries.select(col(idCol).alias("query_id"),
-      asDouble(col(vecCol)).alias("__qv"))
-      .withColumn("__qn", l2norm(col("__qv")))
+    val qBase = vectors(queries, idCol, vecCol, "query_id", "__q")
       .withColumn("__bucket",
         explode(probeBuckets(col("__qv"), dim, nBits, probes)))
     val joined = if (maxCnt <= maxBucketSize) {
@@ -514,15 +513,7 @@ object Similarity {
         .withColumn("__sub", explode(sequence(lit(0L), col("__nsub") - 1)))
       q.join(c, Seq("__bucket", "__sub"))
     }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    joined
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    cosineTopK(joined.filter(notSelf), k)
   }
 
   /** Squared L2 distance of two double arrays (exact on integer-quantized
@@ -534,16 +525,82 @@ object Similarity {
       GraftColumns.expression(a), GraftColumns.expression(b)))
   }
 
-  /** IVF-style ANN top-k: a small coarse-quantizer codebook (`centroids`,
-    * cell id = position) partitions the corpus into cells via nearest-
-    * centroid assignment; each query probes its `nprobe` nearest cells and
-    * ranks candidates by exact cosine. The codebook is driver-side by
-    * construction (dozens-to-thousands of centroids — k-means output in a
-    * real deployment, any deterministic sample for testing) and is attached
-    * as an array literal, so assignment is pure Column algebra: no join
-    * against the codebook, and the corpus side is one groupBy-free
-    * projection. Candidates flow through a single equi-join on the cell id.
-    * Distance ties break toward the lowest cell id in both engines. */
+  /** Squared L2 from `v` to every entry of `book`. */
+  private def l2sqAll(v: Column, book: Column): Column =
+    transform(book, c => l2sq(v, c))
+
+  /** 0-based position of the entry of `book` nearest to `v` by squared
+    * L2, ties to the lowest position — the coarse-cell and PQ-code rule. */
+  private def argminL2(v: Column, book: Column): Column =
+    bindArr(l2sqAll(v, book))(d => array_position(d, array_min(d)) - 1)
+
+  /** The `nprobe` cells nearest to `v`, ranked by (squared L2, cell id). */
+  private def probeCells(v: Column, centroids: Seq[Seq[Double]],
+      nprobe: Int): Column =
+    bindArr(l2sqAll(v, typedLit(centroids))) { d =>
+      val ranked = array_sort(zip_with(d,
+        sequence(lit(0L), lit(centroids.size.toLong - 1)),
+        (dist, i) => struct(dist.alias("d"), i.alias("i"))))
+      transform(slice(ranked, 1, nprobe), e => e.getField("i"))
+    }
+
+  /** `v − centroids(cell)`: the residual a residual PQ encodes. */
+  private def minusCent(v: Column, cell: Column,
+      centroids: Seq[Seq[Double]]): Column =
+    zip_with(v, element_at(typedLit(centroids), (cell + 1).cast("int")), _ - _)
+
+  /** (subvector m of `v`, sub-codebook m) for every PQ subspace m. */
+  private def subspaces(v: Column,
+      codebooks: Seq[Seq[Seq[Double]]]): Seq[(Column, Column)] =
+    codebooks.zipWithIndex.map { case (cb, m) =>
+      val subDim = cb.head.size
+      (slice(v, m * subDim + 1, subDim), typedLit(cb))
+    }
+
+  /** The per-query ADC distance table: row m = l2sq(sub_m(v), each
+    * centroid of sub-codebook m). */
+  private def adcTable(v: Column, codebooks: Seq[Seq[Seq[Double]]]): Column =
+    array(subspaces(v, codebooks).map { case (sub, cb) => l2sqAll(sub, cb) }: _*)
+
+  /** The asymmetric distance of a coded candidate: Σ_m `__dt`(m)(`__codes`(m)),
+    * summed in subspace order over `m` subspaces. */
+  private def adcSum(m: Int): Column = (1 to m).map { i =>
+    element_at(element_at(col("__dt"), i),
+      (element_at(col("__codes"), i) + 1L).cast("int"))
+  }.reduce(_ + _)
+
+  /** The probe side of the IVF operators: [[vectors]] exploded over the
+    * query's `nprobe` nearest cells (`__cell`). */
+  private def probeQueries(queries: DataFrame, idCol: String, vecCol: String,
+      centroids: Seq[Seq[Double]], nprobe: Int): DataFrame =
+    vectors(queries, idCol, vecCol, "query_id", "__q")
+      .withColumn("__cell", explode(probeCells(col("__qv"), centroids, nprobe)))
+
+  /** The probe side of the IVF-PQ operators: (query_id, `extra`…, `__dt`,
+    * `__cell`) — the ADC table, exploded over the `nprobe` nearest cells
+    * (the unread norm is pruned from the plan). With `residual` the table
+    * is built per probed cell from the query's residual against that
+    * cell. */
+  private[graft] def adcQueries(queries: DataFrame, idCol: String,
+      vecCol: String, centroids: Seq[Seq[Double]], nprobe: Int,
+      codebooks: Seq[Seq[Seq[Double]]], residual: Boolean,
+      extra: Column*): DataFrame = {
+    val q0 = vectors(queries, idCol, vecCol, "query_id", "__q", extra: _*)
+    val probe = explode(probeCells(col("__qv"), centroids, nprobe))
+    (if (residual)
+      q0.withColumn("__cell", probe).withColumn("__dt",
+        adcTable(minusCent(col("__qv"), col("__cell"), centroids), codebooks))
+    else q0.withColumn("__dt", adcTable(col("__qv"), codebooks))
+      .withColumn("__cell", probe))
+      .drop("__qv", "__qn")
+  }
+
+  /** [[adcQueries]] rows meet a [[pqEncodeCorpus]] frame on the cell id;
+    * self-pairs are removed and each candidate carries `adc_dist`. */
+  private[graft] def adcCandidates(q: DataFrame, coded: DataFrame,
+      m: Int): DataFrame =
+    q.join(coded, "__cell").filter(notSelf).withColumn("adc_dist", adcSum(m))
+
   /** The IVF coarse-quantizer pass over a corpus: (neighbor_id, __cv,
     * __cn, __cell) with the exact expressions [[ivfTopK]] uses — exposed
     * so a multi-arm consumer (e.g. an ANN method report) can run the
@@ -554,48 +611,32 @@ object Similarity {
   def ivfAssignCorpus(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]]): DataFrame = {
     require(centroids.nonEmpty)
-    val centLit = typedLit(centroids)
-    def dists(v: Column): Column = transform(centLit, c => l2sq(v, c))
-    def nearestCell(v: Column): Column = bindArr(dists(v)) { d =>
-      array_position(d, array_min(d)) - 1
-    }
-    corpus.select(col(idCol).alias("neighbor_id"),
-      asDouble(col(vecCol)).alias("__cv"))
-      .withColumn("__cn", l2norm(col("__cv")))
-      .withColumn("__cell", nearestCell(col("__cv")))
+    vectors(corpus, idCol, vecCol, "neighbor_id", "__c")
+      .withColumn("__cell", argminL2(col("__cv"), typedLit(centroids)))
   }
 
-  /** `assignedCorpus`, when given, must be an [[ivfAssignCorpus]] frame
+  /** IVF-style ANN top-k: a small coarse-quantizer codebook (`centroids`,
+    * cell id = position) partitions the corpus into cells via nearest-
+    * centroid assignment; each query probes its `nprobe` nearest cells and
+    * ranks candidates by exact cosine. The codebook is driver-side by
+    * construction (dozens-to-thousands of centroids — k-means output in a
+    * real deployment, any deterministic sample for testing) and is attached
+    * as an array literal, so assignment is pure Column algebra: no join
+    * against the codebook, and the corpus side is one groupBy-free
+    * projection. Candidates flow through a single equi-join on the cell id.
+    * Distance ties break toward the lowest cell id in both engines.
+    *
+    * `assignedCorpus`, when given, must be an [[ivfAssignCorpus]] frame
     * over the same corpus and centroids (possibly materialized) — the
     * probe side then skips the per-arm corpus assignment. */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int, centroids: Seq[Seq[Double]], nprobe: Int,
       assignedCorpus: Option[DataFrame] = None): DataFrame = {
     require(centroids.nonEmpty && nprobe >= 1)
-    val nlist = centroids.size
-    val centLit = typedLit(centroids)
-    def dists(v: Column): Column = transform(centLit, c => l2sq(v, c))
-    def probeCells(v: Column): Column = bindArr(dists(v)) { d =>
-      val ranked = array_sort(zip_with(d,
-        sequence(lit(0L), lit(nlist.toLong - 1)),
-        (dist, i) => struct(dist.alias("d"), i.alias("i"))))
-      transform(slice(ranked, 1, nprobe), e => e.getField("i"))
-    }
     val c = assignedCorpus.getOrElse(
       ivfAssignCorpus(corpus, idCol, vecCol, centroids))
-    val q = queries.select(col(idCol).alias("query_id"),
-      asDouble(col(vecCol)).alias("__qv"))
-      .withColumn("__qn", l2norm(col("__qv")))
-      .withColumn("__cell", explode(probeCells(col("__qv"))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    q.join(c, "__cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    val q = probeQueries(queries, idCol, vecCol, centroids, nprobe)
+    cosineTopK(q.join(c, "__cell").filter(notSelf), k)
   }
 
   /** Persist the IVF-assigned corpus as a CELL-PARTITIONED parquet index:
@@ -605,24 +646,15 @@ object Similarity {
     * nlist into a physical I/O ratio, which is the point of an IVF index
     * at 100 TB: the corpus scan cost of [[ivfTopK]] (which re-assigns
     * every corpus row on every query batch) is paid ONCE at build time.
-    * Assignment and norms use the exact expressions of [[ivfTopK]], and
-    * doubles round-trip parquet bit-exactly, so the indexed probe is
-    * bit-identical to the in-memory path. */
+    * The rows are [[ivfAssignCorpus]]'s, renamed to the on-disk schema
+    * (neighbor_id, vec, norm, cell), and doubles round-trip parquet
+    * bit-exactly, so the indexed probe is bit-identical to the in-memory
+    * path. */
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]], path: String): Unit = {
-    require(centroids.nonEmpty)
-    val nlist = centroids.size
-    val centLit = typedLit(centroids)
-    def dists(v: Column): Column = transform(centLit, c => l2sq(v, c))
-    def nearestCell(v: Column): Column = bindArr(dists(v)) { d =>
-      array_position(d, array_min(d)) - 1
-    }
-    corpus.select(col(idCol).alias("neighbor_id"),
-        asDouble(col(vecCol)).alias("vec"))
-      .withColumn("norm", l2norm(col("vec")))
-      .withColumn("cell", nearestCell(col("vec")))
+      centroids: Seq[Seq[Double]], path: String): Unit =
+    ivfAssignCorpus(corpus, idCol, vecCol, centroids)
+      .toDF("neighbor_id", "vec", "norm", "cell")
       .write.mode("overwrite").partitionBy("cell").parquet(path)
-  }
 
   /** Top-k cosine probe against a [[writeIvfIndex]] index. The probed cell
     * set is collected from the BOUNDED query side (≤ nlist values — the
@@ -633,37 +665,27 @@ object Similarity {
       vecCol: String, k: Int, centroids: Seq[Seq[Double]],
       nprobe: Int): DataFrame = {
     require(centroids.nonEmpty && nprobe >= 1)
-    val spark = queries.sparkSession
-    val nlist = centroids.size
-    val centLit = typedLit(centroids)
-    def dists(v: Column): Column = transform(centLit, c => l2sq(v, c))
-    def probeCells(v: Column): Column = bindArr(dists(v)) { d =>
-      val ranked = array_sort(zip_with(d,
-        sequence(lit(0L), lit(nlist.toLong - 1)),
-        (dist, i) => struct(dist.alias("d"), i.alias("i"))))
-      transform(slice(ranked, 1, nprobe), e => e.getField("i"))
-    }
-    val q = queries.select(col(idCol).alias("query_id"),
-        asDouble(col(vecCol)).alias("__qv"))
-      .withColumn("__qn", l2norm(col("__qv")))
-      .withColumn("__cell", explode(probeCells(col("__qv"))))
+    val q = probeQueries(queries, idCol, vecCol, centroids, nprobe)
     // bounded by nlist, not by the query count — a literal, like codebooks
     val cells = q.select(col("__cell")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val idx = spark.read.parquet(indexPath)
+    val idx = queries.sparkSession.read.parquet(indexPath)
       .filter(col("cell").isin(cells.toIndexedSeq: _*))
       .select(col("neighbor_id"), col("vec").alias("__cv"),
         col("norm").alias("__cn"), col("cell").cast(LongType).alias("__cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    q.join(idx, "__cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    cosineTopK(q.join(idx, "__cell").filter(notSelf), k)
   }
+
+  /** The `n` vectors of an (`__id`, `__v`) frame whose
+    * [[Hashing.polyHash]]-of-id sorts lowest: the k-means seeds. */
+  private def hashSeeds(vecs: DataFrame, n: Int): Seq[Seq[Double]] = vecs
+    .withColumn("__h", Hashing.mix(Hashing.polyHash(col("__id").cast("string")), 0))
+    .orderBy(col("__h"), col("__id").cast("string"))
+    .limit(n)
+    .select("__v")
+    .collect()
+    .map(_.getSeq[Double](0).toSeq)
+    .toSeq
 
   /** Deterministic DataFrame-algebra Lloyd's k-means for the IVF coarse
     * quantizer: trains the `centroids` codebook [[ivfTopK]] takes as input,
@@ -686,21 +708,11 @@ object Similarity {
     require(nlist >= 1 && iters >= 0, "nlist >= 1 and iters >= 0 required")
     val vecs = corpus.select(col(idCol).alias("__id"),
       asDouble(col(vecCol)).alias("__v"))
-    var centroids: Seq[Seq[Double]] = vecs
-      .withColumn("__h", Hashing.mix(Hashing.polyHash(col("__id").cast("string")), 0))
-      .orderBy(col("__h"), col("__id").cast("string"))
-      .limit(nlist)
-      .select("__v")
-      .collect()
-      .map(_.getSeq[Double](0).toSeq)
-      .toSeq
+    var centroids = hashSeeds(vecs, nlist)
     for (_ <- 0 until iters) {
-      val centLit = typedLit(centroids)
-      val nearestCell = bindArr(transform(centLit, c => l2sq(col("__v"), c))) {
-        d => array_position(d, array_min(d)) - 1
-      }
       val means = vecs
-        .select(nearestCell.alias("__cell"), posexplode(col("__v")).as(Seq("__pos", "__x")))
+        .select(argminL2(col("__v"), typedLit(centroids)).alias("__cell"),
+          posexplode(col("__v")).as(Seq("__pos", "__x")))
         .groupBy(col("__cell"), col("__pos"))
         .agg(avg(col("__x")).alias("__m"))
         .collect()
@@ -731,14 +743,7 @@ object Similarity {
     val subDim = dim / m
     val vecs = corpus.select(col(idCol).alias("__id"),
       asDouble(col(vecCol)).alias("__v"))
-    val seedVecs = vecs
-      .withColumn("__h", Hashing.mix(Hashing.polyHash(col("__id").cast("string")), 0))
-      .orderBy(col("__h"), col("__id").cast("string"))
-      .limit(ks)
-      .select("__v")
-      .collect()
-      .map(_.getSeq[Double](0).toSeq)
-      .toSeq
+    val seedVecs = hashSeeds(vecs, ks)
     var codebooks: Seq[Seq[Seq[Double]]] =
       (0 until m).map(i => seedVecs.map(_.slice(i * subDim, (i + 1) * subDim)))
     val subRows = vecs.select(col("__id"),
@@ -746,11 +751,8 @@ object Similarity {
         slice(col("__v"), i * subDim + 1, subDim)): _*)).as(Seq("__m", "__sub")))
     for (_ <- 0 until iters) {
       val myCb = element_at(typedLit(codebooks), col("__m") + 1)
-      val nearest = bindArr(transform(myCb, c => l2sq(col("__sub"), c))) { d =>
-        array_position(d, array_min(d)) - 1
-      }
       val means = subRows
-        .select(col("__m"), nearest.alias("__cell"),
+        .select(col("__m"), argminL2(col("__sub"), myCb).alias("__cell"),
           posexplode(col("__sub")).as(Seq("__pos", "__x")))
         .groupBy(col("__m"), col("__cell"), col("__pos"))
         .agg(avg(col("__x")).alias("__mv"))
@@ -769,14 +771,25 @@ object Similarity {
     * codebooks(m)(j)), ties to the lowest j. Pure column algebra against
     * array-literal sub-codebooks (no join); on integer-quantized vectors
     * every distance is an exact integer, so encoding is engine-exact. */
-  def pqEncode(vec: Column, codebooks: Seq[Seq[Seq[Double]]]): Column = {
-    array(codebooks.zipWithIndex.map { case (cb, m) =>
-      val subDim = cb.head.size
-      val sub = slice(vec, m * subDim + 1, subDim)
-      bindArr(transform(typedLit(cb), c => l2sq(sub, c))) { d =>
-        array_position(d, array_min(d)) - 1
-      }
-    }: _*)
+  def pqEncode(vec: Column, codebooks: Seq[Seq[Seq[Double]]]): Column =
+    array(subspaces(vec, codebooks).map { case (sub, cb) => argminL2(sub, cb) }: _*)
+
+  /** The IVF-PQ corpus encoding pass: (neighbor_id, __cell, __codes)
+    * with the exact expressions [[ivfPqTopK]] uses — the
+    * [[ivfAssignCorpus]] rows with the vector replaced by its PQ codes
+    * (the unread norm is pruned from the plan). Exposed so a multi-arm
+    * consumer can encode the corpus ONCE and feed every non-residual PQ
+    * arm (ADC shortlist, rerank stage 1) from one materialized table; the
+    * [[ivfAssignCorpus]] rationale. */
+  def pqEncodeCorpus(corpus: DataFrame, idCol: String, vecCol: String,
+      centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
+      residual: Boolean = false): DataFrame = {
+    require(centroids.nonEmpty && codebooks.nonEmpty)
+    val v = if (residual) minusCent(col("__cv"), col("__cell"), centroids)
+      else col("__cv")
+    ivfAssignCorpus(corpus, idCol, vecCol, centroids)
+      .withColumn("__codes", pqEncode(v, codebooks))
+      .drop("__cv", "__cn")
   }
 
   /** IVF-PQ ANN top-k: coarse cells route candidates (argmin over the
@@ -795,33 +808,9 @@ object Similarity {
     * distance table is then per probed cell (its residual depends on the
     * cell), costing nprobe tables instead of one. Residuals of
     * integer-quantized vectors against integer centroids stay integers —
-    * still oracle-exact. */
-  /** The IVF-PQ corpus encoding pass: (neighbor_id, __cell, __codes)
-    * with the exact expressions [[ivfPqTopK]] uses — exposed so a
-    * multi-arm consumer can encode the corpus ONCE and feed every
-    * non-residual PQ arm (ADC shortlist, rerank stage 1) from one
-    * materialized table; the [[ivfAssignCorpus]] rationale. */
-  def pqEncodeCorpus(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
-      residual: Boolean = false): DataFrame = {
-    require(centroids.nonEmpty && codebooks.nonEmpty)
-    val centLit = typedLit(centroids)
-    def dists(v: Column): Column = transform(centLit, c => l2sq(v, c))
-    def nearestCell(v: Column): Column = bindArr(dists(v)) { d =>
-      array_position(d, array_min(d)) - 1
-    }
-    def minusCent(v: Column, cell: Column): Column =
-      zip_with(v, element_at(centLit, (cell + 1).cast("int")), _ - _)
-    val c0 = corpus.select(col(idCol).alias("neighbor_id"),
-      asDouble(col(vecCol)).alias("__cv"))
-      .withColumn("__cell", nearestCell(col("__cv")))
-    (if (residual)
-      c0.withColumn("__codes", pqEncode(minusCent(col("__cv"), col("__cell")), codebooks))
-    else c0.withColumn("__codes", pqEncode(col("__cv"), codebooks)))
-      .drop("__cv")
-  }
-
-  /** `codedCorpus`, when given, must be a [[pqEncodeCorpus]] frame over
+    * still oracle-exact.
+    *
+    * `codedCorpus`, when given, must be a [[pqEncodeCorpus]] frame over
     * the same corpus/centroids/codebooks with the same `residual` flag
     * (possibly materialized) — the probe side then skips the per-arm
     * corpus encoding. */
@@ -830,45 +819,11 @@ object Similarity {
       codebooks: Seq[Seq[Seq[Double]]], residual: Boolean = false,
       codedCorpus: Option[DataFrame] = None): DataFrame = {
     require(centroids.nonEmpty && nprobe >= 1 && codebooks.nonEmpty)
-    val nlist = centroids.size
-    val centLit = typedLit(centroids)
-    def dists(v: Column): Column = transform(centLit, c => l2sq(v, c))
-    def probeCells(v: Column): Column = bindArr(dists(v)) { d =>
-      val ranked = array_sort(zip_with(d,
-        sequence(lit(0L), lit(nlist.toLong - 1)),
-        (dist, i) => struct(dist.alias("d"), i.alias("i"))))
-      transform(slice(ranked, 1, nprobe), e => e.getField("i"))
-    }
-    def minusCent(v: Column, cell: Column): Column =
-      zip_with(v, element_at(centLit, (cell + 1).cast("int")), _ - _)
-    def dtable(v: Column): Column = array(codebooks.zipWithIndex.map { case (cb, m) =>
-      val subDim = cb.head.size
-      transform(typedLit(cb), cc => l2sq(slice(v, m * subDim + 1, subDim), cc))
-    }: _*)
     val c = codedCorpus.getOrElse(
       pqEncodeCorpus(corpus, idCol, vecCol, centroids, codebooks, residual))
-    // per-query ADC table: dtable(m)(j) = l2sq(sub_m(q or residual), cb(m)(j))
-    val q0 = queries.select(col(idCol).alias("query_id"),
-      asDouble(col(vecCol)).alias("__qv"))
-    val q = (if (residual)
-      q0.withColumn("__cell", explode(probeCells(col("__qv"))))
-        .withColumn("__dt", dtable(minusCent(col("__qv"), col("__cell"))))
-    else
-      q0.withColumn("__dt", dtable(col("__qv")))
-        .withColumn("__cell", explode(probeCells(col("__qv")))))
-      .drop("__qv")
-    val adc = codebooks.indices.map { m =>
-      element_at(element_at(col("__dt"), m + 1),
-        (element_at(col("__codes"), m + 1) + 1L).cast("int"))
-    }.reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    q.join(c, "__cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_dist", adc)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc_dist"))
+    val q = adcQueries(queries, idCol, vecCol, centroids, nprobe, codebooks,
+      residual)
+    topK(adcCandidates(q, c, codebooks.size), k, "adc_dist", desc = false)
   }
 
   /** Two-stage IVF-PQ retrieval with exact re-rank — the production ANN
@@ -891,21 +846,10 @@ object Similarity {
     val shortlist = ivfPqTopK(queries, corpus, idCol, vecCol, k * refine,
       centroids, nprobe, codebooks, residual, codedCorpus)
       .select(col("query_id"), col("neighbor_id"))
-    val c = corpus.select(col(idCol).alias("neighbor_id"),
-      asDouble(col(vecCol)).alias("__cv"))
-      .withColumn("__cn", l2norm(col("__cv")))
-    val q = queries.select(col(idCol).alias("query_id"),
-      asDouble(col(vecCol)).alias("__qv"))
-      .withColumn("__qn", l2norm(col("__qv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    c.join(broadcast(shortlist), "neighbor_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("cosine",
-        dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    val c = vectors(corpus, idCol, vecCol, "neighbor_id", "__c")
+    val q = vectors(queries, idCol, vecCol, "query_id", "__q")
+    cosineTopK(c.join(broadcast(shortlist), "neighbor_id")
+      .join(broadcast(q), "query_id"), k)
   }
 
   /** Per-dimension [min, max] bounds for [[sq8Encode]] — ONE map-side-
@@ -959,15 +903,9 @@ object Similarity {
       asDouble(sq8Encode(col(vecCol), mins, maxs)).alias("__qc"))
     val c = corpus.select(col(idCol).alias("neighbor_id"),
       asDouble(sq8Encode(col(vecCol), mins, maxs)).alias("__cc"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("code_dist").asc, col("neighbor_id").asc)
-    q.crossJoin(c)
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("code_dist", l2sq(col("__qc"), col("__cc")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("code_dist"))
+    topK(q.crossJoin(c).filter(notSelf)
+      .withColumn("code_dist", l2sq(col("__qc"), col("__cc"))),
+      k, "code_dist", desc = false)
   }
 
   /** Recall@k of an approximate neighbor list against the exact one: per
@@ -1000,8 +938,7 @@ object Similarity {
       Seq(col("__bucket")), col("__xh"), vecEntry(idCol),
       maxBucketSize, ordered = false)
       .select(col("__p.a.id").alias(s"${idCol}_a"), col("__p.b.id").alias(s"${idCol}_b"),
-        (dot(col("__p.a.v"), col("__p.b.v")) / (col("__p.a.n") * col("__p.b.n")))
-          .alias("cosine"))
+        pairCosine("__p.a.", "__p.b.").alias("cosine"))
       .filter(col("cosine") >= threshold)
   }
 }

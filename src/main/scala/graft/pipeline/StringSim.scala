@@ -145,8 +145,7 @@ object StringSim {
     // lesson: HOF lambdas inline free sub-expressions, so a bare column
     // reference would re-run normalize+split+hash per fold step)
     def bind2(a: Column, b: Column)(f: (Column, Column) => Column): Column =
-      element_at(transform(array(a), ta =>
-        element_at(transform(array(b), tb => f(ta, tb)), 1)), 1)
+      Similarity.bindArr(a)(ta => Similarity.bindArr(b)(tb => f(ta, tb)))
     val res = bind2(rawToks(aCol), rawToks(bCol)) { (ra, rb) =>
       bind2(toks(ra), toks(rb)) { (ta, tb) =>
         val pa = pad(ta, -1L)

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
 import graft.pipeline.Similarity
 
@@ -17,65 +16,29 @@ import graft.pipeline.Similarity
   * reduction is one watermarked aggregate keyed by (query id, event time):
   * `slice(array_sort(collect_list(struct(dist, id))), 1, k)`, emitted when
   * the watermark seals the query row. ADC ties break to the lowest
-  * neighbor id, matching the batch [[Similarity.ivfPqTopK]] ordering. */
+  * neighbor id, matching the batch [[Similarity.ivfPqTopK]] ordering: the
+  * probe side and the ADC scoring are that operator's own steps. */
 object StreamingAnn {
 
-  private def asDouble(c: Column): Column = transform(c, x => x.cast(DoubleType))
-  private def bind(a: Column)(f: Column => Column): Column =
-    element_at(transform(array(a), f), 1)
-  private def dists(centroids: Seq[Seq[Double]], v: Column): Column =
-    transform(typedLit(centroids), c => Similarity.l2sq(v, c))
-
-  /** The static corpus side of [[pqTopKStream]]: coarse cell id + PQ codes
-    * per vector, as `(neighbor_id, __cell, __codes)`. A stream-static join
-    * re-evaluates the static plan EVERY micro-batch — encode once and
-    * `persist()` the result (or write it out) before starting the stream;
-    * at corpus scale this is the difference between a lookup join and
-    * re-encoding 100 TB per trigger. */
-  def encodeCorpus(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]],
-      codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
-    corpus.select(col(idCol).alias("neighbor_id"),
-      asDouble(col(vecCol)).alias("__cv"))
-      .withColumn("__cell", bind(dists(centroids, col("__cv"))) { d =>
-        array_position(d, array_min(d)) - 1
-      })
-      .withColumn("__codes", Similarity.pqEncode(col("__cv"), codebooks))
-      .drop("__cv")
-
+  /** `encodedCorpus`, when given, must be a [[Similarity.pqEncodeCorpus]]
+    * frame (non-residual) over the same corpus, centroids and codebooks.
+    * A stream-static join re-evaluates the static plan EVERY micro-batch —
+    * encode the corpus once and `persist()` it (or write it out) before
+    * starting the stream; at corpus scale this is the difference between a
+    * lookup join and re-encoding 100 TB per trigger. */
   def pqTopKStream(queries: DataFrame, corpus: DataFrame, idCol: String,
       tsCol: String, vecCol: String, k: Int, centroids: Seq[Seq[Double]],
       nprobe: Int, codebooks: Seq[Seq[Seq[Double]]],
       watermarkDelay: String = "10 minutes",
       encodedCorpus: Option[DataFrame] = None): DataFrame = {
     require(centroids.nonEmpty && nprobe >= 1 && codebooks.nonEmpty)
-    val nlist = centroids.size
     val c = encodedCorpus.getOrElse(
-      encodeCorpus(corpus, idCol, vecCol, centroids, codebooks))
-    val probe = bind(dists(centroids, col("__qv"))) { d =>
-      val ranked = array_sort(zip_with(d,
-        sequence(lit(0L), lit(nlist.toLong - 1)),
-        (dist, i) => struct(dist.alias("d"), i.alias("i"))))
-      transform(slice(ranked, 1, nprobe), e => e.getField("i"))
-    }
-    val q = queries.select(col(idCol).alias("query_id"), col(tsCol),
-      asDouble(col(vecCol)).alias("__qv"))
-      .withColumn("__dt", array(codebooks.zipWithIndex.map { case (cb, m) =>
-        val subDim = cb.head.size
-        transform(typedLit(cb),
-          cc => Similarity.l2sq(slice(col("__qv"), m * subDim + 1, subDim), cc))
-      }: _*))
-      .withColumn("__cell", explode(probe))
-      .drop("__qv")
+      Similarity.pqEncodeCorpus(corpus, idCol, vecCol, centroids, codebooks))
+    val q = Similarity.adcQueries(queries, idCol, vecCol, centroids, nprobe,
+      codebooks, residual = false, col(tsCol))
       .withWatermark(tsCol, watermarkDelay)
-    val adc = codebooks.indices.map { m =>
-      element_at(element_at(col("__dt"), m + 1),
-        (element_at(col("__codes"), m + 1) + 1L).cast("int"))
-    }.reduce(_ + _)
-    q.join(c, "__cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("__cand", struct(adc.alias("adc_dist"),
-        col("neighbor_id")))
+    Similarity.adcCandidates(q, c, codebooks.size)
+      .withColumn("__cand", struct(col("adc_dist"), col("neighbor_id")))
       .groupBy(col("query_id"), col(tsCol))
       .agg(slice(array_sort(collect_list(col("__cand"))), 1, k).alias("topk"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{Dedup, Hashing}
+import graft.pipeline.Similarity.bindArr
 
 /** Streaming near-duplicate detection against a static reference corpus —
   * the ingestion-time shape of MinHash LSH: every incoming document is
@@ -24,9 +25,6 @@ import graft.pipeline.{Dedup, Hashing}
   * `dropDuplicatesWithinWatermark` collapses them with bounded state.
   */
 object StreamingDedup {
-
-  private def bind(a: Column)(f: Column => Column): Column =
-    element_at(transform(array(a), f), 1)
 
   /** Corpus side: (idCol, __sh hashed shingle set, band, bhash) — one row
     * per (document, band). Batch-only input; one aggregate. */
@@ -61,8 +59,8 @@ object StreamingDedup {
       .withColumnRenamed("__sh", "__csh")
     // per-row band structs: shingle hashes evaluated once, signature once
     val shExpr = Dedup.shingleHashes(Dedup.shingles(col(textCol), shingleWidth))
-    val bandStructs = bind(shExpr) { shv =>
-      bind(Dedup.minhashSignature(shv, k)) { sg =>
+    val bandStructs = bindArr(shExpr) { shv =>
+      bindArr(Dedup.minhashSignature(shv, k)) { sg =>
         array((0 until bands).map(b =>
           struct(lit(b).alias("band"),
             Hashing.foldHashes((0 until rowsPerBand).map(r =>

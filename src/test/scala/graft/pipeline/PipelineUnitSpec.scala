@@ -246,6 +246,56 @@ class PipelineUnitSpec extends SparkTestBase {
     assertDfEquality(all, bf)
   }
 
+  test("full-probe IVF, indexed IVF and IVF-PQ rerank equal brute force " +
+      "bit for bit, ties included") {
+    import spark.implicits._
+    // integer vectors; ids 40-59 copy 0-19 and 60-69 copy 0-9, so most
+    // neighbors come with equal-cosine twins and the neighbor-id tie-break
+    // decides the order
+    val rnd = new scala.util.Random(17)
+    val base = (0 until 40).map(_ => Seq.fill(6)((rnd.nextInt(9) - 4).toDouble))
+      .map(v => if (v.forall(_ == 0.0)) v.updated(0, 1.0) else v)
+    val rows = base.indices.map(i => (i.toLong, base(i))) ++
+      (40 until 60).map(i => (i.toLong, base(i - 40))) ++
+      (60 until 70).map(i => (i.toLong, base(i - 60)))
+    val corpus = rows.toDF("vec_id", "v")
+    val queries = corpus.filter(col("vec_id") < 15)
+    val centroids = Seq(0, 7, 21, 30, 38).map(base)
+    val nlist = centroids.size
+    val codebooks = (0 until 2).map(m => centroids.map(_.slice(m * 3, m * 3 + 3)))
+    // k cuts 69 candidates to 60, so a dropped cell cannot hide below the cut
+    val k = 60
+    val refine = rows.size / k + 1 // k * refine >= corpus size
+    def collected(df: org.apache.spark.sql.DataFrame) = {
+      val out = df.collect().toSeq
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .sortBy(r => (r._1, r._2))
+      (df.schema.map(f => (f.name, f.dataType)),
+        out.map(r => (r._1, r._2, r._3, java.lang.Double.doubleToRawLongBits(r._4))))
+    }
+    val bf = collected(Similarity.bruteForceTopK(queries, corpus, "vec_id", "v", k))
+    assert(bf._2.size == 15 * k)
+    val ties = bf._2.groupBy(r => (r._1, r._4)).count(_._2.size > 1)
+    assert(ties >= 5, s"fixture must produce cosine ties, got $ties")
+    def assertBf(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      val (schema, got) = collected(df)
+      assert(schema == bf._1, s"$name schema: $schema")
+      assert(got.size == bf._2.size, s"$name: ${got.size} rows, brute force ${bf._2.size}")
+      got.zip(bf._2).find(p => p._1 != p._2).foreach { case (g, e) =>
+        fail(s"$name: row $g, brute force $e")
+      }
+    }
+    assertBf("ivfTopK, nprobe = nlist", Similarity.ivfTopK(queries, corpus,
+      "vec_id", "v", k, centroids, nprobe = nlist))
+    val path = java.nio.file.Files.createTempDirectory("ivf_full_probe_").toString
+    Similarity.writeIvfIndex(corpus, "vec_id", "v", centroids, path)
+    assertBf("ivfTopKIndexed, nprobe = nlist", Similarity.ivfTopKIndexed(
+      queries, path, "vec_id", "v", k, centroids, nprobe = nlist))
+    assertBf("ivfPqTopKRerank, nprobe = nlist", Similarity.ivfPqTopKRerank(
+      queries, corpus, "vec_id", "v", k, centroids, nprobe = nlist, codebooks,
+      refine))
+  }
+
   test("hardNegatives surfaces nearest CROSS-label vectors only") {
     import spark.implicits._
     // label a hugs the x-axis, label b has one member angled toward a
