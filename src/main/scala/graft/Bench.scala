@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.registry.Registry
+
 /** Benchmark harness. Prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`
   * and also writes it to `bench_out.json` (plus per-rep raw timings to
@@ -60,12 +62,12 @@ object Bench {
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .selectExpr("sum(l_quantity)").collect()
     // optional comma-separated subset for local iteration; driver leaves it
-    // unset and benches everything
+    // unset and benches everything. An unknown name throws rather than
+    // benching nothing.
     val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .toSeq
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val selected = only.fold(Registry.specs)(Registry.select)
+      .map(q => q.name -> q.build)
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def runOnce(): Seq[(String, Double)] = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()

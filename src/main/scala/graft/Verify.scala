@@ -1,13 +1,27 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.util.{Failure, Success, Try}
+
+import graft.registry.{Oracle, QuerySpec, Registry}
+
+/** Correctness dump: each registered query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/check_oracle.py`). The
+  * queries and their oracles come from the family files under
+  * `graft/registry/` (`TsdfQueries`, `IntervalsIoMlQueries`, `TextQueries`,
+  * `DedupQueries`, `AnnQueries`, `LmQueries`, `MediaQueries`,
+  * `AnalyticsQueries`).
+  *
+  * Usage: `graft.Verify <sf dir> <out dir> [query ...]`; an unknown query
+  * name fails before anything runs. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    val only = args.drop(2).toSet // optional query-name filter (local iteration)
+    // optional query-name filter (local iteration); a typo throws here
+    // instead of selecting nothing
+    val selected = if (args.length > 2) Registry.select(args.drop(2).toSeq)
+      else Registry.specs
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -23,7 +37,7 @@ object Verify {
     sys.env.get("SPARK_GRAFT_MATERIALIZER_DIR").foreach(d =>
       spark.conf.set(graft.pipeline.Materializer.DirKey, d))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(q => only.isEmpty || only(q._1)).foreach { case (name, fn) =>
+    selected.foreach { case QuerySpec(name, fn, _) =>
       // repartition(1), NOT coalesce(1): coalesce collapses the whole
       // post-shuffle stage into the single writer task, so a query whose
       // heavy projection sits above its last exchange (the decode family,
@@ -52,21 +66,25 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // dynamic entries (trained-literal replays, e.g. q_pca_project) are
-    // best-effort: a recoverable training failure must not zero the whole
-    // round's static oracle map. Fatal JVM errors (OOM, LinkageError)
-    // propagate and fail the dump — shipping a silently-narrowed oracle
-    // file after one of those would hide the narrowing from the gate.
-    val dynamic =
-      try SparkEntry.dynamicOracleSql(spark, sfDir)
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[verify] dynamic oracle skipped: ${e.getMessage}")
-        // machine-readable skip marker so the gate can surface the
-        // narrowed coverage instead of just missing the rows quietly
-        Files.writeString(Paths.get(s"$outDir/dynamic_oracle_skipped.txt"),
-          s"${e.getClass.getName}: ${e.getMessage}\n")
-        Map.empty[String, String]
-      }
+    // trained oracles (e.g. q_pca_project) are best-effort per query: a
+    // recoverable training failure skips only that query's oracle, never
+    // the static map or another trained entry. Fatal JVM errors (OOM,
+    // LinkageError) propagate out of Try and fail the dump — shipping a
+    // silently-narrowed oracle file after one of those would hide the
+    // narrowing from the gate.
+    val trained = Registry.specs.collect {
+      case QuerySpec(name, _, Oracle.Trained(sql)) => name -> Try(sql(spark, sfDir))
+    }
+    val dynamic = trained.collect { case (name, Success(sql)) => name -> sql }
+    val skips = trained.collect { case (name, Failure(e)) =>
+      System.err.println(s"[verify] $name trained oracle skipped: ${e.getMessage}")
+      s"$name: ${e.getClass.getName}: ${e.getMessage}"
+    }
+    // machine-readable skip marker, one line per skipped query, so the
+    // gate can surface the narrowed coverage instead of just missing rows
+    val marker = Paths.get(s"$outDir/dynamic_oracle_skipped.txt")
+    if (skips.nonEmpty) Files.writeString(marker, skips.mkString("", "\n", "\n"))
+    else Files.deleteIfExists(marker)
     val json = (SparkEntry.oracleSql ++ dynamic)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

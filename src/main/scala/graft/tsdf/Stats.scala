@@ -578,8 +578,14 @@ object Stats {
         when(col("__rn") > (col("__home") + 1) * c + lo, col("__home") + 1),
         when(col("__home") > 0 && col("__rn") <= col("__home") * c + hi,
           col("__home") - 1))
+      // the explicit (series, chunk) shuffle is what spreads the chunks:
+      // the row_number pass leaves the rows hash-partitioned by series (or
+      // in a single partition when the series key is a literal), and either
+      // already satisfies the chunk window's clustering, so without it the
+      // planner adds no exchange and the whole series stays in one task
       val exploded = staged.withColumn("__chunk",
         explode(filter(targets, t => t.isNotNull)))
+        .repartition(seriesCols.map(col) :+ col("__chunk"): _*)
       val w = Window
         .partitionBy(seriesCols.map(col) :+ col("__chunk"): _*)
         .orderBy(col("__rn")).rowsBetween(lo, hi)

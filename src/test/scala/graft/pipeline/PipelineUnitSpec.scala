@@ -3930,31 +3930,71 @@ class PipelineUnitSpec extends SparkTestBase {
   }
 
   test("one hot series parallelizes under chunked rolling (skew budget)") {
-    import spark.implicits._
     // a single 1M-row series: the whole-series plan pins one task with
     // O(w log w) work per row; the chunked plan must spread the frame work
-    // across tasks and finish well inside a CI-scale budget
+    // across tasks and beat the serial plan's cost, extrapolated from a
+    // calibration slice timed in this JVM (a host-independent budget)
     val n = 1000000
+    val slice = n / 16
     val one = spark.range(n).select(lit(0L).alias("sid"),
       col("id").alias("ts"),
       pmod(col("id") * 1103515245L, lit(4099)).cast("double").alias("v"))
-    val t0 = System.nanoTime()
-    val out = graft.tsdf.Stats.rollingMedian(one, "ts", "v", Seq("sid"),
-      window = 101, chunkRows = 65536)
-    val agg = out.agg(count(col("rolling_median_v")),
-      sum(col("rolling_median_v"))).collect().head
-    val secs = (System.nanoTime() - t0) / 1e9
-    assert(agg.getLong(0) == n)
-    assert(secs < 120.0, s"chunked hot-series rolling median took $secs s")
-    // and the chunked answer matches the whole-series plan on a prefix
-    // (full-series comparison would itself pay the skew cost being avoided)
+    def medianSum(df: org.apache.spark.sql.DataFrame, chunkRows: Int) =
+      graft.tsdf.Stats.rollingMedian(df, "ts", "v", Seq("sid"), 101,
+        chunkRows = chunkRows).agg(count(col("rolling_median_v")),
+        sum(col("rolling_median_v"))).collect().head
+    def timed[T](f: => T): (T, Double) = {
+      val t0 = System.nanoTime()
+      val r = f
+      (r, (System.nanoTime() - t0) / 1e9)
+    }
+    // the chunked answer matches the whole-series plan on a prefix (a
+    // full-series comparison would itself pay the skew cost being
+    // avoided); it also warms both plans before anything is timed
     val prefix = one.filter(col("ts") < 20000)
-    val a = graft.tsdf.Stats.rollingMedian(prefix, "ts", "v", Seq("sid"), 101)
-      .agg(sum(col("rolling_median_v"))).collect().head.getDouble(0)
-    val b = graft.tsdf.Stats.rollingMedian(prefix, "ts", "v", Seq("sid"), 101,
-      chunkRows = 4096)
-      .agg(sum(col("rolling_median_v"))).collect().head.getDouble(0)
-    assert(a == b)
+    assert(medianSum(prefix, 0).getDouble(1) == medianSum(prefix, 4096).getDouble(1))
+    // one shuffle partition per core, none merged away, so the chunks can
+    // land in more than one task
+    val conf = Seq("spark.sql.shuffle.partitions" -> "2",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    // rows each task reads from a shuffle, per stage
+    val shuffleReads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        shuffleReads.add(e.stageId -> e.taskMetrics.shuffleReadMetrics.recordsRead)
+    }
+    try {
+      val (_, calSecs) = timed(medianSum(one.filter(col("ts") < slice), 0))
+      spark.sparkContext.addSparkListener(listener)
+      val (agg, secs) = timed(medianSum(one, 65536))
+      assert(agg.getLong(0) == n)
+      // structural: some stage of the chunked plan reads rows in >= 2 tasks
+      // (the whole-series plan reads the one series in a single task)
+      def busiestStage: Int = {
+        import scala.jdk.CollectionConverters._
+        shuffleReads.asScala.toSeq.filter(_._2 > 0).groupBy(_._1)
+          .values.map(_.size).maxOption.getOrElse(0)
+      }
+      val deadline = System.nanoTime() + 30000000000L // listener bus lag
+      while (busiestStage < 2 && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(busiestStage >= 2,
+        s"chunked hot-series frame work ran in $busiestStage task(s)")
+      // budget: no slower than the serial plan's linear extrapolation
+      // (the serial cost is slightly superlinear, so this is conservative)
+      val budget = calSecs * n / slice
+      info(f"chunked $secs%.1f s in $busiestStage tasks; serial extrapolation $budget%.1f s")
+      assert(secs < budget,
+        f"chunked hot-series rolling median took $secs%.1f s; the serial " +
+          f"plan extrapolates to $budget%.1f s ($calSecs%.2f s per ${slice} rows)")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
   }
 
   test("cooccurrence computes exact pair counts and lift") {

@@ -4,6 +4,10 @@ DuckDB against the sf tables and compare (columns sorted by name, rows as a
 sorted multiset, exact values) with the parquet the graft.Verify dump wrote.
 
 Usage: python3 tools/check_oracle.py <sfdir> <outdir> [query ...]
+
+Every query output dir must have an oracle: a dir with no oracle entry
+fails, and the lines of graft.Verify's `dynamic_oracle_skipped.txt`
+marker (trained oracles that could not be built) are printed first.
 """
 import json, math, sys, os
 import duckdb
@@ -40,10 +44,20 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+    skipped = f"{outdir}/dynamic_oracle_skipped.txt"
+    if os.path.exists(skipped):
+        for line in open(skipped).read().splitlines():
+            print(f"SKIPPED trained oracle {line}")
+    dumped = {d for d in os.listdir(outdir) if os.path.isdir(f"{outdir}/{d}")}
     n_pass = n_fail = 0
-    for name, sql in sorted(oracle.items()):
+    for name in sorted(set(oracle) | dumped):
         if only and name not in only:
             continue
+        if name not in oracle:
+            print(f"FAIL {name}: no oracle")
+            n_fail += 1
+            continue
+        sql = oracle[name]
         pq = f"{outdir}/{name}"
         if not os.path.isdir(pq):
             print(f"FAIL {name}: no spark output dir")
