@@ -119,10 +119,11 @@ object Dedup {
     * sides (alias ids defeat exchange reuse) and was measured 10× slower.
     * Pathological buckets (boilerplate shared by thousands of docs would
     * contribute |bucket|² pairs) are split, not dropped, past
-    * `maxBucketSize`: [[Similarity.subBucketPairs]] sub-buckets them by a
-    * fold of two *extra* signature minima — identical/near-identical docs
-    * share those minima, so the boilerplate clusters the clamp used to
-    * discard stay together and still emit (linearly many) pairs. With
+    * `maxBucketSize`: [[Similarity.subBucketPairsRelational]] sub-buckets
+    * them by a fold of two *extra* signature minima — identical or
+    * near-identical docs share those minima, so the boilerplate clusters
+    * the clamp used to discard stay together and still emit (linearly
+    * many) pairs. With
     * rowsPerBand = 3 a spurious pair at similarity s only collides with
     * probability s³ per band, keeping the candidate count linear-ish.
     */
@@ -210,38 +211,26 @@ object Dedup {
 
   /** SimHash near-duplicate pairs with hamming distance ≤ `maxHamming`.
     *
-    * Pigeonhole banding: the 61 informative bits split into maxHamming+1
-    * contiguous bands, so any pair within the distance budget shares at
-    * least one band exactly — candidates are a single groupBy on
-    * (band, band value), pairs emit via [[Similarity.subBucketPairs]] (the
-    * full fingerprint doubles as the oversized-bucket sub-key AND the verify
-    * payload, so no second join), then an exact `bit_count` verify. One
-    * exchange for the simhash aggregation, one for the banding — the
-    * 100 TB-shaped plan for fingerprint dedup. */
+    * Pigeonhole banding through [[Similarity.hammingBandPairs]]: the 61
+    * informative bits split into maxHamming+1 contiguous non-empty bands
+    * ([[Similarity.bandLayout]]; maxHamming = 3 is 16/16/16/13 bits), so
+    * any pair within the distance budget shares at least one band
+    * exactly — candidates are a single groupBy on (band, band value),
+    * pairs emit via [[Similarity.subBucketPairsRelational]] (the full
+    * fingerprint doubles as the oversized-bucket sub-key AND the verify
+    * payload, so no second join), then an exact `bit_count` verify.
+    * `maxHamming` must lie in 0..60 (61 bands of one bit). One exchange
+    * for the simhash aggregation, one for the banding and one spreading
+    * the sub-bucket lists over tasks — the 100 TB-shaped plan for
+    * fingerprint dedup. */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3, maxBucketSize: Int = 4096): DataFrame = {
-    val b = maxHamming + 1
-    val w = (SimhashBits + b - 1) / b
-    val sh = simhash(df, textCol, idCol)
-    val banded = sh.select(col(idCol), col("simhash"), explode(
-      array((0 until b).map { i =>
-        val width = math.min(w, SimhashBits - i * w)
-        struct(lit(i).alias("band"),
-          shiftright(col("simhash"), i * w)
-            .bitwiseAND(lit((1L << width) - 1)).alias("bval"))
-      }: _*)).alias("__b"))
-      .select(col(idCol), col("simhash"), col("__b.band"), col("__b.bval"))
-    Similarity.subBucketPairsRelational(banded,
-      Seq(col("band"), col("bval")), col("simhash"),
-      struct(col(idCol).alias("id"), col("simhash").alias("xh")),
-      maxBucketSize, ordered = false)
-      .select(col("__p.a.id").alias(s"${idCol}_a"), col("__p.a.xh").alias("__ha"),
-        col("__p.b.id").alias(s"${idCol}_b"), col("__p.b.xh").alias("__hb"))
+      maxHamming: Int = 3, maxBucketSize: Int = 4096): DataFrame =
+    Similarity.hammingBandPairs(simhash(df, textCol, idCol), col(idCol),
+        col("simhash"), col("simhash"), SimhashBits, maxHamming + 1,
+        maxHamming, maxBucketSize)
+      .select(col("a.id").alias(s"${idCol}_a"), col("b.id").alias(s"${idCol}_b"),
+        col("hamming").cast(LongType).alias("hamming"))
       .distinct()
-      .withColumn("hamming", hamming64(col("__ha"), col("__hb")).cast(LongType))
-      .filter(col("hamming") <= maxHamming)
-      .select(col(s"${idCol}_a"), col(s"${idCol}_b"), col("hamming"))
-  }
 
   /** Connected-component labels over a near-duplicate pair list — the step
     * that turns pairwise dedup output (minhash/simhash/embedding pairs) into

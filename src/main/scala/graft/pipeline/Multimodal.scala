@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1623,46 +1623,43 @@ object Multimodal {
     * LSH trade).
     *
     * Band buckets larger than `maxBucketSize` are deterministically
-    * sub-bucketed and pool-clamped via
-    * [[Similarity.subBucketPairsRelational]] — the discipline the
-    * text/LSH pipelines carry: an organic corpus's LOW-ENTROPY images
-    * (uniform frames, solid fills) produce many DISTINCT signatures
-    * agreeing on one band value, and an unclamped self-equi-join there
-    * is ~n²/2¹⁶ candidates per band. Buckets ≤ `maxBucketSize` keep the
-    * exact unclamped pair set (nSub = 1, pool = whole bucket);
-    * oversized buckets bound output at size×maxBucketSize, trading
-    * recall inside the pathological bucket only. */
+    * sub-bucketed and pool-clamped by [[halvesHammingPairs]] — the
+    * discipline the text/LSH pipelines carry: an organic corpus's
+    * LOW-ENTROPY images (uniform frames, solid fills) produce many
+    * DISTINCT signatures agreeing on one band value, and an unclamped
+    * self-equi-join there is ~n²/2¹⁶ candidates per band. Buckets ≤
+    * `maxBucketSize` keep the exact unclamped pair set (nSub = 1, pool =
+    * whole bucket); oversized buckets bound output at
+    * size×maxBucketSize, trading recall inside the pathological bucket
+    * only. The bands are cut from (`dhash_hi`, `dhash_lo`), the same bits
+    * as `band0..band3`. */
   def dhashNearDupPairs(hashes: DataFrame, idCol: String,
       maxHamming: Int = 3, maxBucketSize: Int = 4096): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 64)
-    val sigs = hashes.groupBy(col("dhash_hi"), col("dhash_lo"),
-        col("band0"), col("band1"), col("band2"), col("band3"))
+    val sigs = hashes.groupBy(col("dhash_hi"), col("dhash_lo"))
       .agg(min(col(idCol)).alias("rep_id"),
         count(lit(1)).alias("n_docs"))
-    // The full signature doubles as the sub-bucket key (the simhashPairs
-    // discipline): identical signatures never reach here (distinct-sig
-    // grouping above), and the fold spreads distinct signatures evenly
-    // across sub-buckets of a pathological band bucket.
-    val banded = sigs.select(col("dhash_hi"), col("dhash_lo"),
-      col("rep_id"), col("n_docs"),
-      Hashing.foldHashes(Seq(col("dhash_hi"), col("dhash_lo")))
-        .alias("__xh"),
-      posexplode(array(col("band0"), col("band1"), col("band2"),
-        col("band3"))).as(Seq("band_idx", "band_val")))
-    Similarity.subBucketPairsRelational(banded,
-      Seq(col("band_idx"), col("band_val")), col("__xh"),
-      struct(col("rep_id").alias("id"), col("__xh").alias("xh"),
-        col("dhash_hi").alias("hi"), col("dhash_lo").alias("lo"),
-        col("n_docs").alias("nd")),
-      maxBucketSize, ordered = false, spreadFinerKey = true)
-      .select(col("__p.a.id").alias("doc_a"), col("__p.b.id").alias("doc_b"),
-        col("__p.a.nd").alias("n_docs_a"), col("__p.b.nd").alias("n_docs_b"),
-        (bit_count(col("__p.a.hi").bitwiseXOR(col("__p.b.hi"))) +
-          bit_count(col("__p.a.lo").bitwiseXOR(col("__p.b.lo"))))
-          .cast(IntegerType).alias("hamming"))
+    halvesHammingPairs(sigs, col("rep_id"), col("dhash_hi"), col("dhash_lo"),
+        maxHamming, maxBucketSize, col("n_docs").alias("nd"))
+      .select(col("a.id").alias("doc_a"), col("b.id").alias("doc_b"),
+        col("a.nd").alias("n_docs_a"), col("b.nd").alias("n_docs_b"),
+        col("hamming"))
       .distinct()
-      .filter(col("hamming") <= maxHamming)
   }
+
+  /** [[Similarity.hammingBandPairs]] over a 64-bit hash carried as its
+    * unsigned 32-bit halves (`hi` = h >>> 32, `lo` = h & 0xFFFFFFFF — the
+    * layout of every media hash producer): 4 × 16-bit bands
+    * (pigeonhole-exact recall at Hamming ≤ 3) and the
+    * [[Hashing.foldHashes]] fold of the halves as the sub-bucket key, so
+    * the distinct hashes of a pathological band bucket spread evenly
+    * across its sub-buckets. */
+  private def halvesHammingPairs(rows: DataFrame, id: Column, hi: Column,
+      lo: Column, maxHamming: Int, maxBucketSize: Int,
+      payload: Column*): DataFrame =
+    Similarity.hammingBandPairs(rows, id, shiftleft(hi, 32).bitwiseOR(lo),
+      Hashing.foldHashes(Seq(hi, lo)), 64, 4, maxHamming, maxBucketSize,
+      payload: _*)
 
   /** Shared banded-Hamming near-dup fold over per-UNIT 64-bit signatures
     * (units = video keyframes, audio fingerprint segments, …): band-bucket
@@ -1756,12 +1753,10 @@ object Multimodal {
   /** Verified near-dup pairs over DISTINCT 64-bit unit hashes — the
     * candidate stage of [[unitNearDupPairs]], factored so the clamp
     * bound is testable in isolation. Input `dsig`: distinct (__hi, __lo)
-    * rows. Band-buckets each hash on its 4 × 16-bit halves, pairs within
-    * each (band_idx, band_val) bucket through
-    * [[Similarity.subBucketPairsRelational]] (sub-key = the
-    * [[Hashing.foldHashes]] fold of the full hash, the simhashPairs
-    * discipline: distinct hashes spread evenly across the sub-buckets of
-    * a pathological bucket — the low-entropy corpus shape where many
+    * rows. Band-buckets each hash on its 4 × 16-bit bands through
+    * [[halvesHammingPairs]] (sub-key = the [[Hashing.foldHashes]] fold of
+    * the full hash: distinct hashes spread evenly across the sub-buckets
+    * of a pathological bucket — the low-entropy corpus shape where many
     * DISTINCT hashes share one band value, e.g. dark keyframes or
     * silence segments, would otherwise cost ~n²/2¹⁶ candidates per
     * band), then verifies with the exact popcount distance. Buckets
@@ -1774,39 +1769,25 @@ object Multimodal {
     * bucket of n entries is ≤ n·c (pool clamp), and recall INSIDE that
     * bucket falls roughly with c/n — c is the knob between candidate
     * emission and in-bucket recall, and only pathological buckets pay
-    * it. Measured on the 640k-distinct-hash skew gate (SkewClampProbe,
-    * SURVEY §24.2): c=64 → 25.9M pairs (bound 41M), c=512 → 169M pairs
-    * (bound 328M) — ~6.5× the emission for 8× the pool, confirming the
-    * n·c bound. Size c so that the worst expected pathological bucket's
+    * it. On the 640k-distinct-hash skew shape (n DISTINCT hashes sharing
+    * band 0; the CHANGES.md record of this operator's skew run) c=64 →
+    * 25.9M pairs (bound 41M), c=512 → 169M pairs (bound 328M) — ~6.5× the
+    * emission for 8× the pool, confirming the n·c bound; the
+    * PipelineUnitSpec skew-spread test pins the bound and the spread at
+    * test scale. Size c so that the worst expected pathological bucket's
     * n·c emission fits a task budget (pairs are three-long structs);
     * 4096 keeps every sane bucket exact while bounding a 10⁶-entry
-    * degenerate bucket at ~4·10⁹ candidates spread across the adaptive
-    * finer-key repartition. Output: one row per unordered verified
-    * pair (hi_a, lo_a, hi_b, lo_b), a < b in (hi, lo) struct order;
-    * (h, h) self-pairs are NOT emitted (the caller appends them). */
+    * degenerate bucket at ~4·10⁹ candidates spread across the pair
+    * operator's sub-bucket repartition. Output: one row per unordered verified pair (hi_a,
+    * lo_a, hi_b, lo_b), a < b in (hi, lo) struct order; (h, h)
+    * self-pairs are NOT emitted (the caller appends them). */
   private[graft] def bandedDistinctHashPairs(dsig: DataFrame,
-      maxHamming: Int, maxBucketSize: Int): DataFrame = {
-    val banded = dsig.select(col("__hi"), col("__lo"),
-      Hashing.foldHashes(Seq(col("__hi"), col("__lo"))).alias("__xh"),
-      posexplode(array(
-        col("__lo").bitwiseAND(lit(0xFFFFL)),
-        shiftright(col("__lo"), 16).bitwiseAND(lit(0xFFFFL)),
-        col("__hi").bitwiseAND(lit(0xFFFFL)),
-        shiftright(col("__hi"), 16).bitwiseAND(lit(0xFFFFL))))
-        .as(Seq("band_idx", "band_val")))
-    Similarity.subBucketPairsRelational(banded,
-      Seq(col("band_idx"), col("band_val")), col("__xh"),
-      struct(struct(col("__hi"), col("__lo")).alias("id"),
-        col("__xh").alias("xh")),
-      maxBucketSize, ordered = false, spreadFinerKey = true)
-      .select(col("__p.a.id.__hi").alias("hi_a"),
-        col("__p.a.id.__lo").alias("lo_a"),
-        col("__p.b.id.__hi").alias("hi_b"),
-        col("__p.b.id.__lo").alias("lo_b"))
+      maxHamming: Int, maxBucketSize: Int): DataFrame =
+    halvesHammingPairs(dsig, struct(col("__hi"), col("__lo")), col("__hi"),
+        col("__lo"), maxHamming, maxBucketSize)
+      .select(col("a.id.__hi").alias("hi_a"), col("a.id.__lo").alias("lo_a"),
+        col("b.id.__hi").alias("hi_b"), col("b.id.__lo").alias("lo_b"))
       .distinct() // one row per unordered hash pair, not per band
-      .filter(bit_count(col("hi_a").bitwiseXOR(col("hi_b"))) +
-        bit_count(col("lo_a").bitwiseXOR(col("lo_b"))) <= maxHamming)
-  }
 
   /** Haitsma–Kalker audio fingerprints (the public spectral sign hash —
     * Haitsma & Kalker 2002, "A Highly Robust Audio Fingerprinting

@@ -277,14 +277,13 @@ object Similarity {
     */
   def subBucketPairs(entriesSorted: Column, c: Int, ordered: Boolean): Column =
     bindArr(entriesSorted) { es =>
-      val nSub = greatest(lit(1L), ceil(size(es) / lit(c.toDouble)).cast("long"))
+      val nSub = nSubOf(size(es), c)
       flatten(transform(sequence(lit(0L), nSub - 1), s =>
         pairsWithinSub(filter(es, e => pmod(e.getField("xh"), nSub) === s), c, ordered)))
     }
 
   /** All-pairs within ONE sub-bucket's id-sorted entries, pool-clamped —
-    * the shared inner step of [[subBucketPairs]] and
-    * [[subBucketPairsRelational]]. */
+    * the inner step of [[subBucketPairs]]. */
   private def pairsWithinSub(subCol: Column, c: Int, ordered: Boolean): Column =
     bindArr(subCol) { sub =>
       if (ordered)
@@ -299,17 +298,43 @@ object Similarity {
     }
 
   /** [[subBucketPairs]] with the sub-bucket MEMBERSHIP computed relationally
-    * — the production form for the bucketed pair pipelines.
+    * — the one bucket self-join behind every banded pair path.
     *
     * The array form partitions a bucket by running nSub `filter` passes over
     * the whole entries array: O(m²/c) per oversized bucket, which the sf1
     * self-gate exposed as 17-27× superlinear scaling on duplicate-heavy
-    * data. Here the per-bucket count comes from an unordered window on the
-    * bucket key and rows group directly by (bucket, xh % nSub); the window's
-    * exchange already clusters the finer key, so the groupBy adds NO second
-    * shuffle and each sub-bucket pays one O(|sub|·c) pair pass. Membership,
-    * pool and pair order are bit-identical to the array form (differential-
-    * tested), so the existing DuckDB oracle replays are untouched.
+    * data. Here an oversized bucket is split once, by one sort on
+    * (xh % nSub, entry), and each sub-bucket pays one O(|sub|·c) pair
+    * pass. Membership, pool and pair order are bit-identical to the array
+    * form (differential-tested), so the DuckDB oracle replays are
+    * untouched.
+    *
+    * One skew policy, decided from the data inside the plan: the stage
+    * that groups a bucket is the one that knows its size, so the split is
+    * made there, with no probe action and no caller option.
+    *  - `groupBy(bucket)` collects each bucket's entries; a bucket of at
+    *    most `c` entries (nSub = 1, the common case) stays one id-sorted
+    *    list, and an oversized one is split by `xh % nSub` into its
+    *    sub-bucket lists ([[subBucketLists]]).
+    *  - One `repartition(bucket, sub)` of those lists feeds the
+    *    emission, so an oversized bucket's sub-buckets hash over all
+    *    shuffle partitions and run in many tasks.
+    * That exchange is left to AQE to size. Well-spread input sends it
+    * only the lists of buckets holding ≥ 2 entries, which coalesce into
+    * one task: the policy costs one small stage and no window, union,
+    * probe action or caller option. An explicit width, which AQE may not
+    * coalesce, would cost every call numShufflePartitions tasks
+    * (q_minhash_pairs at sf0.01 on 4 partitions: 0.261 s against
+    * 0.248 s). AQE sizes partitions by COMPRESSED map output, blind to
+    * the up-to-c-fold explode downstream, so its parallelism-first
+    * coalescing spreads a hot bucket over fewer tasks than an explicit
+    * width would (the 640k-row low-entropy media skew shape: 378 s
+    * against 207 s on 4 cores, 169,334,013 pairs either way); with
+    * `parallelismFirst` off it may merge a hot bucket of a few MB into
+    * one task. An oversized bucket's entries are collected into one row
+    * before the split, as in the array form; the O(size·c) pair emission
+    * is what spreads. The skew-spread test in PipelineUnitSpec pins the
+    * pair set of an oversized bucket and its emission over ≥ 2 tasks.
     *
     * Pair EMISSION is two chained lazy generators, not one explode of a
     * pre-built pairs array: `ExplodeBase.eval` materializes its whole input
@@ -321,80 +346,100 @@ object Similarity {
     * id-sorted tail second keeps only one bucket array per in-flight row;
     * the pair set is unchanged (same pool clamp, same a<b tail slice).
     *
-    * `banded`: one row per bucket entry; `entry` must expose `id` and `xh`.
-    * Returns one row per pair, column `__p` = struct(a, b).
-    *
-    * `spreadFinerKey`: re-shuffle OVERSIZED buckets' entry rows on the
-    * FINER (bucket, sub-bucket) key — with an EXPLICIT partition count —
-    * before the grouping. Two scale pathologies this defeats, both
-    * measured on the low-entropy media skew gate (640k distinct hashes
-    * sharing one band value):
-    *  (a) AQE coalesces the window's exchange by COMPRESSED map-output
-    *      size, blind to downstream explode amplification — a few MB of
-    *      well-compressing bucket arrays coalesce to ~1 partition and one
-    *      task then emits ALL pairs (measured: 13+ min single-task vs
-    *      49 s with the exchange pinned; an explicit repartition(n) is
-    *      not AQE-coalescible);
-    *  (b) without it, an oversized bucket's ENTIRE sub-bucket family
-    *      stays in one hash(bucketCols) partition through the grouping
-    *      and emission — the clamp bounds candidate COUNT but the
-    *      emission still runs serially.
-    * ADAPTIVE since r18 (the r17 verdict's one perf demand): the window
-    * count that computes `nSub` already knows, PER ROW, whether the
-    * row's bucket exceeds `c`, so only rows of oversized buckets — the
-    * skew shape, exactly where pathology (b) lives — take the extra
-    * exchange; well-distributed buckets (nSub = 1, the common case and
-    * the whole bench fixture population) keep the window exchange's
-    * clustering and pay NO extra shuffle. The r17 unconditional form
-    * cost every media fold the full-entry-stream exchange even when no
-    * bucket was oversized (q_video_neardup 1.66→2.79 s, q_audio_neardup
-    * 2.25→3.54 s at sf0.1); the adaptive split keeps the 640k skew-gate
-    * behavior (oversized buckets spread across `numShufflePartitions`
-    * tasks) while restoring the unclamped-plan cost everywhere else.
-    * The two emission branches cover disjoint bucket families (a bucket
-    * is entirely ≤ c or entirely > c), so the pair SET is unchanged —
-    * the PipelineUnitSpec differentials and the unchanged DuckDB
-    * replays lock this. Still defaults OFF for the vector-payload
-    * pipelines (semdedup/lshTopK entries carry embeddings; their gates
-    * are green without it) and ON in the hash-only media folds (three
-    * longs per entry). */
+    * `banded`: one row per bucket entry; `entry` must expose `id`, `xh` is
+    * its sub-key. Returns one row per pair, column `__p` = struct(a, b). */
   def subBucketPairsRelational(banded: DataFrame, bucketCols: Seq[Column],
-      xh: Column, entry: Column, c: Int, ordered: Boolean,
-      spreadFinerKey: Boolean = false): DataFrame = {
-    val w = Window.partitionBy(bucketCols: _*)
-    val cnt = count(lit(1)).over(w)
-    val nSub = greatest(lit(1L), ceil(cnt / lit(c.toDouble)).cast("long"))
-    val subbed = banded
-      .withColumn("__cnt", cnt)
-      .withColumn("__s", pmod(xh, nSub))
-      .withColumn("__entry", entry)
-    def emit(clustered: DataFrame): DataFrame = {
-      val grouped = clustered
-        .groupBy(bucketCols :+ col("__s"): _*)
-        .agg(collect_list(col("__entry")).alias("__e0"))
-        .filter(size(col("__e0")) >= 2)
-        .select(array_sort(col("__e0")).alias("__e"))
-      if (ordered)
-        // every entry (query) pairs against the pool = first c entries
-        grouped
-          .select(col("__e"), explode(col("__e")).alias("__x"))
-          .select(col("__x"), explode(filter(slice(col("__e"), 1, c),
-            y => y.getField("id") =!= col("__x").getField("id"))).alias("__y"))
-          .select(struct(col("__x").alias("a"), col("__y").alias("b")).alias("__p"))
-      else
-        // pool member i (0-based) pairs with the tail after it: a < b once
-        grouped
-          .select(col("__e"), posexplode(slice(col("__e"), 1, c)).as(Seq("__i", "__x")))
-          .select(col("__x"), explode(
-            slice(col("__e"), col("__i") + 2, size(col("__e")))).alias("__y"))
-          .select(struct(col("__x").alias("a"), col("__y").alias("b")).alias("__p"))
-    }
-    if (spreadFinerKey)
-      emit(subbed.filter(col("__cnt") <= c))
-        .union(emit(subbed.filter(col("__cnt") > c)
-          .repartition(banded.sparkSession.sessionState.conf.numShufflePartitions,
-            bucketCols :+ col("__s"): _*)))
-    else emit(subbed)
+      xh: Column, entry: Column, c: Int, ordered: Boolean): DataFrame = {
+    val keys = bucketCols.indices.map(i => s"__k$i")
+    // list elements are struct(x = entry, xh), ordered as the entries are
+    val subs = banded
+      .groupBy(bucketCols.zip(keys).map { case (b, k) => b.alias(k) }: _*)
+      .agg(collect_list(struct(entry.alias("x"), xh.alias("xh"))).alias("__l"))
+      .filter(size(col("__l")) >= 2)
+      .select(keys.map(col) :+
+        posexplode(subBucketLists(col("__l"), c)).as(Seq("__s", "__e")): _*)
+      .repartition(keys.map(col) :+ col("__s"): _*)
+    val pair = struct(col("__x.x").alias("a"), col("__y.x").alias("b")).alias("__p")
+    if (ordered)
+      // every entry (query) pairs against the pool = first c entries
+      subs
+        .select(col("__e"), explode(col("__e")).alias("__x"))
+        .select(col("__x"), explode(filter(slice(col("__e"), 1, c),
+          y => y.getField("x").getField("id") =!= col("__x.x.id"))).alias("__y"))
+        .select(pair)
+    else
+      // pool member i (0-based) pairs with the tail after it: a < b once
+      subs
+        .select(col("__e"), posexplode(slice(col("__e"), 1, c)).as(Seq("__i", "__x")))
+        .select(col("__x"), explode(
+          slice(col("__e"), col("__i") + 2, size(col("__e")))).alias("__y"))
+        .select(pair)
+  }
+
+  /** Sub-buckets per bucket of `size` entries: ceil(size / c), at least 1. */
+  private[graft] def nSubOf(size: Column, c: Int): Column =
+    greatest(lit(1L), ceil(size / lit(c.toDouble)).cast("long"))
+
+  /** The non-empty sub-bucket lists of one bucket's (x, xh) list, each
+    * sorted: the whole list when it holds at most `c` entries, else one
+    * list per `xh % nSub` value. The oversized split sorts by (sub, entry)
+    * once and slices the runs, O(size·log size) instead of the array
+    * form's nSub filter passes. */
+  private def subBucketLists(l: Column, c: Int): Column =
+    when(size(l) <= c, array(array_sort(l))).otherwise(
+      bindArr(array_sort(transform(l, e => struct(
+        pmod(e.getField("xh"), nSubOf(size(l), c)).alias("s"), e.alias("e"))))) { t =>
+        bindArr(filter(sequence(lit(1), size(t)), i => i === 1 ||
+          element_at(t, i).getField("s") =!= element_at(t, i - 1).getField("s"))) { st =>
+          transform(st, (b, j) => transform(
+            slice(t, b, when(j + 1 < size(st), element_at(st, j + 2))
+              .otherwise(size(t) + 1) - b),
+            e => e.getField("e")))
+        }
+      })
+
+  /** (start, width) of `bands` contiguous bands over the low `bits` bits
+    * of a hash: width ceil(bits / bands), each start clamped so every
+    * later band keeps at least one bit. That is the plain ceil split
+    * whenever it fits, and a split with no empty band for any
+    * 1 ≤ bands ≤ bits. The unclamped ceil split can start a band past
+    * the top bit (14 bands of 5 bits over 61 put band 13 at bit 65), and
+    * a negative width's mask sends every row to one bucket. */
+  private[graft] def bandLayout(bits: Int, bands: Int): Seq[(Int, Int)] = {
+    require(bits <= 64 && bands >= 1 && bands <= bits,
+      s"$bands bands over $bits bits leave a band empty")
+    val w = (bits + bands - 1) / bands
+    val starts = (0 to bands).map(i => math.min(i * w, bits - bands + i))
+    starts.zip(starts.tail).map { case (s, e) => (s, e - s) }
+  }
+
+  /** Verified pairs of 64-bit hashes within Hamming distance `maxHamming`
+    * — the band split and popcount verify of every fingerprint pair path
+    * (SimHash, dHash, keyframe and audio-segment hashes), written once.
+    * Pigeonhole banding: the low `bits` bits of `hash` split into `bands`
+    * contiguous non-empty bands ([[bandLayout]]), so any pair within
+    * `bands - 1` differing bits shares one band value exactly. Each
+    * (band, value) bucket pairs through [[subBucketPairsRelational]] with
+    * sub-key `xh`, and [[Dedup.hamming64]] of (a.h, b.h) is verified.
+    * Entries are struct(id, xh, h, `payload`…), pooled in `id` order (`id`
+    * unique per row); output (a, b, hamming), a.id < b.id, one row per
+    * pair AND shared band: callers project the fields they keep, then
+    * `distinct()` — projecting first keeps the dedup shuffle to those
+    * fields, which on an oversized bucket carries up to n·c pairs. */
+  def hammingBandPairs(rows: DataFrame, id: Column, hash: Column, xh: Column,
+      bits: Int, bands: Int, maxHamming: Int, c: Int,
+      payload: Column*): DataFrame = {
+    val banded = rows.select(
+      struct(Seq(id.alias("id"), xh.alias("xh"), hash.alias("h")) ++ payload: _*)
+        .alias("__e"),
+      posexplode(array(bandLayout(bits, bands).map { case (s, w) =>
+        shiftright(hash, s).bitwiseAND(lit(-1L >>> (64 - w)))
+      }: _*)).as(Seq("__band", "__bval")))
+    subBucketPairsRelational(banded, Seq(col("__band"), col("__bval")),
+      col("__e.xh"), col("__e"), c, ordered = false)
+      .select(col("__p.a").alias("a"), col("__p.b").alias("b"),
+        Dedup.hamming64(col("__p.a.h"), col("__p.b.h")).alias("hamming"))
+      .filter(col("hamming") <= maxHamming)
   }
 
   /** One (id, vector, norm, bucket, xh) row per vector — the shared
@@ -410,6 +455,7 @@ object Similarity {
       .withColumn("__full", full)
       .withColumn("__bucket", col("__full").bitwiseAND(lit((1L << nBits) - 1)))
       .withColumn("__xh", shiftright(col("__full"), nBits))
+      .drop("__full")
   }
 
   private def vecEntry(idCol: String): Column =
@@ -471,48 +517,46 @@ object Similarity {
     *
     * Skew guard: a hot corpus bucket (boilerplate-like embedding pileups)
     * would otherwise concentrate its whole query×corpus fan-in on one join
-    * task. Buckets past `maxBucketSize` are SPLIT, not capped: the corpus
-    * key becomes (bucket, xh % nSub) using the [[SubBucketBits]] extra sign
-    * bits, and each probing query explodes over that bucket's nSub sub-keys
-    * — the candidate set (and therefore the result and its oracle) is
-    * bit-identical, only the key granularity changes. The per-bucket count
-    * table is at most 2^nBits rows, so both helper joins broadcast; no new
-    * shuffle. Identical vectors share xh and still pile into one sub-key —
-    * inherent, since dropping them would change the answer.
-    *
-    * The guard is decided by ONE action on that tiny count aggregate
-    * (`max(count)` over ≤2^nBits rows): when no bucket exceeds
-    * `maxBucketSize` — the common case on healthy embeddings — the query
-    * flows through a plain single equi-join with zero sub-key machinery,
-    * identical results. The deciding pass over the corpus is not extra
-    * work: the previous always-on guard evaluated the same count aggregate
-    * inside the main job anyway. */
+    * task. Unlike the self-join, the query side must know each bucket's
+    * split before the join, so this operator decides it with ONE action:
+    * the corpus rows sit behind one lazy [[Materializer]] boundary (the
+    * action and the join compute them once), and the map-side-combined
+    * per-bucket count returns the buckets past `maxBucketSize` — at most
+    * rows / maxBucketSize of them, collected to the driver. With none —
+    * the common case on healthy embeddings — the query flows through a
+    * plain single equi-join. Buckets past it are SPLIT, not capped: the
+    * corpus key becomes (bucket, xh % nSub) using the [[SubBucketBits]]
+    * extra sign bits ([[nSubOf]], the self-join's rule; 1 outside the hot
+    * set, which joins as a local broadcast frame), and each probing query
+    * explodes over its bucket's nSub sub-keys — the candidate set (and
+    * therefore the result and its oracle) is bit-identical, only the key
+    * granularity changes. Identical vectors share xh and still pile into
+    * one sub-key — inherent, since dropping them would change the
+    * answer. The action runs when the plan is built. */
   def lshTopKMultiProbe(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, dim: Int, k: Int, nBits: Int = 8, probes: Int = 8,
       maxBucketSize: Int = 4096): DataFrame = {
-    val cFull = bucketRows(corpus, idCol, vecCol, dim, nBits)
-      .toDF("neighbor_id", "__cv", "__cn", "__full", "__bucket", "__xh")
-    val counts = cFull.groupBy(col("__bucket"))
-      .agg(count(lit(1)).alias("__cnt"))
-    val maxCnt = Option(counts.agg(max(col("__cnt"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val qBase = vectors(queries, idCol, vecCol, "query_id", "__q")
+    val c = Materializer(bucketRows(corpus, idCol, vecCol, dim, nBits)
+      .toDF("neighbor_id", "__cv", "__cn", "__bucket", "__xh"), eager = false)
+    val q = vectors(queries, idCol, vecCol, "query_id", "__q")
       .withColumn("__bucket",
         explode(probeBuckets(col("__qv"), dim, nBits, probes)))
-    val joined = if (maxCnt <= maxBucketSize) {
-      qBase.join(cFull.drop("__full", "__xh"), Seq("__bucket"))
-    } else {
-      val nsub = counts.select(col("__bucket"),
-        greatest(lit(1L),
-          ceil(col("__cnt") / lit(maxBucketSize.toDouble)).cast("long"))
-          .alias("__nsub"))
-      val c = cFull.join(broadcast(nsub), "__bucket")
-        .withColumn("__sub", pmod(col("__xh"), col("__nsub")))
-      // inner: probe buckets with no corpus rows contributed nothing before
-      val q = qBase.join(broadcast(nsub), Seq("__bucket"))
-        .withColumn("__sub", explode(sequence(lit(0L), col("__nsub") - 1)))
-      q.join(c, Seq("__bucket", "__sub"))
-    }
+    val counts = c.groupBy(col("__bucket")).agg(count(lit(1)).alias("__cnt"))
+      .filter(col("__cnt") > maxBucketSize)
+      .select(col("__bucket"), nSubOf(col("__cnt"), maxBucketSize).alias("__nsub"))
+    val hot = counts.collect()
+    val joined = if (hot.isEmpty) q.join(c.drop("__xh"), Seq("__bucket"))
+      else {
+        val nsub = broadcast(c.sparkSession.createDataFrame(
+          java.util.Arrays.asList(hot: _*), counts.schema))
+        def split(df: DataFrame, sub: Column): DataFrame =
+          df.join(nsub, Seq("__bucket"), "left")
+            .withColumn("__nsub", coalesce(col("__nsub"), lit(1L)))
+            .withColumn("__sub", sub).drop("__nsub", "__xh")
+        split(q, explode(sequence(lit(0L), col("__nsub") - 1)))
+          .join(split(c, pmod(col("__xh"), col("__nsub"))),
+            Seq("__bucket", "__sub"))
+      }
     cosineTopK(joined.filter(notSelf), k)
   }
 

@@ -17,6 +17,36 @@ class PlanShapeSpec extends SparkTestBase {
   private def exchanges(df: DataFrame): Int =
     "Exchange hashpartitioning".r.findAllIn(plan(df)).size
 
+  /** Shuffle exchanges of every partitioning (broadcasts excluded). */
+  private def allExchanges(df: DataFrame): Int =
+    "\\bExchange ".r.findAllIn(plan(df)).size
+
+  /** `build`'s result and the Spark jobs it started on this thread. A
+    * marker job run afterwards flushes the listener bus, which delivers
+    * events in order. */
+  private def jobsDuring[T](build: => T): (T, Int) = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("plan-build", "jobs while building a plan")
+      val out = try build finally sc.clearJobGroup()
+      sc.setJobGroup("plan-marker", "listener flush")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("plan-marker") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(groups.contains("plan-marker"), "the marker job was never seen")
+      (out, groups.asScala.count(_ == "plan-build"))
+    } finally sc.removeSparkListener(listener)
+  }
+
   private def eventsDf = {
     import spark.implicits._
     (0 until 1000).map { i =>
@@ -116,8 +146,10 @@ class PlanShapeSpec extends SparkTestBase {
     val cands = Dedup.minhashCandidates(docs, "text", "doc_id", 2, 6, 3, 50)
     val p = plan(cands)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
-    // signature agg + bucket agg + distinct = exactly 3 hash exchanges
-    assert(exchanges(cands) == 3, p)
+    // signature agg + bucket agg = exactly 2 hash exchanges; the pair
+    // operator's sub-bucket spread is a third exchange (SinglePartition at
+    // this suite's 1 shuffle partition), whose output the distinct reuses
+    assert(exchanges(cands) == 2 && allExchanges(cands) == 3, p)
   }
 
   test("simhash pairing has no join at all: banding + inline verify") {
@@ -128,8 +160,31 @@ class PlanShapeSpec extends SparkTestBase {
     val pairs = Dedup.simhashPairs(docs, "text", "doc_id", maxHamming = 6)
     val p = plan(pairs)
     assert(!p.contains("Join"), p)
-    // simhash agg + band-bucket agg + pair distinct = 3 hash exchanges
-    assert(exchanges(pairs) == 3, p)
+    // simhash agg + band-bucket agg = 2 hash exchanges, then the pair
+    // operator's spread exchange, whose output the pair distinct reuses
+    assert(exchanges(pairs) == 2 && allExchanges(pairs) == 3, p)
+  }
+
+  test("well-spread pair buckets plan no window and no union, and building " +
+      "the plan runs no job (a minhash and a media caller)") {
+    import spark.implicits._
+    val docs = (0 until 50)
+      .map(i => (i.toLong, s"some repeated text body number ${i % 5} with shared words"))
+      .toDF("doc_id", "text")
+    val dsig = (0 until 200).map { i =>
+      val h = i * 0x9E3779B97F4A7C15L
+      (h >>> 32, h & 0xFFFFFFFFL)
+    }.toDF("__hi", "__lo")
+    val ((cands, media), jobs) = jobsDuring {
+      (Dedup.minhashCandidates(docs, "text", "doc_id", 2, 6, 3, 50),
+        pipeline.Multimodal.bandedDistinctHashPairs(dsig, 3, 4096))
+    }
+    assert(jobs == 0, s"building the pair plans ran $jobs Spark job(s)")
+    Seq(cands, media).foreach { df =>
+      val p = plan(df)
+      assert(!p.contains("Window") && !p.contains("Union"), p)
+      assert(!p.contains("Join"), p)
+    }
   }
 
   test("sessionize is one series exchange (both window passes reuse it)") {

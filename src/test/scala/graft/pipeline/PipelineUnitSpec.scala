@@ -441,6 +441,41 @@ class PipelineUnitSpec extends SparkTestBase {
     assert(same.length == 1 && same.head.getLong(2) == 0L)
   }
 
+  test("the hash band split leaves no band empty, keeps the ceil split " +
+      "where it fits, and simhashPairs rejects radii past 60") {
+    import spark.implicits._
+    // the ceil(61 / b) split overruns the 61 informative bits for many b
+    // (b = 17: band 16 would start at bit 64); the clamped layout is
+    // contiguous and non-empty for every b, and unchanged where it fits
+    (1 to 61).foreach { b =>
+      val layout = Similarity.bandLayout(61, b)
+      assert(layout.size == b && layout.forall(_._2 >= 1), s"b=$b: $layout")
+      assert(layout.map(_._1) == layout.scanLeft(0)(_ + _._2).init, s"b=$b")
+      assert(layout.map(_._2).sum == 61, s"b=$b: $layout")
+      val w = (61 + b - 1) / b
+      if ((b - 1) * w < 61)
+        assert(layout.map(_._1) == (0 until b).map(_ * w), s"b=$b: $layout")
+    }
+    assert(Similarity.bandLayout(61, 4) == Seq((0, 16), (16, 16), (32, 16), (48, 13)))
+    assert(Similarity.bandLayout(64, 4) == Seq((0, 16), (16, 16), (32, 16), (48, 16)))
+    val docs = (0 until 6).map(i => (i.toLong,
+      s"shared words of a small corpus w${i % 3} x${i % 2}")).toDF("doc_id", "text")
+    val sh = Dedup.simhash(docs, "text", "doc_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    Seq(16, 31).foreach { h =>
+      val want = (for (a <- sh.keys; b <- sh.keys if a < b;
+        d = java.lang.Long.bitCount(sh(a) ^ sh(b)).toLong if d <= h)
+        yield (a, b, d)).toSet
+      val got = Dedup.simhashPairs(docs, "text", "doc_id", maxHamming = h)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == want && want.nonEmpty, s"maxHamming=$h")
+    }
+    Seq(61, 64, -1).foreach { h =>
+      intercept[IllegalArgumentException](
+        Dedup.simhashPairs(docs, "text", "doc_id", maxHamming = h))
+    }
+  }
+
   test("multi-probe LSH reaches recall >= 0.9 vs brute-force ground truth") {
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
       .select(col("vec_id"),
@@ -535,6 +570,59 @@ class PipelineUnitSpec extends SparkTestBase {
     val split = Similarity.lshTopKMultiProbe(queries, emb, "vec_id", "q",
       dim = 64, k = 3, nBits = 6, probes = 8, maxBucketSize = 1)
     assertDfEquality(split, whole)
+  }
+
+  test("one oversized bucket keeps the array-form pair set and spreads its " +
+      "emission over tasks with no caller option") {
+    // the low-entropy media skew shape at test scale: n DISTINCT hashes
+    // sharing one bucket, sub-keyed by the fold of the hash
+    val n = 3000L
+    val c = 64
+    val df = spark.range(n).select(col("id"), lit(0x1234L).alias("bucket"),
+      Hashing.foldHashes(Seq((col("id") * 2654435761L) % 4294967296L,
+        shiftleft((col("id") * 40503L) % 65536L, 16) + 0x1234L)).alias("xh"))
+    val want = df.groupBy(col("bucket"))
+      .agg(collect_list(struct(col("id"), col("xh"))).alias("__e"))
+      .select(explode(Similarity.subBucketPairs(
+        array_sort(col("__e")), c, ordered = false)).alias("__p"))
+      .select(col("__p.a.id"), col("__p.b.id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // more than one shuffle partition, none merged away, so the emission
+    // can land in more than one task
+    val conf = Seq("spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    // rows each task reads from a shuffle, per stage
+    val shuffleReads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        shuffleReads.add(e.stageId -> e.taskMetrics.shuffleReadMetrics.recordsRead)
+    }
+    try {
+      val pairs = Similarity.subBucketPairsRelational(df, Seq(col("bucket")),
+        col("xh"), struct(col("id"), col("xh")), c, ordered = false)
+        .select(col("__p.a.id"), col("__p.b.id"))
+      spark.sparkContext.addSparkListener(listener)
+      val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == want, "oversized-bucket pairs differ from the array form")
+      assert(got.size <= n * c, s"${got.size} pairs exceed the n*c bound")
+      def busiestStage: Int = {
+        import scala.jdk.CollectionConverters._
+        shuffleReads.asScala.toSeq.filter(_._2 > 0).groupBy(_._1)
+          .values.map(_.size).maxOption.getOrElse(0)
+      }
+      val deadline = System.nanoTime() + 30000000000L // listener bus lag
+      while (busiestStage < 2 && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(busiestStage >= 2,
+        s"the oversized bucket's emission ran in $busiestStage task(s)")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
   }
 
   test("sorted-merge intersect size equals array_intersect on random sets") {
@@ -5731,7 +5819,9 @@ class PipelineUnitSpec extends SparkTestBase {
     val h1 = kf(1L).map(r => (r.getInt(2), r.getLong(3), r.getLong(4))).sorted
     assert(h0.sameElements(h1), "variant keyframe pHashes should collapse")
     // multi-shot fixture: every clip segments into >= 2 shots
-    assert(kf(0L).head.getInt(1) >= 2)
+    val minShots = Video.keyframePHashes(pay, "doc_id", "payload")
+      .agg(min(col("n_shots"))).head().getInt(0)
+    assert(minShots >= 2, s"a clip segments into $minShots shot(s)")
     // distinct groups: ids 0 and 10 share NO keyframe within Hamming 3
     val sep = Video.videoNearDupPairs(
       pay.filter(col("doc_id").isin(0L, 10L)), "doc_id", "payload").count()
