@@ -852,8 +852,8 @@ object Multimodal {
     // signature edges) — one lazy boundary runs the image decode once
     val ih = Materializer(imageDHash(arm("image"), idCol, payloadCol),
       eager = false)
-    val sigCols = Seq("dhash_hi", "dhash_lo",
-      "band0", "band1", "band2", "band3")
+    // the two halves are the whole signature: band0..band3 are slices of them
+    val sigCols = Seq("dhash_hi", "dhash_lo")
     val iPairs = dhashNearDupPairs(ih, idCol, maxHamming, maxBucketSize)
       .select(col("doc_a").alias("id_a"), col("doc_b").alias("id_b"))
     // dhashNearDupPairs pairs SIGNATURE representatives; distinct content

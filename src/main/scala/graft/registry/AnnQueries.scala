@@ -860,7 +860,7 @@ private[graft] object AnnQueries extends QueryFamily {
   /** File-source stream over embeddings.parquet (same single-micro-batch
     * AvailableNow shape as [[docsStream]]). */
   private def embStream(s: SparkSession, dir: String): DataFrame = {
-    val sch = s.read.parquet(s"$dir/embeddings.parquet").schema
+    val sch = graft.io.ParquetInput.schema(s, s"$dir/embeddings.parquet")
     s.readStream.schema(sch).option("pathGlobFilter", "embeddings.parquet")
       .parquet(dir)
   }

@@ -4,14 +4,16 @@ package registry
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.io.ParquetInput
 import graft.tsdf.TSDF
 
 /** Inputs every family reads: the sf tables, the integer-scaled column
   * conventions and the single-batch stream scaffold. */
 private[registry] object Inputs {
 
+  /** An sf table, its schema inferred once per path ([[ParquetInput]]). */
   def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    ParquetInput.read(s, s"$dir/$name.parquet")
 
   /** events.ts arrives either as parquet TIMESTAMP(NANOS) read as raw longs
     * (nanosAsLong, pre-r9 testdata) or as TIMESTAMP(MICROS) read as
@@ -82,7 +84,7 @@ private[registry] object Inputs {
     * micro-batch, preserving the single-batch = batch-oracle equality. */
   def eventsStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val sch = s.read.parquet(s"$dir/events.parquet").schema
+    val sch = ParquetInput.schema(s, s"$dir/events.parquet")
     // the file source wants a DIRECTORY; the glob filter pins the one table
     val src = s.readStream.schema(sch).option("pathGlobFilter", "events.parquet")
       .parquet(dir)
@@ -137,7 +139,7 @@ private[registry] object Inputs {
   /** File-source stream over documents.parquet (one file ⇒ a single
     * AvailableNow micro-batch, like [[eventsStream]]). */
   def docsStream(s: SparkSession, dir: String): DataFrame = {
-    val sch = s.read.parquet(s"$dir/documents.parquet").schema
+    val sch = ParquetInput.schema(s, s"$dir/documents.parquet")
     s.readStream.schema(sch).option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
   }

@@ -407,7 +407,7 @@ private[graft] object TextQueries extends QueryFamily {
       Retrieval.buildPostingsIndex(docs(s, dir), "text", "doc_id")
         .repartition(8, col("term")).sortWithinPartitions("term")
         .write.mode("overwrite").parquet(path)
-    s.read.parquet(path)
+    graft.io.ParquetInput.read(s, path)
   }
 
   spec("q_bm25_indexed", bm25MultiSql) { (s, dir) =>

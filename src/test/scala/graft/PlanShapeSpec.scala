@@ -21,32 +21,6 @@ class PlanShapeSpec extends SparkTestBase {
   private def allExchanges(df: DataFrame): Int =
     "\\bExchange ".r.findAllIn(plan(df)).size
 
-  /** `build`'s result and the Spark jobs it started on this thread. A
-    * marker job run afterwards flushes the listener bus, which delivers
-    * events in order. */
-  private def jobsDuring[T](build: => T): (T, Int) = {
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("plan-build", "jobs while building a plan")
-      val out = try build finally sc.clearJobGroup()
-      sc.setJobGroup("plan-marker", "listener flush")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!groups.contains("plan-marker") && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(groups.contains("plan-marker"), "the marker job was never seen")
-      (out, groups.asScala.count(_ == "plan-build"))
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def eventsDf = {
     import spark.implicits._
     (0 until 1000).map { i =>

@@ -9,10 +9,52 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session + chispa-style DataFrame equality for golden tests.
   * Mirrors the reference harness settings (tests/base.py:250-273):
   * shuffle.partitions=1, UTC session timezone; equality ignores column
-  * order, nullability and metadata (base.py:390-427). */
+  * order, nullability and metadata (base.py:390-427).
+  *
+  * Suites run at ONE shuffle partition, so every shuffled stage is one
+  * task. A test that checks that work spreads over tasks must raise the
+  * partition count (and usually turn off AQE coalescing) with [[withConf]]. */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** `body` under the given session settings; each key gets its prior
+    * value back (or is unset again) afterwards, also on a throw. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** `build`'s result and the Spark jobs it started on this thread. A
+    * marker job run afterwards flushes the listener bus, which delivers
+    * events in order. */
+  def jobsDuring[T](build: => T): (T, Int) = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("plan-build", "jobs while building a plan")
+      val out = try build finally sc.clearJobGroup()
+      sc.setJobGroup("plan-marker", "listener flush")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("plan-marker") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(groups.contains("plan-marker"), "the marker job was never seen")
+      (out, groups.asScala.count(_ == "plan-build"))
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Strip nullability (and metadata) recursively; lowercase names. */
   private def normalize(dt: DataType): DataType = dt match {

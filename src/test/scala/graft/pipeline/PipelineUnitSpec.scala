@@ -587,41 +587,34 @@ class PipelineUnitSpec extends SparkTestBase {
         array_sort(col("__e")), c, ordered = false)).alias("__p"))
       .select(col("__p.a.id"), col("__p.b.id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // more than one shuffle partition, none merged away, so the emission
-    // can land in more than one task
-    val conf = Seq("spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
     // rows each task reads from a shuffle, per stage
     val shuffleReads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         shuffleReads.add(e.stageId -> e.taskMetrics.shuffleReadMetrics.recordsRead)
     }
-    try {
-      val pairs = Similarity.subBucketPairsRelational(df, Seq(col("bucket")),
-        col("xh"), struct(col("id"), col("xh")), c, ordered = false)
-        .select(col("__p.a.id"), col("__p.b.id"))
-      spark.sparkContext.addSparkListener(listener)
-      val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == want, "oversized-bucket pairs differ from the array form")
-      assert(got.size <= n * c, s"${got.size} pairs exceed the n*c bound")
-      def busiestStage: Int = {
-        import scala.jdk.CollectionConverters._
-        shuffleReads.asScala.toSeq.filter(_._2 > 0).groupBy(_._1)
-          .values.map(_.size).maxOption.getOrElse(0)
-      }
-      val deadline = System.nanoTime() + 30000000000L // listener bus lag
-      while (busiestStage < 2 && System.nanoTime() < deadline) Thread.sleep(100)
-      assert(busiestStage >= 2,
-        s"the oversized bucket's emission ran in $busiestStage task(s)")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+    // more than one shuffle partition, none merged away, so the emission
+    // can land in more than one task
+    withConf("spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      try {
+        val pairs = Similarity.subBucketPairsRelational(df, Seq(col("bucket")),
+          col("xh"), struct(col("id"), col("xh")), c, ordered = false)
+          .select(col("__p.a.id"), col("__p.b.id"))
+        spark.sparkContext.addSparkListener(listener)
+        val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(got == want, "oversized-bucket pairs differ from the array form")
+        assert(got.size <= n * c, s"${got.size} pairs exceed the n*c bound")
+        def busiestStage: Int = {
+          import scala.jdk.CollectionConverters._
+          shuffleReads.asScala.toSeq.filter(_._2 > 0).groupBy(_._1)
+            .values.map(_.size).maxOption.getOrElse(0)
+        }
+        val deadline = System.nanoTime() + 30000000000L // listener bus lag
+        while (busiestStage < 2 && System.nanoTime() < deadline) Thread.sleep(100)
+        assert(busiestStage >= 2,
+          s"the oversized bucket's emission ran in $busiestStage task(s)")
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
   }
 
@@ -4041,47 +4034,40 @@ class PipelineUnitSpec extends SparkTestBase {
     // avoided); it also warms both plans before anything is timed
     val prefix = one.filter(col("ts") < 20000)
     assert(medianSum(prefix, 0).getDouble(1) == medianSum(prefix, 4096).getDouble(1))
-    // one shuffle partition per core, none merged away, so the chunks can
-    // land in more than one task
-    val conf = Seq("spark.sql.shuffle.partitions" -> "2",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
     // rows each task reads from a shuffle, per stage
     val shuffleReads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         shuffleReads.add(e.stageId -> e.taskMetrics.shuffleReadMetrics.recordsRead)
     }
-    try {
-      val (_, calSecs) = timed(medianSum(one.filter(col("ts") < slice), 0))
-      spark.sparkContext.addSparkListener(listener)
-      val (agg, secs) = timed(medianSum(one, 65536))
-      assert(agg.getLong(0) == n)
-      // structural: some stage of the chunked plan reads rows in >= 2 tasks
-      // (the whole-series plan reads the one series in a single task)
-      def busiestStage: Int = {
-        import scala.jdk.CollectionConverters._
-        shuffleReads.asScala.toSeq.filter(_._2 > 0).groupBy(_._1)
-          .values.map(_.size).maxOption.getOrElse(0)
-      }
-      val deadline = System.nanoTime() + 30000000000L // listener bus lag
-      while (busiestStage < 2 && System.nanoTime() < deadline) Thread.sleep(100)
-      assert(busiestStage >= 2,
-        s"chunked hot-series frame work ran in $busiestStage task(s)")
-      // budget: no slower than the serial plan's linear extrapolation
-      // (the serial cost is slightly superlinear, so this is conservative)
-      val budget = calSecs * n / slice
-      info(f"chunked $secs%.1f s in $busiestStage tasks; serial extrapolation $budget%.1f s")
-      assert(secs < budget,
-        f"chunked hot-series rolling median took $secs%.1f s; the serial " +
-          f"plan extrapolates to $budget%.1f s ($calSecs%.2f s per ${slice} rows)")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+    // one shuffle partition per core, none merged away, so the chunks can
+    // land in more than one task
+    withConf("spark.sql.shuffle.partitions" -> "2",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      try {
+        val (_, calSecs) = timed(medianSum(one.filter(col("ts") < slice), 0))
+        spark.sparkContext.addSparkListener(listener)
+        val (agg, secs) = timed(medianSum(one, 65536))
+        assert(agg.getLong(0) == n)
+        // structural: some stage of the chunked plan reads rows in >= 2 tasks
+        // (the whole-series plan reads the one series in a single task)
+        def busiestStage: Int = {
+          import scala.jdk.CollectionConverters._
+          shuffleReads.asScala.toSeq.filter(_._2 > 0).groupBy(_._1)
+            .values.map(_.size).maxOption.getOrElse(0)
+        }
+        val deadline = System.nanoTime() + 30000000000L // listener bus lag
+        while (busiestStage < 2 && System.nanoTime() < deadline) Thread.sleep(100)
+        assert(busiestStage >= 2,
+          s"chunked hot-series frame work ran in $busiestStage task(s)")
+        // budget: no slower than the serial plan's linear extrapolation
+        // (the serial cost is slightly superlinear, so this is conservative)
+        val budget = calSecs * n / slice
+        info(f"chunked $secs%.1f s in $busiestStage tasks; serial extrapolation $budget%.1f s")
+        assert(secs < budget,
+          f"chunked hot-series rolling median took $secs%.1f s; the serial " +
+            f"plan extrapolates to $budget%.1f s ($calSecs%.2f s per ${slice} rows)")
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
   }
 

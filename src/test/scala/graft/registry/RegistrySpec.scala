@@ -80,6 +80,28 @@ class RegistrySpec extends AnyFunSuite {
       Seq("q_vwap", "q_asof"))
   }
 
+  test("family files read parquet inputs through graft.io.ParquetInput") {
+    // the partitioned round trips: their schema comes from directory names
+    // and their output is rewritten on every build
+    val allowed = Set("qWriteRoundtrip", "q_write_zorder")
+    val owner = "(?:spec\\(\"|def )(\\w+)".r
+    val files = new java.io.File("src/main/scala/graft/registry").listFiles()
+      .filter(_.getName.endsWith(".scala"))
+    assert(files.length >= 9)
+    val direct = files.toSeq.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toIndexedSeq finally src.close()
+      lines.indices.filter(i => lines(i).contains(".read.parquet(")).map { i =>
+        val in = (i to 0 by -1).iterator
+          .flatMap(j => owner.findFirstMatchIn(lines(j))).nextOption()
+        (s"${f.getName}:${i + 1}", in.map(_.group(1)).getOrElse(""))
+      }
+    }
+    val stray = direct.filterNot { case (_, in) => allowed(in) }
+    assert(stray.isEmpty, s"direct .read.parquet( outside ParquetInput: $stray")
+    assert(direct.map(_._2).toSet == allowed)
+  }
+
   test("a static oracle's SQL is not evaluated until it is read") {
     val o = new Oracle.Static(sys.error("evaluated"))
     assert(intercept[RuntimeException](o.sql).getMessage == "evaluated")
