@@ -12,20 +12,11 @@ import org.apache.spark.sql.types._
   * The flagship operation `makeDisjoint` splits every set of overlapping
   * intervals per series into a disjoint cover, merging metrics of overlapping
   * pieces (reference: a pandas sweep-line kernel via `applyInPandas`,
-  * intervals.py:223-278,1070-1331).
-  *
-  * Spark-native redesign — instead of buffering each series in one worker
-  * process (O(n²) per group in the reference), disjoint-ification is pure
-  * relational algebra:
-  *   1. elementary segments = consecutive pairs of the distinct boundary
-  *      points per series (one window over the boundaries);
-  *   2. join segments back to the intervals that cover them (equi-join on the
-  *      series ids + range predicate);
-  *   3. group by segment, merging each metric with "latest non-null wins" in
-  *      (start, end) interval order — `max(when(m nonnull, struct(start, end,
-  *      m)))`.
-  * Every step is shuffle-partitioned by series id, scales with data volume,
-  * and stays in whole-stage codegen — no per-group buffering.
+  * intervals.py:223-278,1070-1331). It is the same per-series sweep here:
+  * one `flatMapGroups` call per series of [[DisjointSweep]], the kernel that
+  * [[graft.streaming.StreamingTSDF.disjointIntervals]] runs on its state, so
+  * a series is one task. The joins and the coverage algebra stay
+  * relational plans.
   */
 case class IntervalsDF(
     df: DataFrame,
@@ -265,202 +256,57 @@ case class IntervalsDF(
       .na.drop(Seq(valueCol))
   }
 
-  /** Split overlapping intervals into a disjoint cover per series.
+  /** Split overlapping intervals into a disjoint cover per series: one
+    * row per maximal run of elementary segments with the same merged
+    * metric vector. A segment's metric is the value of the greatest
+    * (start, end, value) among its covering intervals that carry one
+    * (the reference's "latest wins", intervals.py:223-278,1070-1331).
     *
-    * Hybrid execution, chosen per series by max overlap depth (the running
-    * +1/−1 sum over sorted boundary events): series at or below
-    * `depthThreshold` run the relational segment×cover join, whose row count
-    * is bounded by segments × depth; deeper series — e.g. one series of n
-    * mutually-overlapping intervals, where that join is O(n²) — fall back to
-    * an O(n·log n) per-series sweep-line in `flatMapGroups` that reproduces
-    * the exact "max (start, end, value) struct wins" merge of the relational
-    * path (differential-tested on random inputs). The depth probe and both
-    * routing joins shuffle on the same series key as the main plan, and are
-    * skipped entirely (one cheap count-aggregate action) when no series has
-    * enough intervals to possibly exceed the threshold. */
-  def makeDisjoint(depthThreshold: Int = IntervalsDF.DefaultDepthThreshold): IntervalsDF = {
-    // Empty seriesIds would reduce the cover-join condition to a pure range
-    // predicate — a BroadcastNestedLoopJoin over all segments × all
-    // intervals. A constant dummy group key keeps it an equi-join (the data
-    // is semantically one series, so the single resulting group is inherent,
-    // as in the reference's single-group path).
-    if (seriesIds.isEmpty) {
-      val out = copy(df = df.withColumn("__grp_all", lit(0)),
-        seriesIds = Seq("__grp_all")).makeDisjoint(depthThreshold)
-      return copy(df = out.df.drop("__grp_all"))
-    }
+    * One per-series sweep, as in the reference: the series' intervals go
+    * to one `flatMapGroups` call of [[DisjointSweep.fold]] then
+    * [[DisjointSweep.coalesce]], the kernel the stream twin also runs.
+    * O(n log n) per series; nothing runs while the plan is built. The
+    * trade: a series is one task however many intervals it has, so one
+    * giant series runs on one core (as in the reference).
+    *
+    * Start and end are timestamps or integers. Metrics keep their input
+    * type and exact value; a row with a null start or end covers nothing.
+    * Empty `seriesIds` make the whole frame one series. */
+  def makeDisjoint(): IntervalsDF = {
     val ms = metricCols
-    val series = seriesIds.map(col)
-
-    // overlap depth per series: the end event (−1) sorts before the start
-    // event (+1) at an equal boundary, so touching intervals don't stack.
-    // Depth is bounded by the series' interval count, so the windowed probe
-    // only runs over series whose count exceeds the threshold (a cheap
-    // partial+final aggregate prefilter) — for typical data the window
-    // sorts nothing at all.
-    val bigKeys = df.groupBy(series: _*).agg(count(lit(1)).alias("__cnt"))
-      .filter(col("__cnt") > depthThreshold).select(series: _*)
-    val work = df.select((seriesIds ++ Seq(startTs, endTs) ++ ms).map(col): _*)
-    // One action on the tiny count aggregate decides routing: when NO series
-    // has more intervals than the threshold (the common case), none can be
-    // deep, so the window probe and both routing joins are skipped entirely
-    // and the whole input takes the relational path unmodified.
-    val merged = if (bigKeys.isEmpty) relationalMerge(work, ms) else {
-      val wd = Window.partitionBy(series: _*).orderBy(col("__b"), col("__d"))
-      val depths = df.join(bigKeys, seriesIds, "left_semi")
-        .select(series :+ explode(array(
-          struct(col(startTs).alias("__b"), lit(1).alias("__d")),
-          struct(col(endTs).alias("__b"), lit(-1).alias("__d")))).alias("__e"): _*)
-        .select(series :+ col("__e.__b").alias("__b") :+ col("__e.__d").alias("__d"): _*)
-        .withColumn("__run", sum(col("__d")).over(
-          wd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(series: _*).agg(max(col("__run")).alias("__depth"))
-      val deepKeys = depths.filter(col("__depth") > depthThreshold).select(series: _*)
-      relationalMerge(work.join(deepKeys, seriesIds, "left_anti"), ms)
-        .unionByName(sweepMerge(work.join(deepKeys, seriesIds, "left_semi"), ms))
-    }
-
-    // 4. coalesce adjacent segments whose metric vectors are identical
-    //    (null-safe) — the issue-268 semantics (reference regression
-    //    tests/intervals_tests.py:404): splitting must not fragment a region
-    //    whose merged values are uniform. Gaps-and-islands over the segments.
-    val wSeg = Window.partitionBy(series: _*).orderBy(col(startTs))
-    val sameAsPrev = (ms.map(m => col(m) <=> lag(col(m), 1).over(wSeg)) :+
-      (col(startTs) <=> lag(col(endTs), 1).over(wSeg))).reduce(_ && _)
-    val islands = merged
-      .withColumn("__brk", when(sameAsPrev, 0).otherwise(1))
-      .withColumn("__grp", sum(col("__brk")).over(
-        wSeg.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val coalesced = islands
-      .groupBy((seriesIds :+ "__grp").map(col): _*)
-      .agg(
-        min(col(startTs)).alias(startTs),
-        max(col(endTs)).alias(endTs) +: ms.map(m => first(col(m)).alias(m)): _*)
-      .select(seriesIds.map(col) ++ Seq(col(startTs), col(endTs)) ++ ms.map(col): _*)
-
-    copy(df = coalesced)
-  }
-
-  /** Relational merge (the default scale path): elementary segments joined
-    * back to their covering intervals, metrics merged per segment. `work`
-    * must be projected to seriesIds ++ (startTs, endTs) ++ ms. */
-  private def relationalMerge(work: DataFrame, ms: Seq[String]): DataFrame = {
-    val series = seriesIds.map(col)
-
-    // 1. distinct boundary points per series → elementary segments
-    val boundaries = work
-      .select(series :+ explode(array(col(startTs), col(endTs))).alias("__b"): _*)
-      .distinct()
-    val wb = Window.partitionBy(series: _*).orderBy(col("__b"))
-    val segments = boundaries
-      .withColumn("__b2", lead(col("__b"), 1).over(wb))
-      .filter(col("__b2").isNotNull)
-
-    // 2. segments ⋈ covering intervals (overlap: seg.start < i.end ∧ seg.end > i.start)
-    val i = work.alias("i")
-    val s = segments.alias("s")
-    val joinCond = seriesIds.map(c => col(s"s.$c") === col(s"i.$c")).reduce(_ && _) &&
-      col("s.__b") < col(s"i.$endTs") && col("s.__b2") > col(s"i.$startTs")
-
-    // 3. merge metrics: latest non-null wins in (start, end) interval order
-    s.join(i, joinCond, "inner")
-      .groupBy(seriesIds.map(c => col(s"s.$c")) :+ col("s.__b") :+ col("s.__b2"): _*)
-      .agg(
-        ms.map(m => max(when(col(s"i.$m").isNotNull,
-          struct(col(s"i.$startTs"), col(s"i.$endTs"), col(s"i.$m").alias("v"))))
-          .getField("v").alias(m)).head,
-        ms.map(m => max(when(col(s"i.$m").isNotNull,
-          struct(col(s"i.$startTs"), col(s"i.$endTs"), col(s"i.$m").alias("v"))))
-          .getField("v").alias(m)).tail: _*)
-      .select(seriesIds.map(col) ++
-        Seq(col("__b").alias(startTs), col("__b2").alias(endTs)) ++ ms.map(col): _*)
-  }
-
-  /** Sweep-line merge for series past the overlap-depth threshold: one pass
-    * over the sorted boundaries with a lazy-deletion heap per metric, each
-    * ordered by (start, end, value) so the heap top IS the relational
-    * `max(struct(start, end, value))` winner for the current segment.
-    * O(n·log n) per series and O(n) memory — a single pathological series
-    * stays a single task instead of an O(n²) join blow-up. */
-  private def sweepMerge(work: DataFrame, ms: Seq[String]): DataFrame = {
-    import scala.collection.mutable
     val nS = seriesIds.length
-    val startI = nS
-    val endI = nS + 1
-    // metrics become nullable: a segment covered only by intervals whose
-    // metric is null merges to null even if the input field was non-nullable
-    val schema = StructType(work.schema.fields.zipWithIndex.map { case (f, i) =>
-      if (i >= nS + 2) f.copy(nullable = true) else f
+    val types = ms.map(df.schema(_).dataType)
+    val isTs = (c: String) => df.schema(c).dataType == TimestampType
+    def micros(c: String) =
+      (if (isTs(c)) unix_micros(col(c)) else col(c).cast(LongType)).alias(c)
+    def typed(c: String) = (if (isTs(c)) timestamp_micros(col(c))
+      else col(c).cast(df.schema(c).dataType)).alias(c)
+    val work = df.filter(col(startTs).isNotNull && col(endTs).isNotNull)
+      .select(seriesIds.map(col) ++ Seq(micros(startTs), micros(endTs)) ++
+        ms.map(col): _*)
+    val outSchema = StructType(work.schema.fields.zipWithIndex.map {
+      case (f, i) => if (i >= nS + 2) f.copy(nullable = true) else f
     })
-    val keySchema = StructType(schema.fields.take(nS))
-    val cmp = new Ordering[Any] with Serializable {
-      def compare(a: Any, b: Any): Int = a.asInstanceOf[Comparable[Any]].compareTo(b)
-    }
-    work
-      .groupByKey((r: Row) => Row.fromSeq(r.toSeq.take(nS)))(Encoders.row(keySchema))
-      .flatMapGroups { (key: Row, it: Iterator[Row]) =>
-        val rows = it.toArray
-        val nM = ms.length
-        val bounds =
-          (rows.map(_.get(startI)) ++ rows.map(_.get(endI))).distinct.sorted(cmp)
-        val byStart = rows.sortBy(_.get(startI))(cmp)
-        val winnerOrd = (mi: Int) => new Ordering[Row] {
-          def compare(x: Row, y: Row): Int = {
-            var c = cmp.compare(x.get(startI), y.get(startI))
-            if (c == 0) c = cmp.compare(x.get(endI), y.get(endI))
-            if (c == 0) c = cmp.compare(x.get(mi), y.get(mi))
-            c
-          }
+    // no series ids: one constant key, so the whole frame is one group
+    val keys = if (nS == 0) Seq(lit(0).alias("__grp_all")) else seriesIds.map(col)
+    val merged = work.groupBy(keys: _*)
+      .as[Row, Row](Encoders.row(work.select(keys: _*).schema), Encoders.row(work.schema))
+      .flatMapGroups { (key: Row, rows: Iterator[Row]) =>
+        val ords = types.map(DisjointSweep.order).toIndexedSeq
+        val ivs = rows.map(r => DisjointSweep.Interval(r.getLong(nS),
+          r.getLong(nS + 1), Array.tabulate[Any](types.length)(m => r.get(nS + 2 + m))))
+          .toSeq
+        val grid = DisjointSweep.fold(IndexedSeq.empty, ivs, ords)
+        DisjointSweep.coalesce(grid, ords).iterator.map { case (s, e, vs) =>
+          Row.fromSeq(key.toSeq.take(nS) ++ (s +: e +: vs.toSeq))
         }
-        val winners =
-          Array.tabulate(nM)(m => mutable.PriorityQueue.empty[Row](winnerOrd(nS + 2 + m)))
-        // min-heap on end: head is the earliest-expiring active interval
-        val coverage = mutable.PriorityQueue.empty[Row](
-          Ordering.fromLessThan[Row]((x, y) => cmp.compare(x.get(endI), y.get(endI)) > 0))
-        val out = mutable.ArrayBuffer.empty[Row]
-        var ptr = 0
-        var k = 0
-        while (k < bounds.length - 1) {
-          val b = bounds(k)
-          while (ptr < byStart.length && cmp.compare(byStart(ptr).get(startI), b) <= 0) {
-            val r = byStart(ptr)
-            if (cmp.compare(r.get(endI), b) > 0) { // skip empty [a, a) intervals
-              coverage.enqueue(r)
-              var m = 0
-              while (m < nM) { if (!r.isNullAt(nS + 2 + m)) winners(m).enqueue(r); m += 1 }
-            }
-            ptr += 1
-          }
-          while (coverage.nonEmpty && cmp.compare(coverage.head.get(endI), b) <= 0)
-            coverage.dequeue()
-          if (coverage.nonEmpty) {
-            val vals = new Array[Any](nS + 2 + nM)
-            var i = 0
-            while (i < nS) { vals(i) = key.get(i); i += 1 }
-            vals(startI) = b
-            vals(endI) = bounds(k + 1)
-            var m = 0
-            while (m < nM) {
-              val h = winners(m)
-              while (h.nonEmpty && cmp.compare(h.head.get(endI), b) <= 0) h.dequeue()
-              vals(nS + 2 + m) = if (h.nonEmpty) h.head.get(nS + 2 + m) else null
-              m += 1
-            }
-            out += Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
-          }
-          k += 1
-        }
-        out.iterator
-      }(Encoders.row(schema))
+      }(Encoders.row(outSchema))
+    copy(df = merged.select(seriesIds.map(col) ++ Seq(typed(startTs), typed(endTs)) ++
+      ms.map(col): _*))
   }
 }
 
 object IntervalsDF {
-
-  /** Max per-series overlap depth served by the relational cover join; the
-    * join produces at most segments × depth rows, so this bounds the blow-up
-    * at ~512× before a series is handed to the sweep-line fallback. */
-  val DefaultDepthThreshold = 256
 
   /** Long→wide pivot (intervals.py:139-221): one row per interval, one column
     * per metric name. Passing `metricNames` explicitly skips the extra

@@ -265,8 +265,8 @@ object Dedup {
     // docs with a near-dup appear), so up to `driverMaxEdges` edges the
     // exact answer comes from one collect + union-find — O(E α(E)), no
     // per-pass job overhead. The distributed loop below is the
-    // beyond-driver fallback (billions of pairs), same hybrid shape as
-    // IntervalsDF.makeDisjoint's sweep-line escape hatch.
+    // beyond-driver fallback (billions of pairs); the edge count decides,
+    // with one count action.
     if (sym.count() <= driverMaxEdges) {
       val spark = edges.sparkSession
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]

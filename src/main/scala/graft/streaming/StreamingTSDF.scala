@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.functions.Recurrence
+import graft.intervals.DisjointSweep
 import graft.tsdf.Resample
 
 /** Structured Streaming counterparts of the core time-series operators.
@@ -1712,8 +1713,8 @@ object StreamingTSDF {
   // ----------------------------------------------- streaming intervals
   case class IvEvent(series: String, sUs: Long, eUs: Long,
       values: Seq[Option[Double]])
-  /** Per-metric winning (origStart, origEnd, value) struct of one
-    * elementary segment — the batch kernel's max-struct resolution. */
+  /** Per-metric winning (origStart, origEnd, value) of one elementary
+    * segment: a [[graft.intervals.DisjointSweep.Win]] kept as a double. */
   case class IvWin(ws: Long, we: Long, v: Double)
   /** One elementary segment of a series' disjoint grid, carrying each
     * metric's winner independently (None = no covering interval carries
@@ -1722,26 +1723,21 @@ object StreamingTSDF {
   case class IvState(rev: Long, segs: Seq[IvSeg])
 
   /** Streaming interval algebra — the ingest-time
-    * [[graft.intervals.IntervalsDF.makeDisjoint]] maintainer: state per
-    * series is the current ELEMENTARY disjoint grid (no output coalescing
-    * in state), each segment carrying EVERY metric's winning
-    * `(origStart, origEnd, value)` struct independently — the batch
-    * kernel's per-metric `max(struct(start, end, value))` resolution.
-    * Exactness for ANY arrival order (no late-drop needed — interval
-    * merge is order-independent) rests on two facts, both PER METRIC:
-    * the max-struct winner is associative/commutative, and in an
-    * elementary grid every already-seen interval covers ALL of a segment
-    * or none of it, so resolving a new batch against per-segment winners
-    * equals resolving against all original intervals. Per batch, each
-    * TOUCHED series emits its full COALESCED snapshot (touching
-    * neighbors merged when ALL metric values are null-safe equal — the
-    * issue-268 semantics, vector form) tagged with a monotone `rev`;
-    * "latest rev per series" over the sink IS the batch `makeDisjoint`
-    * of everything ingested, for any micro-batch split (the randomized
-    * multi-metric differential). State is O(series' boundary count) ×
-    * metric count — the disjoint set is itself the product, the same
-    * per-group constraint class the batch sweep kernel carries. Metrics
-    * are carried as doubles (the documented contract). */
+    * [[graft.intervals.IntervalsDF.makeDisjoint]] maintainer. State per
+    * series is its ELEMENTARY disjoint grid (no output coalescing in
+    * state), each segment carrying every metric's winning
+    * `(origStart, origEnd, value)`. Each micro-batch runs the batch
+    * operator's kernel: [[graft.intervals.DisjointSweep.fold]] of the
+    * batch's intervals into the grid, then
+    * [[graft.intervals.DisjointSweep.coalesce]] of the new grid as the
+    * series' snapshot. The fold is exact for ANY arrival order (no late
+    * drop; see [[graft.intervals.DisjointSweep]]). Each TOUCHED series
+    * emits its full coalesced snapshot tagged with a monotone `rev`;
+    * "latest rev per series" over the sink IS the batch `makeDisjoint` of
+    * everything ingested, for any micro-batch split and across checkpoint
+    * restarts. State is O(series' boundary count) × metric count, the same
+    * per-series bound as the batch kernel. Metrics are carried as doubles
+    * (the documented contract). */
   def disjointIntervals(df: DataFrame, startCol: String, endCol: String,
       seriesCols: Seq[String], metricCols: Seq[String]): DataFrame = {
     require(metricCols.nonEmpty, "at least one metric column")
@@ -1755,131 +1751,27 @@ object StreamingTSDF {
       array(metricCols.map(m => col(m).cast(DoubleType)): _*)
         .alias("values")).as[IvEvent]
 
-    // lexicographic (ws, we, v) — None < Some, mirroring the batch kernel
-    // where null-metric intervals never enter that metric's max
-    def winGt(aWs: Long, aWe: Long, aV: Double,
-        bWs: Long, bWe: Long, bV: Double): Boolean =
-      aWs > bWs || (aWs == bWs && (aWe > bWe ||
-        (aWe == bWe && java.lang.Double.compare(aV, bV) > 0)))
-
     val out = events
       .groupByKey(_.series)
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[IvEvent], state: GroupState[IvState]) =>
-          val batch = rows.toArray
+          val batch = rows.map(iv => DisjointSweep.Interval(iv.sUs, iv.eUs,
+            iv.values.map(_.getOrElse(null)).toArray[Any])).toSeq
           if (batch.isEmpty) Iterator.empty
           else {
+            val ords = IndexedSeq.fill(k)(DisjointSweep.order(DoubleType))
             val st = state.getOption.getOrElse(IvState(0L, Seq.empty))
-            val oldSegs = st.segs.toArray // sorted, disjoint, elementary
-            // 1. elementary boundary set: old grid + new interval endpoints
-            val bset = new java.util.TreeSet[java.lang.Long]()
-            oldSegs.foreach { g => bset.add(g.s); bset.add(g.e) }
-            batch.foreach { iv => bset.add(iv.sUs); bset.add(iv.eUs) }
-            val bounds = new Array[Long](bset.size)
-            locally {
-              var i = 0
-              val it = bset.iterator()
-              while (it.hasNext) { bounds(i) = it.next(); i += 1 }
-            }
-            // 2. sweep the new intervals across the grid: a segment (p, p2)
-            // of consecutive boundaries is covered by interval iv iff
-            // iv.s <= p && iv.e >= p2 (endpoints are boundaries), so
-            // activation is "s <= p", deactivation "e <= p"
-            val sortedNew = batch.sortBy(iv => (iv.sUs, iv.eUs))
-            val exitQ = new java.util.PriorityQueue[Integer](
-              math.max(1, sortedNew.length),
-              (a: Integer, b: Integer) => java.lang.Long.compare(
-                sortedNew(a).eUs, sortedNew(b).eUs))
-            // one active-winner set PER METRIC, each ordered by the batch
-            // kernel's max(struct(start, end, value)) — the TreeSet max IS
-            // that metric's winner among active non-null carriers
-            val actW = Array.tabulate(k)(m =>
-              new java.util.TreeSet[Integer](
-                (a: Integer, b: Integer) => {
-                  val x = sortedNew(a); val y = sortedNew(b)
-                  var c = java.lang.Long.compare(x.sUs, y.sUs)
-                  if (c == 0) c = java.lang.Long.compare(x.eUs, y.eUs)
-                  if (c == 0) c = java.lang.Double.compare(
-                    x.values(m).get, y.values(m).get)
-                  if (c == 0) c = Integer.compare(a, b)
-                  c
-                }))
-            var actAll = 0
-            var ni = 0
-            var op = 0
-            val newSegs = scala.collection.mutable.ArrayBuffer.empty[IvSeg]
-            var bi = 0
-            while (bi < bounds.length - 1) {
-              val p = bounds(bi); val p2 = bounds(bi + 1)
-              while (ni < sortedNew.length && sortedNew(ni).sUs <= p) {
-                val iv = sortedNew(ni)
-                if (iv.eUs > p) { // zero/negative-width never activates
-                  exitQ.add(ni); actAll += 1
-                  var m = 0
-                  while (m < k) {
-                    if (iv.values(m).isDefined) actW(m).add(ni)
-                    m += 1
-                  }
-                }
-                ni += 1
-              }
-              while (!exitQ.isEmpty && sortedNew(exitQ.peek()).eUs <= p) {
-                val idx = exitQ.poll(); actAll -= 1
-                val iv = sortedNew(idx)
-                var m = 0
-                while (m < k) {
-                  if (iv.values(m).isDefined) actW(m).remove(idx)
-                  m += 1
-                }
-              }
-              while (op < oldSegs.length && oldSegs(op).e <= p) op += 1
-              val og = if (op < oldSegs.length && oldSegs(op).s <= p)
-                oldSegs(op) else null
-              if (og != null || actAll > 0) {
-                val wins = new Array[Option[IvWin]](k)
-                var m = 0
-                while (m < k) {
-                  var best: IvWin =
-                    if (og != null) og.wins(m).orNull else null
-                  if (!actW(m).isEmpty) {
-                    val t = sortedNew(actW(m).last())
-                    val tv = t.values(m).get
-                    if (best == null ||
-                        winGt(t.sUs, t.eUs, tv, best.ws, best.we, best.v))
-                      best = IvWin(t.sUs, t.eUs, tv)
-                  }
-                  wins(m) = Option(best)
-                  m += 1
-                }
-                newSegs += IvSeg(p, p2, wins.toSeq)
-              }
-              bi += 1
-            }
+            val grid = DisjointSweep.fold(st.segs.map(g => DisjointSweep.Seg(g.s, g.e,
+              g.wins.map(_.map(w => DisjointSweep.Win(w.ws, w.we, w.v)).orNull)
+                .toArray)).toIndexedSeq, batch, ords)
             val rev = st.rev + 1
-            state.update(IvState(rev, newSegs.toSeq))
-            // 3. emit the coalesced snapshot: touching neighbors with an
-            // ALL-metric null-safe-equal value merge (the batch <=> vector)
-            val outRows = scala.collection.mutable.ArrayBuffer
-              .empty[(String, Long, Long, Long, Seq[Option[Double]])]
-            newSegs.foreach { g =>
-              val vals = g.wins.map(_.map(_.v))
-              val mergeable = outRows.nonEmpty && {
-                val last = outRows.last
-                last._4 == g.s && last._5.corresponds(vals) {
-                  case (None, None) => true
-                  case (Some(a), Some(b)) =>
-                    java.lang.Double.compare(a, b) == 0
-                  case _ => false
-                }
-              }
-              if (mergeable) {
-                val last = outRows.last
-                outRows(outRows.length - 1) =
-                  (last._1, last._2, last._3, g.e, last._5)
-              } else outRows += ((key, rev, g.s, g.e, vals))
+            state.update(IvState(rev, grid.map(g => IvSeg(g.s, g.e,
+              g.wins.toSeq.map(w => Option(w).map(x =>
+                IvWin(x.ws, x.we, x.v.asInstanceOf[Double])))))))
+            DisjointSweep.coalesce(grid, ords).iterator.map { case (s, e, vs) =>
+              (key, rev, s, e, vs.toSeq.map(v => Option(v).map(_.asInstanceOf[Double])))
             }
-            outRows.iterator
           }
       }
       .toDF("series", "rev", "sUs", "eUs", "values")

@@ -2,12 +2,17 @@ package graft.intervals
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
 import graft.SparkTestBase
 
-/** The overlap-depth router and the sweep-line fallback of
-  * [[IntervalsDF.makeDisjoint]]: deep series must complete without the
-  * O(n²) cover join, and the fallback must produce bit-identical results to
-  * the relational path on arbitrary inputs. */
+/** [[IntervalsDF.makeDisjoint]]'s one per-series sweep kernel: deep series
+  * complete without an O(n²) cover join, and the kernel equals the
+  * relational formulation of the same merge ([[relationalReference]]) on
+  * arbitrary inputs, metric types included. */
 class MakeDisjointSweepSpec extends SparkTestBase {
 
   private def ts(us: Long) = new Timestamp(us)
@@ -17,6 +22,64 @@ class MakeDisjointSweepSpec extends SparkTestBase {
     import spark2.implicits._
     IntervalsDF(rows.toDF("series_1", "start_ts", "end_ts", "m"),
       "start_ts", "end_ts", Seq("series_1"))
+  }
+
+  /** The same merge as relational algebra, which `makeDisjoint` is
+    * checked against: (1) elementary segments from one window over each
+    * series' distinct boundaries; (2) segments ⋈ covering intervals; (3)
+    * per segment and metric `max(struct(start, end, value))` over the
+    * non-null carriers; (4) touching segments with a null-safe equal
+    * metric vector coalesce through an island window and an aggregate.
+    * Its cover join is O(segments × depth) per series. */
+  private def relationalReference(in: IntervalsDF): DataFrame = {
+    import in.{seriesIds, startTs, endTs}
+    val ms = in.metricCols
+    val series = seriesIds.map(col)
+    val work = in.df.select((seriesIds ++ Seq(startTs, endTs) ++ ms).map(col): _*)
+
+    // 1. distinct boundary points per series → elementary segments
+    val boundaries = work
+      .select(series :+ explode(array(col(startTs), col(endTs))).alias("__b"): _*)
+      .distinct()
+    val wb = Window.partitionBy(series: _*).orderBy(col("__b"))
+    val segments = boundaries
+      .withColumn("__b2", lead(col("__b"), 1).over(wb))
+      .filter(col("__b2").isNotNull)
+
+    // 2. segments ⋈ covering intervals (overlap: seg.start < i.end ∧ seg.end > i.start)
+    val i = work.alias("i")
+    val s = segments.alias("s")
+    val joinCond = seriesIds.map(c => col(s"s.$c") === col(s"i.$c")).reduce(_ && _) &&
+      col("s.__b") < col(s"i.$endTs") && col("s.__b2") > col(s"i.$startTs")
+
+    // 3. merge metrics: latest non-null wins in (start, end) interval order
+    val merged = s.join(i, joinCond, "inner")
+      .groupBy(seriesIds.map(c => col(s"s.$c")) :+ col("s.__b") :+ col("s.__b2"): _*)
+      .agg(
+        ms.map(m => max(when(col(s"i.$m").isNotNull,
+          struct(col(s"i.$startTs"), col(s"i.$endTs"), col(s"i.$m").alias("v"))))
+          .getField("v").alias(m)).head,
+        ms.map(m => max(when(col(s"i.$m").isNotNull,
+          struct(col(s"i.$startTs"), col(s"i.$endTs"), col(s"i.$m").alias("v"))))
+          .getField("v").alias(m)).tail: _*)
+      .select(seriesIds.map(col) ++
+        Seq(col("__b").alias(startTs), col("__b2").alias(endTs)) ++ ms.map(col): _*)
+
+    // 4. coalesce adjacent segments whose metric vectors are identical
+    //    (null-safe). Gaps-and-islands over the segments.
+    val wSeg = Window.partitionBy(series: _*).orderBy(col(startTs))
+    val sameAsPrev = (ms.map(m => col(m) <=> lag(col(m), 1).over(wSeg)) :+
+      (col(startTs) <=> lag(col(endTs), 1).over(wSeg))).reduce(_ && _)
+    val islands = merged
+      .withColumn("__brk", when(sameAsPrev, 0).otherwise(1))
+      .withColumn("__grp", sum(col("__brk")).over(
+        wSeg.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    islands
+      .groupBy((seriesIds :+ "__grp").map(col): _*)
+      .agg(
+        min(col(startTs)).alias(startTs),
+        max(col(endTs)).alias(endTs) +: ms.map(m => first(col(m)).alias(m)): _*)
+      .select(seriesIds.map(col) ++ Seq(col(startTs), col(endTs)) ++ ms.map(col): _*)
   }
 
   test("one series of 5k mutually-overlapping intervals completes via the sweep-line") {
@@ -41,7 +104,7 @@ class MakeDisjointSweepSpec extends SparkTestBase {
     }
   }
 
-  test("sweep-line path equals relational path on random interval sets") {
+  test("makeDisjoint equals the relational reference on random interval sets") {
     val rnd = new scala.util.Random(1234)
     (0 until 25).foreach { trial =>
       val rows = (0 until 40).map { _ =>
@@ -53,31 +116,27 @@ class MakeDisjointSweepSpec extends SparkTestBase {
         (series, ts(start * 1000000L), ts((start + len) * 1000000L), value)
       }
       val in = idf(rows)
-      // threshold 0 routes every series through the sweep-line;
-      // Int.MaxValue keeps every series on the relational join
       withClue(s"trial $trial: ") {
-        assertDfEquality(in.makeDisjoint(depthThreshold = 0).df,
-          in.makeDisjoint(depthThreshold = Int.MaxValue).df)
+        assertDfEquality(in.makeDisjoint().df, relationalReference(in))
       }
     }
   }
 
-  test("property: relational/sweep equality pinned AT DefaultDepthThreshold " +
-      "with mixed-type/null metrics") {
+  test("property: makeDisjoint equals the relational reference on staircases " +
+      "of depth 255/256/257 with mixed-type/null metrics") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     val spark2 = spark
     import spark2.implicits._
-    val thr = IntervalsDF.DefaultDepthThreshold
+    val thr = 256
     // metric generators: nullable double + nullable string (mixed types)
     val md = Gen.option(Gen.choose(0, 5).map(_.toDouble))
     val ms = Gen.option(Gen.oneOf("a", "b", "c"))
     val metricsGen = Gen.listOfN(3 * (thr + 1) + 20, Gen.zip(md, ms))
     val prop = Prop.forAll(metricsGen) { metrics =>
-      // three staircase series with max overlap depth EXACTLY thr−1, thr,
-      // thr+1 (interval i = [i, k+i) ⇒ depth k at t = k−1): the router
-      // must keep "below"/"at" relational and send "above" to the
-      // sweep-line, and all three paths must agree bit-for-bit whatever
-      // the metric values/null patterns are
+      // three staircase series with max overlap depth EXACTLY 255, 256,
+      // 257 (interval i = [i, k+i) ⇒ depth k at t = k−1) plus a shallow
+      // one: the kernel must match the reference bit-for-bit whatever the
+      // metric values/null patterns are
       val it = metrics.iterator
       def staircase(name: String, k: Int) = (0 until k).map { i =>
         val (m1, m2) = it.next()
@@ -88,11 +147,7 @@ class MakeDisjointSweepSpec extends SparkTestBase {
         staircase("above", thr + 1) ++ staircase("shallow", 20)
       val df = rows.toDF("series_1", "start_ts", "end_ts", "m1", "m2")
       val in = IntervalsDF(df, "start_ts", "end_ts", Seq("series_1"))
-      val routed = in.makeDisjoint().df
-      val allSweep = in.makeDisjoint(depthThreshold = 0).df
-      val allRelational = in.makeDisjoint(depthThreshold = Int.MaxValue).df
-      assertDfEquality(routed, allSweep)
-      assertDfEquality(routed, allRelational)
+      assertDfEquality(in.makeDisjoint().df, relationalReference(in))
       true
     }
     val res = SCTest.check(
@@ -100,16 +155,50 @@ class MakeDisjointSweepSpec extends SparkTestBase {
     assert(res.passed, res.status.toString)
   }
 
-  test("depth router keeps shallow series on the relational path (no flatMapGroups)") {
+  test("makeDisjoint plans no join and building it starts no Spark job") {
     val rows = Seq(
       ("s", ts(0L), ts(2000000L), Double.box(1.0)),
       ("s", ts(1000000L), ts(3000000L), Double.box(2.0)))
-    val plan = idf(rows).makeDisjoint().df.queryExecution.executedPlan.toString
-    // the sweep-line side of the union must prune to empty only at runtime,
-    // but the shallow side must keep the segment x cover equi-join
-    assert(plan.contains("SortMergeJoin") || plan.contains("BroadcastHashJoin"), plan)
+    val (out, jobs) = jobsDuring(idf(rows).makeDisjoint().df)
+    assert(jobs == 0, s"building makeDisjoint started $jobs Spark jobs")
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join"), plan)
     // [1,2) and [2,3) merge to the same value and coalesce into [1,3)
-    val out = idf(rows).makeDisjoint().df.orderBy("start_ts").collect()
-    assert(out.map(_.getDouble(3)).toSeq == Seq(1.0, 2.0))
+    val got = out.orderBy("start_ts").collect()
+    assert(got.map(_.getDouble(3)).toSeq == Seq(1.0, 2.0))
+  }
+
+  test("makeDisjoint keeps each metric's type and exact value " +
+      "(Int, Long past 2^53, Boolean, nullable Double)") {
+    val rnd = new scala.util.Random(53)
+    val big = 1L << 53
+    val rows = (0 until 300).map { _ =>
+      val start = rnd.nextInt(200).toLong
+      val len = rnd.nextInt(40).toLong
+      def maybe[T](v: => T): Any = if (rnd.nextInt(4) == 0) null else v
+      // Long values past 2^53 differ in their last bit: a Double rounds
+      // them together and changes both the winner and the coalesce
+      Row("abc".charAt(rnd.nextInt(3)).toString, ts(start * 1000000L),
+        ts((start + len) * 1000000L), maybe(rnd.nextInt(4)),
+        maybe(big + rnd.nextInt(3)), maybe(rnd.nextBoolean()),
+        maybe(rnd.nextInt(3).toDouble))
+    }
+    val schema = StructType(Seq(
+      StructField("series_1", StringType), StructField("start_ts", TimestampType),
+      StructField("end_ts", TimestampType), StructField("mi", IntegerType),
+      StructField("ml", LongType), StructField("mb", BooleanType),
+      StructField("md", DoubleType)))
+    val in = IntervalsDF(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), schema),
+      "start_ts", "end_ts", Seq("series_1"))
+    val got = in.makeDisjoint().df
+    val want = relationalReference(in)
+    assert(got.schema.map(f => (f.name, f.dataType)) ==
+      want.schema.map(f => (f.name, f.dataType)), got.schema.treeString)
+    assert(got.schema.map(_.dataType).drop(3) ==
+      Seq(IntegerType, LongType, BooleanType, DoubleType))
+    assert(want.collect().exists(r => !r.isNullAt(4) && r.getLong(4) > big))
+    assert(got.count() == want.count())
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
 }

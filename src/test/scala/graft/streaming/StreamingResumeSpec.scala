@@ -247,6 +247,60 @@ class StreamingResumeSpec extends SparkTestBase {
     }
   }
 
+  test("streaming disjointIntervals state round-trips a checkpoint restart " +
+      "(file source): latest-rev snapshot equals batch makeDisjoint, 1 and 2 metrics") {
+    val spark2 = spark
+    import spark2.implicits._
+    for (metrics <- Seq(Seq("value"), Seq("value", "score"))) {
+      val rnd = new scala.util.Random(98 + metrics.size)
+      // overlaps, touching neighbors, null metrics and zero-width
+      // intervals, fed in random order: the first half before the restart
+      val rows = rnd.shuffle(Seq("u1", "u2", "u3").flatMap { u =>
+        (0 until 4 + rnd.nextInt(14)).map { _ =>
+          val s = rnd.nextInt(300)
+          def mv(): Option[Double] =
+            if (rnd.nextInt(4) == 0) None else Some(rnd.nextInt(50).toDouble)
+          (u, at(s), at(s + rnd.nextInt(60)), mv(), mv())
+        }
+      })
+      val cols = Seq("user_id", "start_ts", "end_ts") ++ metrics
+      val all = rows.toDF("user_id", "start_ts", "end_ts", "value", "score")
+        .select(cols.map(col): _*)
+      val dir = java.nio.file.Files.createTempDirectory("graft_resume_").toString
+      val srcDir = s"$dir/src"; val outDir = s"$dir/out"; val chk = s"$dir/chk"
+      def writeChunk(rs: Seq[(String, Timestamp, Timestamp, Option[Double], Option[Double])]) =
+        rs.toDF("user_id", "start_ts", "end_ts", "value", "score")
+          .select(cols.map(col): _*).repartition(1)
+          .write.mode("append").parquet(srcDir)
+      val (first, second) = rows.splitAt(rows.size / 2)
+      assert(first.map(_._1).toSet == second.map(_._1).toSet,
+        "every series must have rows on both sides of the restart")
+      writeChunk(first)
+      val sch = spark.read.parquet(srcDir).schema
+      def startQ() = StreamingTSDF.disjointIntervals(
+        spark.readStream.schema(sch).parquet(srcDir),
+        "start_ts", "end_ts", Seq("user_id"), metrics)
+        .writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", chk)
+        .outputMode(OutputMode.Append()).start()
+      var q = startQ(); q.processAllAvailable(); q.stop()
+      writeChunk(second)
+      q = startQ(); q.processAllAvailable(); q.stop()
+      val out = Seq("user_id", "start_us", "end_us") ++ metrics
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
+      val streamed = spark.read.parquet(outDir)
+        .withColumn("__mx", max(col("rev")).over(w))
+        .filter(col("rev") === col("__mx"))
+        .select(out.map(col): _*)
+      val batch = graft.intervals.IntervalsDF(all, "start_ts", "end_ts", Seq("user_id"))
+        .makeDisjoint().df
+        .withColumn("start_us", unix_micros(col("start_ts")))
+        .withColumn("end_us", unix_micros(col("end_ts")))
+        .select(out.map(col): _*)
+      withClue(s"metrics $metrics: ") { assertDfEquality(streamed, batch) }
+    }
+  }
+
   test("stream-stream tolerance join fed in 3 chunk pairs equals batch join") {
     val rnd = new scala.util.Random(94)
     val leftRows = randomSeries(rnd)
