@@ -30,9 +30,6 @@ case class IntervalsDF(
         (f.dataType.isInstanceOf[NumericType] || f.dataType == BooleanType) => f.name
     }.toSeq
 
-  def window: org.apache.spark.sql.expressions.WindowSpec =
-    Window.partitionBy(seriesIds.map(col): _*).orderBy(col(startTs), col(endTs))
-
   /** Overlapping-interval join against `other` on the shared series ids:
     * one row per pair of intervals with `start < other.end AND other.start
     * < end` (half-open convention — touching endpoints do not overlap),

@@ -132,13 +132,6 @@ object Hashing {
       s"list_transform(string_split($e, ''), c -> CAST(coalesce(ascii(c), 0) AS BIGINT))), " +
       s"(acc, c) -> (acc * $B + c) % $P2)"
 
-  def wideHashSql(e: String): String =
-    s"(${polyHashSql(e)} * $P2 + ${polyHash2Sql(e)})"
-
-  def mixWideSql(h: String, s: Int): String =
-    s"((($h) // $P2 * ${aCoef(s)} + ${bCoef(s)}) % $P * $P2 + " +
-      s"((($h) % $P2) * ${aCoef2(s)} + ${bCoef2(s)}) % $P2)"
-
   // JVM scalar twins
   def polyHashBytes2(bytes: Array[Byte]): Long = {
     var h = 0L

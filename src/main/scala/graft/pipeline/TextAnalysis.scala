@@ -546,66 +546,44 @@ object TextAnalysis {
     * (uniform), then one doc-keyed aggregate.
     * Output: (idCol, n_bigrams, sum_mu, avg_logp). */
   def lmBigramScore(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val bg = df
-      .select(col(idCol), explode(normNGrams(col(textCol), 2)).alias("__b"))
-      .select(col(idCol), col("__b.w1").alias("w1"), col("__b.w2").alias("w2"))
+    val bg = nGramRows(df, textCol, 2, Seq(col(idCol)))
     val bgModel = bg.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).alias("__c"))
     val ugModel = bg.groupBy(col("w1")).agg(count(lit(1)).alias("__cw"))
-    val vocab = df
-      .select(explode(normTokens(col(textCol))).alias("__t"))
-      .agg(count_distinct(col("__t.w1")).alias("__v"))
     val contribMu = floor((log(coalesce(col("__c"), lit(0L))
         .cast(DoubleType) + 1.0) -
       log((coalesce(col("__cw"), lit(0L)) + col("__v")).cast(DoubleType)))
       * 1e6 + 0.5).cast(LongType)
-    val scored = bg
+    val contribs = bg
       .join(bgModel, Seq("w1", "w2"), "left")
       .join(ugModel, Seq("w1"), "left")
-      .crossJoin(broadcast(vocab))
+      .crossJoin(broadcast(vocabSize(df, textCol)))
       .select(col(idCol), contribMu.alias("__mu"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).alias("n_bigrams"), sum(col("__mu")).alias("sum_mu"))
-    df.select(col(idCol)).join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_bigrams"), lit(0L)).alias("n_bigrams"),
-        coalesce(col("sum_mu"), lit(0L)).alias("sum_mu"),
-        when(col("n_bigrams") > 0, col("sum_mu").cast(DoubleType) /
-          (col("n_bigrams").cast(DoubleType) * 1e6)).alias("avg_logp"))
+    lmDocFold(contribs, df.select(col(idCol)), idCol, "n_bigrams")
   }
 
-  /** Interpolated Kneser–Ney word-bigram scoring — the smoothed LM
+  /** One row per normalized word n-gram occurrence of `src`'s text:
+    * the `keep` columns plus the words w1..wn. */
+  private def nGramRows(src: DataFrame, textCol: String, n: Int,
+      keep: Seq[Column]): DataFrame = src
+    .select(keep :+ explode(normNGrams(col(textCol), n)).alias("__g"): _*)
+    .select(keep ++ (1 to n).map(i => col(s"__g.w$i").alias(s"w$i")): _*)
+
+  /** The one-row distinct normalized-word count `__v` of `src`'s text. */
+  private def vocabSize(src: DataFrame, textCol: String): DataFrame = src
+    .select(explode(normTokens(col(textCol))).alias("__t"))
+    .agg(count_distinct(col("__t.w1")).alias("__v"))
+
+  /** Interpolated Kneser–Ney word-bigram scoring: the smoothed LM
     * perplexity filter every production quality pipeline (CCNet-class)
-    * runs where [[lmBigramScore]]'s add-one model misranks: add-one
-    * gives an unseen bigram the same mass whether its right word is a
-    * versatile continuation ("the") or a one-context word, while KN
-    * backs off to the CONTINUATION probability — how many distinct left
-    * contexts the word follows — which is the measured fix for exactly
-    * that failure (Kneser & Ney 1995; Chen & Goodman 1998).
-    *
-    * Model (absolute discount D = 0.75, exact in binary):
-    *   p(w₂|w₁) = (max(C(w₁w₂)−D, 0) + D·N₁₊(w₁•)·p_c(w₂)) / C(w₁•)
-    * when C(w₁•) > 0, else p_c(w₂), with the continuation distribution
-    * add-one floored so EVERY word — including corpus-unseen — scores
-    * finite:  p_c(w₂) = (N₁₊(•w₂)+1) / (N₁₊(••)+V).
-    * N₁₊ are distinct-TYPE counts; all of them are a second cheap
-    * aggregate over the grouped bigram-count table, NOT a second corpus
-    * scan — the continuation model costs one pass over the model, never
-    * the data.
-    *
-    * Determinism: every count is an exact BIGINT; per-bigram probability
-    * is a FIXED-ORDER double composition of those integers (each op
-    * correctly rounded, identical order in the DuckDB replay), and the
-    * per-bigram ln lands in exact integer micro-units (floor(x·10⁶+0.5),
-    * the BM25/PMI convention) BEFORE the per-doc sum, so the doc
-    * aggregate is order-free integer arithmetic.
-    *
-    * Plan: one bigram explode feeding one (w1,w2) partial aggregate;
-    * the w1-marginals and continuation counts are aggregates OF THE
-    * MODEL; scoring is three uniform-key left equi-joins plus two
-    * broadcast scalars, then one doc-keyed aggregate — the
-    * [[lmBigramScore]] plan plus one model-sized aggregate.
-    * Output: (idCol, n_bigrams, sum_mu, avg_logp). */
+    * runs where [[lmBigramScore]]'s add-one model misranks. Add-one gives
+    * an unseen bigram the same mass whether its right word is a versatile
+    * continuation ("the") or a one-context word; KN backs off to the
+    * CONTINUATION probability, how many distinct left contexts the word
+    * follows (Kneser & Ney 1995; Chen & Goodman 1998). Fixed discount
+    * D = 0.75: [[knContribs]] at order 2, which states the model, the
+    * determinism and the plan. Output: (idCol, n_bigrams, sum_mu,
+    * avg_logp). */
   def lmKneserNeyScore(df: DataFrame, textCol: String,
       idCol: String): DataFrame =
     lmKneserNeyScoreAgainst(df, df, textCol, idCol)
@@ -617,8 +595,7 @@ object TextAnalysis {
     * least once). */
   def lmKneserNeyScoreAgainst(train: DataFrame, df: DataFrame,
       textCol: String, idCol: String): DataFrame =
-    lmKneserNeyFinish(
-      lmKneserNeyContribs(train, df, textCol, idCol),
+    lmKneserNeyFinish(lmKneserNeyContribs(train, df, textCol, idCol),
       df.select(col(idCol)), idCol)
 
   /** The per-bigram micro-quantized KN contributions of `df`'s docs
@@ -628,131 +605,22 @@ object TextAnalysis {
     * sink-rollup convention: emit contributions at ingest, fold the
     * sink with [[lmKneserNeyFinish]]). */
   def lmKneserNeyContribs(train: DataFrame, df: DataFrame,
-      textCol: String, idCol: String): DataFrame = {
-    val D = 0.75
-    def bigramsOf(src: DataFrame, keep: Seq[Column]): DataFrame = src
-      .select(keep :+ explode(normNGrams(col(textCol), 2)).alias("__b"): _*)
-      .select(keep ++ Seq(col("__b.w1").alias("w1"),
-        col("__b.w2").alias("w2")): _*)
-    val bg = bigramsOf(df, Seq(col(idCol)))
-    val bgModel = bigramsOf(train, Nil).groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).alias("__c"))
-    // marginals and type counts: aggregates over the MODEL table
-    val leftModel = bgModel.groupBy(col("w1"))
-      .agg(sum(col("__c")).alias("__cw"),
-        count(lit(1)).alias("__n1r"))          // N1+(w1 •)
-    val contModel = bgModel.groupBy(col("w2"))
-      .agg(count(lit(1)).alias("__n1l"))       // N1+(• w2)
-    val scalars = bgModel.agg(count(lit(1)).alias("__n1pp"))
-      .crossJoin(train
-        .select(explode(normTokens(col(textCol))).alias("__t"))
-        .agg(count_distinct(col("__t.w1")).alias("__v")))
-    // fixed-order composition (matches the oracle text operator-for-operator).
-    // Degenerate-model guard: an empty/whitespace-only training corpus has
-    // __n1pp = __v = 0, so the continuation denominator is 0 and pc would be
-    // +Inf (→ Long.MaxValue garbage under the Spark cast, a hard CAST error
-    // in the DuckDB replay). Null it instead and drop the null contributions
-    // below — every doc then folds to (n_bigrams = 0, avg_logp = NULL), the
-    // graceful degenerate behavior of the other LM operators. The guard can
-    // only fire globally (the denominator is a model-wide scalar).
-    val pc = when(col("__n1pp") + col("__v") > 0,
-      (coalesce(col("__n1l"), lit(0L)) + lit(1L)).cast(DoubleType) /
-        (col("__n1pp") + col("__v")).cast(DoubleType))
-    val pSeen = (greatest(coalesce(col("__c"), lit(0L)).cast(DoubleType) -
-        lit(D), lit(0.0)) +
-      lit(D) * col("__n1r").cast(DoubleType) * pc) /
-      col("__cw").cast(DoubleType)
-    val p = when(col("__cw").isNotNull, pSeen).otherwise(pc)
-    val contribMu = floor(log(p) * 1e6 + 0.5).cast(LongType)
-    // The corpus-scale stream used to cross THREE exchanges (one per
-    // model join). Pre-joining the model tables into one (w1, w2)-keyed
-    // score table moves those joins to MODEL-sized data (distinct
-    // bigrams ≈ 1/10 of occurrences on the bench corpus) and the
-    // occurrence stream joins ONCE; rows the model misses — empty in
-    // self-scoring, the back-off arms of the *Against shape — take the
-    // original chain verbatim, so every mu is the same fixed-order
-    // composition bit-for-bit. Streaming frames keep the stream-static
-    // chain (no filter/union branching over a stream).
-    def fullChain(occ: DataFrame): DataFrame = occ
-      .join(bgModel, Seq("w1", "w2"), "left")
-      .join(leftModel, Seq("w1"), "left")
-      .join(contModel, Seq("w2"), "left")
-      .crossJoin(broadcast(scalars))
-      .select(col(idCol), contribMu.alias("__mu"))
-    (if (df.isStreaming || !(train eq df)) fullChain(bg)
-     else {
-       // self-scoring: every df bigram IS a model key (train eq df), so
-       // the single score-table join covers every row — no miss arm.
-       // PRECONDITION: df must be deterministic (the model scan and the
-       // scored scan are two evaluations of the same plan; a
-       // nondeterministic df — sample()/rand upstream — could emit a
-       // gram the model scan never saw, which this path FILTERS where
-       // the full chain would back off). All current callers are
-       // deterministic; route new nondeterministic callers via fullChain.
-       val smod = bgModel
-         .join(leftModel, Seq("w1"))
-         .join(contModel, Seq("w2"))
-         .crossJoin(broadcast(scalars))
-         .select(col("w1"), col("w2"), contribMu.alias("__mu"))
-       bg.join(smod, Seq("w1", "w2"), "left")
-         .select(col(idCol), col("__mu"))
-     }).filter(col("__mu").isNotNull) // no-op except under the degenerate-model guard
-  }
+      textCol: String, idCol: String): DataFrame =
+    knContribs(2, KnFixed, train, df, textCol, idCol)
 
-  /** The per-doc KN fold over a [[lmKneserNeyContribs]] frame (or its
+  /** The per-doc fold over a bigram contributions frame (or its
     * streaming sink — each (doc, bigram) contribution is emitted exactly
-    * once): exact integer (n, Σμ), one terminal division. `ids` supplies
-    * the full doc universe so bigram-less docs keep their zero row. */
+    * once): [[lmDocFold]] counting `n_bigrams`. */
   def lmKneserNeyFinish(contribs: DataFrame, ids: DataFrame,
-      idCol: String): DataFrame = {
-    val scored = contribs.groupBy(col(idCol))
-      .agg(count(lit(1)).alias("n_bigrams"), sum(col("__mu")).alias("sum_mu"))
-    ids.join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_bigrams"), lit(0L)).alias("n_bigrams"),
-        coalesce(col("sum_mu"), lit(0L)).alias("sum_mu"),
-        when(col("n_bigrams") > 0, col("sum_mu").cast(DoubleType) /
-          (col("n_bigrams").cast(DoubleType) * 1e6)).alias("avg_logp"))
-  }
+      idCol: String): DataFrame =
+    lmDocFold(contribs, ids, idCol, "n_bigrams")
 
   /** Modified Kneser–Ney word-bigram scoring — [[lmKneserNeyScore]]
     * with the production discount schedule (Chen & Goodman 1999; the
-    * KenLM default): instead of one fixed D = 0.75 for every seen
-    * count, three per-count-class discounts D₁/D₂/D₃₊ ESTIMATED from
-    * the model's count-of-counts n₁..n₄ (the number of bigram types
-    * occurring exactly 1..4 times):
-    *
-    *   Y  = n₁ / (n₁ + 2n₂)
-    *   D₁ = 1 − 2Y·(n₂/n₁)     (applied to count-1 bigrams)
-    *   D₂ = 2 − 3Y·(n₃/n₂)     (count-2)
-    *   D₃₊ = 3 − 4Y·(n₄/n₃)    (count ≥ 3)
-    *
-    *   p(w₂|w₁) = (max(C(w₁w₂) − D(C), 0)
-    *               + (D₁N₁(w₁•) + D₂N₂(w₁•) + D₃₊N₃₊(w₁•))·p_c(w₂))
-    *              / C(w₁•)     when C(w₁•) > 0, else p_c(w₂)
-    *
-    * with N_k(w₁•) the number of words following w₁ exactly k (or ≥ 3)
-    * times and p_c the same add-one-floored continuation distribution
-    * as [[lmKneserNeyScore]]. The back-off mass is exactly the mass
-    * discounted within the context (Σ max(C−D(C),0) = C(w₁•) − γnum),
-    * so Σ_vocab p ≤ 1 and the mu ≤ 0 key contract carries.
-    *
-    * Degenerate-schedule conventions (deterministic, documented,
-    * oracle-replayed): Y = 0 when n₁ + 2n₂ = 0; D_k falls back to its
-    * upper bound k when its estimating class n_k is empty (the discount
-    * then applies to zero or clamp-guarded bigrams anyway); every D_k
-    * is clamped into [0, k] — the Chen–Goodman estimates can leave that
-    * range on pathological count tables, and the clamp keeps
-    * max(C−D,0) monotone and γ non-negative (the SRILM convention).
-    *
-    * Cost over [[lmKneserNeyScore]]: ZERO extra corpus scans — n₁..n₄
-    * are one more aggregate over the bigram model table (a broadcast
-    * scalar row) and N₁/N₂/N₃₊(w₁•) ride in the existing w1-marginal
-    * aggregate. Same plan: three uniform-key left equi-joins + one
-    * broadcast scalar + one doc fold. Determinism: exact BIGINT
-    * counts, fixed-order double composition (identical text in the
-    * DuckDB replay), micro-quantized ln before the per-doc integer
-    * fold. Output: (idCol, n_bigrams, sum_mu, avg_logp). */
+    * KenLM default): three per-count-class discounts D₁/D₂/D₃₊ estimated
+    * from the bigram count-of-counts ([[KnModified]]) in place of the
+    * one fixed D. Same plan, zero extra corpus scans. Output: (idCol,
+    * n_bigrams, sum_mu, avg_logp). */
   def lmModKneserNeyScore(df: DataFrame, textCol: String,
       idCol: String): DataFrame =
     lmModKneserNeyScoreAgainst(df, df, textCol, idCol)
@@ -761,130 +629,20 @@ object TextAnalysis {
     * the production ingest-filter shape. */
   def lmModKneserNeyScoreAgainst(train: DataFrame, df: DataFrame,
       textCol: String, idCol: String): DataFrame =
-    lmKneserNeyFinish(
-      lmModKneserNeyContribs(train, df, textCol, idCol),
+    lmKneserNeyFinish(lmModKneserNeyContribs(train, df, textCol, idCol),
       df.select(col(idCol)), idCol)
 
-  /** Per-bigram micro-quantized modified-KN contributions — (idCol,
-    * __mu) rows, stateless per doc after stream-static model joins
-    * (the [[lmKneserNeyContribs]] streaming contract; fold with
+  /** Per-bigram micro-quantized modified-KN contributions (the
+    * [[lmKneserNeyContribs]] streaming contract; fold with
     * [[lmKneserNeyFinish]]). */
   def lmModKneserNeyContribs(train: DataFrame, df: DataFrame,
-      textCol: String, idCol: String): DataFrame = {
-    def bigramsOf(src: DataFrame, keep: Seq[Column]): DataFrame = src
-      .select(keep :+ explode(normNGrams(col(textCol), 2)).alias("__b"): _*)
-      .select(keep ++ Seq(col("__b.w1").alias("w1"),
-        col("__b.w2").alias("w2")): _*)
-    val bg = bigramsOf(df, Seq(col(idCol)))
-    val bgModel = bigramsOf(train, Nil).groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).alias("__c"))
-    // w1-marginals now carry the count-CLASS type counts N1/N2/N3+(w1 .)
-    val leftModel = bgModel.groupBy(col("w1"))
-      .agg(sum(col("__c")).alias("__cw"),
-        sum(when(col("__c") === 1L, 1L).otherwise(0L)).alias("__k1"),
-        sum(when(col("__c") === 2L, 1L).otherwise(0L)).alias("__k2"),
-        sum(when(col("__c") >= 3L, 1L).otherwise(0L)).alias("__k3"))
-    val contModel = bgModel.groupBy(col("w2"))
-      .agg(count(lit(1)).alias("__n1l"))       // N1+(. w2)
-    // count-of-counts n1..n4: ONE aggregate over the model table
-    val scalars = bgModel.agg(
-        count(lit(1)).alias("__n1pp"),
-        sum(when(col("__c") === 1L, 1L).otherwise(0L)).alias("__n1"),
-        sum(when(col("__c") === 2L, 1L).otherwise(0L)).alias("__n2"),
-        sum(when(col("__c") === 3L, 1L).otherwise(0L)).alias("__n3"),
-        sum(when(col("__c") === 4L, 1L).otherwise(0L)).alias("__n4"))
-      .crossJoin(train
-        .select(explode(normTokens(col(textCol))).alias("__t"))
-        .agg(count_distinct(col("__t.w1")).alias("__v")))
-    // fixed-order composition (identical text in the oracle)
-    val yy = when(col("__n1") + lit(2L) * col("__n2") > 0,
-      col("__n1").cast(DoubleType) /
-        (col("__n1") + lit(2L) * col("__n2")).cast(DoubleType))
-      .otherwise(lit(0.0))
-    def clamp(x: Column, hi: Double): Column =
-      least(greatest(x, lit(0.0)), lit(hi))
-    val d1 = clamp(when(col("__n1") > 0, lit(1.0) - lit(2.0) * yy *
-      (col("__n2").cast(DoubleType) / col("__n1").cast(DoubleType)))
-      .otherwise(lit(1.0)), 1.0)
-    val d2 = clamp(when(col("__n2") > 0, lit(2.0) - lit(3.0) * yy *
-      (col("__n3").cast(DoubleType) / col("__n2").cast(DoubleType)))
-      .otherwise(lit(2.0)), 2.0)
-    val d3 = clamp(when(col("__n3") > 0, lit(3.0) - lit(4.0) * yy *
-      (col("__n4").cast(DoubleType) / col("__n3").cast(DoubleType)))
-      .otherwise(lit(3.0)), 3.0)
-    // the same degenerate-model denominator guard as the fixed-D face
-    val pc = when(col("__n1pp") + col("__v") > 0,
-      (coalesce(col("__n1l"), lit(0L)) + lit(1L)).cast(DoubleType) /
-        (col("__n1pp") + col("__v")).cast(DoubleType))
-    val cc = coalesce(col("__c"), lit(0L))
-    val dc = when(cc <= 1L, d1).when(cc === 2L, d2).otherwise(d3)
-    val gammaNum = d1 * col("__k1").cast(DoubleType) +
-      d2 * col("__k2").cast(DoubleType) +
-      d3 * col("__k3").cast(DoubleType)
-    val pSeen = (greatest(cc.cast(DoubleType) - dc, lit(0.0)) +
-      gammaNum * pc) / col("__cw").cast(DoubleType)
-    val p = when(col("__cw").isNotNull, pSeen).otherwise(pc)
-    val contribMu = floor(log(p) * 1e6 + 0.5).cast(LongType)
-    // single-join indexed form for batch frames, chain for streams —
-    // see lmKneserNeyContribs (identical reasoning, identical mu)
-    def fullChain(occ: DataFrame): DataFrame = occ
-      .join(bgModel, Seq("w1", "w2"), "left")
-      .join(leftModel, Seq("w1"), "left")
-      .join(contModel, Seq("w2"), "left")
-      .crossJoin(broadcast(scalars))
-      .select(col(idCol), contribMu.alias("__mu"))
-    (if (df.isStreaming || !(train eq df)) fullChain(bg)
-     else {
-       // self-scoring: every df bigram IS a model key (train eq df), so
-       // the single score-table join covers every row — no miss arm.
-       // PRECONDITION: df must be deterministic (the model scan and the
-       // scored scan are two evaluations of the same plan; a
-       // nondeterministic df — sample()/rand upstream — could emit a
-       // gram the model scan never saw, which this path FILTERS where
-       // the full chain would back off). All current callers are
-       // deterministic; route new nondeterministic callers via fullChain.
-       val smod = bgModel
-         .join(leftModel, Seq("w1"))
-         .join(contModel, Seq("w2"))
-         .crossJoin(broadcast(scalars))
-         .select(col("w1"), col("w2"), contribMu.alias("__mu"))
-       bg.join(smod, Seq("w1", "w2"), "left")
-         .select(col(idCol), col("__mu"))
-     }).filter(col("__mu").isNotNull) // no-op except under the degenerate guard
-  }
+      textCol: String, idCol: String): DataFrame =
+    knContribs(2, KnModified, train, df, textCol, idCol)
 
   /** Interpolated Kneser–Ney TRIGRAM LM — the production CCNet filter
-    * order (n ≥ 3). One level deeper than [[lmKneserNeyScore]], same
-    * discipline: the ONLY corpus-scale step is one trigram explode into
-    * one (w1,w2,w3) grouped count (plus the shared distinct-word V);
-    * every lower order is an aggregate OVER THE MODEL table — this is
-    * exactly where naive implementations go quadratic (per-context
-    * distinct counts as repeated corpus scans) and this decomposition
-    * provably doesn't:
-    *
-    *   p₃(w₃|w₁w₂) = (max(C(w₁w₂w₃)−D,0) + D·N₁₊(w₁w₂•)·p₂(w₃|w₂))
-    *                 / C(w₁w₂•)            when C(w₁w₂•) > 0, else p₂
-    *   p₂(w₃|w₂)  = (max(N₁₊(•w₂w₃)−D,0) + D·N₁₊cont(w₂•)·p₁(w₃))
-    *                 / N₁₊(•w₂•)           when N₁₊(•w₂•) > 0, else p₁
-    *   p₁(w₃)     = (N₁₊(••w₃)+1) / (N₁₊(•••)+V)   (add-one floored,
-    *                 so corpus-unseen words stay finite)
-    *
-    * (Chen & Goodman 1998's interpolated KN with raw counts at the top
-    * order and continuation TYPE counts below, all N₁₊ read off the one
-    * trigram-type table: N₁₊(•w₂w₃) = its (w2,w3) row count, N₁₊(•w₂•)
-    * its w2-grouped sum, N₁₊(••w₃) its w3 row count, N₁₊(•••) its size.)
-    * Σ_vocab p₃ ≤ 1 at every level, so mu = floor(ln p₃ ·10⁶ + 0.5) ≤ 0
-    * — the [[pplBucketsByThreshold]] key contract holds for this model
-    * too. Determinism: exact BIGINT counts, fixed-order double
-    * composition, micro-quantized ln before the per-doc integer fold —
-    * replayed operator-for-operator in the oracle.
-    *
-    * Plan: corpus trigram explode → one model aggregate; five uniform-
-    * key left equi-joins (triple, left context, continuation pair,
-    * middle word, last word) + one broadcast scalar; one doc-keyed
-    * fold. AQE broadcasts the model-side joins while the model fits and
-    * flips them to shuffle joins as it grows — the q_lm_kn shape, one
-    * join deeper. Output: (idCol, n_trigrams, sum_mu, avg_logp). */
+    * order: [[lmKneserNeyScore]] one level deeper, fixed D = 0.75
+    * ([[knContribs]] at order 3). Output: (idCol, n_trigrams, sum_mu,
+    * avg_logp). */
   def lmKneserNey3Score(df: DataFrame, textCol: String,
       idCol: String): DataFrame =
     lmKneserNey3ScoreAgainst(df, df, textCol, idCol)
@@ -897,133 +655,25 @@ object TextAnalysis {
     lmKneserNey3Finish(lmKneserNey3Contribs(train, df, textCol, idCol),
       df.select(col(idCol)), idCol)
 
-  /** The per-doc fold over a [[lmKneserNey3Contribs]] frame (or its
-    * streaming sink — each (doc, trigram) contribution emits exactly
-    * once): the [[lmKneserNeyFinish]] contract one order up. `ids`
-    * supplies the full doc universe so trigram-less docs keep their
-    * zero row. */
+  /** The per-doc fold over a trigram contributions frame (or its
+    * streaming sink): [[lmDocFold]] counting `n_trigrams`. */
   def lmKneserNey3Finish(contribs: DataFrame, ids: DataFrame,
-      idCol: String): DataFrame = {
-    val scored = contribs.groupBy(col(idCol))
-      .agg(count(lit(1)).alias("n_trigrams"), sum(col("__mu")).alias("sum_mu"))
-    ids.join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_trigrams"), lit(0L)).alias("n_trigrams"),
-        coalesce(col("sum_mu"), lit(0L)).alias("sum_mu"),
-        when(col("n_trigrams") > 0, col("sum_mu").cast(DoubleType) /
-          (col("n_trigrams").cast(DoubleType) * 1e6)).alias("avg_logp"))
-  }
+      idCol: String): DataFrame =
+    lmDocFold(contribs, ids, idCol, "n_trigrams")
 
   /** Per-trigram micro-quantized contributions of `df`'s docs under
-    * `train`'s frozen trigram model — (idCol, __mu) rows, stateless per
-    * doc after stream-static model joins (the [[lmKneserNeyContribs]]
-    * streaming contract). */
+    * `train`'s frozen trigram model (the [[lmKneserNeyContribs]]
+    * streaming contract; fold with [[lmKneserNey3Finish]]). */
   def lmKneserNey3Contribs(train: DataFrame, df: DataFrame,
-      textCol: String, idCol: String): DataFrame = {
-    val D = 0.75
-    def trigramsOf(src: DataFrame, keep: Seq[Column]): DataFrame = src
-      .select(keep :+ explode(normNGrams(col(textCol), 3)).alias("__t"): _*)
-      .select(keep ++ Seq(col("__t.w1").alias("w1"),
-        col("__t.w2").alias("w2"), col("__t.w3").alias("w3")): _*)
-    val tg = trigramsOf(df, Seq(col(idCol)))
-    val tm = trigramsOf(train, Nil).groupBy(col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).alias("__c3"))
-    // every lower order: aggregates over the MODEL table tm
-    val left12 = tm.groupBy(col("w1"), col("w2"))
-      .agg(sum(col("__c3")).alias("__cw12"),
-        count(lit(1)).alias("__n1r12"))       // C(w1 w2 .), N1+(w1 w2 .)
-    val cont23 = tm.groupBy(col("w2"), col("w3"))
-      .agg(count(lit(1)).alias("__n23"))      // N1+(. w2 w3)
-    val mid = cont23.groupBy(col("w2"))
-      .agg(sum(col("__n23")).alias("__m2"),   // N1+(. w2 .)
-        count(lit(1)).alias("__r2"))          // N1+cont(w2 .)
-    val uni = tm.groupBy(col("w3"))
-      .agg(count(lit(1)).alias("__n1u"))      // N1+(. . w3)
-    val scalars = tm.agg(count(lit(1)).alias("__n3pp"))
-      .crossJoin(train
-        .select(explode(normTokens(col(textCol))).alias("__t"))
-        .agg(count_distinct(col("__t.w1")).alias("__v")))
-    // fixed-order composition (identical text in the oracle); the same
-    // degenerate-model denominator guard as the bigram face
-    val p1 = when(col("__n3pp") + col("__v") > 0,
-      (coalesce(col("__n1u"), lit(0L)) + lit(1L)).cast(DoubleType) /
-        (col("__n3pp") + col("__v")).cast(DoubleType))
-    val p2seen = (greatest(coalesce(col("__n23"), lit(0L)).cast(DoubleType) -
-        lit(D), lit(0.0)) +
-      lit(D) * col("__r2").cast(DoubleType) * p1) /
-      col("__m2").cast(DoubleType)
-    val p2 = when(col("__m2").isNotNull, p2seen).otherwise(p1)
-    val p3seen = (greatest(coalesce(col("__c3"), lit(0L)).cast(DoubleType) -
-        lit(D), lit(0.0)) +
-      lit(D) * col("__n1r12").cast(DoubleType) * p2) /
-      col("__cw12").cast(DoubleType)
-    val p3 = when(col("__cw12").isNotNull, p3seen).otherwise(p2)
-    val contribMu = floor(log(p3) * 1e6 + 0.5).cast(LongType)
-    // The corpus-scale trigram stream used to cross FIVE exchanges (one
-    // per model join). Pre-joining the model tables into one per-trigram
-    // score table moves those joins to MODEL-sized data (27k distinct
-    // trigrams vs 261k occurrences at sf0.1) and the stream joins ONCE;
-    // model-miss rows — empty in self-scoring — take the original chain
-    // verbatim (bit-identical mu; the degenerate-model guard routes
-    // through the miss arm because an empty model has an empty score
-    // table). Streaming frames keep the stream-static chain.
-    def fullChain(occ: DataFrame): DataFrame = occ
-      .join(tm, Seq("w1", "w2", "w3"), "left")
-      .join(left12, Seq("w1", "w2"), "left")
-      .join(cont23, Seq("w2", "w3"), "left")
-      .join(mid, Seq("w2"), "left")
-      .join(uni, Seq("w3"), "left")
-      .crossJoin(broadcast(scalars))
-      .select(col(idCol), contribMu.alias("__mu"))
-    (if (df.isStreaming || !(train eq df)) fullChain(tg)
-     else {
-       // self-scoring: every df trigram IS a model key (train eq df), so
-       // the single score-table join covers every row — no miss arm.
-       // PRECONDITION: df must be deterministic (the model scan and the
-       // scored scan are two evaluations of the same plan; a
-       // nondeterministic df — sample()/rand upstream — could emit a
-       // gram the model scan never saw, which this path FILTERS where
-       // the full chain would back off). All current callers are
-       // deterministic; route new nondeterministic callers via fullChain.
-       val smod = tm
-         .join(left12, Seq("w1", "w2"))
-         .join(cont23, Seq("w2", "w3"))
-         .join(mid, Seq("w2"))
-         .join(uni, Seq("w3"))
-         .crossJoin(broadcast(scalars))
-         .select(col("w1"), col("w2"), col("w3"), contribMu.alias("__mu"))
-       tg.join(smod, Seq("w1", "w2", "w3"), "left")
-         .select(col(idCol), col("__mu"))
-     }).filter(col("__mu").isNotNull) // no-op except under the degenerate guard
-  }
+      textCol: String, idCol: String): DataFrame =
+    knContribs(3, KnFixed, train, df, textCol, idCol)
 
   /** Modified Kneser–Ney TRIGRAM LM — [[lmKneserNey3Score]] with the
-    * production PER-ORDER discount schedule (Chen & Goodman 1999; what
-    * KenLM estimates per order): each order gets its own count-binned
-    * discounts D₁/D₂/D₃₊ estimated from THAT order's count-of-counts —
-    * order 3 from the raw trigram counts n₁..n₄, order 2 from the
-    * CONTINUATION-count table's count-of-counts (how many (w₂,w₃) pairs
-    * have N₁₊(•w₂w₃) = 1..4) — with per-context count-class type counts
-    * riding in the existing context aggregates:
-    *
-    *   p₃(w₃|w₁w₂) = (max(C−D⁽³⁾(C), 0)
-    *                  + (D₁⁽³⁾K₁ + D₂⁽³⁾K₂ + D₃₊⁽³⁾K₃₊)·p₂) / C(w₁w₂•)
-    *   p₂(w₃|w₂)  = (max(N−D⁽²⁾(N), 0)
-    *                  + (D₁⁽²⁾J₁ + D₂⁽²⁾J₂ + D₃₊⁽²⁾J₃₊)·p₁) / N₁₊(•w₂•)
-    *   p₁(w₃)     = (N₁₊(••w₃)+1) / (N₁₊(•••)+V)
-    *
-    * (K_k = #{w₃ : C(w₁w₂w₃) in class k}, J_k = #{w₃ : N₁₊(•w₂w₃) in
-    * class k}; the same Y/fallback/clamp degenerate conventions as
-    * [[lmModKneserNeyScore]], applied per order.) The back-off mass per
-    * context is exactly the discounted mass, so Σp ≤ 1 at each level
-    * and mu ≤ 0 carries.
-    *
-    * Cost over [[lmKneserNey3Score]]: ZERO extra corpus scans and zero
-    * extra joins — both count-of-counts rows are aggregates over tables
-    * the plan already builds (tm and cont23), folded into the one
-    * broadcast scalar row; the count-class type counts ride in the
-    * existing (w₁,w₂)- and w₂-context aggregates. Output: (idCol,
-    * n_trigrams, sum_mu, avg_logp). */
+    * per-order Chen–Goodman schedule ([[KnModified]]; what KenLM
+    * estimates per order): order 3 from the raw trigram count-of-counts,
+    * order 2 from the continuation-count table's. Zero extra corpus
+    * scans and zero extra joins. Output: (idCol, n_trigrams, sum_mu,
+    * avg_logp). */
   def lmModKneserNey3Score(df: DataFrame, textCol: String,
       idCol: String): DataFrame =
     lmModKneserNey3ScoreAgainst(df, df, textCol, idCol)
@@ -1032,131 +682,203 @@ object TextAnalysis {
     * the production ingest-filter shape. */
   def lmModKneserNey3ScoreAgainst(train: DataFrame, df: DataFrame,
       textCol: String, idCol: String): DataFrame =
-    lmKneserNey3Finish(
-      lmModKneserNey3Contribs(train, df, textCol, idCol),
+    lmKneserNey3Finish(lmModKneserNey3Contribs(train, df, textCol, idCol),
       df.select(col(idCol)), idCol)
 
-  /** Per-trigram micro-quantized modified-KN contributions — (idCol,
-    * __mu) rows, stateless per doc after stream-static model joins (the
+  /** Per-trigram micro-quantized modified-KN contributions (the
     * [[lmKneserNeyContribs]] streaming contract; fold with
     * [[lmKneserNey3Finish]]). */
   def lmModKneserNey3Contribs(train: DataFrame, df: DataFrame,
-      textCol: String, idCol: String): DataFrame = {
-    def trigramsOf(src: DataFrame, keep: Seq[Column]): DataFrame = src
-      .select(keep :+ explode(normNGrams(col(textCol), 3)).alias("__t"): _*)
-      .select(keep ++ Seq(col("__t.w1").alias("w1"),
-        col("__t.w2").alias("w2"), col("__t.w3").alias("w3")): _*)
-    val tg = trigramsOf(df, Seq(col(idCol)))
-    val tm = trigramsOf(train, Nil).groupBy(col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).alias("__c3"))
-    // (w1,w2) context: marginal + order-3 count-class type counts
-    val left12 = tm.groupBy(col("w1"), col("w2"))
-      .agg(sum(col("__c3")).alias("__cw12"),
-        sum(when(col("__c3") === 1L, 1L).otherwise(0L)).alias("__k1"),
-        sum(when(col("__c3") === 2L, 1L).otherwise(0L)).alias("__k2"),
-        sum(when(col("__c3") >= 3L, 1L).otherwise(0L)).alias("__k3"))
-    val cont23 = tm.groupBy(col("w2"), col("w3"))
-      .agg(count(lit(1)).alias("__n23"))      // N1+(. w2 w3)
-    // w2 context: continuation marginal + order-2 count-class type counts
-    val mid = cont23.groupBy(col("w2"))
-      .agg(sum(col("__n23")).alias("__m2"),   // N1+(. w2 .)
-        sum(when(col("__n23") === 1L, 1L).otherwise(0L)).alias("__j1"),
-        sum(when(col("__n23") === 2L, 1L).otherwise(0L)).alias("__j2"),
-        sum(when(col("__n23") >= 3L, 1L).otherwise(0L)).alias("__j3"))
-    val uni = tm.groupBy(col("w3"))
-      .agg(count(lit(1)).alias("__n1u"))      // N1+(. . w3)
-    // per-order count-of-counts: aggregates over tm and cont23, one
-    // broadcast scalar row
-    val scalars = tm.agg(
-        count(lit(1)).alias("__n3pp"),
-        sum(when(col("__c3") === 1L, 1L).otherwise(0L)).alias("__a1"),
-        sum(when(col("__c3") === 2L, 1L).otherwise(0L)).alias("__a2"),
-        sum(when(col("__c3") === 3L, 1L).otherwise(0L)).alias("__a3"),
-        sum(when(col("__c3") === 4L, 1L).otherwise(0L)).alias("__a4"))
-      .crossJoin(cont23.agg(
-        sum(when(col("__n23") === 1L, 1L).otherwise(0L)).alias("__b1"),
-        sum(when(col("__n23") === 2L, 1L).otherwise(0L)).alias("__b2"),
-        sum(when(col("__n23") === 3L, 1L).otherwise(0L)).alias("__b3"),
-        sum(when(col("__n23") === 4L, 1L).otherwise(0L)).alias("__b4")))
-      .crossJoin(train
-        .select(explode(normTokens(col(textCol))).alias("__t"))
-        .agg(count_distinct(col("__t.w1")).alias("__v")))
-    def clamp(x: Column, hi: Double): Column =
-      least(greatest(x, lit(0.0)), lit(hi))
-    // the Chen-Goodman estimates, one schedule per order (the
-    // lmModKneserNeyContribs conventions: Y = 0 on an empty low tail,
-    // fallback to the class upper bound, clamp into [0, k])
-    def schedule(n1: Column, n2: Column, n3: Column,
-        n4: Column): (Column, Column, Column) = {
-      val y = when(n1 + lit(2L) * n2 > 0,
-        n1.cast(DoubleType) / (n1 + lit(2L) * n2).cast(DoubleType))
-        .otherwise(lit(0.0))
-      (clamp(when(n1 > 0, lit(1.0) - lit(2.0) * y *
-        (n2.cast(DoubleType) / n1.cast(DoubleType)))
-        .otherwise(lit(1.0)), 1.0),
-        clamp(when(n2 > 0, lit(2.0) - lit(3.0) * y *
-          (n3.cast(DoubleType) / n2.cast(DoubleType)))
-          .otherwise(lit(2.0)), 2.0),
-        clamp(when(n3 > 0, lit(3.0) - lit(4.0) * y *
-          (n4.cast(DoubleType) / n3.cast(DoubleType)))
-          .otherwise(lit(3.0)), 3.0))
+      textCol: String, idCol: String): DataFrame =
+    knContribs(3, KnModified, train, df, textCol, idCol)
+
+  /** Interpolated Kneser–Ney contributions of `df`'s n-grams (n =
+    * `order`, 2 or 3) under `train`'s model — the one recursion behind
+    * every KN face. For a gram w₁…wₙ, level k runs from n down to 2:
+    *
+    *   p_k = (max(c_k − D_k(c_k), 0) + γ_k·p_{k−1}) / m_k
+    *                         when the level-k context is seen, else p_{k−1}
+    *   p₁  = (u(wₙ) + 1) / (T + V)   (add-one floored, so corpus-unseen
+    *                         words stay finite)
+    *
+    *  - top, k = n: c_n = C(w₁…wₙ), the raw counts of the one n-gram
+    *    model aggregate;
+    *  - each lower k ≥ 2: c_k = N₁₊(•w_{n−k+1}…wₙ), the continuation type
+    *    counts: the level above grouped by its last k words (for n = 3,
+    *    the (w₂, w₃) pairs and their w₂ context);
+    *  - bottom: u(wₙ) counts the model's n-gram types ending in wₙ (the
+    *    model table grouped by its last word: N₁₊(•w₂) for n = 2,
+    *    N₁₊(••w₃) for n = 3), T is the model's type count and V the
+    *    training corpus's distinct words.
+    *
+    * m_k is the level's context marginal (Σ c_k over its first k − 1
+    * words); D_k and γ_k come from the discount `schedule`, whose type
+    * counts ride in that same context aggregate and whose
+    * count-of-counts join the one broadcast scalar row. Every level is an
+    * aggregate OF THE MODEL table, never a second corpus scan — the spot
+    * where naive implementations go quadratic. Σ_vocab p_k ≤ 1 at every
+    * level, so mu = floor(ln pₙ·10⁶ + 0.5) ≤ 0 — the
+    * [[pplBucketsByThreshold]] key contract.
+    *
+    * Determinism: exact BIGINT counts, a fixed-order double composition
+    * (each op correctly rounded, replayed operator-for-operator by the
+    * DuckDB oracles) and the per-gram ln in integer micro-units before
+    * the per-doc fold ([[lmDocFold]]), which is then order-free integer
+    * arithmetic.
+    *
+    * Degenerate model: an empty or whitespace-only training corpus has
+    * T = V = 0, so p₁ would be +Inf (Long.MaxValue garbage under
+    * the Spark cast, a hard CAST error in the replay). It is null
+    * instead and the null contributions are dropped: every doc folds to
+    * (0, 0, NULL), the degenerate behavior of the other LM operators. The
+    * guard can only fire globally (the denominator is model-wide).
+    *
+    * Plan: one corpus n-gram explode into one model aggregate. A
+    * streaming `df`, or one scored against another corpus, takes the
+    * full chain: the occurrences left-join each level table and its
+    * context, then the unigram continuation (2n − 1 uniform-key
+    * equi-joins, stream-static on a stream), then cross the broadcast
+    * scalar row. A batch `df` scored against itself joins ONCE: the same
+    * chain pre-joined on the model (distinct grams ≈ 1/10 of occurrences
+    * on the bench corpus) is a per-gram score table, and every
+    * occurrence is one of its keys, so no row takes a back-off arm and
+    * each mu is the same composition bit for bit. */
+  private def knContribs(order: Int, schedule: KnSchedule,
+      train: DataFrame, df: DataFrame, textCol: String,
+      idCol: String): DataFrame = {
+    val w = (1 to order).map(i => s"w$i")
+    val occ = nGramRows(df, textCol, order, Seq(col(idCol)))
+    val top = nGramRows(train, textCol, order, Nil).groupBy(w.map(col): _*)
+      .agg(count(lit(1)).alias(s"__c$order"))
+    // (k, level table keyed by the last k words, count column __c<k>)
+    val levels = (order - 1 to 2 by -1).scanLeft(order -> top) {
+      case ((_, above), k) => k -> above.groupBy(w.takeRight(k).map(col): _*)
+        .agg(count(lit(1)).alias(s"__c$k"))
     }
-    val (d31, d32, d33) =
-      schedule(col("__a1"), col("__a2"), col("__a3"), col("__a4"))
-    val (d21, d22, d23) =
-      schedule(col("__b1"), col("__b2"), col("__b3"), col("__b4"))
-    // fixed-order composition (identical text in the oracle); the same
-    // degenerate-model denominator guard as the fixed-D faces
-    val p1 = when(col("__n3pp") + col("__v") > 0,
-      (coalesce(col("__n1u"), lit(0L)) + lit(1L)).cast(DoubleType) /
-        (col("__n3pp") + col("__v")).cast(DoubleType))
-    val n23c = coalesce(col("__n23"), lit(0L))
-    val dc2 = when(n23c <= 1L, d21).when(n23c === 2L, d22).otherwise(d23)
-    val p2seen = (greatest(n23c.cast(DoubleType) - dc2, lit(0.0)) +
-      (d21 * col("__j1").cast(DoubleType) +
-        d22 * col("__j2").cast(DoubleType) +
-        d23 * col("__j3").cast(DoubleType)) * p1) /
-      col("__m2").cast(DoubleType)
-    val p2 = when(col("__m2").isNotNull, p2seen).otherwise(p1)
-    val c3c = coalesce(col("__c3"), lit(0L))
-    val dc3 = when(c3c <= 1L, d31).when(c3c === 2L, d32).otherwise(d33)
-    val p3seen = (greatest(c3c.cast(DoubleType) - dc3, lit(0.0)) +
-      (d31 * col("__k1").cast(DoubleType) +
-        d32 * col("__k2").cast(DoubleType) +
-        d33 * col("__k3").cast(DoubleType)) * p2) /
-      col("__cw12").cast(DoubleType)
-    val p3 = when(col("__cw12").isNotNull, p3seen).otherwise(p2)
-    val contribMu = floor(log(p3) * 1e6 + 0.5).cast(LongType)
-    // single-join indexed form for batch frames, chain for streams —
-    // see lmKneserNey3Contribs (identical reasoning, identical mu)
-    def fullChain(occ: DataFrame): DataFrame = occ
-      .join(tm, Seq("w1", "w2", "w3"), "left")
-      .join(left12, Seq("w1", "w2"), "left")
-      .join(cont23, Seq("w2", "w3"), "left")
-      .join(mid, Seq("w2"), "left")
-      .join(uni, Seq("w3"), "left")
+    def context(k: Int, t: DataFrame): DataFrame =
+      t.groupBy(w.takeRight(k).init.map(col): _*)
+        .agg(sum(col(s"__c$k")).alias(s"__m$k"),
+          schedule.typeCounts(col(s"__c$k"), k): _*)
+    val uni = top.groupBy(col(w.last)).agg(count(lit(1)).alias("__u"))
+    val tables = levels.flatMap { case (k, t) =>
+      Seq(t -> w.takeRight(k), context(k, t) -> w.takeRight(k).init)
+    } :+ (uni -> Seq(w.last))
+    val scalars = levels.tail.foldLeft(top.agg(count(lit(1)).alias("__npp"),
+        schedule.countOfCounts(col(s"__c$order"), order): _*)) {
+      case (row, (k, t)) => schedule.countOfCounts(col(s"__c$k"), k) match {
+        case Seq() => row
+        case cs => row.crossJoin(t.agg(cs.head, cs.tail: _*))
+      }
+    }.crossJoin(vocabSize(train, textCol))
+    val p1 = when(col("__npp") + col("__v") > 0,
+      (coalesce(col("__u"), lit(0L)) + lit(1L)).cast(DoubleType) /
+        (col("__npp") + col("__v")).cast(DoubleType))
+    val p = levels.foldRight(p1) { case ((k, _), lower) =>
+      val c = coalesce(col(s"__c$k"), lit(0L))
+      val (d, gamma) = schedule.discount(c, k)
+      when(col(s"__m$k").isNotNull,
+        (greatest(c.cast(DoubleType) - d, lit(0.0)) + gamma * lower) /
+          col(s"__m$k").cast(DoubleType))
+        .otherwise(lower)
+    }
+    val mu = floor(log(p) * 1e6 + 0.5).cast(LongType).alias("__mu")
+    def chain(from: DataFrame, joins: Seq[(DataFrame, Seq[String])],
+        how: String): DataFrame = joins
+      .foldLeft(from) { case (acc, (t, on)) => acc.join(t, on, how) }
       .crossJoin(broadcast(scalars))
-      .select(col(idCol), contribMu.alias("__mu"))
-    (if (df.isStreaming || !(train eq df)) fullChain(tg)
+    (if (df.isStreaming || !(train eq df))
+       chain(occ, tables, "left").select(col(idCol), mu)
      else {
-       // self-scoring: every df trigram IS a model key (train eq df), so
-       // the single score-table join covers every row — no miss arm.
-       // PRECONDITION: df must be deterministic (the model scan and the
+       // PRECONDITION: df must be deterministic. The model scan and the
        // scored scan are two evaluations of the same plan; a
-       // nondeterministic df — sample()/rand upstream — could emit a
-       // gram the model scan never saw, which this path FILTERS where
-       // the full chain would back off). All current callers are
-       // deterministic; route new nondeterministic callers via fullChain.
-       val smod = tm
-         .join(left12, Seq("w1", "w2"))
-         .join(cont23, Seq("w2", "w3"))
-         .join(mid, Seq("w2"))
-         .join(uni, Seq("w3"))
-         .crossJoin(broadcast(scalars))
-         .select(col("w1"), col("w2"), col("w3"), contribMu.alias("__mu"))
-       tg.join(smod, Seq("w1", "w2", "w3"), "left")
-         .select(col(idCol), col("__mu"))
+       // nondeterministic df (sample()/rand upstream) could emit a gram
+       // the model scan never saw, which this path FILTERS where the full
+       // chain would back off. All current callers are deterministic;
+       // route a nondeterministic one through the full chain.
+       val scores = chain(top, tables.tail, "inner")
+         .select(w.map(col) :+ mu: _*)
+       occ.join(scores, w, "left").select(col(idCol), col("__mu"))
      }).filter(col("__mu").isNotNull) // no-op except under the degenerate guard
+  }
+
+  /** A Kneser–Ney discount schedule ([[knContribs]]): the type counts a
+    * level-k context aggregate carries over the level's counts `c`, the
+    * count-of-counts the level adds to the broadcast scalar row, and the
+    * level's discount D(c) and back-off weight γ over those columns. */
+  private sealed trait KnSchedule {
+    def typeCounts(c: Column, k: Int): Seq[Column]
+    def countOfCounts(c: Column, k: Int): Seq[Column]
+    def discount(c: Column, k: Int): (Column, Column)
+  }
+
+  /** Absolute discount D = 0.75 (exact in binary) at every count:
+    * γ = D·N₁₊(ctx •), the context's distinct continuations. */
+  private object KnFixed extends KnSchedule {
+    private val D = 0.75
+    def typeCounts(c: Column, k: Int): Seq[Column] =
+      Seq(count(lit(1)).alias(s"__r$k"))
+    def countOfCounts(c: Column, k: Int): Seq[Column] = Nil
+    def discount(c: Column, k: Int): (Column, Column) =
+      (lit(D), lit(D) * col(s"__r$k").cast(DoubleType))
+  }
+
+  /** Modified KN (Chen & Goodman 1999; what KenLM estimates per order):
+    * per-count-class discounts estimated from the level's count-of-counts
+    * n₁..n₄ (the level's grams with count exactly 1..4):
+    *
+    *   Y  = n₁ / (n₁ + 2n₂)
+    *   D_j = j − (j+1)·Y·(n_{j+1}/n_j)   for j = 1, 2, 3
+    *
+    * D(c) is D₁ for c ≤ 1, D₂ for c = 2 and D₃₊ for c ≥ 3, and
+    * γ = D₁K₁ + D₂K₂ + D₃₊K₃₊, with K_j the context's grams in class j.
+    * The back-off mass is exactly the mass discounted within the
+    * context, so Σp ≤ 1 and mu ≤ 0 carry.
+    *
+    * Degenerate conventions (deterministic, oracle-replayed): Y = 0 when
+    * n₁ + 2n₂ = 0; D_j falls back to its upper bound j when n_j = 0 (it
+    * then applies to zero or clamp-guarded grams anyway); every D_j is
+    * clamped into [0, j], since the estimates can leave that range on
+    * pathological count tables, which keeps max(c − D, 0) monotone and
+    * γ non-negative (the SRILM convention). */
+  private object KnModified extends KnSchedule {
+    def typeCounts(c: Column, k: Int): Seq[Column] = (1 to 3).map(j =>
+      sum(when(if (j < 3) c === j.toLong else c >= 3L, 1L).otherwise(0L))
+        .alias(s"__k${k}_$j"))
+    def countOfCounts(c: Column, k: Int): Seq[Column] = (1 to 4).map(j =>
+      sum(when(c === j.toLong, 1L).otherwise(0L)).alias(s"__n${k}_$j"))
+    def discount(c: Column, k: Int): (Column, Column) = {
+      val n = (1 to 4).map(j => col(s"__n${k}_$j"))
+      val y = when(n(0) + lit(2L) * n(1) > 0,
+        n(0).cast(DoubleType) / (n(0) + lit(2L) * n(1)).cast(DoubleType))
+        .otherwise(lit(0.0))
+      val d = (1 to 3).map { j =>
+        least(greatest(when(n(j - 1) > 0, lit(j.toDouble) -
+          lit(j + 1.0) * y * (n(j).cast(DoubleType) /
+            n(j - 1).cast(DoubleType)))
+          .otherwise(lit(j.toDouble)), lit(0.0)), lit(j.toDouble))
+      }
+      (when(c <= 1L, d(0)).when(c === 2L, d(1)).otherwise(d(2)),
+        d(0) * col(s"__k${k}_1").cast(DoubleType) +
+          d(1) * col(s"__k${k}_2").cast(DoubleType) +
+          d(2) * col(s"__k${k}_3").cast(DoubleType))
+    }
+  }
+
+  /** The per-doc LM fold over a (idCol, __mu) contributions frame (or
+    * its streaming sink, where each contribution is emitted exactly
+    * once): exact integer (n, Σμ) and one terminal division. `ids`
+    * supplies the full doc universe, so a doc with no gram keeps its
+    * zero row. Output: (idCol, nCol, sum_mu, avg_logp). */
+  private def lmDocFold(contribs: DataFrame, ids: DataFrame, idCol: String,
+      nCol: String): DataFrame = {
+    val scored = contribs.groupBy(col(idCol))
+      .agg(count(lit(1)).alias(nCol), sum(col("__mu")).alias("sum_mu"))
+    ids.join(scored, Seq(idCol), "left")
+      .select(col(idCol),
+        coalesce(col(nCol), lit(0L)).alias(nCol),
+        coalesce(col("sum_mu"), lit(0L)).alias("sum_mu"),
+        when(col(nCol) > 0, col("sum_mu").cast(DoubleType) /
+          (col(nCol).cast(DoubleType) * 1e6)).alias("avg_logp"))
   }
 
   /** CCNet head/middle/tail perplexity terciles by THRESHOLD CUT — the
@@ -1508,9 +1230,8 @@ object TextAnalysis {
     * occurrence — the shared explode behind [[pmiBigrams]] and its
     * streaming twin. Works on batch AND streaming frames (pure
     * projection). */
-  def bigramPairs(df: DataFrame, textCol: String): DataFrame = df
-    .select(explode(normNGrams(col(textCol), 2)).alias("__b"))
-    .select(col("__b.w1").alias("w1"), col("__b.w2").alias("w2"))
+  def bigramPairs(df: DataFrame, textCol: String): DataFrame =
+    nGramRows(df, textCol, 2, Nil)
 
   def pmiBigrams(df: DataFrame, textCol: String,
       minCount: Long = 5L): DataFrame =

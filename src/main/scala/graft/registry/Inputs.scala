@@ -32,6 +32,16 @@ private[registry] object Inputs {
 
   def docs(s: SparkSession, dir: String) = tbl(s, dir, "documents")
 
+  /** The documents' ids, spread over `defaultParallelism` partitions for
+    * the media queries that synthesize and decode a payload per id. The
+    * few-KB id scan arrives as 1-2 input partitions, but every row expands
+    * into KBs of synthesis and decode work (inflate, unfilter, IDCT): this
+    * cheap shuffle moves ids, not payloads, and spreads the EXPANSION
+    * over the cluster before the heavy map. */
+  def docIdsSpread(s: SparkSession, dir: String): DataFrame =
+    docs(s, dir).select(col("doc_id"))
+      .repartition(s.sparkContext.defaultParallelism)
+
   def emb(s: SparkSession, dir: String) = tbl(s, dir, "embeddings")
 
   val usec: Column => Column = c => unix_micros(c.cast(TimestampType))

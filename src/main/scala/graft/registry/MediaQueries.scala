@@ -109,14 +109,7 @@ private[graft] object MediaQueries extends QueryFamily {
     * doc_id arithmetic without touching a byte. */
   private def qDecodePng(s: SparkSession, dir: String): DataFrame =
     Multimodal.pngPixelStats(
-      Multimodal.synthesizePngPayload(
-        // a few-KB id scan arrives as 1-2 input partitions, but every row
-        // expands into ~KBs of synthesis + inflate + unfilter work: spread
-        // the EXPANSION over the cluster before the heavy map (the cheap
-        // shuffle moves ids, not payloads)
-        docs(s, dir).select(col("doc_id"))
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizePngPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
 
   // PNG decode replay: the engine inflates + unfilters real zlib
@@ -157,10 +150,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |  CAST(sum(p) AS DOUBLE) / count(*) AS mean_sample
         |FROM px GROUP BY doc_id, w, h""".stripMargin) { (s, dir) =>
     Multimodal.bmpPixelStats(
-      Multimodal.synthesizeBmpPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeBmpPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -187,10 +177,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |    AS mean_sample
         |FROM b GROUP BY doc_id, w, h""".stripMargin) { (s, dir) =>
     graft.pipeline.Jpeg.jpegPixelStats(
-      graft.pipeline.Jpeg.synthesizeJpegPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      graft.pipeline.Jpeg.synthesizeJpegPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -214,10 +201,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |  CAST(sum(s) AS DOUBLE) / count(*) AS mean_sample
         |FROM px GROUP BY doc_id, sample_rate""".stripMargin) { (s, dir) =>
     Multimodal.wavSampleStats(
-      Multimodal.synthesizeWavPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeWavPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -249,10 +233,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |  sqrt(CAST(sum(CAST(s AS BIGINT) * s) AS DOUBLE) / 64.0) AS rms
         |FROM z GROUP BY doc_id, frame_idx""".stripMargin) { (s, dir) =>
     Multimodal.wavFrameFeatures(
-      Multimodal.synthesizeWavPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeWavPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -281,10 +262,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |  CAST(sum(CAST(s AS BIGINT)) AS DOUBLE) / 16.0 AS mean_sample
         |FROM g GROUP BY doc_id, out_idx""".stripMargin) { (s, dir) =>
     Multimodal.wavDecimate(
-      Multimodal.synthesizeWavPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeWavPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload", factor = 16)
   }
 
@@ -314,10 +292,7 @@ private[graft] object MediaQueries extends QueryFamily {
          |FROM co GROUP BY 1, 2, 3""".stripMargin
     }) { (s, dir) =>
     Multimodal.wavSequencyFeatures(
-      Multimodal.synthesizeWavPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeWavPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -361,10 +336,7 @@ private[graft] object MediaQueries extends QueryFamily {
   // rationale), band energies are exact integer sums of rc²+ic².
   spec("q_audio_spectrogram", s"$audioSpectroCte SELECT doc_id, frame_idx, band, band_energy_q FROM be") { (s, dir) =>
     Multimodal.wavSpectrogram(
-      Multimodal.synthesizeWavPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeWavPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -396,10 +368,7 @@ private[graft] object MediaQueries extends QueryFamily {
          |FROM lq, range(8) cc(c) GROUP BY 1, 2, 3""".stripMargin
     }) { (s, dir) =>
     Multimodal.wavMfcc(
-      Multimodal.synthesizeWavPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeWavPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -438,10 +407,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |FROM dx""".stripMargin
     }) { (s, dir) =>
     Multimodal.audioDescriptors(
-      Multimodal.synthesizeWavPayload(
-        docs(s, dir).select(col("doc_id"))
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeWavPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -468,8 +434,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |FROM b GROUP BY doc_id, w, h""".stripMargin) { (s, dir) =>
     graft.pipeline.Jpeg.jpegPixelStats(
       graft.pipeline.Jpeg.synthesizeProgressiveJpegPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
+        docIdsSpread(s, dir),
         "doc_id"),
       "doc_id", "payload")
   }
@@ -496,10 +461,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |  CAST(sum(v) * 64 AS BIGINT) AS sample_sum
         |FROM fb GROUP BY doc_id, fi, w, h""".stripMargin) { (s, dir) =>
     graft.pipeline.Video.videoFrameStats(
-      graft.pipeline.Video.synthesizeAviPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      graft.pipeline.Video.synthesizeAviPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -527,10 +489,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |  CAST(sum(v) * 64 AS BIGINT) AS sample_sum
         |FROM fb GROUP BY doc_id, fi, w, h""".stripMargin) { (s, dir) =>
     graft.pipeline.Video.videoFrameStats(
-      graft.pipeline.Video.synthesizeMp4Payload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      graft.pipeline.Video.synthesizeMp4Payload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -559,10 +518,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |FROM lat JOIN fb ON lat.doc_id = fb.doc_id AND lat.fi = fb.fi"""
         .stripMargin) { (s, dir) =>
     graft.pipeline.Video.sampleVideoFrames(
-      graft.pipeline.Video.synthesizeAviPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      graft.pipeline.Video.synthesizeAviPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload", everyMs = 400L)
   }
 
@@ -594,10 +550,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |  AND a.bx = b.bx AND b.fi = a.fi + 1
         |GROUP BY a.doc_id, b.fi""".stripMargin) { (s, dir) =>
     graft.pipeline.Video.sceneCuts(
-      graft.pipeline.Video.synthesizeAviPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      graft.pipeline.Video.synthesizeAviPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload", threshold = 64)
   }
 
@@ -627,10 +580,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |  CAST(count(*) AS BIGINT) AS n_docs
         |FROM fp GROUP BY fp, n_samples""".stripMargin) { (s, dir) =>
     Multimodal.audioDedup(
-      Multimodal.synthesizeWavDedupPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeWavDedupPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -838,10 +788,7 @@ private[graft] object MediaQueries extends QueryFamily {
   // the EXACT pair semantics (Hamming ≤ 3, 60% matched both sides).
   spec("q_audio_neardup", audioNearDupSql) { (s, dir) =>
     Multimodal.audioNearDupPairs(
-      Multimodal.synthesizeWavNearDupPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeWavNearDupPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -901,10 +848,7 @@ private[graft] object MediaQueries extends QueryFamily {
   // gate (first-owner state, id-ordered ingestion) shares it verbatim.
   spec("q_media_dedup", mediaDedupSql) { (s, dir) =>
     Multimodal.mediaDedup(
-      Multimodal.synthesizeMediaDedupPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeMediaDedupPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -1101,8 +1045,7 @@ private[graft] object MediaQueries extends QueryFamily {
   // the production-order e2e pipeline: exact groups -> reps-only
   // near-dup hash chains -> recursive-CTE component roll-up
   spec("q_media_neardup_e2e", mediaNearDupE2eSql) { (s, dir) =>
-    val ids = docs(s, dir).select(col("doc_id"))
-      .repartition(s.sparkContext.defaultParallelism) // expansion spread
+    val ids = docIdsSpread(s, dir)
     val arm = expr("(doc_id div 10) % 3")
     val img = Multimodal.synthesizeDecodablePayload(
       ids.filter(arm === 0 && col("doc_id") % 4 <= 1), "doc_id")
@@ -1169,8 +1112,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |FROM fp GROUP BY fp, n_frames""".stripMargin) { (s, dir) =>
     graft.pipeline.Video.videoDedup(
       graft.pipeline.Video.synthesizeAviDedupPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
+        docIdsSpread(s, dir),
         "doc_id"),
       "doc_id", "payload")
   }
@@ -1193,8 +1135,7 @@ private[graft] object MediaQueries extends QueryFamily {
   spec("q_video_neardup", videoNearDupSql) { (s, dir) =>
     graft.pipeline.Video.videoNearDupPairs(
       graft.pipeline.Video.synthesizeAviNearDupPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
+        docIdsSpread(s, dir),
         "doc_id"),
       "doc_id", "payload")
   }
@@ -1242,10 +1183,7 @@ private[graft] object MediaQueries extends QueryFamily {
   // per-clip decode maps commute with any micro-batching).
   spec("q_shot_keyframes", shotKeyframesSql) { (s, dir) =>
     graft.pipeline.Video.shotKeyframes(
-      graft.pipeline.Video.synthesizeAviPayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      graft.pipeline.Video.synthesizeAviPayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload", threshold = 64)
   }
 
@@ -1310,10 +1248,7 @@ private[graft] object MediaQueries extends QueryFamily {
   // arithmetic (16 bins; images v//16, wav (s+32768)//4096).
   spec("q_pixel_hist", pixelHistSql) { (s, dir) =>
     Multimodal.pixelHistogram(
-      Multimodal.synthesizeDecodablePayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeDecodablePayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload", nBins = 16)
   }
 
@@ -1333,10 +1268,7 @@ private[graft] object MediaQueries extends QueryFamily {
          |FROM c JOIN t USING (doc_id)""".stripMargin) { (s, dir) =>
     Multimodal.histEqualization(
       Multimodal.pixelHistogram(
-        Multimodal.synthesizeDecodablePayload(
-          docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-            .repartition(s.sparkContext.defaultParallelism),
-          "doc_id"),
+        Multimodal.synthesizeDecodablePayload(docIdsSpread(s, dir), "doc_id"),
         "doc_id", "payload", nBins = 16),
       "doc_id", nBins = 16)
   }
@@ -1374,8 +1306,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |  CAST(sum(v) AS DOUBLE) / count(*) AS mean_sample
         |FROM u GROUP BY doc_id, nch""".stripMargin) { (s, dir) =>
     val pay = Multimodal.synthesizeDecodablePayload(
-      docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-        .repartition(s.sparkContext.defaultParallelism),
+      docIdsSpread(s, dir),
       "doc_id")
     val meta = Multimodal.withMediaMeta(pay, "payload")
     val resized = Multimodal.resizeImages(meta, "doc_id", "payload",
@@ -1394,10 +1325,7 @@ private[graft] object MediaQueries extends QueryFamily {
     * contract. */
   private def qImageDhash(s: SparkSession, dir: String): DataFrame =
     Multimodal.imageDHash(
-      Multimodal.synthesizeDecodablePayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeDecodablePayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
 
   // dHash replay: grayscale + NN-to-9×8 restated from the generating
@@ -1445,10 +1373,7 @@ private[graft] object MediaQueries extends QueryFamily {
     * fixed-point 32-point DCT and exact median selection. */
   spec("q_image_phash", imagePhashSql) { (s, dir) =>
     Multimodal.imagePHash(
-      Multimodal.synthesizeDecodablePayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeDecodablePayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -1482,10 +1407,7 @@ private[graft] object MediaQueries extends QueryFamily {
   // threshold, dHash bit-packing convention
   spec("q_image_ahash", imageAhashSql) { (s, dir) =>
     Multimodal.imageAHash(
-      Multimodal.synthesizeDecodablePayload(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeDecodablePayload(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 
@@ -1564,10 +1486,7 @@ private[graft] object MediaQueries extends QueryFamily {
         |SELECT format, status, count(*) AS n_docs
         |FROM c GROUP BY format, status""".stripMargin) { (s, dir) =>
     Multimodal.mediaCoverage(
-      Multimodal.synthesizeCoverageCorpus(
-        docs(s, dir).select(col("doc_id")) // expansion spread: see qDecodePng
-          .repartition(s.sparkContext.defaultParallelism),
-        "doc_id"),
+      Multimodal.synthesizeCoverageCorpus(docIdsSpread(s, dir), "doc_id"),
       "doc_id", "payload")
   }
 }

@@ -855,4 +855,60 @@ class PlanShapeSpec extends SparkTestBase {
     assert(line.isDefined, p)
     assert(line.get.trim.startsWith("*("), s"not codegen'd: ${line.get}\n$p")
   }
+
+  test("Kneser-Ney faces: self-scoring joins the score table once; the " +
+      "full chain is one left equi-join per model table plus one broadcast " +
+      "scalar row, and no other cross join touches the corpus") {
+    import org.apache.spark.sql.catalyst.plans.{Cross, LeftOuter}
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join,
+      ResolvedHint}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.pipeline.TextAnalysis._
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val docs = Seq((1L, "the cat sat on the mat"),
+      (2L, "the dog sat on the log")).toDF("doc_id", "text")
+    val train = Seq((9L, "the cat sat on a mat")).toDF("doc_id", "text")
+    val stream = MemoryStream[(Long, String)].toDF().toDF("doc_id", "text")
+    // the corpus side is every join whose output still carries the doc
+    // id: the model tables and the scalar row are keyed by words alone
+    def shape(df: DataFrame): (Int, Int, Int) = {
+      val js = df.queryExecution.analyzed.collect {
+        case j: Join if j.output.exists(_.name == "doc_id") => j
+      }
+      (js.count(j => j.joinType == LeftOuter && j.condition.isDefined),
+        js.count(_.joinType == Cross),
+        js.count(j => j.joinType == Cross && (j.right match {
+          case h: ResolvedHint => h.hints.strategy.contains(BROADCAST)
+          case _ => false
+        })))
+    }
+    type Face = (DataFrame, DataFrame) => DataFrame
+    // (name, model tables the full chain joins, self, against, contribs)
+    val faces: Seq[(String, Int, DataFrame => DataFrame, Face, Face)] = Seq(
+      ("kn", 3, lmKneserNeyScore(_, "text", "doc_id"),
+        lmKneserNeyScoreAgainst(_, _, "text", "doc_id"),
+        lmKneserNeyContribs(_, _, "text", "doc_id")),
+      ("mkn", 3, lmModKneserNeyScore(_, "text", "doc_id"),
+        lmModKneserNeyScoreAgainst(_, _, "text", "doc_id"),
+        lmModKneserNeyContribs(_, _, "text", "doc_id")),
+      ("kn3", 5, lmKneserNey3Score(_, "text", "doc_id"),
+        lmKneserNey3ScoreAgainst(_, _, "text", "doc_id"),
+        lmKneserNey3Contribs(_, _, "text", "doc_id")),
+      ("mkn3", 5, lmModKneserNey3Score(_, "text", "doc_id"),
+        lmModKneserNey3ScoreAgainst(_, _, "text", "doc_id"),
+        lmModKneserNey3Contribs(_, _, "text", "doc_id")))
+    for ((name, tables, self, against, contribs) <- faces) {
+      // self-scoring: the occurrence stream joins the score table once,
+      // then the per-doc fold joins the doc ids
+      assert(shape(self(docs)) == ((2, 0, 0)), s"$name self-scoring")
+      // a separate training corpus: the full chain, then the doc fold
+      assert(shape(against(train, docs)) == ((tables + 1, 1, 1)),
+        s"$name against a separate corpus")
+      // a streaming corpus takes the full chain as stream-static joins
+      assert(shape(contribs(train, stream)) == ((tables, 1, 1)),
+        s"$name streaming contribs")
+    }
+  }
 }
