@@ -305,47 +305,6 @@ object Dedup {
     starAssignments(sym, maxIterations)._1
   }
 
-  /** The min-label + pointer-jumping distributed CC loop (HashMin with
-    * path compression), kept callable for the iteration-count and output
-    * differentials against [[starAssignments]]. Takes the SYMMETRIC
-    * deduped (id, nbr) list; returns (labels, passes run). */
-  private[pipeline] def minLabelAssignments(sym: DataFrame,
-      maxIterations: Int = 50): (DataFrame, Int) = {
-    var labels = sym.groupBy(col("id"))
-      .agg(least(min(col("nbr")), col("id")).alias("cluster_id"))
-      .transform(Materializer(_, eager = true))
-    var prevSum: Option[Long] = None
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIterations) {
-      val t0 = System.nanoTime()
-      val agg = labels.agg(sum(col("cluster_id")), count(lit(1))).head()
-      val sumNow = agg.getLong(0)
-      converged = prevSum.contains(sumNow)
-      prevSum = Some(sumNow)
-      if (!converged) {
-        // distinct column names sidestep self-join attribute ambiguity
-        // (labels shares lineage with sym through the checkpointed plan)
-        val nbrLabels = labels.select(col("id").alias("__nid"),
-          col("cluster_id").alias("__nlabel"))
-        val prop = sym.join(nbrLabels, col("nbr") === col("__nid"))
-          .select(col("id"), col("__nlabel").alias("cluster_id"))
-        val jump = labels.join(nbrLabels, col("cluster_id") === col("__nid"))
-          .select(col("id"), col("__nlabel").alias("cluster_id"))
-        val next = labels.union(prop).union(jump)
-          .groupBy(col("id"))
-          .agg(min(col("cluster_id")).alias("cluster_id"))
-          .transform(Materializer(_, eager = true))
-        labels = next
-        it += 1
-      }
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        println(f"[cc] pass $it sum=${agg.getLong(0)} n=${agg.getLong(1)} " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2fs converged=$converged")
-    }
-    (labels, it)
-  }
-
   /** Alternating large-star / small-star connected components (Kiveris,
     * Lattanzi, Mirrokni, Rastogi, Vassilvitskii 2014, "Connected
     * Components in MapReduce and Beyond") — the edge-CONTRACTING loop:
@@ -361,8 +320,7 @@ object Dedup {
     * potential; the fixpoint is exactly the star graph (child → component
     * minimum). Convergence is O(log n) rounds on adversarial long paths
     * (each round roughly squares the attachment reach), where plain
-    * HashMin is O(diameter); the jump-accelerated [[minLabelAssignments]]
-    * is also logarithmic — the measured comparison lives in SURVEY §19.
+    * HashMin is O(diameter).
     * Each round shuffles on uniform node keys; edge count never grows
     * above the input (emissions re-attach, never duplicate a
     * neighborhood), so a round costs what the input edge list costs.
@@ -396,7 +354,6 @@ object Dedup {
     var it = 0
     var converged = e.isEmpty
     while (!converged && it < maxIterations) {
-      val t0 = System.nanoTime()
       val next = smallStar(largeStar(e)).transform(Materializer(_, eager = true))
       // bit_xor, not sum: full-range 64-bit hashes overflow an ANSI sum,
       // and the edge set is distinct so xor is a faithful set signature
@@ -408,9 +365,6 @@ object Dedup {
       prev = Some(sig)
       e = next
       it += 1
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        println(f"[cc-star] round $it edges=${sig._1} " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2fs converged=$converged")
     }
     // fixpoint edges are (child → component-min) stars; roots label
     // themselves, and ids whose every input edge was a self-loop fall

@@ -17,9 +17,10 @@ import graft.tsdf.Resample
   * The reference library is batch-only (no readStream/watermark anywhere in
   * it — SURVEY §2.9); these operators extend the same semantics to streams
   * the Spark-native way: event-time windows + watermarks for resampling and
-  * grouped stats, and `flatMapGroupsWithState` for run-length state
-  * tracking. Each batch operator's bucket/aggregate expressions are reused,
-  * so a query can move batch→streaming without changing its semantics.
+  * grouped stats, and one keyed-state driver ([[keyedState]]) for
+  * per-series state. Each batch operator's bucket/aggregate expressions
+  * are reused, so a query can move batch→streaming without changing its
+  * semantics.
   */
 object StreamingTSDF {
 
@@ -38,6 +39,129 @@ object StreamingTSDF {
     seriesCols.zipWithIndex.map { case (c, i) =>
       split(col("series"), KeySep, -1).getItem(i).cast(schema(c).dataType).alias(c)
     }
+
+  // ------------------------------------------------ the keyed-state driver
+  /** The projection every per-series stateful operator reads: the packed
+    * series key, the event micros, the operator's `payload` columns and the
+    * raw event time. With `stateTtl` the watermark sits on that raw event
+    * time: it must be on a column that survives into the stateful operator. */
+  private def keyedRows(df: DataFrame, tsCol: String, seriesCols: Seq[String],
+      stateTtl: Option[String], payload: Column*): DataFrame = {
+    val projected = df.select(Seq(seriesKey(seriesCols).alias("series"),
+      unix_micros(col(tsCol)).alias("tsUs")) ++ payload :+
+      col(tsCol).alias("eventTime"): _*)
+    stateTtl.fold(projected)(ttl => projected.withWatermark("eventTime", ttl))
+  }
+
+  /** The one keyed-state driver: every stateful operator of this file with
+    * state of its own runs on it. Per key and micro-batch, `batch` maps
+    * (key, stored state, the key's rows) to the next state and the output
+    * rows; the driver owns the rest, once:
+    *   - STATE: a next state is stored; None leaves the store untouched;
+    *   - TIMEOUT: event time with `stateTtl`, none without;
+    *   - TTL CONTRACT: a stored state times out once the event-time
+    *     watermark passes its clock (`clockMs`) by the TTL. The clock is
+    *     floor-clamped to just above the current watermark, so a state
+    *     whose clock is already behind it still gets its TTL. A timed-out
+    *     key runs `flush` (by default nothing) and its state is removed: an
+    *     evicted key restarts from no state. This bounds state by the keys
+    *     ACTIVE within one TTL instead of every key ever seen.
+    * Each operator names its clock: the last folded event for the
+    * per-series folds ([[foldClockMs]]), the batch's largest event time for
+    * [[hllRegisters]] and [[firstOwners]]. */
+  private def keyedState[K, E, S: Encoder, O: Encoder](
+      grouped: KeyValueGroupedDataset[K, E], stateTtl: Option[String],
+      clockMs: (S, Seq[E]) => Long,
+      flush: (K, S) => Iterator[O] = (_: K, _: S) => Iterator.empty)(
+      batch: (K, Option[S], Seq[E]) => (Option[S], IterableOnce[O])): Dataset[O] =
+    grouped.flatMapGroupsWithState(OutputMode.Append(),
+      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
+      else GroupStateTimeout.NoTimeout()) {
+      (key: K, rows: Iterator[E], state: GroupState[S]) =>
+        if (state.hasTimedOut) {
+          val out = flush(key, state.get)
+          state.remove()
+          out
+        } else {
+          val seen = rows.toVector
+          val (next, out) = batch(key, state.getOption, seen)
+          next.foreach { s =>
+            state.update(s)
+            stateTtl.foreach(ttl => state.setTimeoutTimestamp(
+              math.max(clockMs(s, seen), state.getCurrentWatermarkMs() + 1), ttl))
+          }
+          out.iterator
+        }
+    }
+
+  // ------------------------------------------------ the per-series fold
+  /** A fold input row: its packed series key and event time (micros), plus
+    * a tie-breaker for operators whose order needs one. */
+  trait SeriesEvent { def series: String; def tsUs: Long; def tie: Long = 0L }
+  /** A fold state, stamped with the event time of the last row folded in;
+    * `isLate` is the late-row test against it. */
+  trait Stamped {
+    def lastTsUs: Long
+    def isLate(e: SeriesEvent): Boolean = e.tsUs < lastTsUs
+  }
+  /** Stamped with the last folded (ts, tie): a row at or behind it is late. */
+  trait TieStamped extends Stamped {
+    def lastTie: Long
+    override def isLate(e: SeriesEvent): Boolean =
+      e.tsUs < lastTsUs || (e.tsUs == lastTsUs && e.tie <= lastTie)
+  }
+  /** A state that folds every row in: none is late. */
+  trait KeepsLate extends Stamped {
+    override def isLate(e: SeriesEvent): Boolean = false
+  }
+
+  /** A fold's TTL clock: its last folded event. */
+  private def foldClockMs(s: Stamped, rows: Seq[_]): Long = s.lastTsUs / 1000
+
+  /** The per-row face of [[keyedState]]: one series' micro-batch folds in
+    * event-time order ((ts, tie) — `tie` is 0 unless the event carries one).
+    *   - LATE-ROW CONTRACT: a row late against the state
+    *     ([[Stamped.isLate]]: strictly older than the last folded
+    *     timestamp, unless the state says otherwise) is DROPPED — folding
+    *     it in would rewind per-series state that on-time history already
+    *     advanced; size the source watermark to the expected lateness if
+    *     late rows must count;
+    *   - `step` maps (key, state so far, row) to the next state and the
+    *     row's output rows; a series with no state yet gets None.
+    * Returns the state after the batch and the rows' outputs in order. */
+  private def foldBatch[E <: SeriesEvent, S <: Stamped, O](key: String,
+      stored: Option[S], rows: Seq[E])(
+      step: (String, Option[S], E) => (Option[S], IterableOnce[O])): (Option[S], Seq[O]) = {
+    var cur = stored
+    val out = rows.sortBy(e => (e.tsUs, e.tie)).flatMap { e =>
+      if (cur.exists(_.isLate(e))) None
+      else { val (next, o) = step(key, cur, e); cur = next; o }
+    }
+    (cur, out)
+  }
+
+  /** [[foldBatch]] on [[keyedState]] over projected `rows`, keyed by series,
+    * with the last folded event as the TTL clock. */
+  private def foldStream[E <: Product with SeriesEvent: TypeTag,
+      S <: Product with Stamped: TypeTag, O <: Product: TypeTag](
+      rows: DataFrame, stateTtl: Option[String],
+      flush: (String, S) => Iterator[O] = (_: String, _: S) => Iterator.empty)(
+      step: (String, Option[S], E) => (Option[S], IterableOnce[O])): Dataset[O] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    keyedState[String, E, S, O](rows.as[E].groupByKey(_.series), stateTtl,
+      foldClockMs, flush)(foldBatch(_, _, _)(step))
+  }
+
+  /** The per-series fold every stateful twin below runs on: [[foldStream]]
+    * over the [[keyedRows]] projection of `df`. */
+  private def seriesFold[E <: Product with SeriesEvent: TypeTag,
+      S <: Product with Stamped: TypeTag, O <: Product: TypeTag](
+      df: DataFrame, tsCol: String, seriesCols: Seq[String],
+      stateTtl: Option[String], payload: Column*)(
+      step: (String, Option[S], E) => (Option[S], IterableOnce[O])): Dataset[O] =
+    foldStream[E, S, O](keyedRows(df, tsCol, seriesCols, stateTtl, payload: _*),
+      stateTtl)(step)
 
   /** Streaming resample: tumbling event-time buckets with a watermark.
     * `func ∈ {floor, mean, min, max, ceil}` with the same argmin/argmax
@@ -104,8 +228,13 @@ object StreamingTSDF {
   // ------------------------------------------------ streaming as-of join
   // not private: encoder-generated code must be able to access these
   case class AsOfEvent(series: String, tsUs: Long, side: Int, vals: Seq[Double],
-      eventTime: java.sql.Timestamp)
-  case class LastRight(tsUs: Long, vals: Seq[Double])
+      eventTime: java.sql.Timestamp) extends SeriesEvent {
+    override def tie: Long = side // right (-1) before left (1) at equal ts
+  }
+  /** The latest right row. A left row is never late against it. */
+  case class LastRight(tsUs: Long, vals: Seq[Double]) extends KeepsLate {
+    def lastTsUs: Long = tsUs
+  }
   case class AsOfOut(series: String, tsUs: Long, rightTsUs: Option[Long],
       rightVals: Option[Seq[Double]])
 
@@ -113,73 +242,36 @@ object StreamingTSDF {
     * right-stream observation with `right.ts <= left.ts` in its series
     * (ties resolve right-before-left, like the batch union path's rec_ind).
     *
-    * Realization: the two streams union into one keyed stream; state per
-    * series is ONE record — the latest right row seen (constant size, no
-    * growing buffers). Rows within a micro-batch process in event-time
-    * order; a right row that arrives after a later-ts left row was already
-    * emitted does not rewrite the emitted answer — the documented
-    * append-mode trade-off vs the batch operator (use watermarked batch
-    * re-runs when exactness over late data matters).
+    * Realization: a [[foldStream]] over the union of the two streams; state
+    * per series is ONE record — the latest right row seen (constant size,
+    * no growing buffers), which keeps every row (no late drop). A right row
+    * that arrives after a later-ts left row was already emitted does not
+    * rewrite the emitted answer — the documented append-mode trade-off vs
+    * the batch operator (use watermarked batch re-runs when exactness over
+    * late data matters).
     *
     * v1 contract: right-side payload is its numeric metric columns.
     *
-    * `stateTtl` (optional): evict a series' state once the event-time
-    * watermark passes its last right observation by the TTL — bounds total
-    * state by the number of *active* series instead of all series ever
-    * seen. Left rows arriving after eviction join to null (the same answer
-    * a batch re-run over the retained window would give).
+    * `stateTtl` (optional): the TTL clock is the series' last right
+    * observation, so total state is bounded by the number of *active*
+    * series. Left rows arriving after eviction join to null (the same
+    * answer a batch re-run over the retained window would give).
     */
   def asofJoin(left: DataFrame, right: DataFrame, tsCol: String,
       seriesCols: Seq[String], rightMetricCols: Seq[String],
       stateTtl: Option[String] = None): DataFrame = {
-    val spark = left.sparkSession
-    import spark.implicits._
-    def keyed(df0: DataFrame, side: Int, vals: Seq[String]) = {
-      // the watermark must be declared on a column that SURVIVES into the
-      // stateful operator's input, so keep the raw timestamp alongside the
-      // derived micros and watermark it after the projection
-      val base = df0.select(
-        seriesKey(seriesCols).alias("series"),
-        unix_micros(col(tsCol)).alias("tsUs"),
-        lit(side).alias("side"),
-        array(vals.map(col(_).cast(DoubleType)): _*).alias("vals"),
-        col(tsCol).alias("eventTime"))
-      stateTtl.fold(base)(ttl => base.withWatermark("eventTime", ttl))
+    // each side is projected and watermarked BEFORE the union: Spark keeps
+    // the minimum of several watermarks, so one watermark after the union
+    // would evict state on another clock
+    def keyed(df: DataFrame, side: Int, vals: Seq[String]) =
+      keyedRows(df, tsCol, seriesCols, stateTtl, lit(side).alias("side"),
+        array(vals.map(col(_).cast(DoubleType)): _*).alias("vals"))
+    val out = foldStream[AsOfEvent, LastRight, AsOfOut](keyed(left, 1, Seq.empty)
+        .unionByName(keyed(right, -1, rightMetricCols)), stateTtl) { (key, cur, e) =>
+      if (e.side > 0) (cur, Some(AsOfOut(key, e.tsUs, cur.map(_.tsUs), cur.map(_.vals))))
+      else if (cur.exists(_.tsUs > e.tsUs)) (cur, None)
+      else (Some(LastRight(e.tsUs, e.vals)), None)
     }
-    val unioned = keyed(left, 1, Seq.empty)
-      .unionByName(keyed(right, -1, rightMetricCols))
-      .as[AsOfEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = unioned
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[AsOfEvent], state: GroupState[LastRight]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // right (-1) before left (1) at equal ts — inclusive as-of
-            val sorted = rows.toSeq.sortBy(e => (e.tsUs, e.side))
-            var last = state.getOption.orNull
-            val outRows = Seq.newBuilder[AsOfOut]
-            sorted.foreach { e =>
-              if (e.side < 0) {
-                if (last == null || e.tsUs >= last.tsUs) last = LastRight(e.tsUs, e.vals)
-              } else {
-                outRows += AsOfOut(key, e.tsUs,
-                  Option(last).map(_.tsUs), Option(last).map(_.vals))
-              }
-            }
-            if (last != null) {
-              state.update(last)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(last.tsUs / 1000, state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.result().iterator
-          }
-      }
     val metricsOut = rightMetricCols.zipWithIndex.map { case (m, i) =>
       element_at(col("rightVals"), i + 1).alias(s"right_$m")
     }
@@ -216,78 +308,7 @@ object StreamingTSDF {
           rightMetricCols.map(m => col(s"r.$m").alias(s"right_$m"))): _*)
   }
 
-  // ------------------------------------------------ the per-series fold
-  /** A fold input row: its packed series key and event time (micros), plus
-    * a tie-breaker for operators whose order needs one. */
-  trait SeriesEvent { def series: String; def tsUs: Long; def tie: Long = 0L }
-  /** A fold state, stamped with the event time of the last row folded in;
-    * `isLate` is the late-row test against it. */
-  trait Stamped {
-    def lastTsUs: Long
-    def isLate(e: SeriesEvent): Boolean = e.tsUs < lastTsUs
-  }
-
-  /** The one per-series stream fold every stateful twin below runs on. It
-    * owns the scaffold once: project (series key, event micros, the
-    * operator's `payload` columns, raw event time), key, timeout, and per
-    * group and micro-batch:
-    *   - rows fold in event-time order ((ts, tie) — `tie` is 0 unless the
-    *     event carries one);
-    *   - LATE-ROW CONTRACT: a row late against the state
-    *     ([[Stamped.isLate]]: strictly older than the last folded
-    *     timestamp, unless the state says otherwise) is DROPPED — folding
-    *     it in would rewind per-series state that on-time history already
-    *     advanced; size the source watermark to the expected lateness if
-    *     late rows must count;
-    *   - `step` maps (key, state so far, row) to the next state and the
-    *     row's output rows; a series with no state yet gets None;
-    *   - TTL CONTRACT: with `stateTtl`, the event-time watermark is set on
-    *     the raw event time (it must sit on a column that survives into the
-    *     stateful operator) and a series' state is evicted once the
-    *     watermark passes its last folded row by the TTL — bounding state
-    *     by the ACTIVE series. An evicted series restarts from no state.
-    * Operators outside this contract stay hand-written: [[asofJoin]] and
-    * [[disjointIntervals]] keep late rows, [[stateIntervalRuns]] flushes
-    * on timeout, [[patternDfa]] and [[transitionDeltas]] emit one delta per
-    * micro-batch rather than per row. */
-  private def seriesFold[E <: Product with SeriesEvent: TypeTag,
-      S <: Product with Stamped: TypeTag, O <: Product: TypeTag](
-      df: DataFrame, tsCol: String, seriesCols: Seq[String],
-      stateTtl: Option[String], payload: Column*)(
-      step: (String, Option[S], E) => (Option[S], IterableOnce[O]))
-      : Dataset[O] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(Seq(seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs")) ++ payload :+
-      col(tsCol).alias("eventTime"): _*)
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    stateTtl.fold(projected)(ttl => projected.withWatermark("eventTime", ttl))
-      .as[E]
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[E], state: GroupState[S]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var cur = state.getOption
-            val out = rows.toSeq.sortBy(e => (e.tsUs, e.tie)).flatMap { e =>
-              if (cur.exists(_.isLate(e))) None
-              else { val (next, o) = step(key, cur, e); cur = next; o }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(s.lastTsUs / 1000, state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            out.iterator
-          }
-      }
-  }
-
+  // ------------------------------------------------ per-series fold twins
   /** A fold's (series, tsUs, value, outputs...) rows as the typed series
     * columns, the event timestamp, the value and the named outputs. */
   private def valueRows(out: Dataset[_], df: DataFrame, tsCol: String,
@@ -342,8 +363,7 @@ object StreamingTSDF {
     * recursion shared with [[graft.tsdf.Stats.emaExact]]. This is the
     * EXACT infinite-horizon recursion; the batch `ema` operator
     * approximates it with a 5-term lag window (reference semantics), so the
-    * two converge as the window grows but are not bit-equal by design.
-    * Optional `stateTtl` evicts idle series. */
+    * two converge as the window grows but are not bit-equal by design. */
   def ema(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, alpha: Double,
       stateTtl: Option[String] = None): DataFrame =
@@ -450,7 +470,7 @@ object StreamingTSDF {
   /** Streaming Holt double-exponential smoothing: the level/trend recursion
     * of [[graft.functions.Recurrence.holt]] carried as two doubles of
     * per-series state — bit-identical to the batch window aggregate by
-    * construction. Optional `stateTtl` evicts idle series. */
+    * construction. */
   def holt(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, alpha: Double, beta: Double,
       stateTtl: Option[String] = None): DataFrame =
@@ -466,7 +486,7 @@ object StreamingTSDF {
   /** Streaming 1-D local-level Kalman filter: the predict/update recursion
     * of [[graft.functions.Recurrence.kalman]] carried as three doubles of
     * per-series state — bit-identical to the batch window aggregate by
-    * construction. Optional `stateTtl` evicts idle series. */
+    * construction. */
   def kalmanLevel(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, q: Double, r: Double, p0: Option[Double] = None,
       stateTtl: Option[String] = None): DataFrame =
@@ -482,7 +502,7 @@ object StreamingTSDF {
     * series — bounded state (window−1 doubles per series), the streaming
     * twin of [[graft.tsdf.Stats.rollingMedian]] (same lower-median rank on
     * the same frame multiset, so bit-identical on the same data; asserted
-    * differentially). Optional `stateTtl` evicts idle series. */
+    * differentially). */
   def rollingMedian(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, window: Int,
       stateTtl: Option[String] = None): DataFrame = {
@@ -533,9 +553,7 @@ object StreamingTSDF {
     * reflection identity S_t = P_t − min(0, min_j P_j) turns into the
     * clamped CUSUM recursion with no recomputation. Exact integer
     * arithmetic end to end, so the stream is bit-identical to the batch
-    * window plan on the same data (asserted differentially). Optional
-    * `stateTtl` evicts idle series (an evicted series restarts its chart
-    * from zero — TTL bounds state by design). */
+    * window plan on the same data (asserted differentially). */
   def cusumControl(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, target: Long, slack: Long, threshold: Long,
       stateTtl: Option[String] = None): DataFrame = {
@@ -690,29 +708,17 @@ object StreamingTSDF {
     val out = (if (stateTtl.isEmpty)
       partitionCombine(events)((e: HllEvent) => (e.series, e.bucket), 0)(
         (r, e) => math.max(r, e.rho)) { case ((s, b), r) => (s, b, r) }
-    else events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (key: String, rows: Iterator[HllEvent], state: GroupState[HllRegState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val regs = state.getOption.map(_.regs).getOrElse(new Array[Int](m))
-            val changed = scala.collection.mutable.SortedSet.empty[Int]
-            var maxTsMs = Long.MinValue
-            rows.foreach { e =>
-              val b = e.bucket.toInt
-              if (e.rho > regs(b)) { regs(b) = e.rho; changed += b }
-              maxTsMs = math.max(maxTsMs, e.eventTime.getTime)
-            }
-            state.update(HllRegState(regs))
-            stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-              math.max(maxTsMs, state.getCurrentWatermarkMs() + 1), ttl))
-            changed.iterator.map(b => (key, b.toLong, regs(b)))
-          }
-      })
+    else keyedState[String, HllEvent, HllRegState, (String, Long, Int)](
+        events.groupByKey(_.series), stateTtl,
+        (_, rows) => rows.map(_.eventTime.getTime).max) { (key, stored, rows) =>
+      val regs = stored.fold(new Array[Int](m))(_.regs)
+      val changed = scala.collection.mutable.SortedSet.empty[Int]
+      rows.foreach { e =>
+        val b = e.bucket.toInt
+        if (e.rho > regs(b)) { regs(b) = e.rho; changed += b }
+      }
+      (Some(HllRegState(regs)), changed.iterator.map(b => (key, b.toLong, regs(b))))
+    })
       .toDF("series", "bucket", "register")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
       col("bucket"), col("register")): _*)
@@ -1008,15 +1014,12 @@ object StreamingTSDF {
     * contract class). Ids must be castable to long.
     *
     * State lifecycle: with the defaults, ownership is remembered FOREVER
-    * (NoTimeout) — state grows with the distinct-fingerprint universe,
-    * the correct gate for a bounded corpus build. For unbounded rolling
-    * ingestion pass `stateTtl` + `eventTimeCol` (the [[asofJoin]]
-    * convention): a fingerprint's ownership is evicted once the
-    * event-time watermark passes its LAST sighting by the TTL — the
-    * corpus-rotation horizon — after which the next arrival re-claims it
-    * as novel (the answer a batch re-run over the retained window would
-    * give). Total state is then bounded by the fingerprints ACTIVE
-    * within one TTL horizon instead of all fingerprints ever seen. */
+    * — state grows with the distinct-fingerprint universe, the correct
+    * gate for a bounded corpus build. For unbounded rolling ingestion
+    * pass `stateTtl` + `eventTimeCol`: the TTL (the corpus-rotation
+    * horizon) runs from a fingerprint's LAST sighting, and the next
+    * arrival after its eviction re-claims it as novel (the answer a
+    * batch re-run over the retained window would give). */
   def noveltyOwnership(df: DataFrame, textCol: String, idCol: String,
       k: Int = 5, w: Int = 4, stateTtl: Option[String] = None,
       eventTimeCol: Option[String] = None): DataFrame = {
@@ -1047,33 +1050,15 @@ object StreamingTSDF {
     * arrival wins and ties within a micro-batch break to the minimum id.
     * Every arriving (key, doc) is emitted once with its `novel` flag. With
     * `stateTtl` (the rows then carry a watermarked event time, `eventMs`)
-    * ownership is forgotten once the watermark passes the key's LAST
-    * sighting by the TTL: the eviction clock restarts at each sighting,
-    * floor-clamped above the current watermark (the [[asofJoin]]
-    * convention). */
+    * the TTL clock is the key's LAST sighting: it restarts at each one. */
   private def firstOwners[K, E, O: Encoder](grouped: KeyValueGroupedDataset[K, E],
       stateTtl: Option[String])(doc: E => Long, eventMs: E => Long)(
       out: (K, Long, Boolean) => O): Dataset[O] =
-    grouped.flatMapGroupsWithState(OutputMode.Append(),
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()) {
-      (key: K, rows: Iterator[E], state: GroupState[Long]) =>
-        if (state.hasTimedOut) {
-          state.remove() // ownership forgotten past the rotation horizon
-          Iterator.empty
-        } else {
-          val batch = rows.toVector
-          if (batch.isEmpty) Iterator.empty
-          else {
-            val docs = batch.map(doc).toSet
-            val owner =
-              if (state.exists) state.get
-              else { val m = docs.min; state.update(m); m }
-            stateTtl.foreach(ttl => state.setTimeoutTimestamp(math.max(
-              batch.map(eventMs).max, state.getCurrentWatermarkMs() + 1), ttl))
-            docs.iterator.map(d => out(key, d, d == owner))
-          }
-        }
+    keyedState[K, E, Long, O](grouped, stateTtl, (_, rows) => rows.map(eventMs).max) {
+      (key, stored, rows) =>
+        val docs = rows.map(doc).toSet
+        val owner = stored.getOrElse(docs.min)
+        (Some(owner), docs.iterator.map(d => out(key, d, d == owner)))
     }(Encoders.scalaLong, implicitly[Encoder[O]])
 
   case class MediaFpRow(modality: String, fp: String, nUnits: Long,
@@ -1093,18 +1078,10 @@ object StreamingTSDF {
     * as [[noveltyOwnership]]; output (modality, fp, n_units, idCol,
     * novel).
     *
-    * State lifecycle: with the defaults ownership is remembered FOREVER
-    * (NoTimeout) — state grows with the distinct-content universe, the
-    * correct gate for a bounded corpus build. For unbounded rolling
-    * media ingestion pass `stateTtl` + `eventTimeCol` (a column of
-    * `fps`, carried through the decode map via
-    * [[graft.pipeline.Multimodal.mediaFingerprints]]'s carryCols): a
-    * group's ownership is evicted once the event-time watermark passes
-    * its LAST sighting by the TTL — the corpus-rotation horizon — after
-    * which the next arrival re-claims it as novel. Total state is then
-    * bounded by the content groups ACTIVE within one TTL horizon
-    * instead of all groups ever seen ([[noveltyOwnership]]'s TTL arm,
-    * generalized). */
+    * State lifecycle: as [[noveltyOwnership]]'s, per content group. For
+    * rolling media ingestion `eventTimeCol` is a column of `fps`, carried
+    * through the decode map via
+    * [[graft.pipeline.Multimodal.mediaFingerprints]]'s carryCols. */
   def fingerprintOwnership(fps: DataFrame, idCol: String,
       stateTtl: Option[String] = None,
       eventTimeCol: Option[String] = None): DataFrame = {
@@ -1303,8 +1280,10 @@ object StreamingTSDF {
   }
 
   // ----------------------------------------------- streaming pattern DFA
-  case class DfaEvent(series: String, tsUs: Long, tie: Long, sym: String)
+  case class DfaEvent(series: String, tsUs: Long, override val tie: Long,
+      sym: String) extends SeriesEvent
   case class DfaState(state: Int, lastTsUs: Long, lastTie: Long)
+    extends TieStamped
 
   /** Streaming CEP: run a caller-supplied DFA over each series' event
     * symbols in (ts, tie) order and emit per-micro-batch DELTAS of
@@ -1322,17 +1301,15 @@ object StreamingTSDF {
     * DFA is the standard candidate-set construction of a regex; supply a
     * reluctant-quantifier pattern to the batch twin/oracle (the
     * q_stream_seq_pattern differential pins DFA == lazy-regex counting on
-    * random traces). Unmapped events become `defaultSym`. Late rows
-    * (behind the series high-water mark) are dropped, the
-    * [[scd2Changelog]] convention; within a batch rows are sorted by
-    * (ts, tie). */
+    * random traces). Unmapped events become `defaultSym`. A row at or
+    * behind the series' last (ts, tie) is late ([[TieStamped]]). */
   def patternDfa(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       eventCol: String, alphabet: Map[String, String],
       transitions: Map[(Int, String), (Int, Boolean)],
       defaultSym: String = "o", tieCol: String = ""): DataFrame = {
     require(transitions.nonEmpty, "need a transition table")
     // Totality is validated HERE, on the driver, before the stream starts:
-    // an unmapped (state, symbol) discovered inside flatMapGroupsWithState
+    // an unmapped (state, symbol) discovered inside the stateful operator
     // would kill the query mid-flight at runtime instead of failing fast.
     // Every symbol an event can render to is alphabet.values ++ defaultSym;
     // every reachable state is 0 plus the transition targets.
@@ -1353,44 +1330,26 @@ object StreamingTSDF {
         when(col(eventCol) === k, lit(v)).otherwise(acc)
       }
     val tie = if (tieCol.isEmpty) lit(0L) else col(tieCol).cast(LongType)
-    val events = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"), tie.alias("tie"),
-      symOf.alias("sym")).as[DfaEvent]
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[DfaEvent], state: GroupState[DfaState]) =>
-          val sorted = rows.toSeq.sortBy(e => (e.tsUs, e.tie))
-          var st = state.getOption.getOrElse(DfaState(0, Long.MinValue, Long.MinValue))
-          var consumed = 0L
-          var matches = 0L
-          sorted.foreach { e =>
-            val late = e.tsUs < st.lastTsUs ||
-              (e.tsUs == st.lastTsUs && e.tie <= st.lastTie)
-            if (!late) {
-              val (next, hit) = transitions.getOrElse((st.state, e.sym),
-                sys.error(s"transition table not total: state ${st.state} " +
-                  s"symbol '${e.sym}'"))
-              st = DfaState(next, e.tsUs, e.tie)
-              consumed += 1
-              if (hit) matches += 1
-            }
-          }
-          state.update(st)
-          if (consumed > 0 || matches > 0)
-            Iterator.single((key, consumed, matches))
-          else Iterator.empty
+    val out = keyedState[String, DfaEvent, DfaState, (String, Long, Long)](
+        keyedRows(df, tsCol, seriesCols, None, tie.alias("tie"), symOf.alias("sym"))
+          .as[DfaEvent].groupByKey(_.series), None, foldClockMs) { (key, stored, rows) =>
+      val (next, hits) = foldBatch(key, stored, rows) { (_, cur, e) =>
+        val from = cur.fold(0)(_.state)
+        val (to, hit) = transitions.getOrElse((from, e.sym),
+          sys.error(s"transition table not total: state $from symbol '${e.sym}'"))
+        (Some(DfaState(to, e.tsUs, e.tie)), Some(hit))
       }
-      .toDF("series", "trace_len", "n_matches")
+      (next, Option.when(hits.nonEmpty)((key, hits.size.toLong, hits.count(identity).toLong)))
+    }.toDF("series", "trace_len", "n_matches")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
       col("trace_len"), col("n_matches")): _*)
   }
 
   // -------------------------------------------- streaming transition steps
-  case class StepEvent(series: String, tsUs: Long, tie: Long, typ: String)
+  case class StepEvent(series: String, tsUs: Long, override val tie: Long,
+      typ: String) extends SeriesEvent
   case class StepState(lastTsUs: Long, lastTie: Long, lastType: String)
+    extends TieStamped
 
   /** Streaming Markov transition feed: per micro-batch, the exact COUNT
     * DELTAS of adjacent (from → to) event-type steps per series in
@@ -1400,44 +1359,24 @@ object StreamingTSDF {
     * the exact batch [[graft.pipeline.Analytics.transitionMatrix]] counts
     * of everything ingested (adjacency is local, so counts are additive
     * once the boundary step is owned by the arriving batch). State is
-    * ONE (ts, tie, type) triple per series; late rows (at or behind the
-    * series high-water mark) drop — the [[scd2Changelog]] convention;
-    * within a batch rows sort by (ts, tie). */
+    * ONE (ts, tie, type) triple per series; a row at or behind the
+    * series' last (ts, tie) is late ([[TieStamped]]). */
   def transitionDeltas(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       typeCol: String, tieCol: String = ""): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val tie = if (tieCol.isEmpty) lit(0L) else col(tieCol).cast(LongType)
-    val events = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"), tie.alias("tie"),
-      col(typeCol).cast(StringType).alias("typ")).as[StepEvent]
-    events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[StepEvent],
-            state: GroupState[StepState]) =>
-          val sorted = rows.toSeq.sortBy(e => (e.tsUs, e.tie))
-          var st = state.getOption
-            .getOrElse(StepState(Long.MinValue, Long.MinValue, null))
-          val acc = scala.collection.mutable.SortedMap
-            .empty[(String, String), Long]
-          sorted.foreach { e =>
-            val late = e.tsUs < st.lastTsUs ||
-              (e.tsUs == st.lastTsUs && e.tie <= st.lastTie)
-            if (!late) {
-              if (st.lastType != null) {
-                val k = (st.lastType, e.typ)
-                acc(k) = acc.getOrElse(k, 0L) + 1L
-              }
-              st = StepState(e.tsUs, e.tie, e.typ)
-            }
-          }
-          state.update(st)
-          acc.iterator.map { case ((f, t), n) => (f, t, n) }
+    keyedState[String, StepEvent, StepState, (String, String, Long)](
+        keyedRows(df, tsCol, seriesCols, None, tie.alias("tie"),
+          col(typeCol).cast(StringType).alias("typ")).as[StepEvent].groupByKey(_.series),
+        None, foldClockMs) { (key, stored, rows) =>
+      val (next, steps) = foldBatch(key, stored, rows) { (_, cur, e) =>
+        (Some(StepState(e.tsUs, e.tie, e.typ)),
+          cur.flatMap(c => Option(c.lastType)).map((_, e.typ)))
       }
-      .toDF("from_type", "to_type", "n")
+      (next, steps.groupMapReduce(identity)(_ => 1L)(_ + _).toSeq.sorted
+        .map { case ((f, t), n) => (f, t, n) })
+    }.toDF("from_type", "to_type", "n")
   }
 
   // ------------------------------------------------ streaming interpolation
@@ -1465,9 +1404,8 @@ object StreamingTSDF {
     * interpolate pipeline this operator equals row-for-row (asserted
     * differentially on random series in the spec).
     *
-    * `stateTtl` evicts idle series once the watermark passes them (a later
-    * observation then starts a fresh segment instead of filling across the
-    * idle gap).
+    * An evicted series starts a fresh segment instead of filling across
+    * the idle gap.
     */
   def interpolate(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, freq: String, method: String = "ffill",
@@ -1505,74 +1443,43 @@ object StreamingTSDF {
 
   // ------------------------------------------------ stateful run tracking
   case class ObsEvent(series: String, tsUs: Long, metrics: Seq[Double],
-      eventTime: java.sql.Timestamp)
+      eventTime: java.sql.Timestamp) extends SeriesEvent
+  /** The open run. It keeps late rows (see below). */
   case class RunState(startUs: Long, lastUs: Long, metrics: Seq[Double],
-      observations: Int)
+      observations: Int) extends KeepsLate {
+    def lastTsUs: Long = lastUs
+  }
 
   /** Streaming analog of `extractStateIntervals` (equality state): per
     * series, maximal runs of consecutive observations with identical metric
     * vectors close and emit [start_ts, end_ts] when the state changes.
     *
-    * State per key is one open run (constant size). Rows inside a micro
-    * batch are sorted by event time; LATE rows arriving after their run
-    * closed start a new run rather than rewriting history — the documented
-    * streaming-consistency trade-off vs the batch operator.
+    * State per key is one open run (constant size). LATE rows arriving
+    * after their run closed start a new run rather than rewriting history
+    * — the documented streaming-consistency trade-off vs the batch
+    * operator.
     *
-    * `stateTtl` (optional): once the watermark passes the run's last
-    * observation by the TTL, the open run is emitted as closed and its
-    * state evicted — so idle series both flush their final run (which
-    * otherwise only a state *change* emits) and stop occupying memory.
+    * `stateTtl` (optional): a timed-out series emits its open run as
+    * closed — so idle series both flush their final run (which otherwise
+    * only a state *change* emits) and stop occupying memory.
     */
   def stateIntervalRuns(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       metricCols: Seq[String], stateTtl: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      array(metricCols.map(col(_).cast(DoubleType)): _*).alias("metrics"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[ObsEvent]
-
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[ObsEvent], state: GroupState[RunState]) =>
-          if (state.hasTimedOut) {
-            val cur = state.get
-            state.remove()
-            if (cur.observations >= 2) Iterator((key, cur.startUs, cur.lastUs))
-            else Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val closed = Seq.newBuilder[(String, Long, Long)]
-            sorted.foreach { e =>
-              if (cur == null) cur = RunState(e.tsUs, e.tsUs, e.metrics, 1)
-              else if (cur.metrics == e.metrics)
-                cur = cur.copy(lastUs = e.tsUs, observations = cur.observations + 1)
-              else {
-                if (cur.observations >= 2) closed += ((key, cur.startUs, cur.lastUs))
-                cur = RunState(e.tsUs, e.tsUs, e.metrics, 1)
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastUs / 1000, state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            closed.result().iterator
-          }
+    def closed(key: String, r: RunState) =
+      Option.when(r.observations >= 2)((key, r.startUs, r.lastUs))
+    foldStream[ObsEvent, RunState, (String, Long, Long)](
+        keyedRows(df, tsCol, seriesCols, stateTtl,
+          array(metricCols.map(col(_).cast(DoubleType)): _*).alias("metrics")),
+        stateTtl, flush = closed(_, _).iterator) { (key, cur, e) =>
+      cur match {
+        case Some(r) if r.metrics == e.metrics =>
+          (Some(r.copy(lastUs = e.tsUs, observations = r.observations + 1)), None)
+        case _ => (Some(RunState(e.tsUs, e.tsUs, e.metrics, 1)), cur.flatMap(closed(key, _)))
       }
-      .toDF("series", "start_us", "end_us")
-    out
-      .withColumn("start_ts", timestamp_micros(col("start_us")))
-      .withColumn("end_ts", timestamp_micros(col("end_us")))
-      .select(typedSeriesCols(df.schema, seriesCols) :+ col("start_ts") :+ col("end_ts"): _*)
+    }.toDF("series", "start_us", "end_us")
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        timestamp_micros(col("start_us")).alias("start_ts"),
+        timestamp_micros(col("end_us")).alias("end_ts")): _*)
   }
 
   case class ThreshState(lastValue: Double, lastTsUs: Long) extends Stamped
@@ -1674,10 +1581,7 @@ object StreamingTSDF {
   case class Scd2Event(series: String, tsUs: Long, override val tie: Long,
       attrs: Seq[String], eventTime: java.sql.Timestamp) extends SeriesEvent
   case class Scd2State(attrs: Seq[String], lastTsUs: Long, lastTie: Long)
-    extends Stamped {
-    override def isLate(e: SeriesEvent): Boolean =
-      e.tsUs < lastTsUs || (e.tsUs == lastTsUs && e.tie <= lastTie)
-  }
+    extends TieStamped
 
   /** Streaming SCD2 CHANGELOG — the dimension-maintenance face of
     * [[graft.pipeline.Cdc.scd2FromLog]]: per id, emit a row whenever the
@@ -1686,10 +1590,9 @@ object StreamingTSDF {
     * exactly the batch operator's collapsed change set (its `valid_from`
     * rows) — `valid_to` is a derivable view (lead over the changelog), so
     * the append-only sink stays monotone and never rewrites history.
-    * State per id is ONE attribute tuple (constant size; `stateTtl`
-    * evicts ids idle past the watermark). A row at or behind the id's last
-    * (ts, tie) is late and skipped. `tieCol` totalizes the order on
-    * duplicate timestamps like the batch tieCols. */
+    * State per id is ONE attribute tuple (constant size). A row at or
+    * behind the id's last (ts, tie) is late ([[TieStamped]]). `tieCol`
+    * totalizes the order on duplicate timestamps like the batch tieCols. */
   def scd2Changelog(df: DataFrame, idCols: Seq[String], tsCol: String,
       attrCols: Seq[String], tieCol: String,
       stateTtl: Option[String] = None): DataFrame = {
@@ -1750,31 +1653,23 @@ object StreamingTSDF {
       unix_micros(col(endCol)).alias("eUs"),
       array(metricCols.map(m => col(m).cast(DoubleType)): _*)
         .alias("values")).as[IvEvent]
-
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[IvEvent], state: GroupState[IvState]) =>
-          val batch = rows.map(iv => DisjointSweep.Interval(iv.sUs, iv.eUs,
-            iv.values.map(_.getOrElse(null)).toArray[Any])).toSeq
-          if (batch.isEmpty) Iterator.empty
-          else {
-            val ords = IndexedSeq.fill(k)(DisjointSweep.order(DoubleType))
-            val st = state.getOption.getOrElse(IvState(0L, Seq.empty))
-            val grid = DisjointSweep.fold(st.segs.map(g => DisjointSweep.Seg(g.s, g.e,
-              g.wins.map(_.map(w => DisjointSweep.Win(w.ws, w.we, w.v)).orNull)
-                .toArray)).toIndexedSeq, batch, ords)
-            val rev = st.rev + 1
-            state.update(IvState(rev, grid.map(g => IvSeg(g.s, g.e,
-              g.wins.toSeq.map(w => Option(w).map(x =>
-                IvWin(x.ws, x.we, x.v.asInstanceOf[Double])))))))
-            DisjointSweep.coalesce(grid, ords).iterator.map { case (s, e, vs) =>
-              (key, rev, s, e, vs.toSeq.map(v => Option(v).map(_.asInstanceOf[Double])))
-            }
-          }
-      }
-      .toDF("series", "rev", "sUs", "eUs", "values")
+    val out = keyedState[String, IvEvent, IvState,
+        (String, Long, Long, Long, Seq[Option[Double]])](
+        events.groupByKey(_.series), None, (_, _) => 0L /* no TTL */) {
+      (key, stored, rows) =>
+        val ords = IndexedSeq.fill(k)(DisjointSweep.order(DoubleType))
+        val st = stored.getOrElse(IvState(0L, Seq.empty))
+        val grid = DisjointSweep.fold(st.segs.map(g => DisjointSweep.Seg(g.s, g.e,
+          g.wins.map(_.map(w => DisjointSweep.Win(w.ws, w.we, w.v)).orNull)
+            .toArray)).toIndexedSeq, rows.map(iv => DisjointSweep.Interval(iv.sUs,
+          iv.eUs, iv.values.map(_.getOrElse(null)).toArray[Any])), ords)
+        val rev = st.rev + 1
+        (Some(IvState(rev, grid.map(g => IvSeg(g.s, g.e, g.wins.toSeq.map(w =>
+          Option(w).map(x => IvWin(x.ws, x.we, x.v.asInstanceOf[Double]))))))),
+          DisjointSweep.coalesce(grid, ords).iterator.map { case (s, e, vs) =>
+            (key, rev, s, e, vs.toSeq.map(v => Option(v).map(_.asInstanceOf[Double])))
+          })
+    }.toDF("series", "rev", "sUs", "eUs", "values")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(col("rev"),
       col("sUs").alias("start_us"), col("eUs").alias("end_us")) ++
       metricCols.zipWithIndex.map { case (m, i) =>

@@ -986,8 +986,8 @@ class PipelineUnitSpec extends SparkTestBase {
     assert(dist == expected)
   }
 
-  test("starAssignments == union-find == minLabelAssignments on randomized " +
-      "graphs, and converges logarithmically on a 10k-node path graph") {
+  test("starAssignments == union-find on randomized graphs, and converges " +
+      "logarithmically on a 10k-node path graph") {
     import spark.implicits._
     def sym(edges: Seq[(Long, Long)]) =
       edges.toDF("a", "b").select(col("a").alias("id"), col("b").alias("nbr"))
@@ -1008,11 +1008,8 @@ class PipelineUnitSpec extends SparkTestBase {
       val s = sym(edges)
       val uf = ufLabels(edges)
       val (star, _) = Dedup.starAssignments(s)
-      val (ml, _) = Dedup.minLabelAssignments(s)
       assert(star.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == uf,
         s"star vs union-find, trial $trial")
-      assert(ml.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == uf,
-        s"min-label vs union-find, trial $trial")
     }
     // the adversarial diameter stressor: a 10k-node path (0-1-2-…-9999)
     // must label everything 0 — and in O(log n) rounds, not O(n)
@@ -1024,18 +1021,7 @@ class PipelineUnitSpec extends SparkTestBase {
     assert(starP.count() == 10000L)
     val starSec = (System.nanoTime() - t0) / 1e9
     assert(starRounds <= 20, s"star rounds on 10k path: $starRounds")
-    // the jump-accelerated min-label loop on the same stressor — the
-    // iteration-count comparison SURVEY §19 records (both are logarithmic;
-    // plain HashMin without the jump step would need ~5000 passes)
-    val t1 = System.nanoTime()
-    val (mlP, mlRounds) = Dedup.minLabelAssignments(sym(path),
-      maxIterations = 100)
-    assert(mlP.filter(col("cluster_id") =!= 0L).isEmpty)
-    assert(mlP.count() == 10000L)
-    val mlSec = (System.nanoTime() - t1) / 1e9
-    assert(mlRounds <= 25, s"min-label rounds on 10k path: $mlRounds")
-    info(f"10k path: star $starRounds rounds ($starSec%.1f s), " +
-      f"min-label+jump $mlRounds passes ($mlSec%.1f s)")
+    info(f"10k path: star $starRounds rounds ($starSec%.1f s)")
   }
 
   test("Materializer modes: reliable / parquet / none reproduce the " +

@@ -301,6 +301,84 @@ class StreamingResumeSpec extends SparkTestBase {
     }
   }
 
+  test("streaming asofJoin state round-trips a checkpoint restart (file " +
+      "source): left rows equal the batch as-of join") {
+    val spark2 = spark
+    import spark2.implicits._
+    val rows = randomSeries(new scala.util.Random(131))
+    // one source, two sides: even values are left rows, odd ones quotes
+    def left(df: DataFrame) =
+      df.filter(col("value") % 2 === 0).select(col("user_id"), col("ts"))
+    def right(df: DataFrame) = df.filter(col("value") % 2 =!= 0)
+    val streamed = runRestartStream(rows, 3, df => StreamingTSDF.asofJoin(
+      left(df), right(df), "ts", key, Seq("value")))
+    val all = rows.toDF("user_id", "ts", "value")
+    val batch = TSDF(left(all), "ts", key)
+      .asofJoin(TSDF(right(all), "ts", key)).df
+      .select(col("user_id"), col("ts"), col("right_ts"), col("right_value"))
+    assert(streamed.filter(col("right_ts").isNotNull).count() > 0)
+    assertDfEquality(streamed, batch)
+  }
+
+  test("streaming transitionDeltas state round-trips a checkpoint restart " +
+      "(file source): the summed sink equals the batch transition counts") {
+    val spark2 = spark
+    import spark2.implicits._
+    val rows = randomSeries(new scala.util.Random(132))
+    val rolled = runRestartStream(rows, 3, df => StreamingTSDF.transitionDeltas(
+        withAttr(df), "ts", key, "event_type"), lateRows = true)
+      .groupBy(col("from_type"), col("to_type"))
+      .agg(sum(col("n")).alias("n"))
+    val batch = graft.pipeline.Analytics.transitionMatrix(
+        withAttr(rows.toDF("user_id", "ts", "value")), "ts", key, "event_type")
+      .select(col("from_type"), col("to_type"), col("n"))
+    assertDfEquality(rolled, batch)
+  }
+
+  test("streaming patternDfa state round-trips a checkpoint restart (file " +
+      "source): per-series sums equal lazy-regex non-overlapping counts") {
+    val spark2 = spark
+    import spark2.implicits._
+    // the DFA of v[vo]*?cp, as in the single-query differential
+    val dfa: Map[(Int, String), (Int, Boolean)] = Map(
+      (0, "v") -> ((1, false)), (0, "o") -> ((0, false)),
+      (0, "c") -> ((0, false)), (0, "p") -> ((0, false)),
+      (1, "v") -> ((1, false)), (1, "o") -> ((1, false)),
+      (1, "c") -> ((2, false)), (1, "p") -> ((0, false)),
+      (2, "v") -> ((1, false)), (2, "o") -> ((0, false)),
+      (2, "c") -> ((0, false)), (2, "p") -> ((0, true)))
+    val types = Vector("view", "other", "click", "purchase", "view", "click")
+    val rnd = new scala.util.Random(133)
+    // long traces so every series matches several times
+    val rows = Seq("u1", "u2", "u3").flatMap { s =>
+      rnd.shuffle((1 until 399).toList).take(150).sorted
+        .map(o => (s, at(o), rnd.nextInt(types.size).toDouble))
+    }
+    def typed(df: DataFrame) = df.withColumn("event_type",
+      element_at(array(types.map(lit): _*), col("value").cast("int") % types.size + 1))
+    val rolled = runRestartStream(rows, 3, df => StreamingTSDF.patternDfa(
+        typed(df), "ts", key, "event_type",
+        Map("view" -> "v", "click" -> "c", "purchase" -> "p"), dfa),
+        lateRows = true)
+      .groupBy(col("user_id"))
+      .agg(sum(col("trace_len")).alias("len"), sum(col("n_matches")).alias("m"))
+      .collect().map(r => r.getString(0) ->
+        (r.getAs[Long]("len"), r.getAs[Long]("m"))).toMap
+    val pat = java.util.regex.Pattern.compile("v[vo]*?cp")
+    val expected = rows.groupBy(_._1).map { case (u, evs) =>
+      val trace = evs.sortBy(_._2.getTime).map(e => types(e._3.toInt) match {
+        case "view" => 'v'; case "click" => 'c'; case "purchase" => 'p'
+        case _ => 'o'
+      }).mkString
+      val mtr = pat.matcher(trace)
+      var n = 0L
+      while (mtr.find()) n += 1
+      u -> ((trace.length.toLong, n))
+    }
+    assert(expected.values.forall(_._2 > 0), expected)
+    assert(rolled == expected)
+  }
+
   test("stream-stream tolerance join fed in 3 chunk pairs equals batch join") {
     val rnd = new scala.util.Random(94)
     val leftRows = randomSeries(rnd)
@@ -358,6 +436,25 @@ class StreamingResumeSpec extends SparkTestBase {
       // register changelog rollup == batch register file, bit-exact
       withClue(s"wide=$wide: ") { assertDfEquality(rolled, batch) }
     }
+  }
+
+  test("streaming hll changelog with stateTtl max-rolls to the batch " +
+      "register file over 4 batches") {
+    val rnd = new scala.util.Random(134)
+    val rows = randomSeries(rnd)
+    val spark2 = spark
+    import spark2.implicits._
+    // a 10-minute TTL over ~40-minute series: idle series are evicted and
+    // restart from empty registers, which the max roll-up absorbs
+    val sink = runChunkedStream(rows, 4, df =>
+      StreamingTSDF.hllRegisters(df, "ts", Seq("user_id"),
+        col("value").cast("string"), stateTtl = Some("10 minutes")))
+    val rolled = sink.groupBy(col("user_id"), col("bucket"))
+      .agg(max(col("register")).alias("register"))
+    val batch = graft.pipeline.Sketch.hllRegisters(
+      rows.toDF("user_id", "ts", "value"), Seq("user_id"),
+      col("value").cast("string"))
+    assertDfEquality(rolled, batch)
   }
 
   test("streaming histogram deltas sum-roll to the batch histogram over 4 batches") {

@@ -334,6 +334,56 @@ class StreamingTSDFSpec extends SparkTestBase {
     assert(u1.head.isNullAt(3), "evicted series must join to null")
   }
 
+  test("the keyed-state driver is the only (flat)mapGroupsWithState in " +
+      "src/main/scala") {
+    val call = "(?i)mapGroupsWithState".r
+    val owner = "\\bdef (\\w+)".r
+    def scalaFiles(d: java.io.File): Seq[java.io.File] = d.listFiles().toSeq
+      .flatMap(f => if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val files = scalaFiles(new java.io.File("src/main/scala"))
+    assert(files.length >= 50)
+    val uses = files.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toIndexedSeq finally src.close()
+      lines.indices.filter(i => call.findFirstIn(lines(i)).isDefined).map { i =>
+        val in = (i to 0 by -1).iterator
+          .flatMap(j => owner.findFirstMatchIn(lines(j))).nextOption()
+        (s"${f.getName}:${i + 1}", in.map(_.group(1)).getOrElse(""))
+      }
+    }
+    assert(uses.map(_._2) == Seq("keyedState"),
+      s"stateful group calls outside StreamingTSDF.keyedState: $uses")
+  }
+
+  test("ema stateTtl: a series idle past the TTL restarts from no state; " +
+      "without a TTL it continues") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def run(ttl: Option[String]): Double = {
+      val mem = MemoryStream[(String, Timestamp, Double)]
+      val name = s"ema_ttl_${ttl.isDefined}"
+      val q = StreamingTSDF.ema(mem.toDF().toDF("user_id", "ts", "v"),
+          "ts", Seq("user_id"), "v", alpha = 0.3, stateTtl = ttl)
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      mem.addData(("u1", ts("2024-01-01 00:00:00"), 10.0))
+      q.processAllAvailable()
+      // another series far ahead moves the watermark past u1's TTL
+      mem.addData(("zz", ts("2024-01-01 02:00:00"), 0.0))
+      q.processAllAvailable()
+      mem.addData(("u1", ts("2024-01-01 02:30:00"), 20.0))
+      q.processAllAvailable()
+      q.stop()
+      spark.table(name).filter(col("user_id") === "u1" &&
+        col("ts") === ts("2024-01-01 02:30:00")).select("ema_v").head().getDouble(0)
+    }
+    assert(run(Some("1 minute")) == 20.0, "an evicted series restarts at its value")
+    assert(math.abs(run(None) - (0.3 * 20.0 + 0.7 * 10.0)) < 1e-9,
+      "without a TTL the recursion continues")
+  }
+
   test("gaps and ema drop cross-batch late rows instead of rewinding state") {
     val spark2 = spark
     import spark2.implicits._
