@@ -1,9 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.DataFrame
 
+import graft.pipeline.MediaMap.{be16, withIdPayload}
 import graft.pipeline.Multimodal.DecodedImage
 
 /** REAL JPEG pixel decode in pure JVM code — baseline AND progressive
@@ -266,9 +265,6 @@ object Jpeg {
     var nbh: Int = 0
   }
 
-  @inline private def u16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xFF) << 8) | (b(i + 1) & 0xFF)
-
   /** Hard cap on declared width×height (samples) accepted by the decoder.
     * 100 M samples ≈ a 10k×10k frame — far above any fixture yet small
     * enough that the worst-case allocation (3 planes + 3 coef stores for
@@ -317,7 +313,7 @@ object Jpeg {
         // fills may have eaten into the 4-byte headroom the outer loop
         // guaranteed — re-check before the 2-byte length read
         if (o + 4 > bytes.length) return None
-        val len = u16(bytes, oi + 2)
+        val len = be16(bytes, oi + 2)
         if (len < 2 || o + 2 + len > bytes.length) return None
         val seg = oi + 4
         val segEnd = oi + 2 + len
@@ -336,7 +332,7 @@ object Jpeg {
               } else if (pq == 1) {
                 if (p + 129 > segEnd) return None
                 var k = 0
-                while (k < 64) { qtabs(tq)(k) = u16(bytes, p + 1 + 2 * k); k += 1 }
+                while (k < 64) { qtabs(tq)(k) = be16(bytes, p + 1 + 2 * k); k += 1 }
                 p += 129
               } else return None
               qseen(tq) = true
@@ -367,8 +363,8 @@ object Jpeg {
             if (len < 8) return None
             progressive = marker == 0xC2
             val prec = bytes(seg) & 0xFF
-            height = u16(bytes, seg + 1)
-            width = u16(bytes, seg + 3)
+            height = be16(bytes, seg + 1)
+            width = be16(bytes, seg + 3)
             val nc = bytes(seg + 5) & 0xFF
             if (prec != 8 || width <= 0 || height <= 0 ||
                 (nc != 1 && nc != 3) || len != 8 + 3 * nc) return None
@@ -395,7 +391,7 @@ object Jpeg {
             return None // arithmetic / hierarchical / lossless
           case 0xDD => // DRI
             if (len != 4) return None
-            restartInterval = u16(bytes, seg)
+            restartInterval = be16(bytes, seg)
             o += 2 + len
           case 0xDA if !progressive => // SOS — decode the one interleaved scan
             if (comps == null) return None
@@ -1129,16 +1125,8 @@ object Jpeg {
     *  - width = 8·(1 + id % 4), height = 8·(1 + (id·3) % 4)
     *  - block(bx, by) = (id % 251 + 17·by + 23·bx) % 256 */
   def synthesizeJpegPayload(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        Row.fromSeq(r.toSeq :+ jpegPayloadFor(r.getLong(idIdx)))
-      }
-    }(Encoders.row(outSchema)).toDF()
-  }
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol)(jpegPayloadFor)
 
   /** Deterministic PROGRESSIVE fixture column — the
     * [[synthesizeJpegPayload]] discipline through the SOF2 multi-scan
@@ -1149,16 +1137,8 @@ object Jpeg {
     *  - width = 8·(1 + id % 4), height = 8·(1 + (id·3) % 4)
     *  - block(bx, by) = (id % 241 + 19·by + 31·bx) % 256 */
   def synthesizeProgressiveJpegPayload(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        Row.fromSeq(r.toSeq :+ progJpegPayloadFor(r.getLong(idIdx)))
-      }
-    }(Encoders.row(outSchema)).toDF()
-  }
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol)(progJpegPayloadFor)
 
   /** The single-payload form of [[synthesizeProgressiveJpegPayload]]. */
   private[pipeline] def progJpegPayloadFor(id: Long): Array[Byte] = {
@@ -1182,28 +1162,8 @@ object Jpeg {
     * [[Multimodal.pngPixelStats]] twin: per-partition map, no shuffle,
     * undecodable payloads dropped. */
   def jpegPixelStats(df: DataFrame, idCol: String,
-      payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("width", IntegerType), StructField("height", IntegerType),
-      StructField("channels", IntegerType),
-      StructField("n_samples", LongType), StructField("sample_sum", LongType),
-      StructField("mean_sample", DoubleType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          decodeJpeg(r.getAs[Array[Byte]](1)).map { img =>
-            var s = 0L
-            var i = 0
-            while (i < img.samples.length) { s += img.samples(i); i += 1 }
-            val n = img.samples.length.toLong
-            Row(r.get(0), img.width, img.height, img.channels, n, s,
-              s.toDouble / n.toDouble)
-          }
-        }
-      }(Encoders.row(outSchema))
-      .toDF()
-  }
+      payloadCol: String): DataFrame =
+    Multimodal.pixelStats(df, idCol, payloadCol)(decodeJpeg)
 
   // ============================================ progressive fixture encoder
 

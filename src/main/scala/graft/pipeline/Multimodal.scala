@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.pipeline.MediaMap._
+
 /** Multimodal column plumbing: image/audio/video payloads as opaque `binary`
   * columns with a typed metadata struct, plus batch-shaped decode /
   * feature-extract / resize / frame-sample / coverage operators.
@@ -40,22 +42,6 @@ object Multimodal {
     StructField("width", IntegerType),
     StructField("height", IntegerType),
     StructField("duration_ms", LongType)))
-
-  // ---- byte readers (bounds-checked by callers) ----
-  private def be16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xFF) << 8) | (b(i + 1) & 0xFF)
-  private def be32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xFFL) << 24) | ((b(i + 1) & 0xFFL) << 16) |
-      ((b(i + 2) & 0xFFL) << 8) | (b(i + 3) & 0xFFL)
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) |
-      ((b(i + 2) & 0xFFL) << 16) | ((b(i + 3) & 0xFFL) << 24)
-  private def be64(b: Array[Byte], i: Int): Long =
-    (be32(b, i) << 32) | be32(b, i + 4)
-  private def tag(b: Array[Byte], i: Int): String =
-    new String(b, i, 4, "US-ASCII")
 
   /** Parsed header metadata, or all-null when the payload matches no known
     * container. Fields follow [[MediaMeta]]. */
@@ -174,16 +160,12 @@ object Multimodal {
     * per-partition row map (no shuffle, embarrassingly parallel). */
   def withMediaMeta(df: DataFrame, payloadCol: String,
       metaCol: String = "media_meta"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+ StructField(metaCol, MediaMeta))
     val pIdx = df.schema.fieldIndex(payloadCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val (mt, fmt, w, h, dur) = parseMediaMeta(r.getAs[Array[Byte]](pIdx))
-        Row.fromSeq(r.toSeq :+ Row(mt, fmt,
-          w.map(Integer.valueOf).orNull, h.map(Integer.valueOf).orNull,
-          dur.map(java.lang.Long.valueOf).orNull))
-      }
-    }(Encoders.row(outSchema)).toDF()
+    appendColumn(df, StructField(metaCol, MediaMeta)) { r =>
+      val (mt, fmt, w, h, dur) = parseMediaMeta(r.getAs[Array[Byte]](pIdx))
+      Row(mt, fmt, w.map(Integer.valueOf).orNull,
+        h.map(Integer.valueOf).orNull, dur.map(java.lang.Long.valueOf).orNull)
+    }
   }
 
   // ---- spec-valid payload builders (fixtures + q_media_meta_real) ----
@@ -281,24 +263,16 @@ object Multimodal {
     *  - mp4: timescale = 600 + (id % 10)·100, duration = 5000 + id % 100000
     *    ⇒ duration_ms = duration·1000 div timescale */
   def synthesizeMediaPayload(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        val payload = (id % 4) match {
-          case 0 => buildPng((32 + id % 1000).toInt, (32 + (id * 7) % 1000).toInt)
-          case 1 => buildJpeg((32 + id % 1000).toInt, (32 + (id * 7) % 1000).toInt)
-          case 2 => buildWav((8000 + (id % 8) * 1000).toInt,
-            (2 * (100 + id % 2000)).toInt)
-          case _ => buildMp4((600 + (id % 10) * 100).toInt, 5000 + id % 100000)
-        }
-        Row.fromSeq(r.toSeq :+ payload)
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol) { id =>
+      (id % 4) match {
+        case 0 => buildPng((32 + id % 1000).toInt, (32 + (id * 7) % 1000).toInt)
+        case 1 => buildJpeg((32 + id % 1000).toInt, (32 + (id * 7) % 1000).toInt)
+        case 2 => buildWav((8000 + (id % 8) * 1000).toInt,
+          (2 * (100 + id % 2000)).toInt)
+        case _ => buildMp4((600 + (id % 10) * 100).toInt, 5000 + id % 100000)
       }
-    }(Encoders.row(outSchema)).toDF()
-  }
+    }
 
   // ---- real PNG pixel decode (pure JVM: Inflater + spec unfiltering) ----
 
@@ -466,16 +440,8 @@ object Multimodal {
     *  - sample(r, c, ch) = (id % 251 + 5r + 3c + 11ch) % 256
     *  - scanline r uses filter (id + r) % 5 — all five spec filters occur */
   def synthesizePngPayload(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        Row.fromSeq(r.toSeq :+ pngPayloadFor(r.getLong(idIdx)))
-      }
-    }(Encoders.row(outSchema)).toDF()
-  }
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol)(pngPayloadFor)
 
   /** The single-payload form of [[synthesizePngPayload]]'s arithmetic. */
   private[pipeline] def pngPayloadFor(id: Long): Array[Byte] = {
@@ -508,28 +474,25 @@ object Multimodal {
     * dropped. Runs as a per-partition map — no shuffle, scales linearly
     * with executors. */
   def pngPixelStats(df: DataFrame, idCol: String,
-      payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+      payloadCol: String): DataFrame =
+    pixelStats(df, idCol, payloadCol)(decodePng)
+
+  /** The body of [[pngPixelStats]], [[bmpPixelStats]] and
+    * [[Jpeg.jpegPixelStats]]: one row per payload `decode` accepts. */
+  private[pipeline] def pixelStats(df: DataFrame, idCol: String,
+      payloadCol: String)(decode: Array[Byte] => Option[DecodedImage])
+      : DataFrame =
+    decodeRows(df, idCol, payloadCol, Seq(
       StructField("width", IntegerType), StructField("height", IntegerType),
       StructField("channels", IntegerType),
       StructField("n_samples", LongType), StructField("sample_sum", LongType),
-      StructField("mean_sample", DoubleType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          decodePng(r.getAs[Array[Byte]](1)).map { img =>
-            var s = 0L
-            var i = 0
-            while (i < img.samples.length) { s += img.samples(i); i += 1 }
-            val n = img.samples.length.toLong
-            Row(r.get(0), img.width, img.height, img.channels, n, s,
-              s.toDouble / n.toDouble)
-          }
-        }
-      }(Encoders.row(outSchema))
-      .toDF()
-  }
+      StructField("mean_sample", DoubleType))) { bytes =>
+      decode(bytes).map { img =>
+        val s = sampleSum(img.samples)
+        val n = img.samples.length.toLong
+        Row(img.width, img.height, img.channels, n, s, s.toDouble / n.toDouble)
+      }
+    }
 
   // ---- real WAV PCM sample decode (pure byte arithmetic — PCM needs no codec) ----
 
@@ -596,16 +559,8 @@ object Multimodal {
     * restate the decoded sums from the id alone while the engine must
     * genuinely walk chunks and sign-extend the bytes. */
   def synthesizeWavPayload(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        Row.fromSeq(r.toSeq :+ wavPayloadFor(r.getLong(idIdx)))
-      }
-    }(Encoders.row(outSchema)).toDF()
-  }
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol)(wavPayloadFor)
 
   /** The single-payload form of [[synthesizeWavPayload]]'s arithmetic. */
   private[pipeline] def wavPayloadFor(id: Long): Array[Byte] = {
@@ -668,21 +623,11 @@ object Multimodal {
     * n_samples) rows shuffle, never samples. */
   def audioFingerprints(df: DataFrame, idCol: String,
       payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("n_samples", LongType),
-      StructField("__fp_input", StringType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          decodeWavSamples(r.getAs[Array[Byte]](1)).map { a =>
-            Row(r.get(0), a.samples.length.toLong, audioFpInput(a))
-          }
-        }
-      }(Encoders.row(outSchema))
-      .toDF()
-      .select(col(idCol), col("n_samples"),
-        md5(col("__fp_input")).alias("fp"))
+    decodeRows(df, idCol, payloadCol, Seq(StructField("n_samples", LongType),
+        StructField("__fp_input", StringType))) { bytes =>
+      decodeWavSamples(bytes).map(a =>
+        Row(a.samples.length.toLong, audioFpInput(a)))
+    }.select(col(idCol), col("n_samples"), md5(col("__fp_input")).alias("fp"))
   }
 
   /** Exact audio dedup over [[audioFingerprints]] — min-id
@@ -702,21 +647,15 @@ object Multimodal {
     * identical content, the [[audioFingerprints]] collapse the fixture
     * must exercise. */
   def synthesizeWavDedupPayload(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        val n = (100 + (id % 10) * 40).toInt
-        val base = ((id % 13) * 19).toInt
-        val samples = Array.tabulate(n)(i =>
-          (base * 7 + 11 * i) % 65536 - 32768)
-        Row.fromSeq(r.toSeq :+ buildWavWithSamples(
-          (8000 + (id % 8) * 1000).toInt, samples))
-      }
-    }(Encoders.row(outSchema)).toDF()
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol)(wavDedupPayloadFor)
+
+  /** The single-payload form of [[synthesizeWavDedupPayload]]. */
+  private def wavDedupPayloadFor(id: Long): Array[Byte] = {
+    val n = (100 + (id % 10) * 40).toInt
+    val base = ((id % 13) * 19).toInt
+    buildWavWithSamples((8000 + (id % 8) * 1000).toInt,
+      Array.tabulate(n)(i => (base * 7 + 11 * i) % 65536 - 32768))
   }
 
   /** Mixed-corpus content fingerprints with ONE container dispatch per
@@ -738,34 +677,20 @@ object Multimodal {
     * [[graft.pipeline.TextAnalysis.winnowFingerprints]] convention —
     * e.g. an event-time column for a TTL'd streaming ownership gate). */
   def mediaFingerprints(df: DataFrame, idCol: String,
-      payloadCol: String, carryCols: Seq[String] = Nil): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("modality", StringType),
-      StructField("n_units", LongType),
-      StructField("__fp_input", StringType)) ++
-      carryCols.map(c => df.schema(c)))
-    df.select(col(idCol) +: col(payloadCol) +: carryCols.map(col): _*)
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          val bytes = r.getAs[Array[Byte]](1)
-          val carry = (0 until outSchema.length - 4).map(i => r.get(2 + i))
-          decodeImage(bytes).map { img =>
-            Row.fromSeq(Seq(r.get(0), "image", img.samples.length.toLong,
-              imageFpInput(img)) ++ carry)
-          }.orElse(decodeWavSamples(bytes).map { a =>
-            Row.fromSeq(Seq(r.get(0), "audio", a.samples.length.toLong,
-              audioFpInput(a)) ++ carry)
-          }).orElse(Video.parseVideoMjpeg(bytes).map { clip =>
-            val (nf, in) = Video.videoFpInput(clip)
-            Row.fromSeq(Seq(r.get(0), "video", nf.toLong, in) ++ carry)
-          })
-        }
-      }(Encoders.row(outSchema))
-      .toDF()
-      .select(col(idCol) +: col("modality") +: col("n_units") +:
-        md5(col("__fp_input")).alias("fp") +: carryCols.map(col): _*)
-  }
+      payloadCol: String, carryCols: Seq[String] = Nil): DataFrame =
+    decodeRows(df, idCol, payloadCol, Seq(StructField("modality", StringType),
+        StructField("n_units", LongType), StructField("__fp_input", StringType)),
+        carryCols) { bytes =>
+      decodeImage(bytes)
+        .map(img => Row("image", img.samples.length.toLong, imageFpInput(img)))
+        .orElse(decodeWavSamples(bytes)
+          .map(a => Row("audio", a.samples.length.toLong, audioFpInput(a))))
+        .orElse(Video.parseVideoMjpeg(bytes).map { clip =>
+          val (nf, in) = Video.videoFpInput(clip)
+          Row("video", nf.toLong, in)
+        })
+    }.select(col(idCol) +: col("modality") +: col("n_units") +:
+      md5(col("__fp_input")).alias("fp") +: carryCols.map(col): _*)
 
   /** Cross-modality exact dedup over [[mediaFingerprints]] — min-id
     * representative per (modality, fp) content group. Output:
@@ -887,35 +812,15 @@ object Multimodal {
     *    .synthesizeAviDedupPayload]] arithmetic → classes every 195
     *    arm-ids, fps varies id%4. */
   def synthesizeMediaDedupPayload(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        val base = ((id % 13) * 19).toInt
-        val payload = (id % 3) match {
-          case 0 =>
-            Jpeg.buildJpegWithBlocks((8 * (1 + id % 2)).toInt, 8,
-              (bx, _) => (base + 23 * bx) % 256)
-          case 1 =>
-            val n = (100 + (id % 10) * 40).toInt
-            buildWavWithSamples((8000 + (id % 8) * 1000).toInt,
-              Array.tabulate(n)(i => (base * 7 + 11 * i) % 65536 - 32768))
-          case _ =>
-            val n = (3 + id % 5).toInt
-            val w = (8 * (1 + id % 3)).toInt
-            val h = (8 * (1 + (id * 2) % 3)).toInt
-            Video.buildAviMjpeg(w, h, (2 + id % 4).toInt, (0 until n).map {
-              f => Jpeg.buildJpegWithBlocks(w, h,
-                (bx, by) => (base + 29 * f + 17 * by + 23 * bx) % 256)
-            })
-        }
-        Row.fromSeq(r.toSeq :+ payload)
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol) { id =>
+      (id % 3) match {
+        case 0 => Jpeg.buildJpegWithBlocks((8 * (1 + id % 2)).toInt, 8,
+          (bx, _) => (((id % 13) * 19).toInt + 23 * bx) % 256)
+        case 1 => wavDedupPayloadFor(id)
+        case _ => Video.aviDedupPayloadFor(id)
       }
-    }(Encoders.row(outSchema)).toDF()
-  }
+    }
 
   /** Decoder drop-rate report: per (format, status) document counts over a
     * payload column. `status`: `decoded` = a built-in codec took the
@@ -958,30 +863,22 @@ object Multimodal {
     * occur and an oracle can restate the whole report from id
     * arithmetic. */
   def synthesizeCoverageCorpus(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        val payload = (id % 10) match {
-          case 0 => pngPayloadFor(id)
-          case 1 => Jpeg.jpegPayloadFor(id)
-          case 2 => wavPayloadFor(id)
-          case 3 => Video.aviPayloadFor(id)
-          case 4 => Jpeg.progJpegPayloadFor(id)
-          case 5 => Video.mp4PayloadFor(id)
-          case 6 => buildPng((32 + id % 100).toInt, (32 + id % 50).toInt)
-          case 7 => buildJpeg((32 + id % 100).toInt, (32 + id % 50).toInt)
-          case 8 => buildMp4((600 + (id % 10) * 100).toInt, 5000 + id % 1000)
-          case _ => s"not-media-$id".getBytes(
-            java.nio.charset.StandardCharsets.US_ASCII)
-        }
-        Row.fromSeq(r.toSeq :+ payload)
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol) { id =>
+      (id % 10) match {
+        case 0 => pngPayloadFor(id)
+        case 1 => Jpeg.jpegPayloadFor(id)
+        case 2 => wavPayloadFor(id)
+        case 3 => Video.aviPayloadFor(id)
+        case 4 => Jpeg.progJpegPayloadFor(id)
+        case 5 => Video.mp4PayloadFor(id)
+        case 6 => buildPng((32 + id % 100).toInt, (32 + id % 50).toInt)
+        case 7 => buildJpeg((32 + id % 100).toInt, (32 + id % 50).toInt)
+        case 8 => buildMp4((600 + (id % 10) * 100).toInt, 5000 + id % 1000)
+        case _ => s"not-media-$id".getBytes(
+          java.nio.charset.StandardCharsets.US_ASCII)
       }
-    }(Encoders.row(outSchema)).toDF()
-  }
+    }
 
   /** Deterministic DECODABLE mixed-media fixture column: one payload per
     * id with REAL content in every arm, cycling id % 4 →
@@ -991,48 +888,31 @@ object Multimodal {
     * exercises the full decode dispatch and an oracle can restate every
     * decoded value from the id alone. */
   def synthesizeDecodablePayload(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        val payload = (id % 4) match {
-          case 0 => pngPayloadFor(id)
-          case 1 => Jpeg.jpegPayloadFor(id)
-          case 2 => wavPayloadFor(id)
-          case _ => Video.aviPayloadFor(id)
-        }
-        Row.fromSeq(r.toSeq :+ payload)
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol) { id =>
+      (id % 4) match {
+        case 0 => pngPayloadFor(id)
+        case 1 => Jpeg.jpegPayloadFor(id)
+        case 2 => wavPayloadFor(id)
+        case _ => Video.aviPayloadFor(id)
       }
-    }(Encoders.row(outSchema)).toDF()
-  }
+    }
 
   /** Per-clip sample statistics through the REAL decode path
     * ([[decodeWavSamples]]): exact integer sample sum + one-division mean;
     * undecodable payloads are dropped. Per-partition map, no shuffle. */
   def wavSampleStats(df: DataFrame, idCol: String,
-      payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+      payloadCol: String): DataFrame =
+    decodeRows(df, idCol, payloadCol, Seq(
       StructField("sample_rate", IntegerType),
       StructField("n_samples", LongType), StructField("sample_sum", LongType),
-      StructField("mean_sample", DoubleType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          decodeWavSamples(r.getAs[Array[Byte]](1)).map { a =>
-            var s = 0L
-            var i = 0
-            while (i < a.samples.length) { s += a.samples(i); i += 1 }
-            Row(r.get(0), a.sampleRate, a.samples.length.toLong, s,
-              s.toDouble / a.samples.length.toDouble)
-          }
-        }
-      }(Encoders.row(outSchema))
-      .toDF()
-  }
+      StructField("mean_sample", DoubleType))) { bytes =>
+      decodeWavSamples(bytes).map { a =>
+        val s = sampleSum(a.samples)
+        Row(a.sampleRate, a.samples.length.toLong, s,
+          s.toDouble / a.samples.length.toDouble)
+      }
+    }
 
   /** Per-frame audio features through the REAL decode path
     * ([[decodeWavSamples]]): the clip splits into non-overlapping FULL
@@ -1047,43 +927,35 @@ object Multimodal {
   def wavFrameFeatures(df: DataFrame, idCol: String, payloadCol: String,
       frameLen: Int = 64): DataFrame = {
     require(frameLen >= 2, "frameLen must be >= 2")
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+    decodeRows(df, idCol, payloadCol, Seq(
       StructField("frame_idx", LongType),
       StructField("energy", LongType),
       StructField("peak", IntegerType),
       StructField("zcr", LongType),
-      StructField("rms", DoubleType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          decodeWavSamples(r.getAs[Array[Byte]](1)).toSeq.flatMap { a =>
-            val nf = a.samples.length / frameLen
-            (0 until nf).map { f =>
-              var e = 0L
-              var peak = 0
-              var z = 0L
-              var prev = 0
-              var first = true
-              var i = f * frameLen
-              val end = i + frameLen
-              while (i < end) {
-                val s = a.samples(i)
-                e += s.toLong * s
-                val as = math.abs(s)
-                if (as > peak) peak = as
-                if (!first && prev * s < 0) z += 1
-                prev = s
-                first = false
-                i += 1
-              }
-              Row(r.get(0), f.toLong, e, peak, z,
-                math.sqrt(e.toDouble / frameLen.toDouble))
-            }
+      StructField("rms", DoubleType))) { bytes =>
+      decodeWavSamples(bytes).iterator.flatMap { a =>
+        (0 until a.samples.length / frameLen).iterator.map { f =>
+          var e = 0L
+          var peak = 0
+          var z = 0L
+          var prev = 0
+          var first = true
+          var i = f * frameLen
+          val end = i + frameLen
+          while (i < end) {
+            val s = a.samples(i)
+            e += s.toLong * s
+            val as = math.abs(s)
+            if (as > peak) peak = as
+            if (!first && prev * s < 0) z += 1
+            prev = s
+            first = false
+            i += 1
           }
+          Row(f.toLong, e, peak, z, math.sqrt(e.toDouble / frameLen.toDouble))
         }
-      }(Encoders.row(outSchema))
-      .toDF()
+      }
+    }
   }
 
   /** Integer-factor audio decimation through the REAL decode path
@@ -1098,27 +970,17 @@ object Multimodal {
   def wavDecimate(df: DataFrame, idCol: String, payloadCol: String,
       factor: Int = 16): DataFrame = {
     require(factor >= 2, "factor must be >= 2")
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+    decodeRows(df, idCol, payloadCol, Seq(
       StructField("out_idx", LongType),
       StructField("s_sum", LongType),
-      StructField("mean_sample", DoubleType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          decodeWavSamples(r.getAs[Array[Byte]](1)).toSeq.flatMap { a =>
-            val ng = a.samples.length / factor
-            (0 until ng).map { g =>
-              var s = 0L
-              var i = g * factor
-              val end = i + factor
-              while (i < end) { s += a.samples(i); i += 1 }
-              Row(r.get(0), g.toLong, s, s.toDouble / factor.toDouble)
-            }
-          }
+      StructField("mean_sample", DoubleType))) { bytes =>
+      decodeWavSamples(bytes).iterator.flatMap { a =>
+        (0 until a.samples.length / factor).iterator.map { g =>
+          val s = sampleSum(a.samples.slice(g * factor, (g + 1) * factor))
+          Row(g.toLong, s, s.toDouble / factor.toDouble)
         }
-      }(Encoders.row(outSchema))
-      .toDF()
+      }
+    }
   }
 
   /** Natural-order (Hadamard) index of the Walsh function with sequency
@@ -1147,52 +1009,45 @@ object Multimodal {
     * Σ_bands band_energy = 64·(frame energy) — asserted in the spec.
     * Per-partition map, no shuffle; undecodable payloads drop. */
   def wavSequencyFeatures(df: DataFrame, idCol: String,
-      payloadCol: String): DataFrame = {
-    val frameLen = 64
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+      payloadCol: String): DataFrame =
+    decodeRows(df, idCol, payloadCol, Seq(
       StructField("frame_idx", LongType),
       StructField("band", IntegerType),
-      StructField("band_energy", LongType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        val w = new Array[Long](frameLen)
-        it.flatMap { r =>
-          decodeWavSamples(r.getAs[Array[Byte]](1)).toSeq.flatMap { a =>
-            val nf = a.samples.length / frameLen
-            (0 until nf).flatMap { f =>
-              var i = 0
-              while (i < frameLen) {
-                w(i) = a.samples(f * frameLen + i).toLong; i += 1
-              }
-              // fast WHT, natural (Hadamard) output order
-              var len = 1
-              while (len < frameLen) {
-                var blk = 0
-                while (blk < frameLen) {
-                  var j = blk
-                  while (j < blk + len) {
-                    val x = w(j); val y = w(j + len)
-                    w(j) = x + y; w(j + len) = x - y
-                    j += 1
-                  }
-                  blk += 2 * len
-                }
-                len <<= 1
-              }
-              (0 until 8).map { band =>
-                var e = 0L
-                var s = band * 8
-                while (s < band * 8 + 8) {
-                  val c = w(SeqToNat64(s)); e += c * c; s += 1
-                }
-                Row(r.get(0), f.toLong, band, e)
-              }
-            }
-          }
+      StructField("band_energy", LongType))) { bytes =>
+      decodeWavSamples(bytes).iterator.flatMap { a =>
+        (0 until a.samples.length / 64).iterator.flatMap { f =>
+          val e = walshBands(a.samples, f)
+          (0 until 8).map(band => Row(f.toLong, band, e(band)))
         }
-      }(Encoders.row(outSchema))
-      .toDF()
+      }
+    }
+
+  /** The 8 sequency-band energies of 64-sample frame `f`: the 6-stage
+    * in-place fast WHT (natural Hadamard order), then Σ W² over 8
+    * consecutive sequencies per band through [[SeqToNat64]]. Shared by
+    * [[wavSequencyFeatures]] and [[hkFingerprints]]. */
+  private def walshBands(samples: Array[Int], f: Int): Array[Long] = {
+    val w = Array.tabulate(64)(i => samples(f * 64 + i).toLong)
+    var len = 1
+    while (len < 64) {
+      var blk = 0
+      while (blk < 64) {
+        var j = blk
+        while (j < blk + len) {
+          val x = w(j); val y = w(j + len)
+          w(j) = x + y; w(j + len) = x - y
+          j += 1
+        }
+        blk += 2 * len
+      }
+      len <<= 1
+    }
+    Array.tabulate(8) { band =>
+      var e = 0L
+      var s = band * 8
+      while (s < band * 8 + 8) { val c = w(SeqToNat64(s)); e += c * c; s += 1 }
+      e
+    }
   }
 
   /** Fourier spectrogram per audio frame via the engine's own JVM FFT
@@ -1214,44 +1069,32 @@ object Multimodal {
     * against the DFT replay. Band 0 contains DC. Per-partition map, no
     * shuffle; row growth 8 · n/64 per clip. Undecodable payloads drop. */
   def wavSpectrogram(df: DataFrame, idCol: String,
-      payloadCol: String): DataFrame = {
-    val frameLen = 64
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+      payloadCol: String): DataFrame =
+    decodeRows(df, idCol, payloadCol, Seq(
       StructField("frame_idx", LongType),
       StructField("band", IntegerType),
-      StructField("band_energy_q", LongType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        val re = new Array[Double](frameLen)
-        val im = new Array[Double](frameLen)
-        it.flatMap { r =>
-          decodeWavSamples(r.getAs[Array[Byte]](1)).toSeq.flatMap { a =>
-            val nf = a.samples.length / frameLen
-            (0 until nf).flatMap { f =>
-              var i = 0
-              while (i < frameLen) {
-                re(i) = a.samples(f * frameLen + i).toDouble
-                im(i) = 0.0
-                i += 1
-              }
-              graft.tsdf.Fourier.fft(re, im)
-              (0 until 8).map { band =>
-                var e = 0L
-                var k = band * 8
-                while (k < band * 8 + 8) {
-                  val rc = math.floor(re(k) / 256.0 + 0.25).toLong
-                  val ic = math.floor(im(k) / 256.0 + 0.25).toLong
-                  e += rc * rc + ic * ic
-                  k += 1
-                }
-                Row(r.get(0), f.toLong, band, e)
-              }
-            }
-          }
+      StructField("band_energy_q", LongType))) { bytes =>
+      decodeWavSamples(bytes).iterator.flatMap { a =>
+        (0 until a.samples.length / 64).iterator.flatMap { f =>
+          val p = fftPowers(a.samples, f)
+          (0 until 8).map(band =>
+            Row(f.toLong, band, p.slice(band * 8, band * 8 + 8).sum))
         }
-      }(Encoders.row(outSchema))
-      .toDF()
+      }
+    }
+
+  /** The quantized powers rc² + ic² of the 64 bins of 64-sample frame
+    * `f` through [[graft.tsdf.Fourier.fft]], each component quantized as
+    * floor(X/256 + 0.25). Shared by [[wavSpectrogram]] and [[wavMfcc]]. */
+  private def fftPowers(samples: Array[Int], f: Int): Array[Long] = {
+    val re = Array.tabulate(64)(i => samples(f * 64 + i).toDouble)
+    val im = new Array[Double](64)
+    graft.tsdf.Fourier.fft(re, im)
+    Array.tabulate(64) { k =>
+      val rc = math.floor(re(k) / 256.0 + 0.25).toLong
+      val ic = math.floor(im(k) / 256.0 + 0.25).toLong
+      rc * rc + ic * ic
+    }
   }
 
   /** Integer mel-band bin edges over the 64-point spectrum's 32 unique
@@ -1304,58 +1147,26 @@ object Multimodal {
     * Output: (id, frame_idx, coef 0..7, mfcc_q). One decode map, rows
     * emitted per frame — no shuffle at all; at 100 TB the output is
     * 8 ints per frame, 8× smaller than the sample stream. */
-  def wavMfcc(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val frameLen = 64
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+  def wavMfcc(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    decodeRows(df, idCol, payloadCol, Seq(
       StructField("frame_idx", LongType),
       StructField("coef", IntegerType),
-      StructField("mfcc_q", LongType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        val re = new Array[Double](frameLen)
-        val im = new Array[Double](frameLen)
-        val p = new Array[Long](32)
-        val lq = new Array[Long](8)
-        it.flatMap { r =>
-          decodeWavSamples(r.getAs[Array[Byte]](1)).toSeq.flatMap { a =>
-            val nf = a.samples.length / frameLen
-            (0 until nf).flatMap { f =>
-              var i = 0
-              while (i < frameLen) {
-                re(i) = a.samples(f * frameLen + i).toDouble
-                im(i) = 0.0
-                i += 1
-              }
-              graft.tsdf.Fourier.fft(re, im)
-              var k = 0
-              while (k < 32) {
-                val rc = math.floor(re(k) / 256.0 + 0.25).toLong
-                val ic = math.floor(im(k) / 256.0 + 0.25).toLong
-                p(k) = rc * rc + ic * ic
-                k += 1
-              }
-              var m = 0
-              while (m < 8) {
-                var e = 0L
-                var kk = MelEdges(m)
-                while (kk < MelEdges(m + 1)) { e += p(kk); kk += 1 }
-                lq(m) = math.floor(
-                  math.log((e + 1L).toDouble) * 1000.0 + 0.5).toLong
-                m += 1
-              }
-              (0 until 8).map { c =>
-                var acc = 0L
-                var mm = 0
-                while (mm < 8) { acc += MfccCos(c * 8 + mm) * lq(mm); mm += 1 }
-                Row(r.get(0), f.toLong, c, acc)
-              }
-            }
+      StructField("mfcc_q", LongType))) { bytes =>
+      decodeWavSamples(bytes).iterator.flatMap { a =>
+        (0 until a.samples.length / 64).iterator.flatMap { f =>
+          val p = fftPowers(a.samples, f)
+          val lq = Array.tabulate(8)(m => math.floor(math.log(
+            (p.slice(MelEdges(m), MelEdges(m + 1)).sum + 1L).toDouble) *
+            1000.0 + 0.5).toLong)
+          (0 until 8).map { c =>
+            var acc = 0L
+            var m = 0
+            while (m < 8) { acc += MfccCos(c * 8 + m) * lq(m); m += 1 }
+            Row(f.toLong, c, acc)
           }
         }
-      }(Encoders.row(outSchema))
-      .toDF()
-  }
+      }
+    }
 
   /** Per-frame spectral descriptors over the [[wavSpectrogram]] band
     * energies — the audio-QA row a curation pipeline filters on
@@ -1456,21 +1267,12 @@ object Multimodal {
     * unsigned halves `phash_hi` (bits 32..62) / `phash_lo` (bits 0..31),
     * the [[imageDHash]] convention. Non-image payloads drop;
     * per-partition map, no shuffle. */
-  def imagePHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("phash_hi", LongType), StructField("phash_lo", LongType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          decodeImage(r.getAs[Array[Byte]](1)).map { img =>
-            val hash = phash64(img)
-            Row(r.get(0), hash >>> 32, hash & 0xFFFFFFFFL)
-          }
-        }
-      }(Encoders.row(outSchema))
-      .toDF()
-  }
+  def imagePHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    decodeRows(df, idCol, payloadCol, Seq(
+      StructField("phash_hi", LongType),
+      StructField("phash_lo", LongType))) { bytes =>
+      decodeImage(bytes).map(phash64).map(h => Row(h >>> 32, h & 0xFFFFFFFFL))
+    }
 
   /** The pHash kernel on one decoded image — the single source of the
     * 63-bit DCT hash shared by [[imagePHash]] and the video keyframe
@@ -1533,31 +1335,22 @@ object Multimodal {
     * Ships as unsigned halves `ahash_hi`/`ahash_lo`, bit index y·8+x
     * (the [[imageDHash]] convention). Non-image payloads drop;
     * per-partition map, no shuffle. */
-  def imageAHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("ahash_hi", LongType), StructField("ahash_lo", LongType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          decodeImage(r.getAs[Array[Byte]](1)).map { img =>
-            val g = resizeNearest(toGray(img), 8, 8)
-            var s = 0L
-            var i = 0
-            while (i < 64) { s += g.samples(i); i += 1 }
-            val mean = s / 64
-            var hash = 0L
-            i = 0
-            while (i < 64) {
-              if (g.samples(i) > mean) hash |= 1L << i
-              i += 1
-            }
-            Row(r.get(0), hash >>> 32, hash & 0xFFFFFFFFL)
-          }
+  def imageAHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    decodeRows(df, idCol, payloadCol, Seq(
+      StructField("ahash_hi", LongType),
+      StructField("ahash_lo", LongType))) { bytes =>
+      decodeImage(bytes).map { img =>
+        val g = resizeNearest(toGray(img), 8, 8)
+        val mean = sampleSum(g.samples) / 64
+        var hash = 0L
+        var i = 0
+        while (i < 64) {
+          if (g.samples(i) > mean) hash |= 1L << i
+          i += 1
         }
-      }(Encoders.row(outSchema))
-      .toDF()
-  }
+        Row(hash >>> 32, hash & 0xFFFFFFFFL)
+      }
+    }
 
   /** Integer-mean grayscale (Σch / nch) — shared by the perceptual
     * hashes. */
@@ -1578,37 +1371,29 @@ object Multimodal {
       DecodedImage(img.width, img.height, 1, g)
     }
 
-  def imageDHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+  def imageDHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    decodeRows(df, idCol, payloadCol, Seq(
       StructField("dhash_hi", LongType), StructField("dhash_lo", LongType),
       StructField("band0", LongType), StructField("band1", LongType),
-      StructField("band2", LongType), StructField("band3", LongType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          decodeImage(r.getAs[Array[Byte]](1)).map { img =>
-            val gray = toGray(img)
-            val grid = resizeNearest(gray, 9, 8)
-            var hash = 0L
-            var y = 0
-            while (y < 8) {
-              var x = 0
-              while (x < 8) {
-                if (grid.samples(y * 9 + x + 1) > grid.samples(y * 9 + x))
-                  hash |= 1L << (y * 8 + x)
-                x += 1
-              }
-              y += 1
-            }
-            Row(r.get(0), hash >>> 32, hash & 0xFFFFFFFFL,
-              hash & 0xFFFFL, (hash >>> 16) & 0xFFFFL,
-              (hash >>> 32) & 0xFFFFL, (hash >>> 48) & 0xFFFFL)
+      StructField("band2", LongType), StructField("band3", LongType))) { bytes =>
+      decodeImage(bytes).map { img =>
+        val grid = resizeNearest(toGray(img), 9, 8)
+        var hash = 0L
+        var y = 0
+        while (y < 8) {
+          var x = 0
+          while (x < 8) {
+            if (grid.samples(y * 9 + x + 1) > grid.samples(y * 9 + x))
+              hash |= 1L << (y * 8 + x)
+            x += 1
           }
+          y += 1
         }
-      }(Encoders.row(outSchema))
-      .toDF()
-  }
+        Row(hash >>> 32, hash & 0xFFFFFFFFL,
+          hash & 0xFFFFL, (hash >>> 16) & 0xFFFFL,
+          (hash >>> 32) & 0xFFFFL, (hash >>> 48) & 0xFFFFL)
+      }
+    }
 
   /** Near-duplicate image pairs from [[imageDHash]] signatures, the
     * MinHash-LSH discipline applied to pixels: collapse docs to DISTINCT
@@ -1813,77 +1598,34 @@ object Multimodal {
     * [[unitNearDupPairs]] signature contract. Per-partition decode map,
     * zero shuffles; one previous frame of band state per clip. */
   def hkFingerprints(df: DataFrame, idCol: String,
-      payloadCol: String): DataFrame = {
-    val frameLen = 64
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+      payloadCol: String): DataFrame =
+    decodeRows(df, idCol, payloadCol, Seq(
       StructField("n_units", IntegerType),
       StructField("unit_idx", IntegerType),
       StructField("hk_hi", LongType),
-      StructField("hk_lo", LongType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        val w = new Array[Long](frameLen)
-        it.flatMap { r =>
-          decodeWavSamples(r.getAs[Array[Byte]](1)).toSeq.flatMap { a =>
-            val nf = a.samples.length / frameLen
-            val eb = Array.ofDim[Long](nf, 8)
-            var f = 0
-            while (f < nf) {
-              var i = 0
-              while (i < frameLen) {
-                w(i) = a.samples(f * frameLen + i).toLong; i += 1
-              }
-              // fast WHT, natural (Hadamard) order — wavSequencyFeatures'
-              // butterfly verbatim
-              var len = 1
-              while (len < frameLen) {
-                var blk = 0
-                while (blk < frameLen) {
-                  var j = blk
-                  while (j < blk + len) {
-                    val x = w(j); val y = w(j + len)
-                    w(j) = x + y; w(j + len) = x - y
-                    j += 1
-                  }
-                  blk += 2 * len
-                }
-                len <<= 1
-              }
-              var band = 0
-              while (band < 8) {
-                var e = 0L
-                var s = band * 8
-                while (s < band * 8 + 8) {
-                  val c = w(SeqToNat64(s)); e += c * c; s += 1
-                }
-                eb(f)(band) = e
-                band += 1
-              }
-              f += 1
+      StructField("hk_lo", LongType))) { bytes =>
+      decodeWavSamples(bytes).iterator.flatMap { a =>
+        val nf = a.samples.length / 64
+        val eb = Array.tabulate(nf)(walshBands(a.samples, _))
+        val nSegs = (nf - 1) / 9
+        (0 until nSegs).map { s =>
+          var hash = 0L
+          var t = 0
+          while (t < 9) {
+            val fi = 1 + s * 9 + t
+            var b = 0
+            while (b < 7) {
+              val d1 = eb(fi)(b) - eb(fi)(b + 1)
+              val d0 = eb(fi - 1)(b) - eb(fi - 1)(b + 1)
+              if (d1 - d0 > 0) hash |= 1L << (t * 7 + b)
+              b += 1
             }
-            val nSegs = (nf - 1) / 9
-            (0 until nSegs).map { s =>
-              var hash = 0L
-              var t = 0
-              while (t < 9) {
-                val fi = 1 + s * 9 + t
-                var b = 0
-                while (b < 7) {
-                  val d1 = eb(fi)(b) - eb(fi)(b + 1)
-                  val d0 = eb(fi - 1)(b) - eb(fi - 1)(b + 1)
-                  if (d1 - d0 > 0) hash |= 1L << (t * 7 + b)
-                  b += 1
-                }
-                t += 1
-              }
-              Row(r.get(0), nSegs, s, hash >>> 32, hash & 0xFFFFFFFFL)
-            }
+            t += 1
           }
+          Row(nSegs, s, hash >>> 32, hash & 0xFFFFFFFFL)
         }
-      }(Encoders.row(outSchema))
-      .toDF()
-  }
+      }
+    }
 
   /** Audio NEAR-duplicate pairs — the gain-robust complement to
     * [[audioDedup]]'s exact moments, the [[Video.videoNearDupPairs]]
@@ -1934,30 +1676,23 @@ object Multimodal {
     *    IDENTICAL by construction, not approximately; the ramp spans
     *    [-32, 31], so |s| ≤ 32·5·132 = 21 120, no clipping. */
   def synthesizeWavNearDupPayload(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        val g = id / 10
-        val gainNum = (128 + 2 * (id % 3)).toInt
-        val n = (1280 + 64 * (g % 3)).toInt
-        val kq = (g % 31 + 1).toInt
-        val kl = (g % 29).toInt
-        val km = (g % 19).toInt
-        val c = (g % 23).toInt
-        val samples = Array.tabulate(n) { i =>
-          val f = i / 64 + 1
-          val k = 1 + 2 * ((kq * f * f + kl * f) % 30)
-          val m = 1 + (km * f + kq) % 5
-          (((k * i + c) % 64) - 32) * m * gainNum
-        }
-        Row.fromSeq(r.toSeq :+ buildWavWithSamples(8000, samples))
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol) { id =>
+      val g = id / 10
+      val gainNum = (128 + 2 * (id % 3)).toInt
+      val n = (1280 + 64 * (g % 3)).toInt
+      val kq = (g % 31 + 1).toInt
+      val kl = (g % 29).toInt
+      val km = (g % 19).toInt
+      val c = (g % 23).toInt
+      val samples = Array.tabulate(n) { i =>
+        val f = i / 64 + 1
+        val k = 1 + 2 * ((kq * f * f + kl * f) % 30)
+        val m = 1 + (km * f + kq) % 5
+        (((k * i + c) % 64) - 32) * m * gainNum
       }
-    }(Encoders.row(outSchema)).toDF()
-  }
+      buildWavWithSamples(8000, samples)
+    }
 
   /** Feature seeds start above the metadata seeds (0..2). */
   private val FeatureSeedBase = 16
@@ -2001,18 +1736,18 @@ object Multimodal {
     * so a 100-byte payload claiming a 2³¹-pixel bitmap cannot drive an
     * allocation. */
   def decodeBmp(bytes: Array[Byte]): Option[DecodedImage] = {
-    def le16(o: Int) = (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-    def le32(o: Int) = (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8) |
-      ((bytes(o + 2) & 0xFF) << 16) | ((bytes(o + 3) & 0xFF) << 24)
+    // the header's 32-bit fields are signed (a negative height is top-down)
+    def i32(o: Int) = le32(bytes, o).toInt
     if (bytes == null || bytes.length < 54) return None
     if (bytes(0) != 'B' || bytes(1) != 'M') return None
-    val dataOffset = le32(10)
-    if (le32(14) != 40) return None // BITMAPINFOHEADER only
-    val w = le32(18)
-    val hRaw = le32(22)
+    val dataOffset = i32(10)
+    if (i32(14) != 40) return None // BITMAPINFOHEADER only
+    val w = i32(18)
+    val hRaw = i32(22)
     val topDown = hRaw < 0
     val h = math.abs(hRaw.toLong).toInt
-    if (le16(26) != 1 || le16(28) != 24 || le32(30) != 0) return None
+    if (le16(bytes, 26) != 1 || le16(bytes, 28) != 24 || i32(30) != 0)
+      return None
     if (w <= 0 || w > (1 << 14) || h <= 0 || h > (1 << 14)) return None
     if (w.toLong * h > (1L << 24)) return None
     val rowSize = ((3L * w + 3) / 4 * 4).toInt
@@ -2045,15 +1780,11 @@ object Multimodal {
     val dataSize = rowSize * h
     val fileSize = 54 + dataSize
     val b = new Array[Byte](fileSize)
-    def le16(o: Int, v: Int): Unit = { b(o) = v.toByte; b(o + 1) = (v >> 8).toByte }
-    def le32(o: Int, v: Int): Unit = {
-      b(o) = v.toByte; b(o + 1) = (v >> 8).toByte
-      b(o + 2) = (v >> 16).toByte; b(o + 3) = (v >> 24).toByte
-    }
     b(0) = 'B'; b(1) = 'M'
-    le32(2, fileSize); le32(10, 54)
-    le32(14, 40); le32(18, w); le32(22, h)
-    le16(26, 1); le16(28, 24); le32(30, 0); le32(34, dataSize)
+    putLE32(b, 2, fileSize); putLE32(b, 10, 54)
+    putLE32(b, 14, 40); putLE32(b, 18, w); putLE32(b, 22, h)
+    b(26) = 1; b(28) = 24 // planes, bits per pixel (LE16)
+    putLE32(b, 30, 0); putLE32(b, 34, dataSize)
     var r = 0
     while (r < h) {
       val dst = 54 + (h - 1 - r) * rowSize
@@ -2097,43 +1828,15 @@ object Multimodal {
 
   /** BMP fixture column, the [[synthesizeWavPayload]] convention. */
   def synthesizeBmpPayload(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        Row.fromSeq(r.toSeq :+ bmpPayloadFor(r.getLong(idIdx)))
-      }
-    }(Encoders.row(outSchema)).toDF()
-  }
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol)(bmpPayloadFor)
 
   /** [[pngPixelStats]] for BMP payloads — width/height/channels, exact
     * integer sample sum, one IEEE division for the mean; undecodable
     * rows drop. Per-partition map, no shuffle. */
   def bmpPixelStats(df: DataFrame, idCol: String,
-      payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("width", IntegerType), StructField("height", IntegerType),
-      StructField("channels", IntegerType),
-      StructField("n_samples", LongType), StructField("sample_sum", LongType),
-      StructField("mean_sample", DoubleType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          decodeBmp(r.getAs[Array[Byte]](1)).map { img =>
-            var s = 0L
-            var i = 0
-            while (i < img.samples.length) { s += img.samples(i); i += 1 }
-            val n = img.samples.length.toLong
-            Row(r.get(0), img.width, img.height, img.channels, n, s,
-              s.toDouble / n.toDouble)
-          }
-        }
-      }(Encoders.row(outSchema))
-      .toDF()
-  }
+      payloadCol: String): DataFrame =
+    pixelStats(df, idCol, payloadCol)(decodeBmp)
 
   /** REAL decoded-sample histogram over `nBins` equal-width bins, for every
     * format the engine decodes end to end: PNG and baseline JPEG pixels
@@ -2177,23 +1880,12 @@ object Multimodal {
     * shuffle; the histogram is the bounded (≤ nBins) summary that leaves
     * the executor, never the pixels. */
   def pixelHistogram(df: DataFrame, idCol: String, payloadCol: String,
-      nBins: Int = 16): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("bin", IntegerType), StructField("cnt", LongType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          sampleHistogram(r.getAs[Array[Byte]](1), nBins).iterator.flatMap {
-            h =>
-              h.iterator.zipWithIndex.collect {
-                case (c, b) if c > 0 => Row(r.get(0), b, c)
-              }
-          }
-        }
-      }(Encoders.row(outSchema))
-      .toDF()
-  }
+      nBins: Int = 16): DataFrame =
+    decodeRows(df, idCol, payloadCol, Seq(
+      StructField("bin", IntegerType), StructField("cnt", LongType))) { bytes =>
+      sampleHistogram(bytes, nBins).iterator.flatMap(h =>
+        h.iterator.zipWithIndex.collect { case (c, b) if c > 0 => Row(b, c) })
+    }
 
   /** Histogram-equalization LUT over a [[pixelHistogram]] table: per
     * image, the cumulative distribution per bin and the equalized target
@@ -2227,27 +1919,18 @@ object Multimodal {
     * not a placeholder; there is no undecoded-media seam left behind this
     * signature. Output: (idCol, features array<double>). */
   def extractFeatures(df: DataFrame, idCol: String, payloadCol: String,
-      featureDim: Int = 64): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("features", ArrayType(DoubleType))))
-    val idIdx = 0
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.map { r =>
-          val bytes0 = r.getAs[Array[Byte]](1)
-          val bytes = if (bytes0 == null) Array.emptyByteArray else bytes0
-          val feats = sampleHistogram(bytes, featureDim) match {
-            case Some(h) =>
-              val n = h.sum.max(1L)
-              h.map(c => (c * 1000L / n) / 1000.0)
-            case None => fingerprintFeatures(bytes, featureDim)
-          }
-          Row(r.get(idIdx), feats.toSeq)
-        }
-      }(Encoders.row(outSchema))
-      .toDF()
-  }
+      featureDim: Int = 64): DataFrame =
+    decodeRows(df, idCol, payloadCol, Seq(
+      StructField("features", ArrayType(DoubleType)))) { bytes0 =>
+      val bytes = if (bytes0 == null) Array.emptyByteArray else bytes0
+      val feats = sampleHistogram(bytes, featureDim) match {
+        case Some(h) =>
+          val n = h.sum.max(1L)
+          h.map(c => (c * 1000L / n) / 1000.0)
+        case None => fingerprintFeatures(bytes, featureDim)
+      }
+      Some(Row(feats.toSeq))
+    }
 
   /** REAL nearest-neighbor resample of a decoded image to `w`×`h` —
     * source pixel (x·srcW/w, y·srcH/h) per target pixel, channels kept. */

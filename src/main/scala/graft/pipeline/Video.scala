@@ -1,8 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.pipeline.MediaMap._
 
 /** MJPEG-in-AVI video: REAL container walk + REAL per-frame JPEG decode.
   *
@@ -35,15 +37,6 @@ object Video {
     /** Total duration in ms, floor — nFrames·scale·1000 / rate. */
     def durationMs: Long = nFrames.toLong * scale * 1000L / rate
   }
-
-  private def tag(b: Array[Byte], i: Int): String =
-    new String(Array(b(i), b(i + 1), b(i + 2), b(i + 3)),
-      java.nio.charset.StandardCharsets.US_ASCII)
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) |
-      ((b(i + 2) & 0xFFL) << 16) | ((b(i + 3) & 0xFFL) << 24)
 
   private final class W {
     val out = new java.io.ByteArrayOutputStream()
@@ -170,40 +163,29 @@ object Video {
     *  - width = 8·(1 + id % 3), height = 8·(1 + (id·2) % 3)
     *  - frame f, block(bx, by) = (id % 251 + 29·f + 17·by + 23·bx) % 256 */
   def synthesizeAviPayload(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        Row.fromSeq(r.toSeq :+ aviPayloadFor(r.getLong(idIdx)))
-      }
-    }(Encoders.row(outSchema)).toDF()
-  }
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol)(aviPayloadFor)
 
   /** The single-payload form of [[synthesizeAviPayload]]'s arithmetic. */
   private[pipeline] def aviPayloadFor(id: Long): Array[Byte] = {
-    val fps = (2 + id % 4).toInt
-    val n = (3 + id % 5).toInt
+    val (fps, w, h, frames) = fixtureClip(id, (id % 251).toInt)
+    buildAviMjpeg(w, h, fps, frames)
+  }
+
+  /** The [[synthesizeAviPayload]] clip of `id` with block base `base`:
+    * (fps, width, height, JFIF frames). */
+  private def fixtureClip(id: Long, base: Int)
+      : (Int, Int, Int, IndexedSeq[Array[Byte]]) = {
     val w = (8 * (1 + id % 3)).toInt
     val h = (8 * (1 + (id * 2) % 3)).toInt
-    val base = (id % 251).toInt
-    val frames = (0 until n).map { f =>
+    ((2 + id % 4).toInt, w, h, (0 until (3 + id % 5).toInt).map { f =>
       Jpeg.buildJpegWithBlocks(w, h,
         (bx, by) => (base + 29 * f + 17 * by + 23 * bx) % 256)
-    }
-    buildAviMjpeg(w, h, fps, frames)
+    })
   }
 
   // ------------------------------------------------------ MJPEG in MP4
   // ISO BMFF (ISO/IEC 14496-12, public spec): big-endian size+type boxes.
-  private def be16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xFF) << 8) | (b(i + 1) & 0xFF)
-  private def be32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xFFL) << 24) | ((b(i + 1) & 0xFFL) << 16) |
-      ((b(i + 2) & 0xFFL) << 8) | (b(i + 3) & 0xFFL)
-  private def be64(b: Array[Byte], i: Int): Long =
-    (be32(b, i) << 32) | be32(b, i + 4)
 
   private def beBytes32(v: Long): Array[Byte] = Array(
     ((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte,
@@ -454,29 +436,13 @@ object Video {
     * the same timing rational as the AVI twin. The engine must walk real
     * boxes and resolve the stsc/stsz/stco sample table to match. */
   def synthesizeMp4Payload(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        Row.fromSeq(r.toSeq :+ mp4PayloadFor(r.getLong(idIdx)))
-      }
-    }(Encoders.row(outSchema)).toDF()
-  }
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol)(mp4PayloadFor)
 
   /** The single-payload form of [[synthesizeMp4Payload]]'s arithmetic —
     * [[aviPayloadFor]]'s frames, MP4 container. */
   private[pipeline] def mp4PayloadFor(id: Long): Array[Byte] = {
-    val fps = (2 + id % 4).toInt
-    val n = (3 + id % 5).toInt
-    val w = (8 * (1 + id % 3)).toInt
-    val h = (8 * (1 + (id * 2) % 3)).toInt
-    val base = (id % 251).toInt
-    val frames = (0 until n).map { f =>
-      Jpeg.buildJpegWithBlocks(w, h,
-        (bx, by) => (base + 29 * f + 17 * by + 23 * bx) % 256)
-    }
+    val (fps, w, h, frames) = fixtureClip(id, (id % 251).toInt)
     buildMp4Mjpeg(w, h, timescale = fps, sampleDelta = 1, frames)
   }
 
@@ -485,30 +451,54 @@ object Video {
     * and unparseable containers are dropped ([[Jpeg.jpegPixelStats]]
     * convention); per-partition map, no shuffle. */
   def videoFrameStats(df: DataFrame, idCol: String,
-      payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+      payloadCol: String): DataFrame =
+    decodeRows(df, idCol, payloadCol, Seq(
       StructField("frame_idx", IntegerType),
       StructField("width", IntegerType), StructField("height", IntegerType),
       StructField("channels", IntegerType),
-      StructField("n_samples", LongType), StructField("sample_sum", LongType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          parseVideoMjpeg(r.getAs[Array[Byte]](1)).toSeq.flatMap { avi =>
-            avi.frames.iterator.zipWithIndex.flatMap { case (jfif, f) =>
-              Jpeg.decodeJpeg(jfif).map { img =>
-                var s = 0L
-                var i = 0
-                while (i < img.samples.length) { s += img.samples(i); i += 1 }
-                Row(r.get(0), f, img.width, img.height, img.channels,
-                  img.samples.length.toLong, s)
-              }
-            }
-          }
+      StructField("n_samples", LongType),
+      StructField("sample_sum", LongType))) { bytes =>
+      parseVideoMjpeg(bytes).iterator.flatMap { clip =>
+        clip.frames.iterator.zipWithIndex.flatMap { case (jfif, f) =>
+          Jpeg.decodeJpeg(jfif).map(img => Row(f, img.width, img.height,
+            img.channels, img.samples.length.toLong, sampleSum(img.samples)))
         }
-      }(Encoders.row(outSchema))
-      .toDF()
+      }
+    }
+
+  /** One decoded frame of a clip ([[shotFrames]]): its index in the clip,
+    * its pixels, its SAD against the previous decoded frame (None on the
+    * first frame and on a shape change) and whether it starts a shot. */
+  private[pipeline] final case class ShotFrame(frameIdx: Int,
+      img: Multimodal.DecodedImage, sad: Option[Long], startsShot: Boolean)
+
+  /** The shot-cut rule of [[sceneCuts]], [[shotKeyframes]] and
+    * [[keyframePHashes]]: the clip's frames decoded in order, undecodable
+    * ones dropped. The first decoded frame starts a shot; a resolution or
+    * channel change is a cut; otherwise a frame is a cut when its SAD
+    * against the previous DECODED frame, Σ|v_f − v_prev|, reaches
+    * `threshold`·n_samples. Holds one previous frame, not the clip. */
+  private[pipeline] def shotFrames(clip: MjpegClip,
+      threshold: Int): Iterator[ShotFrame] = {
+    var prev: Multimodal.DecodedImage = null
+    clip.frames.iterator.zipWithIndex.flatMap { case (jfif, f) =>
+      Jpeg.decodeJpeg(jfif).map { img =>
+        val sad =
+          if (prev == null || prev.width != img.width ||
+              prev.height != img.height || prev.channels != img.channels) None
+          else {
+            var s = 0L
+            var i = 0
+            val a = prev.samples
+            val b = img.samples
+            while (i < b.length) { s += math.abs(b(i) - a(i)); i += 1 }
+            Some(s)
+          }
+        prev = img
+        ShotFrame(f, img, sad,
+          sad.forall(_ >= threshold.toLong * img.samples.length))
+      }
+    }
   }
 
   /** Shot-boundary (scene-cut) detection by sum-of-absolute-differences —
@@ -535,41 +525,16 @@ object Video {
   def sceneCuts(df: DataFrame, idCol: String, payloadCol: String,
       threshold: Int = 64): DataFrame = {
     require(threshold > 0, "threshold must be positive gray levels")
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+    decodeRows(df, idCol, payloadCol, Seq(
       StructField("frame_idx", IntegerType),
       StructField("n_samples", LongType),
       StructField("sad", LongType),
-      StructField("is_cut", BooleanType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          parseVideoMjpeg(r.getAs[Array[Byte]](1)).toSeq.flatMap { clip =>
-            val decoded = clip.frames.iterator.zipWithIndex.flatMap {
-              case (jfif, f) => Jpeg.decodeJpeg(jfif).map(img => (f, img))
-            }
-            var prev: Multimodal.DecodedImage = null
-            decoded.flatMap { case (f, img) =>
-              val out = if (prev == null) None
-              else if (prev.width != img.width || prev.height != img.height ||
-                  prev.channels != img.channels)
-                Some(Row(r.get(0), f, img.samples.length.toLong, null, true))
-              else {
-                var s = 0L
-                var i = 0
-                val a = prev.samples
-                val b = img.samples
-                while (i < b.length) { s += math.abs(b(i) - a(i)); i += 1 }
-                Some(Row(r.get(0), f, b.length.toLong, s,
-                  s >= threshold.toLong * b.length))
-              }
-              prev = img
-              out
-            }
-          }
-        }
-      }(Encoders.row(outSchema))
-      .toDF()
+      StructField("is_cut", BooleanType))) { bytes =>
+      // the first decoded frame has no incoming transition
+      parseVideoMjpeg(bytes).iterator.flatMap(clip =>
+        shotFrames(clip, threshold).drop(1).map(sf => Row(sf.frameIdx,
+          sf.img.samples.length.toLong, sf.sad.getOrElse(null), sf.startsShot)))
+    }
   }
 
   /** Per-clip fingerprint input: every decoded frame's
@@ -609,24 +574,14 @@ object Video {
     * constant state per clip — the dedup groupBy downstream shuffles
     * only (fp, n_frames) rows, never pixels. */
   def videoFingerprints(df: DataFrame, idCol: String,
-      payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("n_frames", IntegerType),
-      StructField("__fp_input", StringType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          parseVideoMjpeg(r.getAs[Array[Byte]](1)).map { clip =>
-            val (nf, in) = videoFpInput(clip)
-            Row(r.get(0), nf, in)
-          }
-        }
-      }(Encoders.row(outSchema))
-      .toDF()
-      .select(col(idCol), col("n_frames"),
-        md5(col("__fp_input")).alias("fp"))
-  }
+      payloadCol: String): DataFrame =
+    decodeRows(df, idCol, payloadCol, Seq(StructField("n_frames", IntegerType),
+        StructField("__fp_input", StringType))) { bytes =>
+      parseVideoMjpeg(bytes).map { clip =>
+        val (nf, in) = videoFpInput(clip)
+        Row(nf, in)
+      }
+    }.select(col(idCol), col("n_frames"), md5(col("__fp_input")).alias("fp"))
 
   /** Exact video dedup over [[videoFingerprints]]: clips with identical
     * decoded content collapse to one group — min-id representative, the
@@ -645,25 +600,13 @@ object Video {
     * class has multiple members at correctness scale and the dedup
     * groups are non-vacuous. */
   def synthesizeAviDedupPayload(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        val fps = (2 + id % 4).toInt
-        val n = (3 + id % 5).toInt
-        val w = (8 * (1 + id % 3)).toInt
-        val h = (8 * (1 + (id * 2) % 3)).toInt
-        val base = ((id % 13) * 19).toInt
-        val frames = (0 until n).map { f =>
-          Jpeg.buildJpegWithBlocks(w, h,
-            (bx, by) => (base + 29 * f + 17 * by + 23 * bx) % 256)
-        }
-        Row.fromSeq(r.toSeq :+ buildAviMjpeg(w, h, fps, frames))
-      }
-    }(Encoders.row(outSchema)).toDF()
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol)(aviDedupPayloadFor)
+
+  /** The single-payload form of [[synthesizeAviDedupPayload]]. */
+  private[pipeline] def aviDedupPayloadFor(id: Long): Array[Byte] = {
+    val (fps, w, h, frames) = fixtureClip(id, ((id % 13) * 19).toInt)
+    buildAviMjpeg(w, h, fps, frames)
   }
 
   /** Keyframe-per-shot selection — the curation artifact [[sceneCuts]]
@@ -683,67 +626,25 @@ object Video {
   def shotKeyframes(df: DataFrame, idCol: String, payloadCol: String,
       threshold: Int = 64): DataFrame = {
     require(threshold > 0, "threshold must be positive gray levels")
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+    decodeRows(df, idCol, payloadCol, Seq(
       StructField("shot_idx", IntegerType),
       StructField("start_frame", IntegerType),
       StructField("n_frames", IntegerType),
       StructField("n_samples", LongType),
-      StructField("keyframe_sum", LongType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          parseVideoMjpeg(r.getAs[Array[Byte]](1)).toSeq.flatMap { clip =>
-            val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
-            var prev: Multimodal.DecodedImage = null
-            var shotIdx = 0
-            var start = -1
-            var len = 0
-            var keyN = 0L
-            var keySum = 0L
-            def pixelSum(img: Multimodal.DecodedImage): Long = {
-              var s = 0L
-              var i = 0
-              while (i < img.samples.length) { s += img.samples(i); i += 1 }
-              s
-            }
-            def flush(): Unit =
-              if (len > 0) {
-                rows += Row(r.get(0), shotIdx, start, len, keyN, keySum)
-                shotIdx += 1
-              }
-            clip.frames.iterator.zipWithIndex.foreach { case (jfif, f) =>
-              Jpeg.decodeJpeg(jfif).foreach { img =>
-                val cut =
-                  if (prev == null) false
-                  else if (prev.width != img.width ||
-                      prev.height != img.height ||
-                      prev.channels != img.channels) true
-                  else {
-                    var s = 0L
-                    var i = 0
-                    val a = prev.samples
-                    val b = img.samples
-                    while (i < b.length) { s += math.abs(b(i) - a(i)); i += 1 }
-                    s >= threshold.toLong * b.length
-                  }
-                if (prev == null || cut) {
-                  flush()
-                  start = f
-                  len = 0
-                  keyN = img.samples.length.toLong
-                  keySum = pixelSum(img)
-                }
-                len += 1
-                prev = img
-              }
-            }
-            flush()
-            rows
-          }
+      StructField("keyframe_sum", LongType))) { bytes =>
+      parseVideoMjpeg(bytes).iterator.flatMap { clip =>
+        // per shot: start_frame, n_frames, n_samples, keyframe_sum
+        val shots = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
+        shotFrames(clip, threshold).foreach { sf =>
+          if (sf.startsShot) shots += Array(sf.frameIdx, 0L,
+            sf.img.samples.length.toLong, sampleSum(sf.img.samples))
+          shots.last(1) += 1
         }
-      }(Encoders.row(outSchema))
-      .toDF()
+        shots.iterator.zipWithIndex.map { case (s, i) =>
+          Row(i, s(0).toInt, s(1).toInt, s(2), s(3))
+        }
+      }
+    }
   }
 
   /** Per-shot keyframe perceptual hashes — the near-dup signature the
@@ -764,45 +665,19 @@ object Video {
   def keyframePHashes(df: DataFrame, idCol: String, payloadCol: String,
       threshold: Int = 64): DataFrame = {
     require(threshold > 0, "threshold must be positive gray levels")
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+    decodeRows(df, idCol, payloadCol, Seq(
       StructField("n_shots", IntegerType),
       StructField("shot_idx", IntegerType),
       StructField("phash_hi", LongType),
-      StructField("phash_lo", LongType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          parseVideoMjpeg(r.getAs[Array[Byte]](1)).toSeq.flatMap { clip =>
-            val hashes = scala.collection.mutable.ArrayBuffer.empty[Long]
-            var prev: Multimodal.DecodedImage = null
-            clip.frames.iterator.foreach { jfif =>
-              Jpeg.decodeJpeg(jfif).foreach { img =>
-                val cut =
-                  if (prev == null) true
-                  else if (prev.width != img.width ||
-                      prev.height != img.height ||
-                      prev.channels != img.channels) true
-                  else {
-                    var s = 0L
-                    var i = 0
-                    val a = prev.samples
-                    val b = img.samples
-                    while (i < b.length) { s += math.abs(b(i) - a(i)); i += 1 }
-                    s >= threshold.toLong * b.length
-                  }
-                if (cut) hashes += Multimodal.phash64(img)
-                prev = img
-              }
-            }
-            val nShots = hashes.length
-            hashes.iterator.zipWithIndex.map { case (h, s) =>
-              Row(r.get(0), nShots, s, h >>> 32, h & 0xFFFFFFFFL)
-            }.toSeq
-          }
+      StructField("phash_lo", LongType))) { bytes =>
+      parseVideoMjpeg(bytes).iterator.flatMap { clip =>
+        val hashes = shotFrames(clip, threshold).filter(_.startsShot)
+          .map(sf => Multimodal.phash64(sf.img)).toIndexedSeq
+        hashes.iterator.zipWithIndex.map { case (h, s) =>
+          Row(hashes.length, s, h >>> 32, h & 0xFFFFFFFFL)
         }
-      }(Encoders.row(outSchema))
-      .toDF()
+      }
+    }
   }
 
   /** Video NEAR-duplicate pairs — the re-encode-robust complement to
@@ -873,29 +748,22 @@ object Video {
     * (values ≤ 253), so every variant of a group shares the exact shot
     * structure and differs by a constant lift the DCT signs ignore. */
   def synthesizeAviNearDupPayload(df: DataFrame, idCol: String,
-      payloadCol: String = "payload"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(payloadCol, BinaryType))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        val g = id / 10
-        val delta = (2 * (id % 3)).toInt
-        val n = (4 + g % 3).toInt
-        val k1 = (13 * (g % 197) + 7).toInt
-        val k2 = (23 * (g % 193)).toInt
-        val frames = (0 until n).map { f =>
-          Jpeg.buildJpegWithBlocks(32, 32, { (bx, by) =>
-            val i = 4 * by + bx + 1
-            val s = (k1 * i * i + k2 * i) % 197
-            (s + 97 * (f / 2) + 3 * (f % 2)) % 250 + delta
-          })
-        }
-        Row.fromSeq(r.toSeq :+ buildAviMjpeg(32, 32, 4, frames))
+      payloadCol: String = "payload"): DataFrame =
+    withIdPayload(df, idCol, payloadCol) { id =>
+      val g = id / 10
+      val delta = (2 * (id % 3)).toInt
+      val n = (4 + g % 3).toInt
+      val k1 = (13 * (g % 197) + 7).toInt
+      val k2 = (23 * (g % 193)).toInt
+      val frames = (0 until n).map { f =>
+        Jpeg.buildJpegWithBlocks(32, 32, { (bx, by) =>
+          val i = 4 * by + bx + 1
+          val s = (k1 * i * i + k2 * i) % 197
+          (s + 97 * (f / 2) + 3 * (f % 2)) % 250 + delta
+        })
       }
-    }(Encoders.row(outSchema)).toDF()
-  }
+      buildAviMjpeg(32, 32, 4, frames)
+    }
 
   /** REAL frame sampling: every `everyMs` on the stream clock, decode THE
     * frame covering that instant — index = ⌊ts·rate / (1000·scale)⌋ from
@@ -906,34 +774,23 @@ object Video {
   def sampleVideoFrames(df: DataFrame, idCol: String, payloadCol: String,
       everyMs: Long): DataFrame = {
     require(everyMs > 0, "everyMs must be positive")
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+    decodeRows(df, idCol, payloadCol, Seq(
       StructField("frame_ts_ms", LongType),
       StructField("frame_idx", IntegerType),
-      StructField("sample_sum", LongType)))
-    df.select(col(idCol), col(payloadCol))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          parseVideoMjpeg(r.getAs[Array[Byte]](1)).toSeq.flatMap { avi =>
-            // decode lazily and at most once per frame actually sampled
-            val cache = new java.util.HashMap[Int, Long]()
-            Iterator.iterate(0L)(_ + everyMs)
-              .map(ts => (ts, (ts * avi.rate / (1000L * avi.scale)).toInt))
-              .takeWhile(_._2 < avi.nFrames)
-              .flatMap { case (ts, f) =>
-                val sum = cache.computeIfAbsent(f, _ =>
-                  Jpeg.decodeJpeg(avi.frames(f)).map { img =>
-                    var s = 0L
-                    var i = 0
-                    while (i < img.samples.length) { s += img.samples(i); i += 1 }
-                    s
-                  }.getOrElse(Long.MinValue))
-                if (sum == Long.MinValue) None
-                else Some(Row(r.get(0), ts, f, sum))
-              }
+      StructField("sample_sum", LongType))) { bytes =>
+      parseVideoMjpeg(bytes).iterator.flatMap { avi =>
+        // decode lazily and at most once per frame actually sampled
+        val cache = new java.util.HashMap[Int, Long]()
+        Iterator.iterate(0L)(_ + everyMs)
+          .map(ts => (ts, (ts * avi.rate / (1000L * avi.scale)).toInt))
+          .takeWhile(_._2 < avi.nFrames)
+          .flatMap { case (ts, f) =>
+            val sum = cache.computeIfAbsent(f, _ =>
+              Jpeg.decodeJpeg(avi.frames(f)).map(img => sampleSum(img.samples))
+                .getOrElse(Long.MinValue))
+            if (sum == Long.MinValue) None else Some(Row(ts, f, sum))
           }
-        }
-      }(Encoders.row(outSchema))
-      .toDF()
+      }
+    }
   }
 }

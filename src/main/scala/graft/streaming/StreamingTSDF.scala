@@ -641,17 +641,20 @@ object StreamingTSDF {
 
   /** Stateless per-PARTITION pre-aggregation (a map-side combine): each
     * input partition folds its rows of a micro-batch into one `V` per key
-    * (`add` from `zero`) and emits them in key order, which keeps the output
-    * deterministic per input partition (task-retry safe). No exchange, no
-    * sort, no state stores. Exact for any partitioning and any micro-batch
-    * split whenever the sink fold is additive (sums, counts) or idempotent
-    * (max, OR) — the discipline of every `*Deltas` operator below. */
+    * (`add` from a fresh `zero`, so a mutable accumulator is never shared
+    * across keys) and emits `out`'s rows per key in key order, which keeps
+    * the output deterministic per input partition (task-retry safe); an
+    * empty partition emits nothing. No exchange, no sort, no state
+    * stores. Exact for any partitioning and any micro-batch split whenever
+    * the sink fold is additive (sums, counts) or idempotent (max, OR, a
+    * k-min re-fold) — the discipline of every `*Deltas` operator below. */
   private def partitionCombine[E, K: Ordering, V, O: Encoder](events: Dataset[E])(
-      key: E => K, zero: V)(add: (V, E) => V)(out: ((K, V)) => O): Dataset[O] =
+      key: E => K, zero: => V)(add: (V, E) => V)(
+      out: ((K, V)) => IterableOnce[O]): Dataset[O] =
     events.mapPartitions { it =>
       val acc = scala.collection.mutable.SortedMap.empty[K, V]
       it.foreach { e => val k = key(e); acc(k) = add(acc.getOrElse(k, zero), e) }
-      acc.iterator.map(out)
+      acc.iterator.flatMap(out)
     }
 
   // ------------------------------------------------ streaming HLL registers
@@ -707,7 +710,7 @@ object StreamingTSDF {
     // genuinely require remembered state.
     val out = (if (stateTtl.isEmpty)
       partitionCombine(events)((e: HllEvent) => (e.series, e.bucket), 0)(
-        (r, e) => math.max(r, e.rho)) { case ((s, b), r) => (s, b, r) }
+        (r, e) => math.max(r, e.rho)) { case ((s, b), r) => Some((s, b, r)) }
     else keyedState[String, HllEvent, HllRegState, (String, Long, Int)](
         events.groupByKey(_.series), stateTtl,
         (_, rows) => rows.map(_.eventTime.getTime).max) { (key, stored, rows) =>
@@ -780,24 +783,16 @@ object StreamingTSDF {
     // split. A hash re-emitted by a later batch or a sibling partition is
     // excess the re-fold trims — the same slack the old changelog already
     // carried for evicted entries.
-    val out = events
-      .mapPartitions { it =>
-        val sets =
-          scala.collection.mutable.SortedMap.empty[String, java.util.TreeSet[java.lang.Long]]
-        it.foreach { e =>
-          val set = sets.getOrElseUpdate(e.series,
-            new java.util.TreeSet[java.lang.Long]())
-          val v = e.h
-          if (!set.contains(v)) {
-            if (set.size < k) set.add(v)
-            else if (v < set.last()) { set.add(v); set.pollLast() }
-          }
+    import scala.jdk.CollectionConverters._
+    val out = partitionCombine(events)((e: KmvEvent) => e.series,
+        new java.util.TreeSet[java.lang.Long]()) { (set, e) =>
+        val v = e.h
+        if (!set.contains(v)) {
+          if (set.size < k) set.add(v)
+          else if (v < set.last()) { set.add(v); set.pollLast() }
         }
-        sets.iterator.flatMap { case (s, set) =>
-          import scala.jdk.CollectionConverters._
-          set.iterator().asScala.map(v => (s, v.longValue()))
-        }
-      }
+        set
+      } { case (s, set) => set.iterator().asScala.map(v => (s, v.longValue())) }
       .toDF("series", "h")
     out.select(typedSeriesCols(df.schema, seriesCols) :+ col("h"): _*)
   }
@@ -827,7 +822,7 @@ object StreamingTSDF {
       col(tsCol).alias("eventTime"))
       .filter(col("bin").isNotNull).as[HistEvent]
     val out = partitionCombine(projected)((e: HistEvent) => (e.series, e.bin),
-        0L)((c, _) => c + 1L) { case ((s, b), c) => (s, b, c) }
+        0L)((c, _) => c + 1L) { case ((s, b), c) => Some((s, b, c)) }
       .toDF("series", "bin", "cnt")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
       col("bin"), col("cnt")): _*)
@@ -868,7 +863,7 @@ object StreamingTSDF {
       .as[CmsEvent]
     val out = partitionCombine(projected)(
         (e: CmsEvent) => (e.series, e.row, e.bucket), 0L)((c, _) => c + 1L) {
-        case ((s, r, b), c) => (s, r, b, c) }
+        case ((s, r, b), c) => Some((s, r, b, c)) }
       .toDF("series", "row", "bucket", "cnt")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
       col("row"), col("bucket"), col("cnt")): _*)
@@ -915,7 +910,7 @@ object StreamingTSDF {
       .filter(col("word").isNotNull)
       .as[BloomEvent]
     val out = partitionCombine(projected)((e: BloomEvent) => (e.series, e.word),
-        0L)((m, e) => m | e.mask) { case ((s, w), m) => (s, w, m) }
+        0L)((m, e) => m | e.mask) { case ((s, w), m) => Some((s, w, m)) }
       .toDF("series", "word", "mask")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
       col("word"), col("mask")): _*)
@@ -948,7 +943,7 @@ object StreamingTSDF {
       .filter(col("key").isNotNull && col("v").isNotNull)
       .as[SumEvent]
     val out = partitionCombine(projected)((e: SumEvent) => (e.series, e.key),
-        0L)((v, e) => v + e.v) { case ((s, k), v) => (s, k, v) }
+        0L)((v, e) => v + e.v) { case ((s, k), v) => Some((s, k, v)) }
       .toDF("series", "key", "s")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
       col("key"), col("s")): _*)
@@ -977,7 +972,7 @@ object StreamingTSDF {
       .as[KmEvent]
     val out = partitionCombine(projected)((e: KmEvent) => (e.series, e.t),
         (0L, 0L)) { case ((d, o), e) => (d + (if (e.ev) 1L else 0L), o + 1L) } {
-        case ((s, t), (d, o)) => (s, t, d, o) }
+        case ((s, t), (d, o)) => Some((s, t, d, o)) }
       .toDF("series", "t", "d", "obs")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
       col("t"), col("d"), col("obs")): _*)
@@ -1138,7 +1133,7 @@ object StreamingTSDF {
       .as[StatEvent]
     val out = partitionCombine(projected)((e: StatEvent) => e.series,
         (0L, 0L, 0L)) { case ((n, s1, s2), e) => (n + 1, s1 + e.y, s2 + e.y * e.y) } {
-        case (k, (n, s1, s2)) => (k, n, s1, s2) }
+        case (k, (n, s1, s2)) => Some((k, n, s1, s2)) }
       .toDF("series", "n", "s1", "s2")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
       col("n"), col("s1"), col("s2")): _*)
@@ -1166,22 +1161,16 @@ object StreamingTSDF {
       .filter(col("x1").isNotNull && col("x2").isNotNull &&
         col("y").isNotNull)
       .as[OlsEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): moments are additive, so per-partition per-batch
-    // deltas fold identically for any partitioning and micro-batching.
-    val out = projected
-      .mapPartitions { it =>
-        val acc = scala.collection.mutable.SortedMap.empty[String, Array[Long]]
-        it.foreach { e =>
-          val a = acc.getOrElseUpdate(e.series, new Array[Long](9))
-          a(0) += 1; a(1) += e.x1; a(2) += e.x2; a(3) += e.y
-          a(4) += e.x1 * e.x1; a(5) += e.x1 * e.x2; a(6) += e.x2 * e.x2
-          a(7) += e.x1 * e.y; a(8) += e.x2 * e.y
-        }
-        acc.iterator.map { case (k, a) =>
-          (k, a(0), a(1), a(2), a(3), a(4), a(5), a(6), a(7), a(8))
-        }
-      }
+    // moments are additive, so per-partition per-batch deltas fold
+    // identically for any partitioning and micro-batching
+    val out = partitionCombine(projected)((e: OlsEvent) => e.series,
+        new Array[Long](9)) { (a, e) =>
+        a(0) += 1; a(1) += e.x1; a(2) += e.x2; a(3) += e.y
+        a(4) += e.x1 * e.x1; a(5) += e.x1 * e.x2; a(6) += e.x2 * e.x2
+        a(7) += e.x1 * e.y; a(8) += e.x2 * e.y
+        a
+      } { case (k, a) =>
+        Some((k, a(0), a(1), a(2), a(3), a(4), a(5), a(6), a(7), a(8))) }
       .toDF("series", "n", "sx1", "sx2", "sy", "sx11", "sx12", "sx22",
         "sx1y", "sx2y")
     out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
@@ -1211,7 +1200,7 @@ object StreamingTSDF {
       .filter(col("w1").isNotNull && col("w2").isNotNull)
       .as[PairEvent]
     partitionCombine(projected)((e: PairEvent) => (e.w1, e.w2), 0L)(
-        (c, _) => c + 1L) { case ((a, b), c) => (a, b, c) }
+        (c, _) => c + 1L) { case ((a, b), c) => Some((a, b, c)) }
       .toDF("w1", "w2", "cnt")
   }
 
@@ -1251,31 +1240,27 @@ object StreamingTSDF {
       transform(vecCol, x => x.cast(LongType)).alias("vec"))
       .filter(col("vec").isNotNull && size(col("vec")) === dim)
       .as[GramEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): Gram sums and row counts are additive, so
-    // per-partition per-batch cell deltas fold identically for any
-    // partitioning and any micro-batch split; every cell of a non-empty
+    // Gram sums and row counts are additive, so per-partition per-batch
+    // cell deltas fold identically for any partitioning and any
+    // micro-batch split. One accumulator per partition (one constant key):
+    // cells 0 until nCells, then the row count. Every cell of a non-empty
     // partition is emitted — including zero sums — so the folded n stays
     // the row count on every cell, exactly like the batch output.
-    projected
-      .mapPartitions { it =>
-        val acc = new Array[Long](nCells)
-        var n = 0L
-        it.foreach { e =>
-          val v = e.vec.toArray
-          var k = 0
-          var i = 0
-          while (i < dim) {
-            val vi = v(i)
-            var j = i
-            while (j < dim) { acc(k) += vi * v(j); k += 1; j += 1 }
-            i += 1
-          }
-          n += 1
+    partitionCombine(projected)((_: GramEvent) => 0,
+        new Array[Long](nCells + 1)) { (acc, e) =>
+        val v = e.vec.toArray
+        var k = 0
+        var i = 0
+        while (i < dim) {
+          val vi = v(i)
+          var j = i
+          while (j < dim) { acc(k) += vi * v(j); k += 1; j += 1 }
+          i += 1
         }
-        if (n == 0) Iterator.empty
-        else (0 until nCells).iterator.map(k => (k, acc(k), n))
-      }
+        acc(nCells) += 1
+        acc
+      } { case (_, acc) =>
+        (0 until nCells).iterator.map(k => (k, acc(k), acc(nCells))) }
       .toDF("k", "s", "n")
   }
 
