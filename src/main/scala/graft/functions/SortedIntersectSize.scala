@@ -1,36 +1,30 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes,
+  Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
-/** |A ∩ B| for two SORTED arrays of distinct non-null longs, as one
-  * codegen'd two-pointer merge.
+/** `size(array_intersect(a, b))` for two ascending-SORTED arrays of
+  * non-null longs, as one codegen'd two-pointer merge: each distinct value
+  * common to both counts once, however often it repeats in either (Spark's
+  * `array_intersect` and DuckDB's `list_intersect` both return a set).
   *
-  * `size(array_intersect(a, b))` builds a hash set per evaluation — per
-  * candidate PAIR in a dedup verify stage. Sorting each document's hash set
-  * once (`array_sort` at projection time, n log n per doc) converts every
-  * pairwise verify into an O(|A|+|B|) merge with no allocation, which is the
-  * difference between the verify stage being allocation-bound and
-  * memory-bandwidth-bound at corpus scale. Inputs MUST be sorted and
-  * duplicate-free (shingle/hash sets are) — equal to `array_intersect`
-  * semantics under that contract, asserted against it in tests.
+  * `array_intersect` builds a hash set per evaluation — per candidate PAIR
+  * in a dedup verify stage. Sorting each document's hash array once
+  * (`array_sort` or [[SortedShingleHashes]] at projection time, n log n
+  * per doc) turns every pairwise verify into an O(|A|+|B|) merge with no
+  * allocation. Inputs MUST be sorted; duplicates are allowed. Asserted
+  * against `array_intersect` in tests, runs of equal values included.
   */
 case class SortedIntersectSize(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
+  override def inputTypes: Seq[ArrayType] =
+    Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_sorted_intersect_size"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two ARRAY<BIGINT> arguments, got ${l.sql} and ${r.sql}")
-    }
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     SortedIntersectSize.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -45,17 +39,24 @@ case class SortedIntersectSize(left: Expression, right: Expression)
 }
 
 object SortedIntersectSize {
-  /** Static target for generated code. */
+  /** Static target for generated code. On sorted input a repeated common
+    * value matches on consecutive steps, so comparing a match with the
+    * last one counts it once. */
   def count(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements()
     val nb = b.numElements()
     var i = 0
     var j = 0
     var c = 0
+    var last = 0L
     while (i < na && j < nb) {
       val x = a.getLong(i)
       val y = b.getLong(j)
-      if (x == y) { c += 1; i += 1; j += 1 }
+      if (x == y) {
+        if (c == 0 || x != last) { c += 1; last = x }
+        i += 1
+        j += 1
+      }
       else if (x < y) i += 1
       else j += 1
     }

@@ -1,8 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
-  GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression,
+  ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -44,6 +44,13 @@ import graft.pipeline.Hashing
   *    one pass with hash maps over byte slices — replaces the O(G²)
   *    pairwise `filter`/`aggregate` lambda chains behind q_quality_v2
   *    and q_repetition.
+  *  - [[SortedShingleHashes]]: the [[Hashing.polyHash]] of every shingle,
+  *    sorted — replaces `array_sort(transform(shingles, polyHash))`, the
+  *    MinHash verify set.
+  *  - [[MinHashSignature]]: the k permutation minima of a hash array in
+  *    one pass over it — replaces both the explode + k `min` aggregates
+  *    of the batch path and the `array_min(transform(...))` lambda per
+  *    permutation of the stream path.
   *
   * Value parity is bit-for-bit and locked by the existing unit suites and
   * the DuckDB oracle replays (which compute the same definitions
@@ -169,21 +176,7 @@ object TextKernels {
     var ascii = true
     var i = 0
     while (i < bytes.length && ascii) { if (bytes(i) < 0) ascii = false; i += 1 }
-    val cps: Array[Int] =
-      if (ascii) null
-      else {
-        val str = s.toString
-        val buf = new Array[Int](str.length)
-        var ci = 0
-        var si = 0
-        while (si < str.length) {
-          val cp = str.codePointAt(si)
-          buf(ci) = cp
-          ci += 1
-          si += Character.charCount(cp)
-        }
-        java.util.Arrays.copyOf(buf, ci)
-      }
+    val cps: Array[Int] = if (ascii) null else s.toString.codePoints().toArray
     val n = if (ascii) bytes.length else cps.length
     @inline def cpAt(j: Int): Long =
       if (ascii) (bytes(j) & 0xffL) else cps(j).toLong
@@ -261,28 +254,19 @@ object TextKernels {
     val b = Hashing.bCoef(seed)
     val P = Hashing.P
     val B = Hashing.B
-    def bucketOf(h: Long): Long = ((h * a + b) % P) % buckets
+    def bucketOf(h: Long): Long = Hashing.mixLong(h, a, b) % buckets
     val bytes = s.getBytes
     val len = bytes.length
     var ascii = true
     var i = 0
     while (i < len) { if (bytes(i) < 0) { ascii = false; i = len }; i += 1 }
     if (!ascii) {
-      // codepoint fallback: same fold as PolyHash.hash over each gram
+      // codepoint fallback: PolyHash.hash over each gram
       val str = s.toString
       val toks = str.split(" ", -1)
       val out = new Array[Long](toks.length +
         (if (toks.length >= 2) toks.length - 1 else 0))
-      def hashStr(t: String): Long = {
-        var h = 0L
-        var j = 0
-        while (j < t.length) {
-          val cp = t.codePointAt(j)
-          h = (h * B + cp) % P
-          j += Character.charCount(cp)
-        }
-        h
-      }
+      def hashStr(t: String): Long = PolyHash.hash(UTF8String.fromString(t), P)
       var k = 0
       while (k < toks.length) { out(k) = bucketOf(hashStr(toks(k))); k += 1 }
       k = 0
@@ -452,6 +436,99 @@ object TextKernels {
       if (lineTot > 0) frac(lineDup, lineTot) else 0.0,
       t2c, t3c, top(4)._2, cover(5), cover(10)))
   }
+
+  /** [[PolyHash.hash]] of every shingle, sorted ascending with duplicates
+    * kept: `array_sort(transform(shingles, polyHash))`, null elements
+    * (hashed to null) last. */
+  def sortedShingleHashes(shingles: ArrayData): ArrayData = {
+    val n = shingles.numElements()
+    val hs = new Array[Long](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (!shingles.isNullAt(i)) {
+        hs(m) = PolyHash.hash(shingles.getUTF8String(i), Hashing.P)
+        m += 1
+      }
+      i += 1
+    }
+    java.util.Arrays.sort(hs, 0, m)
+    if (m == n) UnsafeArrayData.fromPrimitiveArray(hs)
+    else new GenericArrayData(Array.tabulate[Any](n)(j => if (j < m) hs(j) else null))
+  }
+
+  /** The MinHash signature of a hash array under the mixer coefficients
+    * `a` and `b` of seeds 0 until k ([[Hashing.aCoef]], [[Hashing.bCoef]]):
+    * value s is the minimum over its non-null h of
+    * [[Hashing.mixLong]]`(h, a(s), b(s))`;
+    * null when it holds no non-null hash (the explode + `min` aggregate
+    * this replaces emits no row for it). Hashes must lie in [0, P), where
+    * `mixLong` equals [[Hashing.mix]]'s `pmod` and no product overflows. */
+  def minHashSignature(hashes: ArrayData, a: Array[Long], b: Array[Long]): ArrayData = {
+    val k = a.length
+    val sig = Array.fill(k)(Long.MaxValue)
+    var any = false
+    var i = 0
+    while (i < hashes.numElements()) {
+      if (!hashes.isNullAt(i)) {
+        val h = hashes.getLong(i)
+        any = true
+        var s = 0
+        while (s < k) { sig(s) = math.min(sig(s), Hashing.mixLong(h, a(s), b(s))); s += 1 }
+      }
+      i += 1
+    }
+    if (any) UnsafeArrayData.fromPrimitiveArray(sig) else null
+  }
+}
+
+/** Expression form of [[TextKernels.sortedShingleHashes]] over an array
+  * of shingle strings. */
+case class SortedShingleHashes(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes {
+  override def inputTypes: Seq[ArrayType] = Seq(ArrayType(StringType))
+  override def dataType: DataType =
+    ArrayType(LongType, child.dataType.asInstanceOf[ArrayType].containsNull)
+  override def prettyName: String = "graft_sorted_shingle_hashes"
+
+  override protected def nullSafeEval(input: Any): Any =
+    TextKernels.sortedShingleHashes(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.sortedShingleHashes($c)")
+
+  override protected def withNewChildInternal(
+      newChild: Expression): SortedShingleHashes = copy(child = newChild)
+}
+
+/** Expression form of [[TextKernels.minHashSignature]]: `k` longs, or
+  * null for an array with no non-null hash. */
+case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression
+    with ExpectsInputTypes {
+  require(k >= 1, s"signature length must be >= 1, got $k")
+
+  override def inputTypes: Seq[ArrayType] = Seq(ArrayType(LongType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_minhash_signature"
+
+  // the mixer coefficients (a_s, b_s) of seeds 0 until k, built once
+  @transient private lazy val coefs =
+    (Array.tabulate(k)(Hashing.aCoef), Array.tabulate(k)(Hashing.bCoef))
+
+  override protected def nullSafeEval(input: Any): Any =
+    TextKernels.minHashSignature(input.asInstanceOf[ArrayData], coefs._1, coefs._2)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val a = ctx.addReferenceObj("mixA", coefs._1, "long[]")
+    val b = ctx.addReferenceObj("mixB", coefs._2, "long[]")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.TextKernels.minHashSignature($c, $a, $b);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): MinHashSignature = copy(child = newChild)
 }
 
 /** Expression form of [[TextKernels.repetition]] over (raw text, its

@@ -1,18 +1,21 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.functions.{MinHashSignature, SortedIntersectSize, SortedShingleHashes,
+  WordShingles}
 
 /** Document deduplication at corpus scale: exact, MinHash+LSH, SimHash,
   * n-gram Jaccard and embedding-cosine near-dup.
   *
-  * All operators are pure Column algebra (codegen'd, no UDFs):
-  * shingling/minhashing use higher-order functions (`transform`,
-  * `array_min`, `aggregate`) over `split` tokens; candidate generation is an
-  * equi-join on LSH band hashes — the only shuffles are the band-bucket join
-  * and the final aggregation, both keyed well for 1000-executor scale (band
-  * hash keys are uniformly distributed by construction).
+  * All operators are pure Column algebra (codegen'd, no UDFs): shingling,
+  * shingle hashing and MinHash signatures are per-row kernels
+  * ([[graft.functions.TextKernels]]); candidate pairs come from one
+  * band-bucket self-join ([[Similarity.subBucketPairsRelational]]) keyed on
+  * band hashes, which are uniformly distributed by construction, and each
+  * pair is verified inside its bucket.
   */
 object Dedup {
 
@@ -63,9 +66,8 @@ object Dedup {
     * multi-byte UTF-8 unit is ≥ 0x80). Bit-identical output — the DuckDB
     * oracle replays the original regex formulation against it. */
   def normalizeText(c: Column): Column =
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.CollapseNonAlnum(
-        org.apache.spark.sql.GraftColumns.expression(lower(c))))
+    GraftColumns.column(
+      graft.functions.CollapseNonAlnum(GraftColumns.expression(lower(c))))
 
   /** Corpus duplication report — the "how much will dedup buy" sizing
     * number run before any dedup pass: exact doc count, distinct
@@ -92,73 +94,102 @@ object Dedup {
     * `concat_ws(slice(...))` HOF assembly + `array_distinct`,
     * bit-identical rows (TextKernelsSpec differential). */
   def shingles(textCol: Column, w: Int): Column =
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.WordShingles(
-        org.apache.spark.sql.GraftColumns.expression(
-          normalizeText(textCol)), w))
+    normalizedShingles(normalizeText(textCol), w)
 
-  /** Per-shingle polynomial hashes (engine-agnostic, see [[Hashing]]) —
-    * computed once, then remixed per MinHash permutation. */
-  def shingleHashes(shinglesCol: Column): Column =
-    transform(shinglesCol, x => Hashing.polyHash(x))
+  /** [[shingles]] of an already-normalized text. */
+  private def normalizedShingles(normCol: Column, w: Int): Column =
+    GraftColumns.column(WordShingles(GraftColumns.expression(normCol), w))
 
-  /** k-permutation MinHash signature over precomputed shingle hashes:
-    * sig[s] = min over shingles of (a_s·h + b_s) mod P. Fully codegen'd. */
-  def minhashSignature(hashesCol: Column, k: Int): Column =
-    array((0 until k).map(s =>
-      array_min(transform(hashesCol, h => Hashing.mix(h, s)))): _*)
+  /** Per-shingle polynomial hashes (engine-agnostic, see [[Hashing]]),
+    * sorted ascending, duplicates kept: the codegen'd
+    * [[graft.functions.SortedShingleHashes]] kernel, equal to
+    * `array_sort(transform(shingles, polyHash))`. The MinHash verify set
+    * and the input of [[signature]]. */
+  def sortedShingleHashes(shinglesCol: Column): Column =
+    GraftColumns.column(SortedShingleHashes(GraftColumns.expression(shinglesCol)))
+
+  /** k-permutation MinHash signature of a hash array: value s is the min
+    * over h of `(a_s·h + b_s) mod P`, null for an array with no hash. One
+    * codegen'd call per row ([[graft.functions.MinHashSignature]]). */
+  def signature(hashesCol: Column, k: Int): Column =
+    GraftColumns.column(MinHashSignature(GraftColumns.expression(hashesCol), k))
+
+  /** The `bands` (band, bhash) structs of a signature: band b folds its
+    * `rowsPerBand` minima b·r … b·r + r − 1. Null for a null signature,
+    * so an explode of it drops a row with no shingles. */
+  private[graft] def bandHashes(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    when(sig.isNotNull, array((0 until bands).map(b =>
+      struct(lit(b).alias("band"),
+        Hashing.foldHashes((0 until rowsPerBand).map(r => sig(b * rowsPerBand + r)))
+          .alias("bhash"))): _*))
+
+  /** MinHash-LSH bucket pairs: each row is normalized, shingled, hashed
+    * and signed once, in its own projection: no shingle explode, no
+    * signature aggregate, one scan of `df`.
+    * Its `bands` band hashes of `rowsPerBand` minima key the buckets; two
+    * extra minima fold into the sub-key `xh`. Rows sharing a bucket pair
+    * through [[Similarity.subBucketPairsRelational]]: a bucket past
+    * `maxBucketSize` is split by `xh`, not dropped, and identical or
+    * near-identical docs share those minima, so boilerplate clusters stay
+    * together and still emit (linearly many) pairs. With rowsPerBand = 3 a
+    * spurious pair at similarity s collides with probability s³ per band.
+    *
+    * Entries are struct(id, xh, `payload`…); a payload reads `__t` (the
+    * normalized text) or `__sh` ([[sortedShingleHashes]] of the
+    * shingles), so a caller verifies each pair inside the bucket, with no
+    * join back to the input — the [[Similarity.hammingBandPairs]] shape.
+    * Output (a, b), a.id < b.id, one row per pair AND shared band. A
+    * sorted-merge verify costs about what moving its payload costs, so it
+    * runs on every row and the pairs reduce after it ([[verifiedPairs]]):
+    * the reducing shuffle carries (a, b, metric), never a payload. Edit
+    * distance reduces first: its DP is the cost, and the members of a
+    * duplicate cluster share every band, so a per-row DP runs `bands`
+    * times per pair.
+    *
+    * The payload rides the bucket shuffle and the sub-bucket lists: a
+    * cluster of m identical docs is one list row of m payloads per band,
+    * and up to m·maxBucketSize pair rows per band carry two payloads each.
+    * On 500 identical 600-character docs plus 1,000 others (4 tasks),
+    * edit distance's pair reduction, a sort, peaked at 196 MB of task
+    * execution memory against 67 MB for the join-back it replaced, in
+    * half the time; the sort spills rather than fails. */
+  private def minhashBucketPairs(df: DataFrame, textCol: String, idCol: String,
+      shingleWidth: Int, bands: Int, rowsPerBand: Int, maxBucketSize: Int,
+      payload: Column*): DataFrame = {
+    val k = bands * rowsPerBand
+    val signed = df.select(col(idCol), normalizeText(col(textCol)).alias("__t"))
+      .withColumn("__sh", sortedShingleHashes(normalizedShingles(col("__t"), shingleWidth)))
+      .withColumn("__sig", signature(col("__sh"), k + 2))
+    val xh = Hashing.foldHashes(Seq(col("__sig")(k), col("__sig")(k + 1)))
+    val banded = signed.select(
+      struct(Seq(col(idCol).alias("id"), xh.alias("xh")) ++ payload: _*).alias("__e"),
+      explode(bandHashes(col("__sig"), bands, rowsPerBand)).alias("__b"))
+    Similarity.subBucketPairsRelational(banded,
+      Seq(col("__b.band"), col("__b.bhash")), col("__e.xh"), col("__e"),
+      maxBucketSize, ordered = false)
+      .select(col("__p.a").alias("a"), col("__p.b").alias("b"))
+  }
+
+  /** (idCol_a, idCol_b, `name`) of the [[minhashBucketPairs]] rows
+    * `pairs` whose `metric` is at least `threshold`, one row per pair. */
+  private def verifiedPairs(pairs: DataFrame, idCol: String, metric: Column,
+      name: String, threshold: Double): DataFrame =
+    atLeast(pairs, metric, name, threshold)
+      .select(col("a.id").alias(s"${idCol}_a"), col("b.id").alias(s"${idCol}_b"), col(name))
+      .distinct()
 
   /** MinHash-LSH candidate pairs: signatures banded into `bands` groups of
-    * `rowsPerBand`; docs sharing any band hash become a candidate pair.
-    * Returns (idCol_a, idCol_b) with a < b, deduplicated across bands.
-    *
-    * Scale path: one `groupBy(band, bhash)` — uniform keys, a single
-    * exchange over (id, band, bhash) triples — then each bucket emits its
-    * a<b pairs via higher-order functions. No self-join: a join would
-    * re-execute the whole shingle→hash→signature chain on both aliased
-    * sides (alias ids defeat exchange reuse) and was measured 10× slower.
-    * Pathological buckets (boilerplate shared by thousands of docs would
-    * contribute |bucket|² pairs) are split, not dropped, past
-    * `maxBucketSize`: [[Similarity.subBucketPairsRelational]] sub-buckets
-    * them by a fold of two *extra* signature minima — identical or
-    * near-identical docs share those minima, so the boilerplate clusters
-    * the clamp used to discard stay together and still emit (linearly
-    * many) pairs. With
-    * rowsPerBand = 3 a spurious pair at similarity s only collides with
-    * probability s³ per band, keeping the candidate count linear-ish.
-    */
+    * `rowsPerBand`; docs sharing any band hash become a candidate pair
+    * ([[minhashBucketPairs]]). Returns (idCol_a, idCol_b) with a < b,
+    * deduplicated across bands. One exchange groups the buckets and one
+    * spreads their sub-bucket lists, whose output the distinct reuses. */
   def minhashCandidates(df: DataFrame, textCol: String, idCol: String,
       shingleWidth: Int = 3, bands: Int = 6, rowsPerBand: Int = 3,
-      maxBucketSize: Int = 50): DataFrame = {
-    val k = bands * rowsPerBand
-    // signature via explode + hash-aggregate, NOT array HOFs: higher-order
-    // lambdas are interpreted (no codegen CSE), and projection collapse
-    // duplicates the whole per-char hashing chain into every one of the k
-    // band references — measured ~18× recompute. Exploding to (id, shingle)
-    // rows hashes each shingle exactly once; the k+2 permutation minima are
-    // map-side-combined `min` aggregates over that single hash column (the
-    // extra two feed the oversized-bucket sub-key).
-    val hashed = df
-      .select(col(idCol), explode(shingles(col(textCol), shingleWidth)).alias("__sh"))
-      .select(col(idCol), Hashing.polyHash(col("__sh")).alias("__h"))
-    val sigCols = (0 until k + 2).map(s => min(Hashing.mix(col("__h"), s)).alias(s"__sig$s"))
-    val sig = hashed.groupBy(col(idCol)).agg(sigCols.head, sigCols.tail: _*)
-    val xh = Hashing.foldHashes(Seq(col(s"__sig$k"), col(s"__sig${k + 1}")))
-    val banded = sig
-      .select(col(idCol), xh.alias("__xh"), explode(
-        array((0 until bands).map(b =>
-          struct(lit(b).alias("band"),
-            Hashing.foldHashes((0 until rowsPerBand).map(r =>
-              col(s"__sig${b * rowsPerBand + r}"))).alias("bhash"))): _*))
-        .alias("__band"))
-      .select(col(idCol), col("__xh"), col("__band.band"), col("__band.bhash"))
-    Similarity.subBucketPairsRelational(banded,
-      Seq(col("band"), col("bhash")), col("__xh"),
-      struct(col(idCol).alias("id"), col("__xh").alias("xh")),
-      maxBucketSize, ordered = false)
-      .select(col("__p.a.id").alias(s"${idCol}_a"), col("__p.b.id").alias(s"${idCol}_b"))
+      maxBucketSize: Int = 50): DataFrame =
+    minhashBucketPairs(df, textCol, idCol, shingleWidth, bands, rowsPerBand,
+        maxBucketSize)
+      .select(col("a.id").alias(s"${idCol}_a"), col("b.id").alias(s"${idCol}_b"))
       .distinct()
-  }
 
   /** Number of informative SimHash bits: the 61-bit token hash packs two
     * 30-bit polynomial hashes (bits 0..29 and 31..60); higher bits are
@@ -542,69 +573,77 @@ object Dedup {
     * 1-char edit in every line, edit distance counts it once. A lossless
     * |len(a) − len(b)| ≤ maxDist prefilter skips the O(la·lb) DP for
     * hopeless candidates (the length gap lower-bounds the distance, so no
-    * qualifying pair is dropped and oracles need not replay it).
+    * qualifying pair is dropped and oracles need not replay it). The
+    * normalized texts ride in the bucket entries ([[minhashBucketPairs]]),
+    * so no join back to the input.
     * Output: (idCol_a, idCol_b, edit_dist ≤ maxDist). */
   def editDistanceNearDup(df: DataFrame, textCol: String, idCol: String,
       maxDist: Int, shingleWidth: Int = 2, bands: Int = 6,
       rowsPerBand: Int = 3, maxBucketSize: Int = 50): DataFrame = {
     require(maxDist >= 0, "maxDist must be >= 0")
-    val cands = minhashCandidates(df, textCol, idCol, shingleWidth, bands,
-      rowsPerBand, maxBucketSize)
-    val t = df.select(col(idCol), normalizeText(col(textCol)).alias("__t"))
-    cands
-      .join(t.withColumnRenamed(idCol, s"${idCol}_a")
-        .withColumnRenamed("__t", "__ta"), s"${idCol}_a")
-      .join(t.withColumnRenamed(idCol, s"${idCol}_b")
-        .withColumnRenamed("__t", "__tb"), s"${idCol}_b")
-      .filter(abs(length(col("__ta")) - length(col("__tb"))) <= maxDist)
+    val pairs = minhashBucketPairs(df, textCol, idCol, shingleWidth, bands,
+        rowsPerBand, maxBucketSize, col("__t").alias("t"))
+      .filter(abs(length(col("a.t")) - length(col("b.t"))) <= maxDist)
+      // one row per pair before the DP ([[minhashBucketPairs]])
+      .groupBy(col("a.id").alias(s"${idCol}_a"), col("b.id").alias(s"${idCol}_b"))
+      .agg(any_value(col("a.t")).alias("__ta"), any_value(col("b.t")).alias("__tb"))
       // thresholded levenshtein: banded O(len·maxDist) DP per pair instead
       // of the full O(len²) matrix; pairs beyond the bound return -1 and
       // are dropped — the surviving (pair, distance) set is identical, so
       // the DuckDB oracle (plain levenshtein + filter) replays unchanged
-      .withColumn("edit_dist",
-        levenshtein(col("__ta"), col("__tb"), maxDist).cast(LongType))
-      .filter(col("edit_dist") >= 0 && col("edit_dist") <= maxDist)
+    atLeast(pairs, levenshtein(col("__ta"), col("__tb"), maxDist).cast(LongType),
+        "edit_dist", 0)
       .select(col(s"${idCol}_a"), col(s"${idCol}_b"), col("edit_dist"))
   }
 
-  /** n-gram Jaccard similarity for candidate pairs — exact verify stage after
-    * LSH candidate generation. |A∩B| / (|A|+|B|-|A∩B|) on distinct shingle
-    * sets. */
-  def jaccard(shA: Column, shB: Column): Column = {
-    val inter = size(array_intersect(shA, shB)).cast(DoubleType)
-    inter / (size(shA) + size(shB) - inter)
+  /** n-gram Jaccard |A∩B| / (|A|+|B|-|A∩B|) of two ascending-SORTED
+    * long-hash arrays — the exact verify stage after LSH candidate
+    * generation. The codegen'd two-pointer merge
+    * ([[graft.functions.SortedIntersectSize]]) replaces `array_intersect`'s
+    * per-pair hash-set build: sort each document's hashes ONCE at
+    * projection time ([[sortedShingleHashes]]) and every candidate pair
+    * verifies allocation-free. As with `array_intersect`, the intersection
+    * counts each common value once; the sizes count every element.
+    *
+    * WARNING — unchecked precondition: both arrays MUST be ascending-sorted.
+    * The merge does not validate this — unsorted input silently yields a
+    * wrong intersection count. There is deliberately no per-pair runtime
+    * check, which would cost what the sorted merge saves. */
+  def jaccardSorted(sortedA: Column, sortedB: Column): Column = {
+    val inter = sortedIntersectSize(sortedA, sortedB).cast(DoubleType)
+    inter / (size(sortedA) + size(sortedB) - inter)
   }
 
-  /** [[jaccard]] for SORTED distinct long-hash arrays: the codegen'd
-    * two-pointer merge ([[graft.functions.SortedIntersectSize]]) replaces
-    * `array_intersect`'s per-pair hash-set build. Sort each document's hash
-    * set ONCE at projection time; every candidate pair then verifies
-    * allocation-free. Same value as [[jaccard]] on the same sets.
-    *
-    * WARNING — unchecked precondition: both arrays MUST be ascending-sorted
-    * and duplicate-free (`array_sort(array_distinct(...))`, which shingle
-    * hash sets already are). The merge does not validate this — unsorted or
-    * duplicated input silently yields a wrong intersection count. The
-    * parameter names carry the contract; there is deliberately no per-pair
-    * runtime check, which would cost what the sorted merge saves. */
-  def jaccardSorted(sortedDistinctA: Column, sortedDistinctB: Column): Column = {
-    val shA = sortedDistinctA
-    val shB = sortedDistinctB
-    import org.apache.spark.sql.GraftColumns
-    val inter = GraftColumns.column(graft.functions.SortedIntersectSize(
-      GraftColumns.expression(shA), GraftColumns.expression(shB)))
-      .cast(DoubleType)
-    inter / (size(shA) + size(shB) - inter)
-  }
+  /** `size(array_intersect(a, b))` of two ascending-sorted arrays. */
+  private def sortedIntersectSize(sortedA: Column, sortedB: Column): Column =
+    GraftColumns.column(SortedIntersectSize(
+      GraftColumns.expression(sortedA), GraftColumns.expression(sortedB)))
+
+  /** `df` plus `metric` as column `name`, only the rows where it is at
+    * least `threshold`; the metric is evaluated once per row. A filter on
+    * a projected metric is pushed below the projection with the metric
+    * substituted in, so both would evaluate it (levenshtein, or a sorted
+    * merge per verify); the output of a one-element explode cannot be
+    * substituted, and the projection under it shares the metric's common
+    * subexpressions. */
+  private[graft] def atLeast(df: DataFrame, metric: Column, name: String,
+      threshold: Double): DataFrame =
+    df.select(col("*"), metric.alias("__m"))
+      .select(df.columns.toSeq.map(col) :+ explode(array(col("__m"))).alias(name): _*)
+      .filter(col(name) >= threshold)
+
+  /** min(|A|, |B|) / max(|A|, |B|): an upper bound of J(A, B), so a pair
+    * below a Jaccard threshold on it cannot qualify. */
+  private[graft] def sizeRatio(a: Column, b: Column): Column =
+    least(size(a), size(b)).cast(DoubleType) / greatest(size(a), size(b))
 
   /** Cross-corpus near-duplicates — the contamination check (does the eval
     * set leak into the training corpus?): pairs (a, b, jaccard ≥ threshold)
-    * between TWO corpora. Both sides band with the batch fast path
-    * ([[graft.streaming.StreamingDedup.bandedCorpus]] — explode +
-    * hash-aggregate signature minima); candidates are one (band, bhash)
-    * equi-join, verified with the codegen'd sorted-merge Jaccard. Shuffles:
-    * two signature aggregates + the join + the final distinct; the eval
-    * side is typically small enough for AQE to broadcast. */
+    * between TWO corpora. Both sides band per row
+    * ([[graft.streaming.StreamingDedup.bandedCorpus]]); candidates are one
+    * (band, bhash) equi-join, verified with the codegen'd sorted-merge
+    * Jaccard. Shuffles: the join + the final distinct; the eval side is
+    * typically small enough for AQE to broadcast. */
   def crossCorpusNearDuplicates(a: DataFrame, b: DataFrame, textCol: String,
       idCol: String, shingleWidth: Int = 3, bands: Int = 6,
       rowsPerBand: Int = 3, threshold: Double = 0.7): DataFrame = {
@@ -612,50 +651,35 @@ object Dedup {
     def side(df: DataFrame, suffix: String) =
       bandedCorpus(df, textCol, idCol, shingleWidth, bands, rowsPerBand)
         .select(col(idCol).alias(s"${idCol}_$suffix"),
-          array_sort(col("__sh")).alias(s"__sh$suffix"),
-          col("band"), col("bhash"))
-    val sizeRatio =
-      least(size(col("__sha")), size(col("__shb"))).cast(DoubleType) /
-        greatest(size(col("__sha")), size(col("__shb")))
-    side(a, "a").join(side(b, "b"), Seq("band", "bhash"))
-      .filter(sizeRatio >= threshold)
-      .withColumn("jaccard", jaccardSorted(col("__sha"), col("__shb")))
-      .filter(col("jaccard") >= threshold)
+          col("__sh").alias(s"__sh$suffix"), col("band"), col("bhash"))
+    atLeast(side(a, "a").join(side(b, "b"), Seq("band", "bhash"))
+        .filter(sizeRatio(col("__sha"), col("__shb")) >= threshold),
+      jaccardSorted(col("__sha"), col("__shb")), "jaccard", threshold)
       .select(col(s"${idCol}_a"), col(s"${idCol}_b"), col("jaccard"))
       .distinct()
   }
 
-  /** LSH candidates verified with exact Jaccard ≥ threshold.
+  /** MinHash-LSH candidates verified with exact Jaccard ≥ threshold on
+    * the sorted shingle hashes, inside the bucket: each entry carries its
+    * [[sortedShingleHashes]] next to its id, so a pair is verified where
+    * it is emitted, with no join back to the input and one scan of it
+    * ([[minhashBucketPairs]]). Long merges are much cheaper than string
+    * intersects, and the sizes are the shingle counts (shingles are
+    * distinct strings; the polynomial hash is effectively injective on
+    * them).
     *
-    * Before touching the shingle arrays, candidates are prefiltered on the
-    * size bound J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|): a pair whose size ratio
-    * is below the threshold cannot qualify, so the (expensive)
-    * `array_intersect` never runs for it. The prefilter is lossless — it
-    * never drops a qualifying pair — so oracles need not replay it. */
+    * Before the merge, pairs are prefiltered on the size bound
+    * J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|): a pair whose size ratio is below
+    * the threshold cannot qualify. The prefilter is lossless — it never
+    * drops a qualifying pair — so oracles need not replay it. A pair
+    * sharing several bands is verified once per band, then deduplicated. */
   def nearDuplicates(df: DataFrame, textCol: String, idCol: String,
       shingleWidth: Int = 3, bands: Int = 6, rowsPerBand: Int = 3,
-      threshold: Double = 0.7, maxBucketSize: Int = 50): DataFrame = {
-    val cands = minhashCandidates(df, textCol, idCol, shingleWidth, bands,
-      rowsPerBand, maxBucketSize)
-    // verify on SORTED hashed shingle sets: long merges are much cheaper
-    // than string intersects, the sizes are identical (shingles are distinct
-    // strings; the polynomial hash is effectively injective on them), and
-    // sorting once per doc lets every pair use the two-pointer merge
-    val sh = df.select(col(idCol),
-      array_sort(shingleHashes(shingles(col(textCol), shingleWidth))).alias("__sh"))
-    val sizeRatio =
-      least(size(col("__sha")), size(col("__shb"))).cast(DoubleType) /
-        greatest(size(col("__sha")), size(col("__shb")))
-    cands
-      .join(sh.withColumnRenamed(idCol, s"${idCol}_a").withColumnRenamed("__sh", "__sha"),
-        s"${idCol}_a")
-      .join(sh.withColumnRenamed(idCol, s"${idCol}_b").withColumnRenamed("__sh", "__shb"),
-        s"${idCol}_b")
-      .filter(sizeRatio >= threshold)
-      .withColumn("jaccard", jaccardSorted(col("__sha"), col("__shb")))
-      .filter(col("jaccard") >= threshold)
-      .select(col(s"${idCol}_a"), col(s"${idCol}_b"), col("jaccard"))
-  }
+      threshold: Double = 0.7, maxBucketSize: Int = 50): DataFrame =
+    verifiedPairs(minhashBucketPairs(df, textCol, idCol, shingleWidth, bands,
+        rowsPerBand, maxBucketSize, col("__sh").alias("sh"))
+        .filter(sizeRatio(col("a.sh"), col("b.sh")) >= threshold), idCol,
+      jaccardSorted(col("a.sh"), col("b.sh")), "jaccard", threshold)
 
   /** Containment-verified near-duplicate pairs: MinHash-LSH candidates
     * scored by C(A,B) = |A∩B| / min(|A|,|B|) on distinct shingle sets —
@@ -668,30 +692,15 @@ object Dedup {
     * There is deliberately NO size-ratio prefilter here: that bound is a
     * Jaccard identity and would silently drop exactly the skewed-size pairs
     * containment exists to catch. Verification is the codegen'd two-pointer
-    * sorted merge, one intersection per candidate.
+    * sorted merge inside the bucket, as in [[nearDuplicates]].
     * Output: (idCol_a, idCol_b, containment ≥ threshold). */
   def containmentNearDup(df: DataFrame, textCol: String, idCol: String,
       shingleWidth: Int = 2, bands: Int = 6, rowsPerBand: Int = 3,
-      threshold: Double = 0.9, maxBucketSize: Int = 50): DataFrame = {
-    import org.apache.spark.sql.GraftColumns
-    val cands = minhashCandidates(df, textCol, idCol, shingleWidth, bands,
-      rowsPerBand, maxBucketSize)
-    val sh = df.select(col(idCol),
-      array_sort(shingleHashes(shingles(col(textCol), shingleWidth)))
-        .alias("__sh"))
-    val inter = GraftColumns.column(graft.functions.SortedIntersectSize(
-      GraftColumns.expression(col("__sha")),
-      GraftColumns.expression(col("__shb"))))
-    cands
-      .join(sh.withColumnRenamed(idCol, s"${idCol}_a")
-        .withColumnRenamed("__sh", "__sha"), s"${idCol}_a")
-      .join(sh.withColumnRenamed(idCol, s"${idCol}_b")
-        .withColumnRenamed("__sh", "__shb"), s"${idCol}_b")
-      .withColumn("containment",
-        inter.cast(DoubleType) / least(size(col("__sha")), size(col("__shb"))))
-      .filter(col("containment") >= threshold)
-      .select(col(s"${idCol}_a"), col(s"${idCol}_b"), col("containment"))
-  }
+      threshold: Double = 0.9, maxBucketSize: Int = 50): DataFrame =
+    verifiedPairs(minhashBucketPairs(df, textCol, idCol, shingleWidth, bands,
+        rowsPerBand, maxBucketSize, col("__sh").alias("sh")), idCol,
+      sortedIntersectSize(col("a.sh"), col("b.sh")).cast(DoubleType) /
+        least(size(col("a.sh")), size(col("b.sh"))), "containment", threshold)
 
   /** Term-weighted (tf-cosine) near-duplicate pairs through a postings
     * self-join — the SPARSE-vector sibling of the dense-embedding
@@ -816,7 +825,7 @@ object Dedup {
     * hit_frac deterministic-rounded to 6 places. */
   def ngramDecontaminate(corpus: DataFrame, eval: DataFrame, textCol: String,
       idCol: String, w: Int = 3): DataFrame = {
-    def gramSet(c: Column) = array_distinct(shingleHashes(shingles(c, w)))
+    def gramSet(c: Column) = array_distinct(sortedShingleHashes(shingles(c, w)))
     val evalGrams = eval
       .select(explode(gramSet(col(textCol))).alias("__g")).distinct()
       .withColumn("__hit", lit(1))
@@ -849,7 +858,7 @@ object Dedup {
   def sourceOverlapMatrix(df: DataFrame, textCol: String, sourceCol: String,
       w: Int = 3): DataFrame = {
     val grams = df.select(col(sourceCol).alias("__src"),
-        explode(array_distinct(shingleHashes(shingles(col(textCol), w))))
+        explode(array_distinct(sortedShingleHashes(shingles(col(textCol), w))))
           .alias("__g"))
       .distinct()
     val tot = grams.groupBy(col("__src")).agg(count(lit(1)).alias("__n"))

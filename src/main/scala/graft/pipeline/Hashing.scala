@@ -79,7 +79,10 @@ object Hashing {
     h
   }
 
-  def mixLong(h: Long, s: Int): Long = (h * aCoef(s) + bCoef(s)) % P
+  def mixLong(h: Long, s: Int): Long = mixLong(h, aCoef(s), bCoef(s))
+
+  /** [[mixLong]] with seed coefficients `a`, `b` already looked up. */
+  def mixLong(h: Long, a: Long, b: Long): Long = (h * a + b) % P
 
   // ================================ wide (~60-bit) family, CRT of two legs
   // The 30-bit space caps resolvable per-group cardinality near P ≈ 10⁹ —

@@ -422,12 +422,6 @@ object TextAnalysis {
       syllables.alias("n_syllables"), flesch.alias("flesch"))
   }
 
-  /** Raw-text whitespace tokens: runs of space/newline/tab/CR collapse to
-    * one space (explicit char class — identical in Java regex and RE2), so
-    * the token array is the same in any engine. */
-  private def wsTokens(text: Column): Column =
-    split(trim(regexp_replace(text, "[ \\n\\t\\r]+", " ")), " ")
-
   /** Fixed-size overlapping token-window chunks — the RAG / context-window
     * splitting pass: chunk i covers tokens [1 + i·stride, 1 + i·stride +
     * chunkTokens − 1] of the whitespace-token array, and the chunk count

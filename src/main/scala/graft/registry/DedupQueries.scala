@@ -54,16 +54,14 @@ private[graft] object DedupQueries extends QueryFamily {
     // token sets sorted ONCE per doc so every pair verifies with the
     // codegen'd two-pointer merge instead of a per-pair hash-set build
     val d = docs(s, dir).select(col("doc_id"), col("lang"),
-      array_sort(Dedup.shingleHashes(Dedup.shingles(col("text"), 1))).alias("toks"))
+      Dedup.sortedShingleHashes(Dedup.shingles(col("text"), 1)).alias("toks"))
     val a = d.select(col("doc_id").alias("doc_id_a"), col("lang"), col("toks").alias("ta"))
     val b = d.select(col("doc_id").alias("doc_id_b"), col("lang"), col("toks").alias("tb"))
-    val ratio = least(size(col("ta")), size(col("tb"))).cast(DoubleType) /
-      greatest(size(col("ta")), size(col("tb")))
-    a.join(b, Seq("lang"))
-      .filter(col("doc_id_a") < col("doc_id_b") && ratio >= 0.5 &&
-        Dedup.jaccardSorted(col("ta"), col("tb")) >= 0.5)
-      .select(col("doc_id_a"), col("doc_id_b"),
-        Dedup.jaccardSorted(col("ta"), col("tb")).alias("jaccard"))
+    val cands = a.join(b, Seq("lang"))
+      .filter(col("doc_id_a") < col("doc_id_b") &&
+        Dedup.sizeRatio(col("ta"), col("tb")) >= 0.5)
+    Dedup.atLeast(cands, Dedup.jaccardSorted(col("ta"), col("tb")), "jaccard", 0.5)
+      .select(col("doc_id_a"), col("doc_id_b"), col("jaccard"))
   }
 
   /** MinHash-LSH candidate CTE chain (shingle → polyhash → signature →

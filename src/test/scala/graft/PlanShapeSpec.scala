@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Levenshtein
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Dedup
@@ -120,10 +121,43 @@ class PlanShapeSpec extends SparkTestBase {
     val cands = Dedup.minhashCandidates(docs, "text", "doc_id", 2, 6, 3, 50)
     val p = plan(cands)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
-    // signature agg + bucket agg = exactly 2 hash exchanges; the pair
-    // operator's sub-bucket spread is a third exchange (SinglePartition at
-    // this suite's 1 shuffle partition), whose output the distinct reuses
-    assert(exchanges(cands) == 2 && allExchanges(cands) == 3, p)
+    // the signature is per row: the bucket agg is the one hash exchange;
+    // the pair operator's sub-bucket spread is the second exchange
+    // (SinglePartition at this suite's 1 shuffle partition), whose output
+    // the distinct reuses
+    assert(exchanges(cands) == 1 && allExchanges(cands) == 2, p)
+  }
+
+  test("MinHash pair verifies run inside the bucket: no join, no broadcast, " +
+      "one input scan, each kernel and the verify metric once per row") {
+    // a real file scan, so the scan count is visible in the plan
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    def code(df: DataFrame) = org.apache.spark.sql.execution.debug
+      .codegenStringSeq(df.queryExecution.executedPlan).map(_._2).mkString
+    def calls(df: DataFrame, call: String) = call.r.findAllIn(code(df)).size
+    // the Jaccard and containment merges run in generated code (a repeat
+    // inside one projection is one call there); the edit distance runs
+    // in the pair reduction's result projection, outside it
+    val merges = (df: DataFrame) => calls(df, "SortedIntersectSize\\.count\\(")
+    val levenshteins = (df: DataFrame) => df.queryExecution.executedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case l: Levenshtein => l })).size
+    val ops = Seq(
+      ("nearDuplicates", Dedup.nearDuplicates(docs, "text", "doc_id",
+        shingleWidth = 2, threshold = 0.4), merges),
+      ("containmentNearDup", Dedup.containmentNearDup(docs, "text", "doc_id"), merges),
+      ("editDistanceNearDup", Dedup.editDistanceNearDup(docs, "text", "doc_id",
+        maxDist = 50), levenshteins))
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      for ((name, df, metricCount) <- ops) {
+        val p = plan(df)
+        assert(!p.contains("Join") && !p.contains("BroadcastExchange"), s"$name:\n$p")
+        assert("FileScan parquet".r.findAllIn(p).size == 1, s"$name:\n$p")
+        for (kernel <- Seq("sortedShingleHashes", "minHashSignature"))
+          assert(calls(df, s"TextKernels\\.$kernel\\(") == 1, s"$name: $kernel\n$p")
+        assert(metricCount(df) == 1, s"$name: verify metric\n$p\n${code(df)}")
+        df.collect() // and the plan runs
+      }
+    }
   }
 
   test("simhash pairing has no join at all: banding + inline verify") {
@@ -494,7 +528,7 @@ class PlanShapeSpec extends SparkTestBase {
       .toDF("vec_id", "q")
     val centroids = (0 until 8).map(_ =>
       Seq.fill(8)(rnd.nextInt(1000).toDouble))
-    val path = java.nio.file.Files.createTempDirectory("ivf_idx_").toString
+    val path = caseDir("ivf_idx_")
     Similarity.writeIvfIndex(vecs, "vec_id", "q", centroids, path)
     val out = Similarity.ivfTopKIndexed(vecs.filter(col("vec_id") < 3), path,
       "vec_id", "q", k = 2, centroids = centroids, nprobe = 2)

@@ -1,9 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Outcome}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session + chispa-style DataFrame equality for golden tests.
@@ -17,6 +21,28 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** The temp directories of the running case; each is deleted, with all
+    * it holds, when its case ends. */
+  private val caseDirs = scala.collection.mutable.ListBuffer.empty[Path]
+
+  /** A fresh temp directory named `prefix…` for the running case only. */
+  def caseDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    caseDirs += d
+    d.toString
+  }
+
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally {
+      caseDirs.foreach { d =>
+        val all = Files.walk(d)
+        try all.iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists)
+        finally all.close()
+      }
+      caseDirs.clear()
+    }
 
   /** `body` under the given session settings; each key gets its prior
     * value back (or is unset again) afterwards, also on a throw. */

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.ml.tuning.{TimeSeriesCrossValidator => TSCV}
 import org.apache.spark.sql.functions._
 
@@ -34,7 +32,7 @@ class UtilsIoMlGoldenSpec extends SparkTestBase {
     val fx = new GoldenFixtures(spark, "io_tests.json")
     val t = fx.testCase("DeltaWriteTest", "test_write_to_delta_without_optimization_cols")
     val in = fx.tsdf(t.get("init"))
-    val dir = Files.createTempDirectory("tsdf_write").toString
+    val dir = caseDir("tsdf_write")
     TSDFWriter.write(in, dir)
     val back = spark.read.parquet(dir)
     assert(back.count() == 7) // io_tests.py:43 expected row count

@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -119,7 +117,7 @@ class ZOrderSpec extends SparkTestBase {
     val rows = (0 until 500).map(i =>
       ("s" + i % 5, new java.sql.Timestamp(ts0 + i * 60000L), i.toDouble))
     val in = TSDF(rows.toDF("series", "ts", "value"), "ts", Seq("series"))
-    val dir = Files.createTempDirectory("hilbert_write").toString + "/out"
+    val dir = caseDir("hilbert_write") + "/out"
     TSDFWriter.write(in, dir, zorderCols = Seq("ts", "value"), curve = "hilbert")
     val back = spark.read.parquet(dir).select("series", "ts", "value")
     assertDfEquality(back, in.df)
@@ -132,7 +130,7 @@ class ZOrderSpec extends SparkTestBase {
     val rows = (0 until 500).map(i =>
       ("s" + i % 5, new java.sql.Timestamp(ts0 + i * 60000L), i.toDouble))
     val in = TSDF(rows.toDF("series", "ts", "value"), "ts", Seq("series"))
-    val dir = Files.createTempDirectory("zorder_write").toString + "/out"
+    val dir = caseDir("zorder_write") + "/out"
     TSDFWriter.write(in, dir, zorderCols = Seq("ts", "value"))
     val back = spark.read.parquet(dir)
       .select("series", "ts", "value")

@@ -287,7 +287,7 @@ class PipelineUnitSpec extends SparkTestBase {
     }
     assertBf("ivfTopK, nprobe = nlist", Similarity.ivfTopK(queries, corpus,
       "vec_id", "v", k, centroids, nprobe = nlist))
-    val path = java.nio.file.Files.createTempDirectory("ivf_full_probe_").toString
+    val path = caseDir("ivf_full_probe_")
     Similarity.writeIvfIndex(corpus, "vec_id", "v", centroids, path)
     assertBf("ivfTopKIndexed, nprobe = nlist", Similarity.ivfTopKIndexed(
       queries, path, "vec_id", "v", k, centroids, nprobe = nlist))
@@ -633,6 +633,34 @@ class PipelineUnitSpec extends SparkTestBase {
         org.apache.spark.sql.GraftColumns.expression(col("b"))))
         =!= size(array_intersect(col("a"), col("b")))).count()
     assert(mism == 0)
+  }
+
+  test("sorted-merge intersect size counts a repeated common value once, " +
+      "like array_intersect, interpreted and codegen'd") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    // sorted arrays with runs: a 6-value alphabet repeats every value
+    val random = (0 until 200).map(i => (i,
+      Seq.fill(rnd.nextInt(12))(rnd.nextInt(6).toLong).sorted,
+      Seq.fill(rnd.nextInt(12))(rnd.nextInt(6).toLong).sorted))
+    val edge = Seq(
+      (1000, Seq(5L, 5L), Seq(5L, 5L)),
+      (1001, Seq(5L, 5L, 5L), Seq(5L)),
+      (1002, Seq(1L, 2L, 2L, 3L), Seq(2L, 2L, 2L, 3L, 3L)),
+      (1003, Seq.empty[Long], Seq(1L, 1L)),
+      (1004, Seq(-3L, -3L, 0L), Seq(-3L, 0L, 0L)))
+    val in = (random ++ edge).toDF("i", "a", "b")
+    val merged = org.apache.spark.sql.GraftColumns.column(
+      graft.functions.SortedIntersectSize(
+        org.apache.spark.sql.GraftColumns.expression(col("a")),
+        org.apache.spark.sql.GraftColumns.expression(col("b"))))
+    for ((path, src) <- Seq("eval" -> in, "codegen" -> in.repartition(2))) {
+      val rows = src.select(col("i"), merged.alias("got"),
+        size(array_intersect(col("a"), col("b"))).alias("want")).collect()
+      val diff = rows.filter(r => r.getInt(1) != r.getInt(2))
+      assert(diff.isEmpty, s"$path: ${diff.take(5).mkString(", ")}")
+      assert(rows.find(_.getInt(0) == 1000).get.getInt(1) == 1, path)
+    }
   }
 
   test("graft_poly_hash registers as a SQL function and matches the JVM hash") {
@@ -1056,7 +1084,7 @@ class PipelineUnitSpec extends SparkTestBase {
     val base = snapshot()
     assert(base._1.nonEmpty && base._2.nonEmpty && base._3.nonEmpty &&
       base._4.nonEmpty && base._5.nonEmpty)
-    val dir = java.nio.file.Files.createTempDirectory("graft_mat_").toString
+    val dir = caseDir("graft_mat_")
     try {
       for ((mode, sub) <- Seq("reliable" -> "chk", "parquet" -> "pq",
           "none" -> "unused")) {

@@ -9,12 +9,14 @@ import graft.SparkTestBase
 
 /** Differential locks for the native text kernels (r18 optimization):
   * [[graft.functions.CollapseNonAlnum]], [[graft.functions.WordNGrams]],
-  * [[graft.functions.WinnowGrams]] and [[graft.functions.RepetitionSignals]]
-  * must be bit-identical to the Column-algebra forms they replaced — the
-  * regex normalize, the split+transform n-gram assembly, the interpreted
-  * closed-form winnow selection and the interpreted Gopher repetition
-  * chains (reconstructed here verbatim from the replaced
-  * implementations). */
+  * [[graft.functions.WinnowGrams]], [[graft.functions.RepetitionSignals]],
+  * [[graft.functions.SortedShingleHashes]] and
+  * [[graft.functions.MinHashSignature]] must be bit-identical to the
+  * Column-algebra forms they replaced — the regex normalize, the
+  * split+transform n-gram assembly, the interpreted closed-form winnow
+  * selection, the interpreted Gopher repetition chains, the sorted hash
+  * lambda and the explode + min-aggregate signature (reconstructed here
+  * verbatim from the replaced implementations). */
 class TextKernelsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -337,6 +339,75 @@ class TextKernelsSpec extends SparkTestBase {
       val diff = want.keys.toSeq.sorted.filter(i => got(i) != want(i))
       assert(diff.isEmpty, s"$path:\n" + diff.take(5).map(i =>
         s"${all(i.toInt)}: got ${got(i)} want ${want(i)}").mkString("\n"))
+    }
+  }
+
+  /** The MinHash corpus: the adversarial texts, one token, a null text and
+    * a seeded ScalaCheck corpus over a small ASCII + non-ASCII vocabulary
+    * (repeated shingles, one-token and empty documents are common). */
+  private def minhashInput: DataFrame = {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val word = Gen.oneOf("a", "bb", "ccc", "Dd", "é", "straße", "日本", "42", "")
+    val doc = Gen.choose(0, 12).flatMap(n => Gen.listOfN(n, word))
+      .map(_.mkString(" "))
+    val generated = Gen.listOfN(200, doc)
+      .pureApply(Gen.Parameters.default, Seed(20240611L))
+    val all: Seq[Option[String]] =
+      (texts ++ Seq("token") ++ generated).map(Some(_)) :+ None
+    all.zipWithIndex.map { case (t, i) => (i.toLong, t.orNull) }.toDF("id", "text")
+  }
+
+  /** The shingle arrays both kernels are fed: normalized shingles at three
+    * widths, and raw space-split tokens (non-ASCII, repeats, empties). */
+  private val shingleForms: Seq[(String, Column)] =
+    Seq(1, 2, 3).map(w => s"w=$w" -> Dedup.shingles(col("text"), w)) :+
+      ("raw tokens" -> split(col("text"), " "))
+
+  /** Longs as (null, value) per element: exact, null-aware. */
+  private def longs(df: DataFrame): Map[Long, Option[Seq[Long]]] =
+    df.collect().map(r => r.getLong(0) ->
+      (if (r.isNullAt(1)) None else Some(r.getSeq[Long](1)))).toMap
+
+  test("SortedShingleHashes equals array_sort(transform(shingles, polyHash)), " +
+      "duplicates and nulls included, interpreted and codegen'd") {
+    val in = minhashInput
+    for ((form, sh) <- shingleForms) {
+      val want = longs(in.select(col("id"),
+        array_sort(transform(sh, x => Hashing.polyHash(x))).alias("h")))
+      for ((path, src) <- Seq("eval" -> in, "codegen" -> in.repartition(2))) {
+        val got = longs(src.select(col("id"), Dedup.sortedShingleHashes(sh).alias("h")))
+        assert(got == want, s"$form $path")
+      }
+    }
+  }
+
+  test("MinHashSignature equals the explode + min aggregate and the " +
+      "per-permutation array_min lambda, interpreted and codegen'd") {
+    val in = minhashInput
+    val k = 20
+    for ((form, sh) <- shingleForms) {
+      // the replaced batch form: a row per shingle hash, k min aggregates;
+      // a null text explodes to no row and has no signature
+      val mins = (0 until k).map(s => min(Hashing.mix(col("__h"), s)))
+      val agg = longs(in.select(col("id"), explode(sh).alias("__s"))
+        .select(col("id"), Hashing.polyHash(col("__s")).alias("__h"))
+        .groupBy(col("id")).agg(array(mins: _*).alias("sig")))
+      // the replaced stream form: one array_min lambda per permutation
+      val hof = longs(in.select(col("id"), array((0 until k).map(s =>
+        array_min(transform(transform(sh, x => Hashing.polyHash(x)),
+          h => Hashing.mix(h, s)))): _*).alias("sig")))
+      for ((path, src) <- Seq("eval" -> in, "codegen" -> in.repartition(2))) {
+        val got = longs(src.select(col("id"),
+          Dedup.signature(Dedup.sortedShingleHashes(sh), k).alias("sig")))
+        assert(got.collect { case (i, Some(g)) => i -> g } ==
+          agg.collect { case (i, Some(a)) => i -> a }, s"$form $path")
+        assert(got.keySet == hof.keySet)
+        got.foreach {
+          case (i, Some(g)) => assert(hof(i).contains(g), s"$form $path id $i")
+          case (i, None) => assert(!agg.contains(i), s"$form $path id $i")
+        }
+      }
     }
   }
 

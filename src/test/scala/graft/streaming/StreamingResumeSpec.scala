@@ -1,9 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
 import java.sql.Timestamp
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -29,26 +26,6 @@ import graft.tsdf.{Stats, TSDF}
   * Chunks are time-ordered slices, so no row is late and watermark
   * semantics cannot drop anything — any divergence is a state bug. */
 class StreamingResumeSpec extends SparkTestBase {
-
-  /** The `graft_resume_*` directories (source files, checkpoint, sink) of
-    * the running case; each is deleted when its case ends. */
-  private val caseDirs = scala.collection.mutable.ListBuffer.empty[Path]
-  private def caseDir(): String = {
-    val d = Files.createTempDirectory("graft_resume_")
-    caseDirs += d
-    d.toString
-  }
-
-  override def withFixture(test: NoArgTest) =
-    try super.withFixture(test)
-    finally {
-      caseDirs.foreach { d =>
-        val all = Files.walk(d)
-        try all.iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists)
-        finally all.close()
-      }
-      caseDirs.clear()
-    }
 
   private val base = Timestamp.valueOf("2024-03-01 00:00:00").getTime // ms
   private def at(tenths: Int) = new Timestamp(base + tenths * 6000L)
@@ -125,7 +102,7 @@ class StreamingResumeSpec extends SparkTestBase {
       lateRows: Boolean = false): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
-    val dir = caseDir()
+    val dir = caseDir("graft_resume_")
     val srcDir = s"$dir/src"; val outDir = s"$dir/out"; val chk = s"$dir/chk"
     val slices = {
       val s = timeSlices(rows, nChunks)
@@ -289,7 +266,7 @@ class StreamingResumeSpec extends SparkTestBase {
       val cols = Seq("user_id", "start_ts", "end_ts") ++ metrics
       val all = rows.toDF("user_id", "start_ts", "end_ts", "value", "score")
         .select(cols.map(col): _*)
-      val dir = caseDir()
+      val dir = caseDir("graft_resume_")
       val srcDir = s"$dir/src"; val outDir = s"$dir/out"; val chk = s"$dir/chk"
       def writeChunk(rs: Seq[(String, Timestamp, Timestamp, Option[Double], Option[Double])]) =
         rs.toDF("user_id", "start_ts", "end_ts", "value", "score")
@@ -528,7 +505,7 @@ class StreamingResumeSpec extends SparkTestBase {
   test("streaming dedup state survives a checkpoint restart (file source)") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = caseDir()
+    val dir = caseDir("graft_resume_")
     val srcDir = s"$dir/src"; val outDir = s"$dir/out"; val chk = s"$dir/chk"
     def writeChunk(s: Seq[(Long, Timestamp, String)]): Unit =
       s.toDF("doc_id", "ts", "text").repartition(1)
