@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * side's k-min set. This replaces the `row_number() over (partition by
   * group order by hash)` formulation that sorted ALL of a group's distinct
   * hashes in one window task (the window-skew shape measured ≥4× slower on
-  * a single hot key by tools/SkewBench, unbounded in group cardinality —
+  * a single 10M-copy hot key, unbounded in group cardinality —
   * and a KMV sketch exists precisely for huge-cardinality groups).
   *
   * Because the buffer dedups, callers need NO up-front `distinct()`: the

@@ -45,16 +45,15 @@ import graft.functions.BpeTable
   * whole upstream chain recomputes 3×, 29 exchanges vs 10. A parallel
   * prefix sum is inherently multi-pass, so the survivor frontier is the
   * correct checkpoint boundary (it is also the artifact a real pipeline
-  * persists); `materializeSurvivors = false` keeps the fully-declarative
-  * single plan for callers that want it — identical results, recomputed
+  * persists); the session setting `spark.graft.materializer=none` keeps
+  * the fully-declarative single plan — identical results, recomputed
   * upstream. The checkpoint is LAZY: nothing runs until the output
   * action. */
 object Curation {
 
   def curate(df: DataFrame, textCol: String, idCol: String,
       bucketCols: Seq[String], evalDf: DataFrame, bpe: BpeTable,
-      minTokens: Int = 12, capacity: Int = 2048,
-      materializeSurvivors: Boolean = true): DataFrame = {
+      minTokens: Int = 12, capacity: Int = 2048): DataFrame = {
     require(minTokens >= 1 && capacity >= 1)
     val t = Dedup.normalizeText(col(textCol))
     val base = df
@@ -89,11 +88,9 @@ object Curation {
       Seq(idCol), "left_semi")
     // 5. tokenizer-true packing of the survivors (see the object doc for
     // why the frontier checkpoints before the multi-pass pack)
-    val packIn = clean.drop("__t")
-    val frontier =
-      if (materializeSurvivors) Materializer(packIn, eager = false) else packIn
     Packing.packSequencesByTokens(
-      frontier, Bpe.tokenCount(col(textCol), bpe),
+      Materializer(clean.drop("__t"), eager = false),
+      Bpe.tokenCount(col(textCol), bpe),
       idCol, bucketCols, capacity)
   }
 }

@@ -587,10 +587,12 @@ object Dedup {
       // one row per pair before the DP ([[minhashBucketPairs]])
       .groupBy(col("a.id").alias(s"${idCol}_a"), col("b.id").alias(s"${idCol}_b"))
       .agg(any_value(col("a.t")).alias("__ta"), any_value(col("b.t")).alias("__tb"))
-      // thresholded levenshtein: banded O(len·maxDist) DP per pair instead
-      // of the full O(len²) matrix; pairs beyond the bound return -1 and
-      // are dropped — the surviving (pair, distance) set is identical, so
-      // the DuckDB oracle (plain levenshtein + filter) replays unchanged
+      // thresholded levenshtein: pairs beyond the bound return -1 and are
+      // dropped — the surviving (pair, distance) set is identical, so the
+      // DuckDB oracle (plain levenshtein + filter) replays unchanged. The
+      // bound does not make the DP banded: measured, on identical texts it
+      // costs like the full O(len²) matrix (23,725 pairs of identical
+      // 600-character texts at maxDist 5 took 54 s on 4 cores)
     atLeast(pairs, levenshtein(col("__ta"), col("__tb"), maxDist).cast(LongType),
         "edit_dist", 0)
       .select(col(s"${idCol}_a"), col(s"${idCol}_b"), col("edit_dist"))

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 
-import graft.pipeline.MediaMap.{be16, withIdPayload}
+import graft.pipeline.MediaMap.{ByteSink, be16, sink, withIdPayload}
 import graft.pipeline.Multimodal.DecodedImage
 
 /** REAL JPEG pixel decode in pure JVM code — baseline AND progressive
@@ -956,168 +956,150 @@ object Jpeg {
 
   // ================================================== fixture encoder side
 
-  /** Minimal baseline grayscale encoder for FLAT 8×8 blocks: every block
-    * is one constant value, so the stream carries only huffman-coded DC
-    * diffs + EOBs, and — because quant[DC] = 8 exactly divides the flat
-    * block's DCT (F00 = 8·(v−128)) and a DC-only IDCT is exact in islow
-    * arithmetic — EVERY spec-conforming decoder reproduces the constants
-    * bit-for-bit. That makes the decoded sums a pure function of the
-    * generating id: the oracle restates them in SQL while the engine must
-    * genuinely huffman-decode, dequantize, and IDCT the bytes (the
-    * [[Multimodal.synthesizePngPayload]] discipline, lossy-format
-    * edition). Custom (legal) huffman tables: DC categories 0-8 at 4
-    * bits, a 1-bit EOB-only AC table. */
-  def buildJpegWithBlocks(w: Int, h: Int, blockValue: (Int, Int) => Int,
-      restartInterval: Int = 0): Array[Byte] = {
-    require(w % 8 == 0 && h % 8 == 0 && w > 0 && h > 0,
-      "flat-block fixture dims must be 8-multiples")
-    require(restartInterval >= 0)
-    val out = new java.io.ByteArrayOutputStream()
-    def m(marker: Int, payload: Array[Int]): Unit = {
-      out.write(0xFF); out.write(marker)
-      out.write((payload.length + 2) >> 8); out.write((payload.length + 2) & 0xFF)
-      payload.foreach(out.write)
-    }
-    out.write(0xFF); out.write(0xD8) // SOI
-    m(0xE0, Array('J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
-    m(0xDB, Array(0x00) ++ Array.fill(64)(8)) // DQT 0: all 8s
-    m(0xC0, Array(8, h >> 8, h & 0xFF, w >> 8, w & 0xFF, 1, 1, 0x11, 0))
-    // DHT DC0: nine 4-bit codes for categories 0..8
-    m(0xC4, Array(0x00, 0, 0, 0, 9, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-      0, 1, 2, 3, 4, 5, 6, 7, 8))
-    // DHT AC0: one 1-bit code: EOB
-    m(0xC4, Array(0x10, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0x00))
-    if (restartInterval > 0)
-      m(0xDD, Array(restartInterval >> 8, restartInterval & 0xFF))
-    m(0xDA, Array(1, 1, 0x00, 0, 63, 0))
-    // entropy: DC huffman codes are the 4-bit values 0..8 themselves
-    var acc = 0; var nb = 0
-    def putBits(v: Int, n: Int): Unit = {
+  /** The entropy-coded-segment writer of both fixture encoders: bits
+    * MSB-first, a 0xFF byte stuffed as FF 00, 1-bits padding at a flush,
+    * and RSTn markers (byte-aligned, unstuffed). */
+  private final class BitSink(out: ByteSink) {
+    private var acc = 0
+    private var nb = 0
+    def put(v: Int, n: Int): Unit = {
       var i = n - 1
       while (i >= 0) {
         acc = (acc << 1) | ((v >> i) & 1); nb += 1
         if (nb == 8) {
-          out.write(acc)
-          if (acc == 0xFF) out.write(0x00)
+          out.u8(acc)
+          if (acc == 0xFF) out.u8(0x00)
           acc = 0; nb = 0
         }
         i -= 1
       }
     }
-    def padByte(): Unit = if (nb > 0) { // pad with 1s
-      acc = (acc << (8 - nb)) | ((1 << (8 - nb)) - 1)
-      out.write(acc)
-      if (acc == 0xFF) out.write(0x00)
-      acc = 0; nb = 0
-    }
-    var pred = 0
-    var rst = 0
-    var mcu = 0
-    val nMcus = (h / 8) * (w / 8) // 1×1 sampling: one block per MCU
-    var by = 0
-    while (by < h / 8) {
-      var bx = 0
-      while (bx < w / 8) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          padByte() // restart markers are byte-aligned, written unstuffed
-          out.write(0xFF); out.write(0xD0 + rst)
-          rst = (rst + 1) % 8
-          pred = 0
-        }
-        val level = (blockValue(bx, by) & 0xFF) - 128
-        val diff = level - pred
-        pred = level
-        val s = if (diff == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-        putBits(s, 4) // DC category code == category (canonical 4-bit)
-        if (s > 0) putBits(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-        putBits(0, 1) // EOB
-        mcu += 1
-        bx += 1
-      }
-      by += 1
-    }
-    padByte()
-    out.write(0xFF); out.write(0xD9) // EOI
-    out.toByteArray
+    def flush(): Unit = if (nb > 0) put((1 << (8 - nb)) - 1, 8 - nb)
+    def restart(k: Int): Unit = { flush(); out.marker(0xD0 + k % 8) }
   }
 
+  /** The magnitude category of a DC difference or AC coefficient: its
+    * bit length (F.1.2.1), 0 for 0. */
+  private def category(v: Int): Int =
+    32 - Integer.numberOfLeadingZeros(math.abs(v))
+  /** The `s` magnitude bits that follow category `s`: a negative value is
+    * sent as v + 2^s − 1. */
+  private def magnitude(v: Int, s: Int): Int =
+    if (v < 0) v + (1 << s) - 1 else v
+
+  /** A minimal equal-length canonical Huffman code over ascending `syms`:
+    * symbol i's code is i, every code `len` bits, the all-ones code
+    * unused. */
+  private final class EqualLengthCode(syms: Seq[Int]) {
+    private val len = Iterator.from(1).find(l => (1 << l) >= syms.size + 1).get
+    private val codeOf = new Array[Int](256)
+    syms.zipWithIndex.foreach { case (sym, i) => codeOf(sym) = i }
+    /** The DHT segment of this code as table 0 of class `tc`. */
+    def dht(s: ByteSink, tc: Int): ByteSink = {
+      val counts = Seq.tabulate(16)(i => if (i == len - 1) syms.size else 0)
+      s.segment(0xC4, (Seq(tc << 4) ++ counts ++ syms): _*)
+    }
+    def put(bits: BitSink, sym: Int): Unit = bits.put(codeOf(sym), len)
+  }
+
+  /** SOI and a JFIF 1.`minor` APP0 (1:1 aspect, no thumbnail). */
+  private[pipeline] def jfif(s: ByteSink, minor: Int = 1): ByteSink =
+    s.marker(0xD8).segment(0xE0, 'J', 'F', 'I', 'F', 0, 1, minor, 0, 0, 1,
+      0, 1, 0, 0)
+  /** A frame header SOFn at 8-bit precision; component i (id i + 1) is
+    * `comps(i)` = (h, v sampling, quant table). */
+  private[pipeline] def sof(s: ByteSink, marker: Int, w: Int, h: Int,
+      comps: Seq[(Int, Int, Int)]): ByteSink =
+    s.segment(marker, Seq(8, h >> 8, h, w >> 8, w, comps.length) ++
+      comps.zipWithIndex.flatMap { case ((ch, cv, tq), i) =>
+        Seq(i + 1, ch << 4 | cv, tq) }: _*)
+  /** Quant table `tq`, given in natural order, written in zigzag order. */
+  private def dqt(s: ByteSink, tq: Int, qNat: Array[Int]): ByteSink =
+    s.segment(0xDB, tq +: Seq.tabulate(64)(k => qNat(Zigzag(k))): _*)
+  /** A scan header over component indices `comps` (each on tables 0/0). */
+  private def sos(s: ByteSink, comps: Seq[Int], ss: Int, se: Int,
+      ahAl: Int): ByteSink =
+    s.segment(0xDA, (comps.length +: comps.flatMap(ci => Seq(ci + 1, 0))) ++
+      Seq(ss, se, ahAl): _*)
+
+  private val Flat8: Array[Int] = Array.fill(64)(8)
+
+  /** One component of a flat-block fixture: sampling factors (h, v) and the
+    * constant of each of its 8×8 blocks by (block column, block row). */
+  private[pipeline] final case class FlatComponent(h: Int, v: Int,
+      block: (Int, Int) => Int)
+
+  /** Minimal baseline encoder for FLAT 8×8 blocks: every block is one
+    * constant value, so the stream carries only huffman-coded DC diffs +
+    * EOBs, and — because quant[DC] = 8 exactly divides the flat block's
+    * DCT (F00 = 8·(v−128)) and a DC-only IDCT is exact in islow
+    * arithmetic — EVERY spec-conforming decoder reproduces the constants
+    * bit-for-bit. That makes the decoded sums a pure function of the
+    * generating id: the oracle restates them in SQL while the engine must
+    * genuinely huffman-decode, dequantize, and IDCT the bytes (the
+    * [[Multimodal.synthesizePngPayload]] discipline, lossy-format
+    * edition). Components interleave in real MCU order with per-component
+    * DC predictors (reset at each RSTn when `restartInterval` > 0). Custom
+    * (legal) huffman tables: DC categories 0-8 at 4 bits, a 1-bit EOB-only
+    * AC table. */
+  private[pipeline] def buildFlatJpeg(w: Int, h: Int,
+      comps: Seq[FlatComponent], restartInterval: Int = 0): Array[Byte] = {
+    require(comps.forall(c => c.h >= 1 && c.h <= 2 && c.v >= 1 && c.v <= 2 &&
+      !(c.h == 1 && c.v == 2)), "sampling must be 1x1, 2x1, or 2x2")
+    val maxH = comps.map(_.h).max; val maxV = comps.map(_.v).max
+    require(w % (8 * maxH) == 0 && h % (8 * maxV) == 0 && w > 0 && h > 0,
+      "dims must be whole-MCU multiples")
+    require(restartInterval >= 0)
+    val dc = new EqualLengthCode(0 to 8)
+    val eob = new EqualLengthCode(Seq(0x00))
+    sink { s =>
+      jfif(s)
+      dqt(s, 0, Flat8)
+      sof(s, 0xC0, w, h, comps.map(c => (c.h, c.v, 0)))
+      dc.dht(s, 0); eob.dht(s, 1)
+      if (restartInterval > 0)
+        s.segment(0xDD, restartInterval >> 8, restartInterval)
+      sos(s, comps.indices, 0, 63, 0)
+      val bits = new BitSink(s)
+      val pred = new Array[Int](comps.length)
+      val mcusX = w / (8 * maxH)
+      for (mcu <- 0 until mcusX * (h / (8 * maxV))) {
+        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
+          bits.restart(mcu / restartInterval - 1)
+          java.util.Arrays.fill(pred, 0)
+        }
+        val (mx, my) = (mcu % mcusX, mcu / mcusX)
+        for ((c, ci) <- comps.zipWithIndex; v <- 0 until c.v; hh <- 0 until c.h) {
+          val level = (c.block(mx * c.h + hh, my * c.v + v) & 0xFF) - 128
+          val diff = level - pred(ci)
+          pred(ci) = level
+          val cat = category(diff)
+          dc.put(bits, cat)
+          bits.put(magnitude(diff, cat), cat)
+          eob.put(bits, 0x00)
+        }
+      }
+      bits.flush()
+      s.marker(0xD9)
+    }
+  }
+
+  /** A grayscale [[buildFlatJpeg]]: one 1×1 component. */
+  def buildJpegWithBlocks(w: Int, h: Int, blockValue: (Int, Int) => Int,
+      restartInterval: Int = 0): Array[Byte] =
+    buildFlatJpeg(w, h, Seq(FlatComponent(1, 1, blockValue)), restartInterval)
+
   /** Flat-block COLOR fixture: YCbCr with Y sampling (sh, sv) — 4:4:4 /
-    * 4:2:2 / 4:2:0 — per-Y-block constants and flat chroma, interleaved
-    * in real MCU order with per-component DC predictors. Flat planes
+    * 4:2:2 / 4:2:0 — per-Y-block constants and flat chroma. Flat planes
     * upsample to the same constants under ANY correct filter, so the
     * ImageIO differential pins the multi-component scan interleave, the
     * chroma reconstruction paths (including h2v1, which the JDK writer
     * never emits), and the color convert — without needing an AC
     * encoder. */
   def buildJpegFlatYcc(w: Int, h: Int, sh: Int, sv: Int,
-      yBlock: (Int, Int) => Int, cb: Int, cr: Int): Array[Byte] = {
-    require(sh >= 1 && sh <= 2 && sv >= 1 && sv <= 2 && !(sh == 1 && sv == 2),
-      "sampling must be 1x1, 2x1, or 2x2")
-    require(w % (8 * sh) == 0 && h % (8 * sv) == 0 && w > 0 && h > 0,
-      "dims must be whole-MCU multiples")
-    val out = new java.io.ByteArrayOutputStream()
-    def m(marker: Int, payload: Array[Int]): Unit = {
-      out.write(0xFF); out.write(marker)
-      out.write((payload.length + 2) >> 8); out.write((payload.length + 2) & 0xFF)
-      payload.foreach(out.write)
-    }
-    out.write(0xFF); out.write(0xD8)
-    m(0xE0, Array('J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
-    m(0xDB, Array(0x00) ++ Array.fill(64)(8))
-    m(0xC0, Array(8, h >> 8, h & 0xFF, w >> 8, w & 0xFF, 3,
-      1, (sh << 4) | sv, 0, 2, 0x11, 0, 3, 0x11, 0))
-    m(0xC4, Array(0x00, 0, 0, 0, 9, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-      0, 1, 2, 3, 4, 5, 6, 7, 8))
-    m(0xC4, Array(0x10, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0x00))
-    m(0xDA, Array(3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0))
-    var acc = 0; var nb = 0
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1); nb += 1
-        if (nb == 8) {
-          out.write(acc); if (acc == 0xFF) out.write(0x00); acc = 0; nb = 0
-        }
-        i -= 1
-      }
-    }
-    def putBlock(value: Int, pred: Int): Int = {
-      val level = (value & 0xFF) - 128
-      val diff = level - pred
-      val s = if (diff == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-      putBits(s, 4)
-      if (s > 0) putBits(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-      putBits(0, 1) // EOB
-      level
-    }
-    var predY = 0; var predCb = 0; var predCr = 0
-    val mcusX = w / (8 * sh); val mcusY = h / (8 * sv)
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        var v = 0
-        while (v < sv) {
-          var hh = 0
-          while (hh < sh) {
-            predY = putBlock(yBlock(mx * sh + hh, my * sv + v), predY)
-            hh += 1
-          }
-          v += 1
-        }
-        predCb = putBlock(cb, predCb)
-        predCr = putBlock(cr, predCr)
-        mx += 1
-      }
-      my += 1
-    }
-    if (nb > 0) {
-      acc = (acc << (8 - nb)) | ((1 << (8 - nb)) - 1)
-      out.write(acc); if (acc == 0xFF) out.write(0x00)
-    }
-    out.write(0xFF); out.write(0xD9)
-    out.toByteArray
-  }
+      yBlock: (Int, Int) => Int, cb: Int, cr: Int): Array[Byte] =
+    buildFlatJpeg(w, h, Seq(FlatComponent(sh, sv, yBlock),
+      FlatComponent(1, 1, (_, _) => cb), FlatComponent(1, 1, (_, _) => cr)))
 
   /** Deterministic JPEG fixture column: dims and every 8×8 block constant
     * derive from the id, so the oracle restates the decoded sums while
@@ -1285,10 +1267,9 @@ object Jpeg {
     require(w > 0 && h > 0 && samples.length == w * h * channels)
     val script = if (scans == null) defaultScanScript(channels) else scans
     // ---- component planes
-    val flat8 = Array.fill(64)(8)
     val (qNats, hs, vs, tqs, planes0) =
       if (channels == 1)
-        (Array(if (flatQuant) flat8 else AnnexKLuma), Array(1), Array(1),
+        (Array(if (flatQuant) Flat8 else AnnexKLuma), Array(1), Array(1),
           Array(0), Array((samples, w, h)))
       else {
         val n = w * h
@@ -1310,9 +1291,9 @@ object Jpeg {
           val x1 = math.min(x + 1, w - 1); val y1 = math.min(y + 1, h - 1)
           (p(y * w + x) + p(y * w + x1) + p(y1 * w + x) + p(y1 * w + x1) + 2) / 4
         }
-        (Array(if (flatQuant) flat8 else AnnexKLuma,
-            if (flatQuant) flat8 else AnnexKChroma,
-            if (flatQuant) flat8 else AnnexKChroma),
+        (Array(if (flatQuant) Flat8 else AnnexKLuma,
+            if (flatQuant) Flat8 else AnnexKChroma,
+            if (flatQuant) Flat8 else AnnexKChroma),
           Array(2, 1, 1), Array(2, 1, 1), Array(0, 1, 1),
           Array((yP, w, h), (down(cbF), cw, ch), (down(crF), cw, ch)))
       }
@@ -1353,7 +1334,6 @@ object Jpeg {
       cb
     }
     // ---- token stream per scan (exact mirror of the decoder's order)
-    def catOf(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
     def scanTokens(sc: ProgScan): Seq[Tok] = {
       val toks = scala.collection.mutable.ArrayBuffer.empty[Tok]
       val isDC = sc.ss == 0
@@ -1376,11 +1356,9 @@ object Jpeg {
           val d = coefs(ci)(off) >> sc.al // arithmetic point transform (DC)
           val diff = d - preds(ci)
           preds(ci) = d
-          val s = catOf(diff)
+          val s = category(diff)
           toks += Sym(s)
-          if (s > 0)
-            toks += RawBits(
-              (if (diff < 0) diff + (1 << s) - 1 else diff) & ((1 << s) - 1), s)
+          if (s > 0) toks += RawBits(magnitude(diff, s), s)
         }
       } else if (isDC) {
         blockOffsets.foreach { case (ci, off) =>
@@ -1396,10 +1374,9 @@ object Jpeg {
             if (v == 0) run += 1
             else {
               while (run > 15) { toks += Sym(0xF0); run -= 16 }
-              val s = catOf(v)
+              val s = category(v)
               toks += Sym((run << 4) | s)
-              toks += RawBits(
-                (if (v < 0) v + (1 << s) - 1 else v) & ((1 << s) - 1), s)
+              toks += RawBits(magnitude(v, s), s)
               run = 0
             }
             k += 1
@@ -1451,67 +1428,24 @@ object Jpeg {
       toks.toSeq
     }
     // ---- serialize
-    val out = new java.io.ByteArrayOutputStream()
-    def m(marker: Int, payload: Array[Int]): Unit = {
-      out.write(0xFF); out.write(marker)
-      out.write((payload.length + 2) >> 8); out.write((payload.length + 2) & 0xFF)
-      payload.foreach(out.write)
-    }
-    out.write(0xFF); out.write(0xD8)
-    m(0xE0, Array('J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
-    val nq = if (channels == 1) 1 else 2
-    for (tq <- 0 until nq) {
-      val qn = qNats(tq)
-      m(0xDB, Array(tq) ++ Array.tabulate(64)(k => qn(Zigzag(k))))
-    }
-    m(0xC2, Array(8, h >> 8, h & 0xFF, w >> 8, w & 0xFF, nc) ++
-      (0 until nc).flatMap(i =>
-        Seq(i + 1, (hs(i) << 4) | vs(i), tqs(i))))
-    for (sc <- script) {
-      val toks = scanTokens(sc)
-      val syms = toks.collect { case Sym(s) => s }.distinct.sorted
-      val codeOf = new Array[Int](256)
-      val lenOf = new Array[Int](256)
-      if (syms.nonEmpty) {
-        // minimal equal-length canonical code; all-ones code stays unused
-        var len = 1
-        while ((1 << len) < syms.size + 1) len += 1
-        syms.zipWithIndex.foreach { case (s, i) =>
-          codeOf(s) = i; lenOf(s) = len
+    sink { s =>
+      jfif(s)
+      (0 to tqs.max).foreach(tq => dqt(s, tq, qNats(tq)))
+      sof(s, 0xC2, w, h, (0 until nc).map(i => (hs(i), vs(i), tqs(i))))
+      for (sc <- script) {
+        val toks = scanTokens(sc)
+        val syms = toks.collect { case Sym(x) => x }.distinct.sorted
+        val code = new EqualLengthCode(syms)
+        if (syms.nonEmpty) code.dht(s, if (sc.ss == 0) 0 else 1)
+        sos(s, sc.comps, sc.ss, sc.se, (sc.ah << 4) | sc.al)
+        val bits = new BitSink(s)
+        toks.foreach {
+          case Sym(x) => code.put(bits, x)
+          case RawBits(v, n) => bits.put(v, n)
         }
-        val counts = new Array[Int](16)
-        counts(len - 1) = syms.size
-        val tc = if (sc.ss == 0) 0 else 1
-        m(0xC4, Array(tc << 4) ++ counts ++ syms)
+        bits.flush()
       }
-      m(0xDA, Array(sc.comps.length) ++
-        sc.comps.flatMap(ci => Seq(ci + 1, 0)) ++
-        Array(sc.ss, sc.se, (sc.ah << 4) | sc.al))
-      // entropy bits with 0xFF00 stuffing
-      var acc = 0; var nb = 0
-      def putBits(v: Int, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          acc = (acc << 1) | ((v >> i) & 1); nb += 1
-          if (nb == 8) {
-            out.write(acc)
-            if (acc == 0xFF) out.write(0x00)
-            acc = 0; nb = 0
-          }
-          i -= 1
-        }
-      }
-      toks.foreach {
-        case Sym(s) => putBits(codeOf(s), lenOf(s))
-        case RawBits(v, n) => putBits(v, n)
-      }
-      if (nb > 0) { // pad with 1s
-        acc = (acc << (8 - nb)) | ((1 << (8 - nb)) - 1)
-        out.write(acc)
-        if (acc == 0xFF) out.write(0x00)
-      }
+      s.marker(0xD9)
     }
-    out.write(0xFF); out.write(0xD9)
-    out.toByteArray
   }
 }

@@ -170,87 +170,59 @@ object Multimodal {
 
   // ---- spec-valid payload builders (fixtures + q_media_meta_real) ----
 
-  private def crc32(b: Array[Byte], off: Int, len: Int): Long = {
-    val c = new java.util.zip.CRC32()
-    c.update(b, off, len)
-    c.getValue
-  }
-  private def putBE32(b: Array[Byte], i: Int, v: Long): Unit = {
-    b(i) = ((v >>> 24) & 0xFF).toByte; b(i + 1) = ((v >>> 16) & 0xFF).toByte
-    b(i + 2) = ((v >>> 8) & 0xFF).toByte; b(i + 3) = (v & 0xFF).toByte
-  }
-  private def putLE32(b: Array[Byte], i: Int, v: Long): Unit = {
-    b(i) = (v & 0xFF).toByte; b(i + 1) = ((v >>> 8) & 0xFF).toByte
-    b(i + 2) = ((v >>> 16) & 0xFF).toByte; b(i + 3) = ((v >>> 24) & 0xFF).toByte
-  }
-  private def putTag(b: Array[Byte], i: Int, t: String): Unit = {
-    val a = t.getBytes("US-ASCII")
-    System.arraycopy(a, 0, b, i, 4)
+  private val PngSignature = Seq(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
+
+  /** A non-interlaced 8-bit PNG: signature, IHDR, one IDAT written by
+    * `idat`, IEND. */
+  private def png(width: Int, height: Int, colorType: Int)(
+      idat: ByteSink => Unit): Array[Byte] = sink { s =>
+    PngSignature.foreach(s.u8(_))
+    s.pngChunk("IHDR")(_.be32(width).be32(height).u8(8).u8(colorType)
+      .u8(0).u8(0).u8(0)) // compression, filter, interlace
+    s.pngChunk("IDAT")(idat)
+    s.pngChunk("IEND")(_ => ())
   }
 
   /** Minimal spec-valid PNG: signature + IHDR (real CRC) + empty IDAT + IEND. */
-  def buildPng(width: Int, height: Int): Array[Byte] = {
-    val b = new Array[Byte](8 + 25 + 12 + 12)
-    val sig = Array[Int](0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
-      .map(_.toByte)
-    System.arraycopy(sig, 0, b, 0, 8)
-    putBE32(b, 8, 13); putTag(b, 12, "IHDR")
-    putBE32(b, 16, width); putBE32(b, 20, height)
-    b(24) = 8; b(25) = 2; b(26) = 0; b(27) = 0; b(28) = 0 // depth/color/etc
-    putBE32(b, 29, crc32(b, 12, 17))
-    putBE32(b, 33, 0); putTag(b, 37, "IDAT"); putBE32(b, 41, crc32(b, 37, 4))
-    putBE32(b, 45, 0); putTag(b, 49, "IEND"); putBE32(b, 53, crc32(b, 49, 4))
-    b
-  }
+  def buildPng(width: Int, height: Int): Array[Byte] =
+    png(width, height, colorType = 2)(_ => ())
 
   /** Minimal spec-valid JPEG: SOI + JFIF APP0 + SOF0 (1 component) + EOI —
     * the APP0 ahead of SOF0 exercises the marker walk. */
   def buildJpeg(width: Int, height: Int): Array[Byte] = {
     require(width <= 0xFFFF && height <= 0xFFFF, "JPEG dims are u16")
-    val app0 = Array[Int](0xFF, 0xE0, 0, 16,
-      'J', 'F', 'I', 'F', 0, 1, 2, 0, 0, 1, 0, 1, 0, 0).map(_.toByte)
-    val sof = Array[Int](0xFF, 0xC0, 0, 11, 8,
-      (height >> 8) & 0xFF, height & 0xFF,
-      (width >> 8) & 0xFF, width & 0xFF,
-      1, 1, 0x11, 0).map(_.toByte)
-    Array[Int](0xFF, 0xD8).map(_.toByte) ++ app0 ++ sof ++
-      Array[Int](0xFF, 0xD9).map(_.toByte)
+    sink { s =>
+      Jpeg.jfif(s, minor = 2)
+      Jpeg.sof(s, 0xC0, width, height, Seq((1, 1, 0))).marker(0xD9)
+    }
   }
+
+  /** Mono 16-bit PCM WAV: RIFF/WAVE + fmt + a data chunk written by `data`. */
+  private def wav(sampleRate: Int)(data: ByteSink => Unit): Array[Byte] =
+    sink(_.chunkList("RIFF", "WAVE") { r =>
+      // PCM, mono, rate, byteRate = rate · ch · bits/8, blockAlign, bits
+      r.chunk("fmt ")(_.le16(1).le16(1).le32(sampleRate).le32(sampleRate * 2L)
+        .le16(2).le16(16))
+      r.chunk("data")(data)
+    })
 
   /** Minimal spec-valid PCM WAV: RIFF/WAVE + fmt (mono 16-bit) + data of
     * `dataBytes` zero samples. duration_ms = dataBytes·1000 / (2·sampleRate). */
-  def buildWav(sampleRate: Int, dataBytes: Int): Array[Byte] = {
-    val b = new Array[Byte](44 + dataBytes)
-    putTag(b, 0, "RIFF"); putLE32(b, 4, 36L + dataBytes); putTag(b, 8, "WAVE")
-    putTag(b, 12, "fmt "); putLE32(b, 16, 16)
-    b(20) = 1; b(21) = 0 // PCM
-    b(22) = 1; b(23) = 0 // mono
-    putLE32(b, 24, sampleRate)
-    putLE32(b, 28, sampleRate * 2L) // byteRate = rate · ch · bits/8
-    b(32) = 2; b(33) = 0             // blockAlign
-    b(34) = 16; b(35) = 0            // bitsPerSample
-    putTag(b, 36, "data"); putLE32(b, 40, dataBytes)
-    b
-  }
+  def buildWav(sampleRate: Int, dataBytes: Int): Array[Byte] =
+    wav(sampleRate)(_.zeros(dataBytes))
 
   /** Minimal spec-valid MP4: ftyp + moov{mvhd v0} with the given movie
-    * timescale and duration (in timescale units). */
-  def buildMp4(timescale: Int, durationUnits: Long): Array[Byte] = {
-    val ftyp = new Array[Byte](20)
-    putBE32(ftyp, 0, 20); putTag(ftyp, 4, "ftyp"); putTag(ftyp, 8, "isom")
-    putBE32(ftyp, 12, 512); putTag(ftyp, 16, "isom")
-    val mvhd = new Array[Byte](108)
-    putBE32(mvhd, 0, 108); putTag(mvhd, 4, "mvhd")
-    putBE32(mvhd, 20, timescale); putBE32(mvhd, 24, durationUnits)
-    putBE32(mvhd, 28, 0x00010000L) // rate 1.0
-    mvhd(32) = 0x01; mvhd(33) = 0 // volume 1.0
-    putBE32(mvhd, 48, 0x00010000L); putBE32(mvhd, 64, 0x00010000L)
-    putBE32(mvhd, 80, 0x40000000L) // identity matrix
-    putBE32(mvhd, 104, 0xFFFFFFFFL) // next track id
-    val moov = new Array[Byte](8 + 108)
-    putBE32(moov, 0, 8 + 108); putTag(moov, 4, "moov")
-    System.arraycopy(mvhd, 0, moov, 8, 108)
-    ftyp ++ moov
+    * timescale and duration (in timescale units). The matrix sits 4 bytes
+    * past ISO 14496-12's offsets (at 48/64/80 of the box, not 44/60/76),
+    * over the first pre_defined word; the header parser reads neither. */
+  def buildMp4(timescale: Int, durationUnits: Long): Array[Byte] = sink { s =>
+    Video.ftyp(s).box("moov")(_.box("mvhd") { m =>
+      // version/flags, creation, modification, timescale, duration,
+      // rate 1.0, volume 1.0
+      m.be32(0).be32(0).be32(0).be32(timescale).be32(durationUnits)
+        .be32(0x00010000L).be16(0x0100).zeros(14)
+      Video.identityMatrix(m).zeros(20).be32(0xFFFFFFFFL) // next track id
+    })
   }
 
   /** Deterministic media fixture column: doc_id % 4 selects the container
@@ -307,7 +279,7 @@ object Multimodal {
     // overflow Int offset arithmetic into a negative index (crashing the
     // task instead of dropping the payload as documented); in Long the
     // overrun is an ordinary comparison
-    val idat = new java.io.ByteArrayOutputStream()
+    val idat = new ByteSink
     var o = 8L
     var done = false
     while (!done && o + 8 <= bytes.length) {
@@ -406,28 +378,10 @@ object Multimodal {
       }
       r += 1
     }
-    val zOut = new java.io.ByteArrayOutputStream()
-    val dos = new java.util.zip.DeflaterOutputStream(zOut,
-      new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION))
-    dos.write(raw); dos.finish(); dos.close()
-    val z = zOut.toByteArray
-    val b = new Array[Byte](8 + 25 + (12 + z.length) + 12)
-    val sig = Array[Int](0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
-      .map(_.toByte)
-    System.arraycopy(sig, 0, b, 0, 8)
-    putBE32(b, 8, 13); putTag(b, 12, "IHDR")
-    putBE32(b, 16, width); putBE32(b, 20, height)
-    b(24) = 8 // bit depth
-    b(25) = (if (channels == 3) 2 else 0).toByte // color type
-    b(26) = 0; b(27) = 0; b(28) = 0
-    putBE32(b, 29, crc32(b, 12, 17))
-    putBE32(b, 33, z.length)
-    putTag(b, 37, "IDAT")
-    System.arraycopy(z, 0, b, 41, z.length)
-    putBE32(b, 41 + z.length, crc32(b, 37, 4 + z.length))
-    val ie = 45 + z.length
-    putBE32(b, ie, 0); putTag(b, ie + 4, "IEND"); putBE32(b, ie + 8, crc32(b, ie + 4, 4))
-    b
+    png(width, height, colorType = if (channels == 3) 2 else 0) { idat =>
+      val dos = new java.util.zip.DeflaterOutputStream(idat)
+      dos.write(raw); dos.close()
+    }
   }
 
   /** Deterministic PNG fixture column with REAL pixel payloads: dims,
@@ -541,17 +495,8 @@ object Multimodal {
   }
 
   /** Spec-valid PCM WAV carrying REAL sample content (16-bit LE mono). */
-  def buildWavWithSamples(sampleRate: Int, samples: Array[Int]): Array[Byte] = {
-    val b = buildWav(sampleRate, samples.length * 2)
-    var i = 0
-    while (i < samples.length) {
-      val v = samples(i)
-      b(44 + 2 * i) = (v & 0xFF).toByte
-      b(45 + 2 * i) = ((v >> 8) & 0xFF).toByte
-      i += 1
-    }
-    b
-  }
+  def buildWavWithSamples(sampleRate: Int, samples: Array[Int]): Array[Byte] =
+    wav(sampleRate)(d => samples.foreach(d.le16))
 
   /** Deterministic WAV fixture column with REAL samples: sampleRate =
     * 8000 + (id % 8)·1000, n = 100 + id % 400 samples,
@@ -1778,27 +1723,20 @@ object Multimodal {
     require(samples.length == w * h * 3)
     val rowSize = (3 * w + 3) / 4 * 4
     val dataSize = rowSize * h
-    val fileSize = 54 + dataSize
-    val b = new Array[Byte](fileSize)
-    b(0) = 'B'; b(1) = 'M'
-    putLE32(b, 2, fileSize); putLE32(b, 10, 54)
-    putLE32(b, 14, 40); putLE32(b, 18, w); putLE32(b, 22, h)
-    b(26) = 1; b(28) = 24 // planes, bits per pixel (LE16)
-    putLE32(b, 30, 0); putLE32(b, 34, dataSize)
-    var r = 0
-    while (r < h) {
-      val dst = 54 + (h - 1 - r) * rowSize
-      var c = 0
-      while (c < w) {
-        val s = (r * w + c) * 3
-        b(dst + 3 * c) = samples(s + 2).toByte     // B
-        b(dst + 3 * c + 1) = samples(s + 1).toByte // G
-        b(dst + 3 * c + 2) = samples(s).toByte     // R
-        c += 1
+    sink { b =>
+      // file header (size, reserved, pixel offset), then BITMAPINFOHEADER
+      // (size, dims, planes, bits per pixel, BI_RGB, image size, 16 zeros)
+      b.u8('B').u8('M').le32(54 + dataSize).le32(0).le32(54)
+        .le32(40).le32(w).le32(h).le16(1).le16(24).le32(0).le32(dataSize)
+        .zeros(16)
+      for (r <- h - 1 to 0 by -1) {
+        for (c <- 0 until w) {
+          val s = (r * w + c) * 3
+          b.u8(samples(s + 2)).u8(samples(s + 1)).u8(samples(s)) // B, G, R
+        }
+        b.zeros(rowSize - 3 * w)
       }
-      r += 1
     }
-    b
   }
 
   /** Deterministic BMP fixture: the PNG gradient arithmetic family

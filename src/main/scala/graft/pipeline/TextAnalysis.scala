@@ -1158,8 +1158,7 @@ object TextAnalysis {
     * anywhere. */
   def winnowPairs(df: DataFrame, textCol: String, idCol: String,
       k: Int = 5, w: Int = 4, dfDenom: Int = 20,
-      maxBucket: Int = 100, minShared: Int = 2,
-      materializeFps: Boolean = true): DataFrame = {
+      maxBucket: Int = 100, minShared: Int = 2): DataFrame = {
     require(dfDenom >= 1, s"dfDenom must be >= 1, got $dfDenom")
     require(maxBucket >= 2,
       s"maxBucket must be >= 2 to form any pair, got $maxBucket")
@@ -1168,11 +1167,10 @@ object TextAnalysis {
     // both self-join sides); fully declarative, the winnow scan runs
     // three times (differently-pruned subtrees defeat ReuseExchange —
     // the Curation.curate finding). A LAZY localCheckpoint at the
-    // natural boundary runs it once; the single-plan form stays
-    // available for streaming-like callers.
-    val fps0 = winnowFingerprints(df, textCol, idCol, k, w)
-      .select(col(idCol), col("fp")).distinct()
-    val fps = if (materializeFps) Materializer(fps0, eager = false) else fps0
+    // natural boundary runs it once (`spark.graft.materializer=none`
+    // keeps the single plan).
+    val fps = Materializer(winnowFingerprints(df, textCol, idCol, k, w)
+      .select(col(idCol), col("fp")).distinct(), eager = false)
     val nDocs = df.agg(count_distinct(col(idCol)).alias("__nd"))
     val dfCount = fps.groupBy(col("fp"))
       .agg(count(lit(1)).alias("__df"))
@@ -1204,11 +1202,9 @@ object TextAnalysis {
     * [[winnowPairs]]. Output: (id, n_fps, n_novel, novelty) with
     * novelty one correctly-rounded division of exact integers. */
   def winnowNovelty(df: DataFrame, textCol: String, idCol: String,
-      k: Int = 5, w: Int = 4,
-      materializeFps: Boolean = true): DataFrame = {
-    val fps0 = winnowFingerprints(df, textCol, idCol, k, w)
-      .select(col(idCol), col("fp")).distinct()
-    val fps = if (materializeFps) Materializer(fps0, eager = false) else fps0
+      k: Int = 5, w: Int = 4): DataFrame = {
+    val fps = Materializer(winnowFingerprints(df, textCol, idCol, k, w)
+      .select(col(idCol), col("fp")).distinct(), eager = false)
     val firstOwner = fps.groupBy(col("fp"))
       .agg(min(col(idCol)).alias("__first"))
     fps.join(firstOwner, Seq("fp"))

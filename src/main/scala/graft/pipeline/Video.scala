@@ -38,16 +38,6 @@ object Video {
     def durationMs: Long = nFrames.toLong * scale * 1000L / rate
   }
 
-  private final class W {
-    val out = new java.io.ByteArrayOutputStream()
-    def t(s: String): Unit = { require(s.length == 4); s.foreach(c => out.write(c)) }
-    def i32(v: Long): Unit = {
-      out.write((v & 0xFF).toInt); out.write(((v >> 8) & 0xFF).toInt)
-      out.write(((v >> 16) & 0xFF).toInt); out.write(((v >> 24) & 0xFF).toInt)
-    }
-    def i16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-  }
-
   /** Minimal spec-valid MJPEG AVI: RIFF('AVI ') { LIST hdrl { avih,
     * LIST strl { strh(vids/MJPG, rate=fps, scale=1), strf(BITMAPINFOHEADER,
     * biCompression='MJPG') } }, LIST movi { '00dc' jfif ... } }. Chunks are
@@ -55,43 +45,34 @@ object Video {
   def buildAviMjpeg(width: Int, height: Int, fps: Int,
       frames: Seq[Array[Byte]]): Array[Byte] = {
     require(fps > 0 && width > 0 && height > 0 && frames.nonEmpty)
-    // strh(8+56) + strf(8+40) + 'strl'
-    val strlSize = 4 + 64 + 48
-    // avih(8+56) + LIST strl + 'hdrl'
-    val hdrlSize = 4 + 64 + 8 + strlSize
-    val moviBody = frames.map(f => 8 + f.length + (f.length & 1)).sum
-    val moviSize = 4 + moviBody
-    val riffSize = 4 + 8 + hdrlSize + 8 + moviSize
-    val w = new W
-    w.t("RIFF"); w.i32(riffSize); w.t("AVI ")
-    w.t("LIST"); w.i32(hdrlSize); w.t("hdrl")
-    w.t("avih"); w.i32(56)
-    w.i32(1000000L / fps) // µs/frame (informational; strh carries the rational)
-    w.i32(0); w.i32(0); w.i32(0) // maxBytesPerSec, padding, flags
-    w.i32(frames.length); w.i32(0); w.i32(1); w.i32(0) // totalFrames, initial, streams, bufSize
-    w.i32(width); w.i32(height)
-    w.i32(0); w.i32(0); w.i32(0); w.i32(0) // reserved[4]
-    w.t("LIST"); w.i32(strlSize); w.t("strl")
-    w.t("strh"); w.i32(56)
-    w.t("vids"); w.t("MJPG"); w.i32(0) // fccType, fccHandler, flags
-    w.i16(0); w.i16(0) // priority, language
-    w.i32(0) // initialFrames
-    w.i32(1); w.i32(fps) // scale, rate → fps frames/s exactly
-    w.i32(0); w.i32(frames.length) // start, length (in frames)
-    w.i32(0); w.i32(0); w.i32(0) // suggestedBufferSize, quality, sampleSize
-    w.i16(0); w.i16(0); w.i16(width); w.i16(height) // rcFrame
-    w.t("strf"); w.i32(40)
-    w.i32(40); w.i32(width); w.i32(height) // biSize, biWidth, biHeight
-    w.i16(1); w.i16(24) // biPlanes, biBitCount
-    w.t("MJPG") // biCompression
-    w.i32(width.toLong * height * 3) // biSizeImage
-    w.i32(0); w.i32(0); w.i32(0); w.i32(0) // pels/clr fields
-    w.t("LIST"); w.i32(moviSize); w.t("movi")
-    frames.foreach { f =>
-      w.t("00dc"); w.i32(f.length); w.out.write(f, 0, f.length)
-      if ((f.length & 1) == 1) w.out.write(0) // RIFF word alignment
-    }
-    w.out.toByteArray
+    sink(_.chunkList("RIFF", "AVI ") { avi =>
+      avi.chunkList("LIST", "hdrl") { hdrl =>
+        hdrl.chunk("avih")(_
+          .le32(1000000L / fps) // µs/frame (informational; strh carries the rational)
+          .le32(0).le32(0).le32(0) // maxBytesPerSec, padding, flags
+          .le32(frames.length).le32(0).le32(1).le32(0) // totalFrames, initial, streams, bufSize
+          .le32(width).le32(height)
+          .zeros(16)) // reserved[4]
+        hdrl.chunkList("LIST", "strl") { strl =>
+          strl.chunk("strh")(_
+            .fourcc("vids").fourcc("MJPG").le32(0) // fccType, fccHandler, flags
+            .le16(0).le16(0) // priority, language
+            .le32(0) // initialFrames
+            .le32(1).le32(fps) // scale, rate → fps frames/s exactly
+            .le32(0).le32(frames.length) // start, length (in frames)
+            .le32(0).le32(0).le32(0) // suggestedBufferSize, quality, sampleSize
+            .le16(0).le16(0).le16(width).le16(height)) // rcFrame
+          strl.chunk("strf")(_
+            .le32(40).le32(width).le32(height) // biSize, biWidth, biHeight
+            .le16(1).le16(24) // biPlanes, biBitCount
+            .fourcc("MJPG") // biCompression
+            .le32(width.toLong * height * 3) // biSizeImage
+            .zeros(16)) // pels/clr fields
+        }
+      }
+      avi.chunkList("LIST", "movi")(movi =>
+        frames.foreach(f => movi.chunk("00dc")(_.bytes(f))))
+    })
   }
 
   /** Walk an MJPEG AVI container: header timing from `strh` (vids/MJPG
@@ -187,18 +168,14 @@ object Video {
   // ------------------------------------------------------ MJPEG in MP4
   // ISO BMFF (ISO/IEC 14496-12, public spec): big-endian size+type boxes.
 
-  private def beBytes32(v: Long): Array[Byte] = Array(
-    ((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte,
-    ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-  private def beBytes16(v: Int): Array[Byte] =
-    Array(((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-  private def fourcc(s: String): Array[Byte] = {
-    require(s.length == 4); s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-  }
-  private def box(tag: String, parts: Array[Byte]*): Array[Byte] = {
-    val body = parts.foldLeft(Array.emptyByteArray)(_ ++ _)
-    beBytes32(8L + body.length) ++ fourcc(tag) ++ body
-  }
+  /** The `ftyp` box of every MP4 fixture: brand isom, version 512. */
+  private[pipeline] def ftyp(s: ByteSink): ByteSink =
+    s.box("ftyp")(_.fourcc("isom").be32(512).fourcc("isom"))
+
+  /** The identity transformation matrix of `mvhd` and `tkhd`. */
+  private[pipeline] def identityMatrix(s: ByteSink): ByteSink =
+    s.be32(0x00010000L).zeros(12).be32(0x00010000L).zeros(12)
+      .be32(0x40000000L)
 
   /** Minimal spec-valid MJPEG MP4 (Photo-JPEG sample description 'jpeg'):
     * ftyp + mdat(frames concatenated) + moov { mvhd, trak { tkhd, mdia {
@@ -211,69 +188,63 @@ object Video {
       sampleDelta: Int, frames: Seq[Array[Byte]]): Array[Byte] = {
     require(width > 0 && height > 0 && timescale > 0 && sampleDelta > 0 &&
       frames.nonEmpty)
-    val ftyp = box("ftyp", fourcc("isom"), beBytes32(512), fourcc("isom"))
-    require(ftyp.length == 20)
-    val mdatBody = frames.foldLeft(Array.emptyByteArray)(_ ++ _)
-    val mdat = box("mdat", mdatBody)
-    // sample i starts at ftyp + mdat header + bytes of earlier frames
-    val offsets = frames.scanLeft(ftyp.length.toLong + 8L)(_ + _.length)
-      .init
+    // sample i starts past ftyp (20 bytes), the mdat header and earlier frames
+    val offsets = frames.scanLeft(20L + 8L)(_ + _.length).init
     val duration = frames.length.toLong * sampleDelta
     val n = frames.length
-    val vf0 = beBytes32(0) // version 0 + zero flags
-    val mvhd = box("mvhd", vf0, beBytes32(0), beBytes32(0),
-      beBytes32(timescale), beBytes32(duration),
-      beBytes32(0x00010000L), beBytes16(0x0100), beBytes16(0),
-      beBytes32(0), beBytes32(0),
-      // identity matrix per spec
-      beBytes32(0x00010000L), beBytes32(0), beBytes32(0),
-      beBytes32(0), beBytes32(0x00010000L), beBytes32(0),
-      beBytes32(0), beBytes32(0), beBytes32(0x40000000L),
-      Array.fill(24)(0.toByte), // pre_defined[6]
-      beBytes32(2)) // next_track_ID
-    val tkhd = box("tkhd", beBytes32(7), // v0, flags: enabled|in_movie|in_preview
-      beBytes32(0), beBytes32(0), beBytes32(1), beBytes32(0),
-      beBytes32(duration), beBytes32(0), beBytes32(0),
-      beBytes16(0), beBytes16(0), beBytes16(0), beBytes16(0),
-      beBytes32(0x00010000L), beBytes32(0), beBytes32(0),
-      beBytes32(0), beBytes32(0x00010000L), beBytes32(0),
-      beBytes32(0), beBytes32(0), beBytes32(0x40000000L),
-      beBytes32(width.toLong << 16), beBytes32(height.toLong << 16))
-    val mdhd = box("mdhd", vf0, beBytes32(0), beBytes32(0),
-      beBytes32(timescale), beBytes32(duration),
-      beBytes16(0x55C4), beBytes16(0)) // language 'und'
-    val hdlr = box("hdlr", vf0, beBytes32(0), fourcc("vide"),
-      beBytes32(0), beBytes32(0), beBytes32(0),
-      "VideoHandler".getBytes(
-        java.nio.charset.StandardCharsets.US_ASCII) ++ Array(0.toByte))
-    val vmhd = box("vmhd", beBytes32(1), beBytes16(0),
-      beBytes16(0), beBytes16(0), beBytes16(0))
-    val dinf = box("dinf", box("dref", vf0, beBytes32(1),
-      box("url ", beBytes32(1)))) // flag 1 = data in this file
-    val entry = box("jpeg",
-      Array.fill(6)(0.toByte), beBytes16(1), // reserved, data_ref_index
-      beBytes16(0), beBytes16(0), Array.fill(12)(0.toByte),
-      beBytes16(width), beBytes16(height),
-      beBytes32(0x00480000L), beBytes32(0x00480000L), // 72 dpi
-      beBytes32(0), beBytes16(1), // reserved, frame_count
-      Array.fill(32)(0.toByte), // compressorname (pascal, empty)
-      beBytes16(24), beBytes16(0xFFFF)) // depth, pre_defined = -1
-    val stsd = box("stsd", vf0, beBytes32(1), entry)
-    val stts = box("stts", vf0, beBytes32(1),
-      beBytes32(n), beBytes32(sampleDelta))
-    val stsc = box("stsc", vf0, beBytes32(1),
-      beBytes32(1), beBytes32(1), beBytes32(1))
-    val stsz = box("stsz", vf0, beBytes32(0), beBytes32(n),
-      frames.map(f => beBytes32(f.length.toLong))
-        .foldLeft(Array.emptyByteArray)(_ ++ _))
-    val stco = box("stco", vf0, beBytes32(n),
-      offsets.map(beBytes32).foldLeft(Array.emptyByteArray)(_ ++ _))
-    val stbl = box("stbl", stsd, stts, stsc, stsz, stco)
-    val minf = box("minf", vmhd, dinf, stbl)
-    val mdia = box("mdia", mdhd, hdlr, minf)
-    val trak = box("trak", tkhd, mdia)
-    val moov = box("moov", mvhd, trak)
-    ftyp ++ mdat ++ moov
+    sink { s =>
+      ftyp(s).box("mdat")(m => frames.foreach(m.bytes))
+      s.box("moov") { moov =>
+        moov.box("mvhd") { m =>
+          // version/flags, creation, modification, timescale, duration,
+          // rate 1.0, volume 1.0, reserved
+          m.be32(0).be32(0).be32(0).be32(timescale).be32(duration)
+            .be32(0x00010000L).be16(0x0100).zeros(10)
+          identityMatrix(m).zeros(24).be32(2) // pre_defined[6], next_track_ID
+        }
+        moov.box("trak") { trak =>
+          trak.box("tkhd") { t =>
+            // flags enabled|in_movie|in_preview, creation, modification,
+            // track_ID, reserved, duration, reserved[2], layer,
+            // alternate_group, volume, reserved
+            t.be32(7).be32(0).be32(0).be32(1).be32(0).be32(duration)
+              .zeros(16)
+            identityMatrix(t).be32(width.toLong << 16).be32(height.toLong << 16)
+          }
+          trak.box("mdia") { mdia =>
+            mdia.box("mdhd")(_.be32(0).be32(0).be32(0).be32(timescale)
+              .be32(duration).be16(0x55C4).be16(0)) // language 'und'
+            mdia.box("hdlr")(_.be32(0).be32(0).fourcc("vide").zeros(12)
+              .bytes("VideoHandler".getBytes(
+                java.nio.charset.StandardCharsets.US_ASCII)).u8(0))
+            mdia.box("minf") { minf =>
+              minf.box("vmhd")(_.be32(1).zeros(8))
+              minf.box("dinf")(_.box("dref")(_.be32(0).be32(1)
+                .box("url ")(_.be32(1)))) // flag 1 = data in this file
+              minf.box("stbl") { stbl =>
+                stbl.box("stsd")(_.be32(0).be32(1).box("jpeg")(_
+                  .zeros(6).be16(1) // reserved, data_ref_index
+                  .zeros(16).be16(width).be16(height)
+                  .be32(0x00480000L).be32(0x00480000L) // 72 dpi
+                  .be32(0).be16(1) // reserved, frame_count
+                  .zeros(32) // compressorname (pascal, empty)
+                  .be16(24).be16(0xFFFF))) // depth, pre_defined = -1
+                stbl.box("stts")(_.be32(0).be32(1).be32(n).be32(sampleDelta))
+                stbl.box("stsc")(_.be32(0).be32(1).be32(1).be32(1).be32(1))
+                stbl.box("stsz") { b =>
+                  b.be32(0).be32(0).be32(n)
+                  frames.foreach(f => b.be32(f.length.toLong))
+                }
+                stbl.box("stco") { b =>
+                  b.be32(0).be32(n)
+                  offsets.foreach(b.be32)
+                }
+              }
+            }
+          }
+        }
+      }
+    }
   }
 
   /** Walk an ISO BMFF container for an MJPEG video track: moov → trak →

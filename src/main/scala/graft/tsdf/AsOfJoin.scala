@@ -43,9 +43,6 @@ object AsOfJoin {
       sqlJoinOpt: Boolean,
       tolerance: Option[Double]): TSDF = {
 
-    require(left.partitionCols == right.partitionCols,
-      s"as-of join requires matching series columns: ${left.partitionCols} vs ${right.partitionCols}")
-
     // empty prefix = no renames (tsdf.py:206-212)
     val leftPre = leftPrefix.filter(_.nonEmpty)
     val rightPre = Some(rightPrefix).filter(_.nonEmpty)
@@ -79,21 +76,25 @@ object AsOfJoin {
         t.partitionCols, t.sequenceCol.map(prefixed(prefix, _)))
   }
 
-  // ---------------------------------------------------------------- default
-  private def unionJoin(
-      left0: TSDF, right0: TSDF,
-      leftPrefix: Option[String], rightPrefix: Option[String],
-      tsPartitionVal: Option[Long], fraction: Double,
-      skipNulls: Boolean): TSDF = {
+  /** Both sides renamed by their prefixes; their series columns must match. */
+  private def prefixedSides(left: TSDF, right: TSDF,
+      leftPrefix: Option[String], rightPrefix: Option[String]): (TSDF, TSDF) = {
+    require(left.partitionCols == right.partitionCols,
+      s"as-of join requires matching series columns: ${left.partitionCols} vs ${right.partitionCols}")
+    (withPrefix(left, leftPrefix), withPrefix(right, rightPrefix))
+  }
 
-    val left = withPrefix(left0, leftPrefix)
-    val right = withPrefix(right0, rightPrefix)
+  /** The union paths' input ([[unionJoin]], [[nearest]]): the prefixed
+    * sides, the right side's non-series columns, and both sides null-padded
+    * with the other side's columns (tsdf.py:233-243) and unioned, each row
+    * tagged `__rec_ind` (1 left, -1 right) and `__combined_ts`. */
+  private def paddedUnion(left0: TSDF, right0: TSDF,
+      leftPrefix: Option[String], rightPrefix: Option[String])
+      : (TSDF, TSDF, Seq[String], DataFrame) = {
+    val (left, right) = prefixedSides(left0, right0, leftPrefix, rightPrefix)
     val series = left.partitionCols
-
     val leftCols = left.df.columns.filterNot(series.contains).toSeq
     val rightCols = right.df.columns.filterNot(series.contains).toSeq
-
-    // null-pad each side with the other side's columns (tsdf.py:233-243)
     def pad(df: DataFrame, ownCols: Seq[String], otherDf: DataFrame,
         otherCols: Seq[String], recInd: Int): DataFrame = {
       val otherTypes = otherDf.schema.fields.map(f => f.name -> f.dataType).toMap
@@ -102,16 +103,28 @@ object AsOfJoin {
           otherCols.map(c => lit(null).cast(otherTypes(c)).alias(c)) :+
           lit(recInd).alias("__rec_ind")): _*)
     }
-
     val unioned = pad(left.df, leftCols, right.df, rightCols, 1)
       .unionByName(pad(right.df, rightCols, left.df, leftCols, -1))
+      .withColumn("__combined_ts", coalesce(col(left.tsCol), col(right.tsCol)))
+    (left, right, rightCols, unioned)
+  }
 
-    val combinedTs = coalesce(col(left.tsCol), col(right.tsCol))
+  // ---------------------------------------------------------------- default
+  private def unionJoin(
+      left0: TSDF, right0: TSDF,
+      leftPrefix: Option[String], rightPrefix: Option[String],
+      tsPartitionVal: Option[Long], fraction: Double,
+      skipNulls: Boolean): TSDF = {
+
+    val (left, right, rightCols, unioned) =
+      paddedUnion(left0, right0, leftPrefix, rightPrefix)
+    val series = left.partitionCols
+
     val seqOrder: Seq[Column] =
       (left.sequenceCol.toSeq ++ right.sequenceCol.toSeq).map(c => col(c).asc)
 
     val (bucketed, partKeys, cleanup) = tsPartitionVal match {
-      case None => (unioned.withColumn("__combined_ts", combinedTs), series, identity[DataFrame] _)
+      case None => (unioned, series, identity[DataFrame] _)
       case Some(v) =>
         // skew path: salt the window partition key by time bracket. The
         // reference materializes the overlap rows as a filter + union over a
@@ -126,8 +139,7 @@ object AsOfJoin {
             struct(col("__bracket").alias("p"), lit(1).alias("o")),
             when(inOverlapTail, struct((col("__bracket") + v).alias("p"), lit(0).alias("o")))),
           x => x.isNotNull)
-        val both = unioned.withColumn("__combined_ts", combinedTs)
-          .withColumn("__bracket", base)
+        val both = unioned.withColumn("__bracket", base)
           .withColumn("__dup", explode(assignments))
           .withColumn("__ts_partition", col("__dup").getField("p"))
           .withColumn("__is_original", col("__dup").getField("o"))
@@ -163,8 +175,7 @@ object AsOfJoin {
       left0: TSDF, right0: TSDF,
       leftPrefix: Option[String], rightPrefix: Option[String]): TSDF = {
 
-    val left = withPrefix(left0, leftPrefix)
-    val right = withPrefix(right0, rightPrefix)
+    val (left, right) = prefixedSides(left0, right0, leftPrefix, rightPrefix)
     val series = left.partitionCols
 
     val w = Window.partitionBy(series.map(col): _*).orderBy(col(right.tsCol).asc)
@@ -269,25 +280,9 @@ object AsOfJoin {
       rightPrefix: String, tolerance: Option[Double]): TSDF = {
     require(left0.sequenceCol.isEmpty && right0.sequenceCol.isEmpty,
       "nearest as-of does not support sequence columns")
-    require(left0.partitionCols == right0.partitionCols,
-      s"as-of join requires matching series columns: " +
-        s"${left0.partitionCols} vs ${right0.partitionCols}")
-    val left = withPrefix(left0, leftPrefix.filter(_.nonEmpty))
-    val right = withPrefix(right0, Some(rightPrefix).filter(_.nonEmpty))
+    val (left, right, rightCols, unioned) = paddedUnion(left0, right0,
+      leftPrefix.filter(_.nonEmpty), Some(rightPrefix).filter(_.nonEmpty))
     val series = left.partitionCols
-    val leftCols = left.df.columns.filterNot(series.contains).toSeq
-    val rightCols = right.df.columns.filterNot(series.contains).toSeq
-    def pad(df: DataFrame, ownCols: Seq[String], otherDf: DataFrame,
-        otherCols: Seq[String], recInd: Int): DataFrame = {
-      val otherTypes = otherDf.schema.fields.map(f => f.name -> f.dataType).toMap
-      df.select(
-        (series.map(col) ++ ownCols.map(col) ++
-          otherCols.map(c => lit(null).cast(otherTypes(c)).alias(c)) :+
-          lit(recInd).alias("__rec_ind")): _*)
-    }
-    val unioned = pad(left.df, leftCols, right.df, rightCols, 1)
-      .unionByName(pad(right.df, rightCols, left.df, leftCols, -1))
-      .withColumn("__combined_ts", coalesce(col(left.tsCol), col(right.tsCol)))
     val rightStruct = when(col("__rec_ind") === -1,
       struct(rightCols.map(col): _*))
     // backward: right rows sort BEFORE the left row at equal ts (asc

@@ -47,18 +47,22 @@ class PlanShapeSpec extends SparkTestBase {
     info(s"curation exchanges (survivor frontier checkpointed): $n")
     assert(n <= 10, plan(out))
     out.collect() // the composition actually executes
-    // the fully-declarative form stays correct but recomputes the chain
-    // through the pack's three input consumers (differently-pruned
-    // subtrees defeat ReuseExchange) — the measured cost of refusing the
-    // one materialization boundary, documented in Curation's scaladoc
-    val mono = pipeline.Curation.curate(docsDf, "text", "doc_id", Seq("src"),
-      evalDf, pipeline.Bpe.table(Nil), minTokens = 2, capacity = 32,
-      materializeSurvivors = false)
-    val nMono = exchanges(mono)
-    info(s"curation exchanges (single declarative plan): $nMono")
-    assert(nMono > n, "expected the unmaterialized form to duplicate the chain")
-    assert(mono.collect().toSet == out.collect().toSet,
-      "both forms must return identical results")
+    // the fully-declarative form (materializer mode `none`) stays correct
+    // but recomputes the chain through the pack's three input consumers
+    // (differently-pruned subtrees defeat ReuseExchange) — the measured
+    // cost of refusing the one materialization boundary, documented in
+    // Curation's scaladoc
+    withConf(pipeline.Materializer.ModeKey -> "none") {
+      val mono = pipeline.Curation.curate(docsDf, "text", "doc_id",
+        Seq("src"), evalDf, pipeline.Bpe.table(Nil), minTokens = 2,
+        capacity = 32)
+      val nMono = exchanges(mono)
+      info(s"curation exchanges (single declarative plan): $nMono")
+      assert(nMono > n,
+        "expected the unmaterialized form to duplicate the chain")
+      assert(mono.collect().toSet == out.collect().toSet,
+        "both forms must return identical results")
+    }
   }
 
   test("as-of union path shuffles exactly once") {

@@ -10,8 +10,9 @@ import graft.SparkTestBase
   * row (never a throw), `extractFeatures` falls back to the byte
   * fingerprint, `mediaCoverage` counts it, and `resizeImages` passes it
   * through. Also pins that the three shot-cut operators share one
-  * segmentation, and that every id-keyed decode map runs through
-  * [[MediaMap.decodeRows]]. */
+  * segmentation, that every id-keyed decode map runs through
+  * [[MediaMap.decodeRows]], and that every byte writer is
+  * [[MediaMap.ByteSink]] or Jpeg's entropy writer. */
 class MediaDecodeSpec extends SparkTestBase {
 
   private def half(b: Array[Byte]): Array[Byte] = b.take(b.length / 2)
@@ -151,6 +152,39 @@ class MediaDecodeSpec extends SparkTestBase {
     assert(uses.map(_._2).sorted ==
       Seq("appendColumn", "decodeRows", "mediaCoverage", "resizeImages"),
       s"row maps outside MediaMap.decodeRows / appendColumn: $uses")
+  }
+
+  test("graft/pipeline writes bytes only through MediaMap.ByteSink and " +
+      "Jpeg's BitSink: no ByteArrayOutputStream, endian put or bit writer " +
+      "elsewhere") {
+    // a shifted value stored as a byte or written: a hand-rolled endian put
+    val endianPut =
+      """>>>?\s*(8|16|24|32|40|48|56)\b.*\.toByte|\b(write|u8)\([^)]*>>""".r
+    // 0xFF -> FF 00 stuffing: the mark of an entropy bit writer
+    val stuffing = """==\s*0xFF\).*\b(write|u8)\(0""".r
+    val owner = """\b(?:class|object) (\w+)""".r
+    val files = new java.io.File("src/main/scala/graft/pipeline").listFiles()
+      .filter(f => f.getName.endsWith(".scala") && f.getName != "MediaMap.scala")
+    assert(files.length > 20)
+    val (writers, bitWriters) = files.toSeq.sortBy(_.getName).map { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toIndexedSeq finally src.close()
+      def at(i: Int) = s"${f.getName}:${i + 1}"
+      val puts = lines.indices.filter(i =>
+        lines(i).contains("ByteArrayOutputStream") ||
+          endianPut.findFirstIn(lines(i)).nonEmpty).map(at)
+      val stuffs = lines.indices.filter(i =>
+        stuffing.findFirstIn(lines(i)).nonEmpty).map { i =>
+        val in = (i to 0 by -1).iterator
+          .flatMap(j => owner.findFirstMatchIn(lines(j))).nextOption()
+        s"${f.getName}/${in.map(_.group(1)).getOrElse("")}"
+      }
+      (puts, stuffs)
+    }.unzip
+    assert(writers.flatten.isEmpty,
+      s"byte writers outside MediaMap.ByteSink: ${writers.flatten}")
+    assert(bitWriters.flatten == Seq("Jpeg.scala/BitSink"),
+      s"entropy bit writers: ${bitWriters.flatten}")
   }
 
   test("MediaMap.decodeRows keeps the id's and carry columns' source " +
