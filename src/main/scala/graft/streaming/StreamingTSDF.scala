@@ -319,35 +319,33 @@ object StreamingTSDF {
         col("value").alias(valueCol)) ++ outCols.map(col): _*)
 
   // not private: encoder-generated code must be able to access these
-  case class EmaEvent(series: String, tsUs: Long, value: Double,
-      eventTime: java.sql.Timestamp) extends SeriesEvent
-  /** A nullable value row: the shared recurrences skip nulls like batch. */
+  /** A nullable value row: every value twin folds these. */
   case class ValueEvent(series: String, tsUs: Long, value: Option[Double],
       eventTime: java.sql.Timestamp) extends SeriesEvent
+  /** A [[graft.functions.Recurrence]]'s own state, stamped with the last
+    * row folded in: the state record of every [[recurrenceFold]]. */
+  case class RecState[R](rec: R, lastTsUs: Long) extends Stamped
 
   private def doubleValue(valueCol: String): Column =
     col(valueCol).cast(DoubleType).alias("value")
 
   /** The stream runner of a shared [[graft.functions.Recurrence]]: the
-    * batch twin's `init`/`step`/`emit` run per series on the fold, so the
-    * two are bit-identical by construction. `toState`/`fromState` carry the
-    * recurrence state in the operator's own state record. A null value
-    * keeps the state (and its timestamp) and the row emits the current
-    * output — null before the series' first non-null value — exactly as
-    * the batch window does. */
-  private def recurrenceFold[R, S <: Product with Stamped: TypeTag](
-      df: DataFrame, tsCol: String, seriesCols: Seq[String], valueCol: String,
-      stateTtl: Option[String], rec: Recurrence[R], outCols: Seq[String])(
-      toState: (R, Long) => S)(fromState: S => R): DataFrame = {
-    val out = seriesFold[ValueEvent, S,
-        (String, Long, Option[Double], Option[Seq[Double]])](
+    * batch twin's `init`/`step`/`onNull`/`emit` run per series on the fold
+    * under the recurrence's null rule, so the two are bit-identical by
+    * construction. A null value before the series' first non-null value
+    * leaves it without state (the row emits nulls). */
+  private def recurrenceFold[R: TypeTag](df: DataFrame, tsCol: String,
+      seriesCols: Seq[String], valueCol: String, stateTtl: Option[String],
+      rec: Recurrence[R], outCols: Seq[String]): DataFrame = {
+    val out = seriesFold[ValueEvent, RecState[R],
+        (String, Long, Option[Double], Option[Seq[Option[Double]]])](
         df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
-      val r = e.value match {
-        case Some(x) => Some(cur.fold(rec.init(x))(s => rec.step(fromState(s), x)))
-        case None => cur.map(fromState)
+      val r = (cur.map(_.rec), e.value) match {
+        case (None, x) => x.map(rec.init)
+        case (Some(s), Some(x)) => Some(rec.step(s, x))
+        case (Some(s), None) => Some(rec.onNull(s))
       }
-      val next = if (e.value.isDefined) r.map(toState(_, e.tsUs)) else cur
-      (next, Some((key, e.tsUs, e.value, r.flatMap(rec.emit).map(_.toSeq))))
+      (r.map(RecState(_, e.tsUs)), Some((key, e.tsUs, e.value, r.map(rec.emit))))
     }
     valueRows(out.toDF("series", "tsUs", "value", "out")
       .select(col("series") +: col("tsUs") +: col("value") +:
@@ -356,8 +354,6 @@ object StreamingTSDF {
   }
 
   // ------------------------------------------------ streaming EMA
-  case class EmaState(ema: Double, lastTsUs: Long) extends Stamped
-
   /** Streaming exponential moving average: ema' = α·x + (1−α)·ema per
     * series, one double of state — the [[graft.functions.Recurrence.ema]]
     * recursion shared with [[graft.tsdf.Stats.emaExact]]. This is the
@@ -368,11 +364,7 @@ object StreamingTSDF {
       valueCol: String, alpha: Double,
       stateTtl: Option[String] = None): DataFrame =
     recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
-      Recurrence.ema(alpha), Seq(s"ema_$valueCol"))(
-      (r, ts) => EmaState(r.ema, ts))(s => Recurrence.Ema(s.ema))
-
-  case class EwmVarState(mean: Double, variance: Double, lastTsUs: Long)
-    extends Stamped
+      Recurrence.ema(alpha), Seq(s"ema_$valueCol"))
 
   /** Streaming EW mean + variance: the [[graft.functions.Recurrence.ewmVar]]
     * recursion carried as two doubles of per-series state — bit-identical
@@ -382,90 +374,37 @@ object StreamingTSDF {
       valueCol: String, alpha: Double,
       stateTtl: Option[String] = None): DataFrame =
     recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
-      Recurrence.ewmVar(alpha), Seq(s"ewm_mean_$valueCol", s"ewm_var_$valueCol"))(
-      (r, ts) => EwmVarState(r.mean, r.variance, ts))(
-      s => Recurrence.EwmVar(s.mean, s.variance))
+      Recurrence.ewmVar(alpha), Seq(s"ewm_mean_$valueCol", s"ewm_var_$valueCol"))
 
-  case class RsiState(avgGain: Double, avgLoss: Double, lastValue: Double,
-      nMoves: Long, lastTsUs: Long) extends Stamped
-
-  /** Streaming Wilder RSI (EMA-seeded, the [[graft.tsdf.Stats.rsi]]
-    * variant): per-series state is the two EMA accumulators + the previous
-    * value — bit-identical to the batch form (differentially asserted).
-    * The first row of a series emits a null rsi (no move yet). Output:
-    * series + ts + value + `rsi_<col>`. */
+  /** Streaming Wilder RSI: [[graft.functions.Recurrence.rsi]], shared with
+    * [[graft.tsdf.Stats.rsi]] — the two EMA accumulators and the previous
+    * value per series. The first row of a series emits a null rsi (no move
+    * yet). Output: series + ts + value + `rsi_<col>`. */
   def rsi(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, n: Int,
-      stateTtl: Option[String] = None): DataFrame = {
-    require(n >= 1, "n must be >= 1")
-    val alpha = 1.0 / n
-    valueRows(seriesFold[EmaEvent, RsiState, (String, Long, Double, Option[Double])](
-        df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
-      val s = cur match {
-        case None => RsiState(0.0, 0.0, e.value, 0L, e.tsUs)
-        case Some(c) =>
-          val d = e.value - c.lastValue
-          val g = math.max(d, 0.0)
-          val l = math.max(-d, 0.0)
-          if (c.nMoves == 0L) RsiState(g, l, e.value, 1L, e.tsUs)
-          else RsiState(alpha * g + (1 - alpha) * c.avgGain,
-            alpha * l + (1 - alpha) * c.avgLoss, e.value, c.nMoves + 1L, e.tsUs)
-      }
-      val rsi =
-        if (s.nMoves == 0L || s.avgGain + s.avgLoss == 0.0) None
-        else Some(100.0 * s.avgGain / (s.avgGain + s.avgLoss))
-      (Some(s), Some((key, e.tsUs, e.value, rsi)))
-    }, df, tsCol, seriesCols, valueCol, s"rsi_$valueCol")
-  }
+      stateTtl: Option[String] = None): DataFrame =
+    recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
+      Recurrence.rsi(n), Seq(s"rsi_$valueCol"))
 
-  case class MacdState(fast: Double, slow: Double, signal: Double,
-      lastTsUs: Long) extends Stamped
-
-  /** Streaming MACD: the three exact-EMA recursions of
-    * [[graft.tsdf.Stats.macd]] carried as three doubles of per-series
-    * state — bit-identical to the batch form (the signal EMA consumes the
-    * just-updated fast−slow difference, exactly as the batch second window
-    * pass consumes the materialized macd column). Output: series + ts +
-    * value + `macd_<col>` + `macd_signal_<col>` + `macd_hist_<col>`. */
+  /** Streaming MACD: [[graft.functions.Recurrence.macd]], shared with
+    * [[graft.tsdf.Stats.macd]] — the three exact-EMA recursions as three
+    * doubles of per-series state. Output: series + ts + value +
+    * `macd_<col>` + `macd_signal_<col>` + `macd_hist_<col>`. */
   def macd(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, fast: Int = 12, slow: Int = 26, signal: Int = 9,
-      stateTtl: Option[String] = None): DataFrame = {
-    require(fast >= 1 && slow >= 1 && signal >= 1, "spans must be >= 1")
-    val af = 2.0 / (fast + 1)
-    val as = 2.0 / (slow + 1)
-    val asig = 2.0 / (signal + 1)
-    valueRows(seriesFold[EmaEvent, MacdState,
-        (String, Long, Double, Double, Double, Double)](
-        df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
-      val s = cur match {
-        case None => MacdState(e.value, e.value, e.value - e.value, e.tsUs)
-        case Some(c) =>
-          val f = af * e.value + (1 - af) * c.fast
-          val sl = as * e.value + (1 - as) * c.slow
-          MacdState(f, sl, asig * (f - sl) + (1 - asig) * c.signal, e.tsUs)
-      }
-      val m = s.fast - s.slow
-      (Some(s), Some((key, e.tsUs, e.value, m, s.signal, m - s.signal)))
-    }, df, tsCol, seriesCols, valueCol,
-      s"macd_$valueCol", s"macd_signal_$valueCol", s"macd_hist_$valueCol")
-  }
+      stateTtl: Option[String] = None): DataFrame =
+    recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
+      Recurrence.macd(fast, slow, signal),
+      Seq("macd", "macd_signal", "macd_hist").map(f => s"${f}_$valueCol"))
 
-  case class PeakState(peak: Double, lastTsUs: Long) extends Stamped
-
-  /** Streaming running peak + drawdown: one double of per-series state (the
-    * high-water mark). Max is order-independent so the twin matches
-    * [[graft.tsdf.Stats.drawdown]] bit-for-bit on raw doubles. Output:
-    * series + ts + value + `peak_<col>` + `drawdown_<col>`. */
+  /** Streaming running peak + drawdown: [[graft.functions.Recurrence.drawdown]],
+    * shared with [[graft.tsdf.Stats.drawdown]] — one double of per-series
+    * state (the high-water mark). Output: series + ts + value +
+    * `peak_<col>` + `drawdown_<col>`. */
   def drawdown(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, stateTtl: Option[String] = None): DataFrame =
-    valueRows(seriesFold[EmaEvent, PeakState, (String, Long, Double, Double, Double)](
-        df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
-      val s = PeakState(cur.fold(e.value)(c => math.max(c.peak, e.value)), e.tsUs)
-      (Some(s), Some((key, e.tsUs, e.value, s.peak, s.peak - e.value)))
-    }, df, tsCol, seriesCols, valueCol, s"peak_$valueCol", s"drawdown_$valueCol")
-
-  case class HoltState(level: Double, trend: Double, lastTsUs: Long)
-    extends Stamped
+    recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
+      Recurrence.drawdown, Seq(s"peak_$valueCol", s"drawdown_$valueCol"))
 
   /** Streaming Holt double-exponential smoothing: the level/trend recursion
     * of [[graft.functions.Recurrence.holt]] carried as two doubles of
@@ -476,12 +415,7 @@ object StreamingTSDF {
       stateTtl: Option[String] = None): DataFrame =
     recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
       Recurrence.holt(alpha, beta),
-      Seq(s"holt_level_$valueCol", s"holt_trend_$valueCol"))(
-      (r, ts) => HoltState(r.level, r.trend, ts))(
-      s => Recurrence.Holt(s.level, s.trend))
-
-  case class KalmanState(m: Double, p: Double, k: Double, lastTsUs: Long)
-    extends Stamped
+      Seq(s"holt_level_$valueCol", s"holt_trend_$valueCol"))
 
   /** Streaming 1-D local-level Kalman filter: the predict/update recursion
     * of [[graft.functions.Recurrence.kalman]] carried as three doubles of
@@ -492,26 +426,29 @@ object StreamingTSDF {
       stateTtl: Option[String] = None): DataFrame =
     recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
       Recurrence.kalman(q, r, p0.getOrElse(r)),
-      Seq("level", "var", "gain").map(f => s"kalman_${f}_$valueCol"))(
-      (k, ts) => KalmanState(k.m, k.p, k.k, ts))(
-      s => Recurrence.Kalman(s.m, s.p, s.k))
+      Seq("level", "var", "gain").map(f => s"kalman_${f}_$valueCol"))
 
-  case class RollMedState(recent: Seq[Double], lastTsUs: Long) extends Stamped
+  /** The trailing `window − 1` slots (None: a null value). */
+  case class RollMedState(recent: Seq[Option[Double]], lastTsUs: Long)
+    extends Stamped
 
   /** Streaming rolling median over the trailing `window` observations per
-    * series — bounded state (window−1 doubles per series), the streaming
+    * series — bounded state (window−1 slots per series), the streaming
     * twin of [[graft.tsdf.Stats.rollingMedian]] (same lower-median rank on
     * the same frame multiset, so bit-identical on the same data; asserted
-    * differentially). */
+    * differentially). A null value takes a frame slot; a frame with no
+    * value has a null median. (The batch side keeps its bounded rows frame
+    * for the `chunkRows` hot-series path, so this step is its own.) */
   def rollingMedian(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, window: Int,
       stateTtl: Option[String] = None): DataFrame = {
     require(window >= 1, "window must be >= 1")
-    valueRows(seriesFold[EmaEvent, RollMedState, (String, Long, Double, Double)](
+    valueRows(seriesFold[ValueEvent, RollMedState,
+        (String, Long, Option[Double], Option[Double])](
         df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
-      val recent = cur.fold(Vector.empty[Double])(_.recent.toVector) :+ e.value
-      val fs = recent.takeRight(window).sorted
-      val med = fs(math.max(1, math.ceil(fs.size / 2.0).toInt) - 1)
+      val recent = cur.fold(Vector.empty[Option[Double]])(_.recent.toVector) :+ e.value
+      val fs = recent.takeRight(window).flatten.sorted
+      val med = Option.when(fs.nonEmpty)(fs(math.max(1, math.ceil(fs.size / 2.0).toInt) - 1))
       (Some(RollMedState(recent.takeRight(window - 1), e.tsUs)),
         Some((key, e.tsUs, e.value, med)))
     }, df, tsCol, seriesCols, valueCol, s"rolling_median_$valueCol")
@@ -531,8 +468,9 @@ object StreamingTSDF {
       minGapSeconds: Long, stateTtl: Option[String] = None): DataFrame = {
     require(minGapSeconds >= 0, "minGapSeconds must be >= 0")
     val minGapUs = minGapSeconds * 1000000L
-    seriesFold[EmaEvent, GapState, (String, Long, Long)](
-        df, tsCol, seriesCols, stateTtl, lit(0.0).alias("value")) { (key, cur, e) =>
+    seriesFold[ValueEvent, GapState, (String, Long, Long)](
+        df, tsCol, seriesCols, stateTtl, lit(null).cast(DoubleType).alias("value")) {
+      (key, cur, e) =>
       (Some(GapState(e.tsUs)), cur.filter(l => e.tsUs - l.lastTsUs > minGapUs)
         .map(l => (key, l.lastTsUs, e.tsUs)))
     }.toDF("series", "startUs", "endUs")
@@ -542,7 +480,7 @@ object StreamingTSDF {
         ((col("endUs") - col("startUs")) / lit(1000000L)).alias("gap_seconds")): _*)
   }
 
-  case class CusumEvent(series: String, tsUs: Long, value: Long)
+  case class CusumEvent(series: String, tsUs: Long, value: Option[Long])
     extends SeriesEvent
   case class CusumState(sumHi: Long, minHi: Long, sumLo: Long, minLo: Long,
       lastTsUs: Long) extends Stamped
@@ -553,25 +491,29 @@ object StreamingTSDF {
     * reflection identity S_t = P_t − min(0, min_j P_j) turns into the
     * clamped CUSUM recursion with no recomputation. Exact integer
     * arithmetic end to end, so the stream is bit-identical to the batch
-    * window plan on the same data (asserted differentially). */
+    * window plan on the same data (asserted differentially). A null value
+    * keeps the sums, as batch's running sum and min skip it, and the row
+    * emits the current chart (null before the first value). */
   def cusumControl(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, target: Long, slack: Long, threshold: Long,
       stateTtl: Option[String] = None): DataFrame = {
     require(slack >= 0, "slack must be >= 0")
     require(threshold > 0, "threshold must be > 0")
-    valueRows(seriesFold[CusumEvent, CusumState,
-        (String, Long, Long, Long, Long, Boolean)](
+    valueRows(seriesFold[CusumEvent, CusumState, (String, Long, Option[Long],
+        Option[Long], Option[Long], Option[Boolean])](
         df, tsCol, seriesCols, stateTtl,
         graft.tsdf.Stats.integralOrFail(col(valueCol), "cusumControl")
           .alias("value")) { (key, cur, e) =>
-      val pHi = cur.fold(0L)(_.sumHi) + (e.value - target - slack)
-      val pLo = cur.fold(0L)(_.sumLo) + (target - slack - e.value)
-      val mHi = cur.fold(pHi)(c => math.min(c.minHi, pHi))
-      val mLo = cur.fold(pLo)(c => math.min(c.minLo, pLo))
-      val sHi = pHi - math.min(0L, mHi)
-      val sLo = pLo - math.min(0L, mLo)
-      (Some(CusumState(pHi, mHi, pLo, mLo, e.tsUs)), Some((key, e.tsUs,
-        e.value, sHi, sLo, sHi > threshold || sLo > threshold)))
+      val next = e.value.fold(cur.map(_.copy(lastTsUs = e.tsUs))) { x =>
+        val pHi = cur.fold(0L)(_.sumHi) + (x - target - slack)
+        val pLo = cur.fold(0L)(_.sumLo) + (target - slack - x)
+        Some(CusumState(pHi, cur.fold(pHi)(c => math.min(c.minHi, pHi)),
+          pLo, cur.fold(pLo)(c => math.min(c.minLo, pLo)), e.tsUs))
+      }
+      val s = next.map(c =>
+        (c.sumHi - math.min(0L, c.minHi), c.sumLo - math.min(0L, c.minLo)))
+      (next, Some((key, e.tsUs, e.value, s.map(_._1), s.map(_._2),
+        s.map { case (hi, lo) => hi > threshold || lo > threshold })))
     }, df, tsCol, seriesCols, valueCol, "cusum_hi", "cusum_lo", "alert")
   }
 
@@ -1365,29 +1307,36 @@ object StreamingTSDF {
   }
 
   // ------------------------------------------------ streaming interpolation
-  case class InterpEvent(series: String, tsUs: Long, value: Double,
-      eventTime: java.sql.Timestamp) extends SeriesEvent
-  /** The last emitted bucket: rows before it are late. */
-  case class LastObs(tsUs: Long, value: Double) extends Stamped {
-    def lastTsUs: Long = tsUs
-  }
-  case class InterpOut(series: String, tsUs: Long, value: Double,
+  /** A non-null observation on the bucket grid. */
+  case class Obs(tsUs: Long, value: Double)
+  /** The last bucket taken (rows before it are late), the last non-null
+    * observation, and the null buckets after it that `linear` still holds. */
+  case class InterpState(lastTsUs: Long, obs: Option[Obs], held: Seq[Long])
+    extends Stamped
+  case class InterpOut(series: String, tsUs: Long, value: Option[Double],
       isInterpolated: Boolean)
 
   /** Streaming gap-fill: each series is resampled onto the `freq` grid and
     * missing buckets are emitted with `ffill` (previous value) or `linear`
     * (lerp between the flanking observations) — the streaming analog of the
     * batch resample+interpolate pipeline, emitted incrementally with ONE
-    * (ts, value) record of state per series.
+    * observation of state per series (plus the null buckets `linear`
+    * holds).
     *
-    * On each observation at bucket b_cur with previous observation at bucket
-    * b_prev, the operator emits the interpolated buckets (b_prev, b_cur)
-    * and the actual bucket b_cur. The FIRST observation in a bucket wins;
-    * later observations landing in an already-emitted bucket are ignored, so
-    * an append sink sees each (series, bucket) exactly once — the same
-    * granularity as batch `resample(freq, "floor")`, whose resample +
-    * interpolate pipeline this operator equals row-for-row (asserted
-    * differentially on random series in the spec).
+    * On each observation at bucket b_cur, the operator emits the buckets
+    * after the last one it emitted, up to b_cur. The FIRST observation in a
+    * bucket wins; later observations landing in an already-taken bucket are
+    * ignored, so an append sink sees each (series, bucket) exactly once —
+    * the same granularity as batch `resample(freq, "floor")`, whose
+    * resample + interpolate pipeline this operator equals row-for-row
+    * (asserted differentially on random series in the spec).
+    *
+    * A null first-in-bucket value is a real bucket whose value is filled:
+    * `ffill` fills it at once from the last value (null before the first);
+    * `linear` holds it until the next non-null value arrives and then emits
+    * the held run on the line between the two. Append-mode difference: a
+    * trailing null run is held, not emitted, while batch emits it with null
+    * values.
     *
     * An evicted series starts a fresh segment instead of filling across
     * the idle gap.
@@ -1397,27 +1346,29 @@ object StreamingTSDF {
       stateTtl: Option[String] = None): DataFrame = {
     require(method == "ffill" || method == "linear",
       s"streaming interpolate supports ffill|linear, got '$method'")
+    val linear = method == "linear"
     val stepUs = Resample.parseFreq(freq).micros
-    seriesFold[InterpEvent, LastObs, InterpOut](df, tsCol, seriesCols,
+    seriesFold[ValueEvent, InterpState, InterpOut](df, tsCol, seriesCols,
         stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
       val bucket = Math.floorDiv(e.tsUs, stepUs) * stepUs
-      // strictly greater: a second observation in an already-emitted
-      // bucket must not re-emit it (append sinks would see duplicates)
-      if (cur.exists(bucket <= _.tsUs)) (cur, None)
+      val obs = cur.flatMap(_.obs)
+      val held = cur.fold(Seq.empty[Long])(_.held)
+      // strictly greater: a second observation in an already-taken bucket
+      // must not re-emit it (append sinks would see duplicates)
+      if (cur.exists(bucket <= _.lastTsUs)) (cur, None)
+      else if (linear && e.value.isEmpty && obs.isDefined)
+        (Some(InterpState(bucket, obs, held :+ bucket)), None)
       else {
-        val fills = cur.toSeq.flatMap { last =>
-          Iterator.iterate(last.tsUs + stepUs)(_ + stepUs).takeWhile(_ < bucket)
-            .map { t =>
-              val v = method match {
-                case "ffill" => last.value
-                case "linear" => last.value + (e.value - last.value) *
-                  ((t - last.tsUs).toDouble / (bucket - last.tsUs).toDouble)
-              }
-              InterpOut(key, t, v, isInterpolated = true)
-            }
-        }
-        (Some(LastObs(bucket, e.value)),
-          fills :+ InterpOut(key, bucket, e.value, isInterpolated = false))
+        val fill: Long => Option[Double] = t =>
+          if (!linear) obs.map(_.value)
+          else for (o <- obs; x <- e.value) yield o.value + (x - o.value) *
+            ((t - o.tsUs).toDouble / (bucket - o.tsUs).toDouble)
+        val from = if (held.nonEmpty) obs.get.tsUs else cur.fold(bucket)(_.lastTsUs)
+        val fills = Iterator.iterate(from + stepUs)(_ + stepUs).takeWhile(_ < bucket)
+          .map(t => InterpOut(key, t, fill(t), isInterpolated = !held.contains(t)))
+        (Some(InterpState(bucket, e.value.map(Obs(bucket, _)).orElse(obs), Nil)),
+          fills.toSeq :+ InterpOut(key, bucket, e.value.orElse(fill(bucket)),
+            isInterpolated = false))
       }
     }.toDF()
       .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
@@ -1467,25 +1418,25 @@ object StreamingTSDF {
         timestamp_micros(col("end_us")).alias("end_ts")): _*)
   }
 
-  case class ThreshState(lastValue: Double, lastTsUs: Long) extends Stamped
+  case class ThreshState(lastValue: Option[Double], lastTsUs: Long)
+    extends Stamped
 
   /** Streaming threshold-crossing detector: one (value, ts) pair of state
     * per series, the twin of [[graft.tsdf.Stats.thresholdCrossings]] —
     * emits a row only when the series crosses `threshold` between
-    * consecutive observations. Output: series + (ts, prev_ts, prev_value,
-    * value, direction). */
+    * consecutive observations. Neither a null row nor the row after it can
+    * cross, as with batch's `lag`. Output: series + (ts, prev_ts,
+    * prev_value, value, direction). */
   def thresholdCrossings(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, threshold: Double,
       stateTtl: Option[String] = None): DataFrame =
-    seriesFold[EmaEvent, ThreshState, (String, Long, Long, Double, Double, String)](
+    seriesFold[ValueEvent, ThreshState, (String, Long, Long, Double, Double, String)](
         df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
-      val crossing = cur.flatMap { c =>
-        val up = c.lastValue < threshold && e.value >= threshold
-        val down = c.lastValue >= threshold && e.value < threshold
-        if (up || down) Some((key, e.tsUs, c.lastTsUs, c.lastValue, e.value,
-          if (up) "up" else "down"))
-        else None
-      }
+      val crossing = for {
+        c <- cur; p <- c.lastValue; x <- e.value
+        up = p < threshold && x >= threshold
+        if up || (p >= threshold && x < threshold)
+      } yield (key, e.tsUs, c.lastTsUs, p, x, if (up) "up" else "down")
       (Some(ThreshState(e.value, e.tsUs)), crossing)
     }.toDF("series", "tsUs", "prevTsUs", "prev_value", "value", "direction")
       .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
@@ -1493,58 +1444,25 @@ object StreamingTSDF {
         timestamp_micros(col("prevTsUs")).alias("prev_ts"),
         col("prev_value"), col("value").alias(valueCol), col("direction")): _*)
 
-  case class StochState(recent: Seq[Double], k1: Option[Double],
-      k2: Option[Double], lastTsUs: Long) extends Stamped
-
-  /** Streaming stochastic oscillator: per-series state is the trailing
-    * `window − 1` values (the frame buffer, like [[rollingMedian]]) plus
-    * the previous two %K values for the %D mean — bit-identical to
-    * [[graft.tsdf.Stats.stochastic]] (same selections, same fixed-order
-    * IEEE assembly; differentially asserted). Output: series + ts + value +
-    * pct_k + pct_d. */
+  /** Streaming stochastic oscillator: [[graft.functions.Recurrence.stochastic]],
+    * shared with [[graft.tsdf.Stats.stochastic]] — per-series state is the
+    * trailing frame plus the last three %K values for the %D mean. Output:
+    * series + ts + value + pct_k + pct_d. */
   def stochastic(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, window: Int,
-      stateTtl: Option[String] = None): DataFrame = {
-    require(window >= 1, "window must be >= 1")
-    valueRows(seriesFold[EmaEvent, StochState,
-        (String, Long, Double, Option[Double], Option[Double])](
-        df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
-      val c = cur.getOrElse(StochState(Vector.empty, None, None, Long.MinValue))
-      val frame = (c.recent :+ e.value).takeRight(window)
-      val ll = frame.min
-      val hh = frame.max
-      val k = if (hh == ll) None else Some(100.0 * (e.value - ll) / (hh - ll))
-      val d = for (a <- c.k2; b <- c.k1; x <- k) yield (a + b + x) / 3.0
-      (Some(StochState((c.recent :+ e.value).takeRight(window - 1), k, c.k1,
-        e.tsUs)), Some((key, e.tsUs, e.value, k, d)))
-    }, df, tsCol, seriesCols, valueCol, "pct_k", "pct_d")
-  }
+      stateTtl: Option[String] = None): DataFrame =
+    recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
+      Recurrence.stochastic(window), Seq("pct_k", "pct_d"))
 
-  case class DonchianState(recent: Seq[Double], lastTsUs: Long) extends Stamped
-
-  /** Streaming Donchian channels: per-series state is the trailing
-    * `window − 1` values, the twin of [[graft.tsdf.Stats.donchian]] —
-    * upper/lower are frame selections, mid the same fixed-order IEEE
-    * expression (differentially asserted bit-identical). Output: series +
-    * ts + value + dc_upper + dc_lower + dc_mid. */
+  /** Streaming Donchian channels: [[graft.functions.Recurrence.donchian]],
+    * shared with [[graft.tsdf.Stats.donchian]] — per-series state is the
+    * trailing frame. Output: series + ts + value + dc_upper + dc_lower +
+    * dc_mid. */
   def donchian(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, window: Int,
-      stateTtl: Option[String] = None): DataFrame = {
-    require(window >= 1, "window must be >= 1")
-    valueRows(seriesFold[EmaEvent, DonchianState,
-        (String, Long, Double, Double, Double, Double)](
-        df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
-      val recent = cur.fold(Seq.empty[Double])(_.recent) :+ e.value
-      val frame = recent.takeRight(window)
-      val upper = frame.max
-      val lower = frame.min
-      (Some(DonchianState(recent.takeRight(window - 1), e.tsUs)),
-        Some((key, e.tsUs, e.value, upper, lower, (upper + lower) / 2.0)))
-    }, df, tsCol, seriesCols, valueCol, "dc_upper", "dc_lower", "dc_mid")
-  }
-
-  case class HwState(cnt: Int, warmSum: Double, level: Double,
-      trend: Double, ring: Seq[Double], lastTsUs: Long) extends Stamped
+      stateTtl: Option[String] = None): DataFrame =
+    recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
+      Recurrence.donchian(window), Seq("dc_upper", "dc_lower", "dc_mid"))
 
   /** Streaming additive Holt-Winters: per-series state is the warm-up
     * accumulator plus the rotated `m`-factor seasonal ring — the
@@ -1557,10 +1475,7 @@ object StreamingTSDF {
       stateTtl: Option[String] = None): DataFrame =
     recurrenceFold(df, tsCol, seriesCols, valueCol, stateTtl,
       Recurrence.holtWinters(alpha, beta, gamma, m),
-      Seq("hw_level", "hw_trend", "hw_seasonal"))(
-      (r, ts) => HwState(r.cnt, r.warmSum, r.level, r.trend, r.ring, ts))(
-      s => Recurrence.HoltWinters(s.cnt, s.warmSum, s.level, s.trend,
-        s.ring.toVector))
+      Seq("hw_level", "hw_trend", "hw_seasonal"))
 
   // ------------------------------------------------- streaming SCD2 changelog
   case class Scd2Event(series: String, tsUs: Long, override val tie: Long,
@@ -1583,7 +1498,9 @@ object StreamingTSDF {
       stateTtl: Option[String] = None): DataFrame = {
     require(attrCols.nonEmpty, "need at least one tracked attribute")
     seriesFold[Scd2Event, Scd2State, (String, Long, Seq[String])](
-        df, tsCol, idCols, stateTtl, col(tieCol).cast(LongType).alias("tie"),
+        df, tsCol, idCols, stateTtl,
+        // a null tie sorts first, as in batch's ascending (ts, tie) order
+        coalesce(col(tieCol).cast(LongType), lit(Long.MinValue)).alias("tie"),
         array(attrCols.map(col(_).cast(StringType)): _*).alias("attrs")) {
       (key, cur, e) =>
         // null-safe element compare: Seq equality treats null elements as

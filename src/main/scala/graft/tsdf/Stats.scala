@@ -119,10 +119,18 @@ object Stats {
     tsdf.copy(df = tsdf.df.withColumn(s"ema_$colToCalc", emaExpr))
   }
 
-  /** The running frame (unbounded preceding → current row) of each series,
-    * which the shared [[graft.functions.Recurrence]] batch runner uses. */
-  private def runningWindow(tsdf: TSDF) =
-    tsdf.baseWindow().rowsBetween(Window.unboundedPreceding, Window.currentRow)
+  /** Each series in (ts, tie) order: the window of every per-series pass. */
+  private def seriesOrder(seriesCols: Seq[String], tsCol: String,
+      tieCols: Seq[String]): WindowSpec =
+    Window.partitionBy(seriesCols.map(col): _*)
+      .orderBy((tsCol +: tieCols).map(col): _*)
+
+  /** The running frame (unbounded preceding → current row) of `w`, which
+    * the shared [[graft.functions.Recurrence]] batch runner uses. */
+  private def running(w: WindowSpec): WindowSpec =
+    w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  private def runningWindow(tsdf: TSDF): WindowSpec = running(tsdf.baseWindow())
 
   /** Exact one-pass EMA — ema_0 = x_0, ema_t = α·x_t + (1−α)·ema_{t−1} — as
     * a running window aggregate ([[graft.functions.Recurrence.ema]], updated
@@ -150,9 +158,7 @@ object Stats {
   def holtWinters(df: DataFrame, tsCol: String, valueCol: String,
       seriesCols: Seq[String], alpha: Double, beta: Double, gamma: Double,
       m: Int, tieCols: Seq[String] = Nil): DataFrame = {
-    val w = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val w = running(seriesOrder(seriesCols, tsCol, tieCols))
     Recurrence.holtWinters(alpha, beta, gamma, m).addColumns(df,
       col(valueCol), w, Seq("hw_level", "hw_trend", "hw_seasonal"))
   }
@@ -192,8 +198,7 @@ object Stats {
       tieCols: Seq[String] = Nil): DataFrame = {
     require(maxLag >= 0, "maxLag must be >= 0")
     val sc = seriesCols.map(col)
-    val w = Window.partitionBy(sc: _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
+    val w = seriesOrder(seriesCols, tsCol, tieCols)
     val lags = (-maxLag to maxLag).toSeq
     def yl(l: Int) = col(s"__y_$l".replace("-", "m"))
     val staged = lags.foldLeft(df
@@ -447,8 +452,7 @@ object Stats {
       seriesCols: Seq[String], maxLag: Int, tieCols: Seq[String] = Nil): DataFrame = {
     require(maxLag >= 1, "maxLag must be >= 1")
     val sc = seriesCols.map(col)
-    val w = Window.partitionBy(sc: _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
+    val w = seriesOrder(seriesCols, tsCol, tieCols)
     val lagged = (1 to maxLag).foldLeft(
       df.withColumn("__c", integralOrFail(col(valueCol), "acf"))) { (d, l) =>
       d.withColumn(s"__lag$l", lag(col("__c"), l).over(w))
@@ -558,16 +562,14 @@ object Stats {
       chunkRows: Int)(body: (DataFrame, WindowSpec) => DataFrame): DataFrame = {
     require(lo <= 0 && hi >= 0, "frame must contain the current row")
     if (chunkRows <= 0) {
-      val w = Window.partitionBy(seriesCols.map(col): _*)
-        .orderBy((tsCol +: tieCols).map(col): _*)
+      val w = seriesOrder(seriesCols, tsCol, tieCols)
         .rowsBetween(lo, hi)
       body(df, w)
     } else {
       require(chunkRows >= math.max(-lo, hi) + 1,
         s"chunkRows must cover the frame width (${math.max(-lo, hi) + 1})")
       val c = chunkRows.toLong
-      val ord = Window.partitionBy(seriesCols.map(col): _*)
-        .orderBy((tsCol +: tieCols).map(col): _*)
+      val ord = seriesOrder(seriesCols, tsCol, tieCols)
       val staged = df
         .withColumn("__rn", row_number().over(ord).cast(LongType))
         .withColumn("__home", expr(s"(__rn - 1) div $c"))
@@ -614,7 +616,8 @@ object Stats {
     withChunkedFrame(df, tsCol, seriesCols, tieCols,
       -(window - 1), 0, chunkRows) { (d, w) =>
       val frame = array_sort(collect_list(col(valueCol)).over(w))
-      val med = element_at(frame,
+      // try_: a frame with no value has a null median (element_at throws)
+      val med = try_element_at(frame,
         greatest(lit(1), ceil(size(frame) / 2.0).cast(IntegerType)))
       d.withColumn(s"rolling_median_$valueCol", med)
     }
@@ -641,8 +644,7 @@ object Stats {
       seriesCols: Seq[String], window: Int,
       tieCols: Seq[String] = Nil): DataFrame = {
     require(window >= 2, "window must be >= 2")
-    val ord = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
+    val ord = seriesOrder(seriesCols, tsCol, tieCols)
     val w = ord.rowsBetween(-(window - 1), Window.currentRow)
     val x = col("__x")
     val y = col("__y")
@@ -675,8 +677,7 @@ object Stats {
   def gaps(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       minGapSeconds: Long, tieCols: Seq[String] = Nil): DataFrame = {
     require(minGapSeconds >= 0, "minGapSeconds must be >= 0")
-    val w = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
+    val w = seriesOrder(seriesCols, tsCol, tieCols)
     df.withColumn("__prev", lag(col(tsCol), 1).over(w))
       .filter(col("__prev").isNotNull &&
         unix_micros(col(tsCol)) - unix_micros(col("__prev")) >
@@ -708,12 +709,11 @@ object Stats {
     val sc = seriesCols.map(col)
     val ord = (tsCol +: tieCols).map(col)
     val wAll = Window.partitionBy(sc: _*)
-    val wCum = wAll.orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wOrd = seriesOrder(seriesCols, tsCol, tieCols)
     val staged = df
       .withColumn("__c", integralOrFail(col(valueCol), "cusum"))
-      .withColumn("__cum", sum(col("__c")).over(wCum))
-      .withColumn("__rn", row_number().over(wAll.orderBy(ord: _*)))
+      .withColumn("__cum", sum(col("__c")).over(running(wOrd)))
+      .withColumn("__rn", row_number().over(wOrd))
       .withColumn("__n", count(lit(1)).over(wAll))
       .withColumn("__s", sum(col("__c")).over(wAll))
     val mu = col("__s").cast(DoubleType) / col("__n")
@@ -753,9 +753,7 @@ object Stats {
       tieCols: Seq[String] = Nil): DataFrame = {
     require(slack >= 0, "slack must be >= 0")
     require(threshold > 0, "threshold must be > 0")
-    val w = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val w = running(seriesOrder(seriesCols, tsCol, tieCols))
     val x = integralOrFail(col(valueCol), "cusumControl")
     val staged = df
       .withColumn("__dhi", x - lit(target) - lit(slack))
@@ -833,8 +831,7 @@ object Stats {
   def thresholdCrossings(df: DataFrame, tsCol: String, valueCol: String,
       seriesCols: Seq[String], threshold: Double,
       tieCols: Seq[String] = Nil): DataFrame = {
-    val w = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
+    val w = seriesOrder(seriesCols, tsCol, tieCols)
     val v = col(valueCol)
     val pv = col("__prev_v")
     val staged = df
@@ -866,8 +863,7 @@ object Stats {
       tieCols: Seq[String] = Nil): DataFrame = {
     require(window >= 1, "window must be >= 1")
     require(k >= 0, "k must be >= 0")
-    val w = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
+    val w = seriesOrder(seriesCols, tsCol, tieCols)
       .rowsBetween(-(window - 1), Window.currentRow)
     val x = col("__x")
     val staged = df
@@ -900,8 +896,7 @@ object Stats {
       seriesCols: Seq[String], window: Int,
       tieCols: Seq[String] = Nil): DataFrame = {
     require(window >= 2, "window must be >= 2")
-    val ord = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
+    val ord = seriesOrder(seriesCols, tsCol, tieCols)
     val w = ord.rowsBetween(-(window - 1), Window.currentRow)
     val i = col("__i")
     val y = col("__v")
@@ -924,75 +919,37 @@ object Stats {
   /** Running peak and drawdown per series: `peak_<col>` is the running
     * maximum of the value seen so far (max is order-independent, so raw
     * doubles are engine-exact here — no integer quantization needed) and
-    * `drawdown_<col>` = peak − value, the depth below the high-water mark.
-    * ONE series exchange, one running window frame. Max drawdown per
+    * `drawdown_<col>` = peak − value, the depth below the high-water mark
+    * ([[graft.functions.Recurrence.drawdown]], shared with the streaming
+    * twin). ONE series exchange, one running window frame. Max drawdown per
     * series is then a plain `max(drawdown_<col>)` aggregate on top. */
   def drawdown(df: DataFrame, tsCol: String, valueCol: String,
-      seriesCols: Seq[String], tieCols: Seq[String] = Nil): DataFrame = {
-    val w = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val x = col(valueCol).cast(DoubleType)
-    val peak = max(x).over(w)
-    df.withColumn(s"peak_$valueCol", peak)
-      .withColumn(s"drawdown_$valueCol", col(s"peak_$valueCol") - x)
-  }
+      seriesCols: Seq[String], tieCols: Seq[String] = Nil): DataFrame =
+    Recurrence.drawdown.addColumns(df, col(valueCol),
+      running(seriesOrder(seriesCols, tsCol, tieCols)),
+      Seq(s"peak_$valueCol", s"drawdown_$valueCol"))
 
-  /** Relative Strength Index (Wilder, EMA-seeded variant): moves
-    * Δ_t = x_t − x_{t−1} split into gain = max(Δ, 0) and loss = max(−Δ, 0),
-    * each smoothed by the exact EMA recursion with α = 1/n
-    * ([[graft.functions.Recurrence.ema]]; the state seeds with the FIRST move
-    * rather than Wilder's n-bar simple average — a documented variant that
-    * keeps the whole filter a single fixed-order recursion).
-    * rsi = 100·ag/(ag + al); null before the first move and while
-    * ag + al = 0 (no movement yet). The lag pass and both running EMAs
-    * share one series exchange and one sort; a recursive-CTE oracle
-    * replays every IEEE step bit-for-bit (same scheme as EMA/Holt/Kalman).
-    * Output: input row + `rsi_<col>`. */
-  def rsi(tsdf: TSDF, colToCalc: String, n: Int): TSDF = {
-    require(n >= 1, "n must be >= 1")
-    val alpha = 1.0 / n
-    val runW = runningWindow(tsdf)
-    val x = col(colToCalc).cast(DoubleType)
-    val ema = Recurrence.ema(alpha)
-    // the lag must materialize BEFORE the EMA window consumes it: a window
-    // expression cannot be the child of another window aggregate
-    val staged = tsdf.df.withColumn("__d", x - lag(x, 1).over(tsdf.baseWindow()))
-    val gain = when(col("__d").isNotNull, greatest(col("__d"), lit(0.0)))
-    val loss = when(col("__d").isNotNull, greatest(-col("__d"), lit(0.0)))
-    val smoothed = ema.addColumns(ema.addColumns(staged, gain, runW,
-      Seq("__ag")), loss, runW, Seq("__al"))
-    val ag = col("__ag"); val al = col("__al")
-    val out = when(ag.isNotNull && al.isNotNull && (ag + al) =!= 0.0,
-      lit(100.0) * ag / (ag + al))
-    tsdf.copy(df = smoothed.withColumn(s"rsi_$colToCalc", out)
-      .drop("__d", "__ag", "__al"))
-  }
+  /** Relative Strength Index, [[graft.functions.Recurrence.rsi]] (the
+    * EMA-seeded Wilder variant and its null rule) on each series' running
+    * frame: one window aggregate on one series exchange, shared step for
+    * step with the streaming twin; a recursive-CTE oracle replays every
+    * IEEE step bit-for-bit (same scheme as EMA/Holt/Kalman). Output: input
+    * row + `rsi_<col>`. */
+  def rsi(tsdf: TSDF, colToCalc: String, n: Int): TSDF =
+    tsdf.copy(df = Recurrence.rsi(n).addColumns(tsdf.df, col(colToCalc),
+      runningWindow(tsdf), Seq(s"rsi_$colToCalc")))
 
-  /** MACD (12/26/9 by default): fast and slow exact-EMA lines over the
-    * value (α = 2/(n+1), the classic convention — both engines compute the
-    * identical IEEE quotient), `macd_<col>` = fast − slow, signal = exact
-    * EMA of the macd line, `macd_hist_<col>` = macd − signal. The fast/slow
-    * EMAs ride one running frame; the signal EMA consumes the materialized
-    * macd column in a second window pass over the SAME partitioning —
-    * no extra exchange, Catalyst reuses the sort. Recursive-CTE oracle
-    * carries all three recursions in one step. */
+  /** MACD (12/26/9 by default), [[graft.functions.Recurrence.macd]]: the
+    * fast and slow exact-EMA lines, `macd_<col>` = fast − slow, its signal
+    * EMA `macd_signal_<col>` and `macd_hist_<col>` = macd − signal, all
+    * three recursions in one window aggregate on the running frame (one
+    * series exchange, one pass). Recursive-CTE oracle carries all three
+    * recursions in one step. */
   def macd(tsdf: TSDF, colToCalc: String, fast: Int = 12, slow: Int = 26,
-      signal: Int = 9): TSDF = {
-    require(fast >= 1 && slow >= 1 && signal >= 1, "spans must be >= 1")
-    val runW = runningWindow(tsdf)
-    def ema(df: DataFrame, c: Column, span: Int, name: String) =
-      Recurrence.ema(2.0 / (span + 1)).addColumns(df, c, runW, Seq(name))
-    val x = col(colToCalc)
-    val staged = ema(ema(tsdf.df, x, fast, "__f"), x, slow, "__s")
-      .withColumn(s"macd_$colToCalc", col("__f") - col("__s"))
-    val out = ema(staged, col(s"macd_$colToCalc"), signal,
-        s"macd_signal_$colToCalc")
-      .withColumn(s"macd_hist_$colToCalc",
-        col(s"macd_$colToCalc") - col(s"macd_signal_$colToCalc"))
-      .drop("__f", "__s")
-    tsdf.copy(df = out)
-  }
+      signal: Int = 9): TSDF =
+    tsdf.copy(df = Recurrence.macd(fast, slow, signal).addColumns(tsdf.df,
+      col(colToCalc), runningWindow(tsdf),
+      Seq("macd", "macd_signal", "macd_hist").map(f => s"${f}_$colToCalc")))
 
   /** Strict local maxima: a row is a peak iff its value is strictly
     * greater than every value within `w` rows on BOTH sides (missing
@@ -1005,8 +962,7 @@ object Stats {
   def peaks(df: DataFrame, tsCol: String, valueCol: String,
       seriesCols: Seq[String], w: Int, tieCols: Seq[String] = Nil): DataFrame = {
     require(w >= 1, "w must be >= 1")
-    val ord = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
+    val ord = seriesOrder(seriesCols, tsCol, tieCols)
     val x = col(valueCol).cast(DoubleType)
     val negInf = lit(Double.NegativeInfinity)
     val staged = df
@@ -1177,9 +1133,8 @@ object Stats {
       highCol: String, lowCol: String, closeCol: String, n: Int = 14,
       tieCols: Seq[String] = Nil): DataFrame = {
     require(n >= 1, "n must be >= 1")
-    val lagW = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
-    val runW = lagW.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val lagW = seriesOrder(seriesCols, tsCol, tieCols)
+    val runW = running(lagW)
     val hi = col(highCol).cast(DoubleType)
     val lo = col(lowCol).cast(DoubleType)
     val pc = lag(col(closeCol).cast(DoubleType), 1).over(lagW)
@@ -1189,31 +1144,20 @@ object Stats {
       runW, Seq("atr"))
   }
 
-  /** Stochastic oscillator: %K = 100·(x − ll)/(hh − ll) with ll/hh the
-    * min/max over the trailing `window` rows (partial frames at the series
-    * head use the rows available, the common convention), %D the 3-row
-    * moving mean of %K. ll/hh are SELECTIONS (raw doubles), %K is one
-    * fixed-order IEEE expression, and %D sums three %K values in explicit
-    * left-to-right order — both engines produce identical bits. %K is null
-    * when the frame is flat (hh = ll); %D is null until three %K values
-    * exist. Both window passes ride ONE series exchange (the %D lags reuse
-    * the %K sort). Output: input row + `pct_k` + `pct_d`. */
+  /** Stochastic oscillator over the trailing `window` rows of each series,
+    * [[graft.functions.Recurrence.stochastic]] on the running frame: %K =
+    * 100·(x − ll)/(hh − ll), %D the 3-row moving mean of %K. ll/hh are
+    * SELECTIONS (raw doubles), %K one fixed-order IEEE expression, and %D
+    * sums three %K values in explicit left-to-right order — both engines
+    * produce identical bits. %K is null when the frame is flat (hh = ll);
+    * %D is null until three %K values exist. ONE series exchange, one
+    * window aggregate, shared with the streaming twin. Output: input row +
+    * `pct_k` + `pct_d`. */
   def stochastic(df: DataFrame, tsCol: String, valueCol: String,
       seriesCols: Seq[String], window: Int = 14,
-      tieCols: Seq[String] = Nil): DataFrame = {
-    require(window >= 1, "window must be >= 1")
-    val ord = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
-    val w = ord.rowsBetween(-(window - 1), Window.currentRow)
-    val x = col(valueCol).cast(DoubleType)
-    val ll = min(x).over(w)
-    val hh = max(x).over(w)
-    val k = when(hh =!= ll, lit(100.0) * (x - ll) / (hh - ll))
-    val staged = df.withColumn("pct_k", k)
-    staged.withColumn("pct_d",
-      (lag(col("pct_k"), 2).over(ord) + lag(col("pct_k"), 1).over(ord) +
-        col("pct_k")) / lit(3.0))
-  }
+      tieCols: Seq[String] = Nil): DataFrame =
+    Recurrence.stochastic(window).addColumns(df, col(valueCol),
+      running(seriesOrder(seriesCols, tsCol, tieCols)), Seq("pct_k", "pct_d"))
 
   /** On-balance volume: obv_t = obv_{t−1} + sign(close_t − close_{t−1})·vol_t
     * (first bar contributes 0) — the classic volume-flow accumulation
@@ -1225,9 +1169,8 @@ object Stats {
   def obv(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       closeCol: String, volumeCol: String,
       tieCols: Seq[String] = Nil): DataFrame = {
-    val lagW = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
-    val runW = lagW.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val lagW = seriesOrder(seriesCols, tsCol, tieCols)
+    val runW = running(lagW)
     val close = col(closeCol).cast(DoubleType)
     val pc = lag(close, 1).over(lagW)
     // direction × checked volume (not a branch on the volume) so the
@@ -1240,25 +1183,21 @@ object Stats {
       .drop("__sv")
   }
 
-  /** Donchian channels: upper/lower = max/min over the trailing `window`
-    * rows (partial frames at the series head use the rows available, as in
-    * [[stochastic]]), mid = (upper + lower)/2 — the breakout-band
-    * indicator. Upper/lower are SELECTIONS of raw doubles and mid is one
-    * fixed-order IEEE expression, so both engines produce identical bits.
-    * All three ride ONE series exchange. Output: input row + `dc_upper` +
+  /** Donchian channels over the trailing `window` rows of each series,
+    * [[graft.functions.Recurrence.donchian]] on the running frame:
+    * upper/lower = max/min of the frame (partial frames at the series head
+    * use the rows available, as in [[stochastic]]), mid = (upper + lower)/2
+    * — the breakout-band indicator. Upper/lower are SELECTIONS of raw
+    * doubles and mid is one fixed-order IEEE expression, so both engines
+    * produce identical bits. ONE series exchange, one window aggregate,
+    * shared with the streaming twin. Output: input row + `dc_upper` +
     * `dc_lower` + `dc_mid`. */
   def donchian(df: DataFrame, tsCol: String, valueCol: String,
       seriesCols: Seq[String], window: Int = 20,
-      tieCols: Seq[String] = Nil): DataFrame = {
-    require(window >= 1, "window must be >= 1")
-    val w = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
-      .rowsBetween(-(window - 1), Window.currentRow)
-    val x = col(valueCol).cast(DoubleType)
-    df.withColumn("dc_upper", max(x).over(w))
-      .withColumn("dc_lower", min(x).over(w))
-      .withColumn("dc_mid", (col("dc_upper") + col("dc_lower")) / lit(2.0))
-  }
+      tieCols: Seq[String] = Nil): DataFrame =
+    Recurrence.donchian(window).addColumns(df, col(valueCol),
+      running(seriesOrder(seriesCols, tsCol, tieCols)),
+      Seq("dc_upper", "dc_lower", "dc_mid"))
 
   /** Williams %R: −100·(hh − x)/(hh − ll) with hh/ll the max/min over the
     * trailing `window` rows — the inverted-stochastic overbought/oversold
@@ -1270,8 +1209,7 @@ object Stats {
       seriesCols: Seq[String], window: Int = 14,
       tieCols: Seq[String] = Nil): DataFrame = {
     require(window >= 1, "window must be >= 1")
-    val w = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
+    val w = seriesOrder(seriesCols, tsCol, tieCols)
       .rowsBetween(-(window - 1), Window.currentRow)
     val x = col(valueCol).cast(DoubleType)
     val hh = max(x).over(w)
@@ -1290,8 +1228,7 @@ object Stats {
       seriesCols: Seq[String], n: Int = 10,
       tieCols: Seq[String] = Nil): DataFrame = {
     require(n >= 1, "n must be >= 1")
-    val ord = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
+    val ord = seriesOrder(seriesCols, tsCol, tieCols)
     val x = col(valueCol).cast(DoubleType)
     val px = lag(x, n).over(ord)
     df.withColumn("momentum", x - px)
@@ -1343,8 +1280,7 @@ object Stats {
     require(segmentRows >= 1, "segmentRows must be >= 1")
     require(saxBreakpoints.contains(alphabet),
       s"alphabet must be in ${saxBreakpoints.keys.toSeq.sorted.mkString("..")}")
-    val ord = Window.partitionBy(seriesCols.map(col): _*)
-      .orderBy((tsCol +: tieCols).map(col): _*)
+    val ord = seriesOrder(seriesCols, tsCol, tieCols)
     val segs = df
       .withColumn("__v", integralOrFail(col(valueCol), "sax"))
       .withColumn("__rn", row_number().over(ord))

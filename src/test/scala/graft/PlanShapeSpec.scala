@@ -448,6 +448,21 @@ class PlanShapeSpec extends SparkTestBase {
     assert(exchanges(macd) == 1, plan(macd))
   }
 
+  test("q_rsi and q_macd each run one Window operator: the indicator's " +
+      "one recurrence aggregate") {
+    // no lag window before the EMAs, no second pass for the signal EMA;
+    // `events` turns nanosAsLong on, so put it back afterwards
+    withConf("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      for (q <- Seq("q_rsi", "q_macd")) {
+        val df = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+        val windows = df.queryExecution.optimizedPlan.collect {
+          case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+        }
+        assert(windows.size == 1, s"$q:\n${df.queryExecution.optimizedPlan}")
+      }
+    }
+  }
+
   test("drawdown, robustScale, and hampel are one series exchange each") {
     val dd = graft.tsdf.Stats.drawdown(eventsDf, "ts", "value", Seq("user_id"))
     assert(exchanges(dd) == 1, plan(dd))

@@ -4,8 +4,9 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.SparkTestBase
 import graft.tsdf.{Stats, TSDF}
@@ -30,21 +31,26 @@ class StreamingResumeSpec extends SparkTestBase {
   private val base = Timestamp.valueOf("2024-03-01 00:00:00").getTime // ms
   private def at(tenths: Int) = new Timestamp(base + tenths * 6000L)
 
+  private type Obs = (String, Timestamp, Option[Double])
+
   /** Random (series, ts, value) rows: per series, distinct times on a
     * 6-second lattice, integer values (same shape as the single-batch
-    * differential spec). */
-  private def randomSeries(rnd: scala.util.Random): Seq[(String, Timestamp, Double)] =
+    * differential spec); with `nulls`, about one value in ten is null. */
+  private def randomSeries(rnd: scala.util.Random,
+      nulls: Boolean = false): Seq[Obs] =
     Seq("u1", "u2", "u3").flatMap { s =>
       val nTicks = 400
       val count = 6 + rnd.nextInt(18)
       val offsets = rnd.shuffle((1 until nTicks - 1).toList).take(count)
-      offsets.distinct.sorted.map(o => (s, at(o), rnd.nextInt(1000).toDouble))
+      offsets.distinct.sorted.map { o =>
+        val v = rnd.nextInt(1000).toDouble
+        (s, at(o), Option.unless(nulls && rnd.nextInt(10) == 0)(v))
+      }
     }
 
   /** Split rows into `n` contiguous time slices (global time order, so
     * per-series order is preserved and nothing is ever late). */
-  private def timeSlices(rows: Seq[(String, Timestamp, Double)], n: Int)
-      : Seq[Seq[(String, Timestamp, Double)]] = {
+  private def timeSlices(rows: Seq[Obs], n: Int): Seq[Seq[Obs]] = {
     val sorted = rows.sortBy(r => (r._2.getTime, r._1))
     val per = math.max(1, (sorted.size + n - 1) / n)
     sorted.grouped(per).toSeq
@@ -53,11 +59,10 @@ class StreamingResumeSpec extends SparkTestBase {
   /** Appends one row per series to the LAST slice, strictly older than
     * every row of that series in the earlier slices — a cross-batch late
     * row the per-series fold must drop (state cannot rewind). */
-  private def withLateRows(slices: Seq[Seq[(String, Timestamp, Double)]])
-      : Seq[Seq[(String, Timestamp, Double)]] = {
+  private def withLateRows(slices: Seq[Seq[Obs]]): Seq[Seq[Obs]] = {
     val late = slices.init.flatten.groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (s, rs) =>
-        (s, new Timestamp(rs.map(_._2.getTime).min - 3000L), 999.0)
+        (s, new Timestamp(rs.map(_._2.getTime).min - 3000L), Some(999.0))
       }
     slices.init :+ (slices.last ++ late)
   }
@@ -67,7 +72,7 @@ class StreamingResumeSpec extends SparkTestBase {
   /** Feed time-ordered slices as separate micro-batches into one running
     * query (processAllAvailable between addData calls forces a batch per
     * slice). */
-  private def runChunkedStream(rows: Seq[(String, Timestamp, Double)],
+  private def runChunkedStream(rows: Seq[Obs],
       nChunks: Int, build: DataFrame => DataFrame,
       lateRows: Boolean = false): DataFrame = {
     val spark2 = spark
@@ -75,7 +80,7 @@ class StreamingResumeSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     runId += 1
     val name = s"resume_sink_$runId"
-    val mem = MemoryStream[(String, Timestamp, Double)]
+    val mem = MemoryStream[Obs]
     val out = build(mem.toDF().toDF("user_id", "ts", "value"))
     val q = out.writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Append()).start()
@@ -97,7 +102,7 @@ class StreamingResumeSpec extends SparkTestBase {
     * per-series state must round-trip through the state store across
     * nChunks−1 real restarts. Output goes to a parquet sink (memory sinks
     * don't survive restarts). */
-  private def runRestartStream(rows: Seq[(String, Timestamp, Double)],
+  private def runRestartStream(rows: Seq[Obs],
       nChunks: Int, build: DataFrame => DataFrame,
       lateRows: Boolean = false): DataFrame = {
     val spark2 = spark
@@ -108,7 +113,7 @@ class StreamingResumeSpec extends SparkTestBase {
       val s = timeSlices(rows, nChunks)
       if (lateRows) withLateRows(s) else s
     }
-    def writeChunk(s: Seq[(String, Timestamp, Double)]): Unit =
+    def writeChunk(s: Seq[Obs]): Unit =
       s.toDF("user_id", "ts", "value").repartition(1)
         .write.mode("append").parquet(srcDir)
     writeChunk(slices.head)
@@ -130,11 +135,15 @@ class StreamingResumeSpec extends SparkTestBase {
     * `cols`. Each case runs in both harnesses — 4 micro-batches of one
     * query, and 3 chunks with a full restart from the checkpoint between
     * them — with a cross-batch late row per series that the stream must
-    * drop, against the batch twin over the on-time rows. */
+    * drop, against the batch twin over the on-time rows; and both again
+    * on values of which about one in ten is null. `held` drops from the
+    * batch twin's null-case output the rows the stream still holds when
+    * the input ends (an append-mode difference of that operator). */
   private case class FoldCase(op: String, twin: String, chunkSeed: Int,
       restartSeed: Int, stream: DataFrame => DataFrame,
       batch: DataFrame => DataFrame, cols: Seq[String],
-      pinEnds: Boolean = false, restartTitle: Option[String] = None)
+      pinEnds: Boolean = false, restartTitle: Option[String] = None,
+      held: DataFrame => DataFrame = identity)
 
   private def tsdf(df: DataFrame) = TSDF(df, "ts", Seq("user_id"))
   private val key = Seq("user_id")
@@ -206,11 +215,16 @@ class StreamingResumeSpec extends SparkTestBase {
       vcols("dc_upper", "dc_lower", "dc_mid")),
     // ends pinned so the batch spine (first..last bucket per series) spans
     // the same range the streaming operator emits
+    // linear holds a trailing run of null buckets until a value arrives:
+    // the stream has emitted nothing after each series' last value
     FoldCase("interpolate", "resample+interpolate", 123, 124,
       StreamingTSDF.interpolate(_, "ts", key, "value", "1 minute", "linear"),
       tsdf(_).resample("1 minute", "floor")
         .interpolate("linear", showInterpolated = true).df,
-      vcols("is_ts_interpolated"), pinEnds = true),
+      vcols("is_ts_interpolated"), pinEnds = true,
+      held = _.withColumn("__last", max(when(col("value").isNotNull &&
+          !col("is_ts_interpolated"), col("ts"))).over(Window.partitionBy("user_id")))
+        .filter(col("ts") <= col("__last"))),
     // attr derived from the value so no-op re-emits are common; the value
     // column doubles as the tie column (unused here — distinct ts — but
     // exercises the tie plumbing through the state round-trip)
@@ -225,18 +239,19 @@ class StreamingResumeSpec extends SparkTestBase {
         "restarts equals the batch change set")))
 
   for (c <- foldCases) {
-    def check(seed: Int, run: (Seq[(String, Timestamp, Double)], Int,
-        DataFrame => DataFrame, Boolean) => DataFrame, nChunks: Int): Unit = {
+    def check(seed: Int, run: (Seq[Obs], Int, DataFrame => DataFrame,
+        Boolean) => DataFrame, nChunks: Int, nulls: Boolean = false): Unit = {
       val rnd = new scala.util.Random(seed)
-      val rows = randomSeries(rnd) ++ (if (!c.pinEnds) Nil
+      val rows = randomSeries(rnd, nulls) ++ (if (!c.pinEnds) Nil
         else Seq("u1", "u2", "u3").flatMap(s =>
-          Seq((s, at(0), 500.0), (s, at(399), 500.0))))
+          Seq((s, at(0), Some(500.0)), (s, at(399), Some(500.0)))))
+      if (nulls) assert(rows.exists(_._3.isEmpty), "no null value drawn")
       val spark2 = spark
       import spark2.implicits._
       val streamed = run(rows, nChunks, c.stream, true).select(c.cols.map(col): _*)
       val batch = c.batch(rows.toDF("user_id", "ts", "value"))
-        .select(c.cols.map(col): _*)
-      assertDfEquality(streamed, batch)
+      assertDfEquality(streamed,
+        (if (nulls) c.held(batch) else batch).select(c.cols.map(col): _*))
     }
     test(s"streaming ${c.op} over 4 micro-batches equals batch ${c.twin}") {
       check(c.chunkSeed, runChunkedStream, 4)
@@ -245,6 +260,42 @@ class StreamingResumeSpec extends SparkTestBase {
         s"streaming ${c.op} state round-trips a checkpoint restart (file source)")) {
       check(c.restartSeed, runRestartStream, 3)
     }
+    test(s"streaming ${c.op} with null values over 4 micro-batches equals " +
+        s"batch ${c.twin}") {
+      check(c.chunkSeed, runChunkedStream, 4, nulls = true)
+    }
+    test(s"streaming ${c.op} with null values round-trips a checkpoint " +
+        "restart (file source)") {
+      check(c.restartSeed, runRestartStream, 3, nulls = true)
+    }
+  }
+
+  test("streaming rsi restarted from a checkpoint of the per-field rsi state " +
+      "fails on the state schema instead of misreading it") {
+    val spark2 = spark
+    import spark2.implicits._
+    import StreamingResumeSpec._
+    val (first, second) = timeSlices(randomSeries(new scala.util.Random(135)), 2)
+      .toList match { case a :: b :: Nil => (a, b) }
+    val dir = caseDir("graft_resume_")
+    val srcDir = s"$dir/src"; val chk = s"$dir/chk"
+    def writeChunk(s: Seq[Obs]): Unit =
+      s.toDF("user_id", "ts", "value").repartition(1)
+        .write.mode("append").parquet(srcDir)
+    def run(build: DataFrame => DataFrame): Unit = {
+      val q = build(spark.readStream.schema(spark.read.parquet(srcDir).schema)
+          .parquet(srcDir))
+        .writeStream.format("parquet").option("path", s"$dir/out")
+        .option("checkpointLocation", chk).outputMode(OutputMode.Append()).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    writeChunk(first)
+    run(legacyRsi(_, n = 14))
+    writeChunk(second)
+    val err = intercept[Exception](run(StreamingTSDF.rsi(_, "ts", key, "value", n = 14)))
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString("\n")
+    assert(msgs.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"), msgs)
   }
 
   test("streaming disjointIntervals state round-trips a checkpoint restart " +
@@ -352,7 +403,7 @@ class StreamingResumeSpec extends SparkTestBase {
     // long traces so every series matches several times
     val rows = Seq("u1", "u2", "u3").flatMap { s =>
       rnd.shuffle((1 until 399).toList).take(150).sorted
-        .map(o => (s, at(o), rnd.nextInt(types.size).toDouble))
+        .map(o => (s, at(o), Some(rnd.nextInt(types.size).toDouble)))
     }
     def typed(df: DataFrame) = df.withColumn("event_type",
       element_at(array(types.map(lit): _*), col("value").cast("int") % types.size + 1))
@@ -366,7 +417,7 @@ class StreamingResumeSpec extends SparkTestBase {
         (r.getAs[Long]("len"), r.getAs[Long]("m"))).toMap
     val pat = java.util.regex.Pattern.compile("v[vo]*?cp")
     val expected = rows.groupBy(_._1).map { case (u, evs) =>
-      val trace = evs.sortBy(_._2.getTime).map(e => types(e._3.toInt) match {
+      val trace = evs.sortBy(_._2.getTime).map(e => types(e._3.get.toInt) match {
         case "view" => 'v'; case "click" => 'c'; case "purchase" => 'p'
         case _ => 'o'
       }).mkString
@@ -386,8 +437,8 @@ class StreamingResumeSpec extends SparkTestBase {
     val spark2 = spark
     import spark2.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val memL = MemoryStream[(String, Timestamp, Double)]
-    val memR = MemoryStream[(String, Timestamp, Double)]
+    val memL = MemoryStream[Obs]
+    val memR = MemoryStream[Obs]
     runId += 1
     val name = s"resume_tol_$runId"
     val out = StreamingTSDF.toleranceJoin(
@@ -530,5 +581,48 @@ class StreamingResumeSpec extends SparkTestBase {
     q = startQ(); q.processAllAvailable(); q.stop()
     val ids = spark.read.parquet(outDir).collect().map(_.getLong(0)).sorted.toSeq
     assert(ids == Seq(1L, 2L, 5L), s"got $ids")
+  }
+}
+
+object StreamingResumeSpec {
+  case class LegacyRsiEvent(series: String, tsUs: Long, value: Double)
+  /** The per-field state record the rsi fold kept before it ran on the
+    * shared recurrence (a non-null value, so no null rule). */
+  case class LegacyRsiState(avgGain: Double, avgLoss: Double, lastValue: Double,
+      nMoves: Long, lastTsUs: Long)
+
+  /** That earlier rsi fold, on the same keyed projection and state
+    * operator, so its checkpoint is what such a query left behind. */
+  def legacyRsi(df: DataFrame, n: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val alpha = 1.0 / n
+    df.select(concat_ws("\u001f", col("user_id").cast("string")).alias("series"),
+        unix_micros(col("ts")).alias("tsUs"),
+        col("value").cast("double").alias("value"))
+      .as[LegacyRsiEvent].groupByKey(_.series)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (key: String, rows: Iterator[LegacyRsiEvent], state: GroupState[LegacyRsiState]) =>
+          var cur = state.getOption
+          val out = rows.toSeq.sortBy(_.tsUs).filterNot(e =>
+              cur.exists(e.tsUs < _.lastTsUs)).map { e =>
+            val s = cur match {
+              case None => LegacyRsiState(0.0, 0.0, e.value, 0L, e.tsUs)
+              case Some(c) =>
+                val d = e.value - c.lastValue
+                val (g, l) = (math.max(d, 0.0), math.max(-d, 0.0))
+                if (c.nMoves == 0L) LegacyRsiState(g, l, e.value, 1L, e.tsUs)
+                else LegacyRsiState(alpha * g + (1 - alpha) * c.avgGain,
+                  alpha * l + (1 - alpha) * c.avgLoss, e.value, c.nMoves + 1L, e.tsUs)
+            }
+            cur = Some(s)
+            (key, e.tsUs, e.value, Option.when(s.nMoves > 0L &&
+              s.avgGain + s.avgLoss != 0.0)(100.0 * s.avgGain / (s.avgGain + s.avgLoss)))
+          }
+          cur.foreach(state.update)
+          out.iterator
+      }.toDF("user_id", "tsUs", "value", "rsi_value")
+      .select(col("user_id"), timestamp_micros(col("tsUs")).alias("ts"),
+        col("value"), col("rsi_value"))
   }
 }
