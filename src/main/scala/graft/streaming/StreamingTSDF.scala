@@ -53,6 +53,12 @@ object StreamingTSDF {
     stateTtl.fold(projected)(ttl => projected.withWatermark("eventTime", ttl))
   }
 
+  /** An event's `tie` from `tieCol` (0 without one). A null tie sorts
+    * first, as in batch's ascending (ts, tie) order. */
+  private def tieOf(tieCol: String): Column =
+    (if (tieCol.isEmpty) lit(0L)
+    else coalesce(col(tieCol).cast(LongType), lit(Long.MinValue))).alias("tie")
+
   /** The one keyed-state driver: every stateful operator of this file with
     * state of its own runs on it. Per key and micro-batch, `batch` maps
     * (key, stored state, the key's rows) to the next state and the output
@@ -227,24 +233,27 @@ object StreamingTSDF {
 
   // ------------------------------------------------ streaming as-of join
   // not private: encoder-generated code must be able to access these
-  case class AsOfEvent(series: String, tsUs: Long, side: Int, vals: Seq[Double],
-      eventTime: java.sql.Timestamp) extends SeriesEvent {
+  case class AsOfEvent(series: String, tsUs: Long, side: Int,
+      vals: Seq[Option[Double]], eventTime: java.sql.Timestamp) extends SeriesEvent {
     override def tie: Long = side // right (-1) before left (1) at equal ts
   }
-  /** The latest right row. A left row is never late against it. */
-  case class LastRight(tsUs: Long, vals: Seq[Double]) extends KeepsLate {
+  /** The latest right row's time and, per metric, the last non-null value
+    * (batch's `skipNulls`). A left row is never late against it. */
+  case class LastRight(tsUs: Long, vals: Seq[Option[Double]]) extends KeepsLate {
     def lastTsUs: Long = tsUs
   }
   case class AsOfOut(series: String, tsUs: Long, rightTsUs: Option[Long],
-      rightVals: Option[Seq[Double]])
+      rightVals: Option[Seq[Option[Double]]])
 
   /** Streaming as-of join: each left-stream row attaches the latest
     * right-stream observation with `right.ts <= left.ts` in its series
     * (ties resolve right-before-left, like the batch union path's rec_ind).
     *
     * Realization: a [[foldStream]] over the union of the two streams; state
-    * per series is ONE record — the latest right row seen (constant size,
-    * no growing buffers), which keeps every row (no late drop). A right row
+    * per series is ONE record — the latest right row seen, each metric
+    * keeping its last non-null value like the batch join's default
+    * `skipNulls` (constant size, no growing buffers), which keeps every row
+    * (no late drop). A right row
     * that arrives after a later-ts left row was already emitted does not
     * rewrite the emitted answer — the documented append-mode trade-off vs
     * the batch operator (use watermarked batch re-runs when exactness over
@@ -270,7 +279,8 @@ object StreamingTSDF {
         .unionByName(keyed(right, -1, rightMetricCols)), stateTtl) { (key, cur, e) =>
       if (e.side > 0) (cur, Some(AsOfOut(key, e.tsUs, cur.map(_.tsUs), cur.map(_.vals))))
       else if (cur.exists(_.tsUs > e.tsUs)) (cur, None)
-      else (Some(LastRight(e.tsUs, e.vals)), None)
+      else (Some(LastRight(e.tsUs, cur.fold(e.vals)(c =>
+        e.vals.zip(c.vals).map { case (v, last) => v.orElse(last) }))), None)
     }
     val metricsOut = rightMetricCols.zipWithIndex.map { case (m, i) =>
       element_at(col("rightVals"), i + 1).alias(s"right_$m")
@@ -1256,9 +1266,8 @@ object StreamingTSDF {
       .foldRight(lit(defaultSym): Column) { case ((k, v), acc) =>
         when(col(eventCol) === k, lit(v)).otherwise(acc)
       }
-    val tie = if (tieCol.isEmpty) lit(0L) else col(tieCol).cast(LongType)
     val out = keyedState[String, DfaEvent, DfaState, (String, Long, Long)](
-        keyedRows(df, tsCol, seriesCols, None, tie.alias("tie"), symOf.alias("sym"))
+        keyedRows(df, tsCol, seriesCols, None, tieOf(tieCol), symOf.alias("sym"))
           .as[DfaEvent].groupByKey(_.series), None, foldClockMs) { (key, stored, rows) =>
       val (next, hits) = foldBatch(key, stored, rows) { (_, cur, e) =>
         val from = cur.fold(0)(_.state)
@@ -1292,9 +1301,8 @@ object StreamingTSDF {
       typeCol: String, tieCol: String = ""): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val tie = if (tieCol.isEmpty) lit(0L) else col(tieCol).cast(LongType)
     keyedState[String, StepEvent, StepState, (String, String, Long)](
-        keyedRows(df, tsCol, seriesCols, None, tie.alias("tie"),
+        keyedRows(df, tsCol, seriesCols, None, tieOf(tieCol),
           col(typeCol).cast(StringType).alias("typ")).as[StepEvent].groupByKey(_.series),
         None, foldClockMs) { (key, stored, rows) =>
       val (next, steps) = foldBatch(key, stored, rows) { (_, cur, e) =>
@@ -1378,17 +1386,19 @@ object StreamingTSDF {
   }
 
   // ------------------------------------------------ stateful run tracking
-  case class ObsEvent(series: String, tsUs: Long, metrics: Seq[Double],
+  case class ObsEvent(series: String, tsUs: Long, metrics: Seq[Option[Double]],
       eventTime: java.sql.Timestamp) extends SeriesEvent
   /** The open run. It keeps late rows (see below). */
-  case class RunState(startUs: Long, lastUs: Long, metrics: Seq[Double],
+  case class RunState(startUs: Long, lastUs: Long, metrics: Seq[Option[Double]],
       observations: Int) extends KeepsLate {
     def lastTsUs: Long = lastUs
   }
 
   /** Streaming analog of `extractStateIntervals` (equality state): per
     * series, maximal runs of consecutive observations with identical metric
-    * vectors close and emit [start_ts, end_ts] when the state changes.
+    * vectors close and emit [start_ts, end_ts] when the state changes. The
+    * compare is null-safe: a null metric is a state of its own (the batch
+    * operator's `=` instead drops a row whose compare is null).
     *
     * State per key is one open run (constant size). LATE rows arriving
     * after their run closed start a new run rather than rewriting history
@@ -1498,9 +1508,7 @@ object StreamingTSDF {
       stateTtl: Option[String] = None): DataFrame = {
     require(attrCols.nonEmpty, "need at least one tracked attribute")
     seriesFold[Scd2Event, Scd2State, (String, Long, Seq[String])](
-        df, tsCol, idCols, stateTtl,
-        // a null tie sorts first, as in batch's ascending (ts, tie) order
-        coalesce(col(tieCol).cast(LongType), lit(Long.MinValue)).alias("tie"),
+        df, tsCol, idCols, stateTtl, tieOf(tieCol),
         array(attrCols.map(col(_).cast(StringType)): _*).alias("attrs")) {
       (key, cur, e) =>
         // null-safe element compare: Seq equality treats null elements as

@@ -452,9 +452,11 @@ class PlanShapeSpec extends SparkTestBase {
       "one recurrence aggregate") {
     // no lag window before the EMAs, no second pass for the signal EMA;
     // `events` turns nanosAsLong on, so put it back afterwards
+    val dir = caseDir("plan_events_")
+    eventsDf.coalesce(1).write.parquet(s"$dir/events.parquet")
     withConf("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
       for (q <- Seq("q_rsi", "q_macd")) {
-        val df = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+        val df = SparkEntry.queries(q)(spark, dir)
         val windows = df.queryExecution.optimizedPlan.collect {
           case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
         }

@@ -371,6 +371,28 @@ class StreamingResumeSpec extends SparkTestBase {
     assertDfEquality(streamed, batch)
   }
 
+  test("streaming asofJoin with null right values round-trips a checkpoint " +
+      "restart: each metric keeps its last non-null value, as batch skipNulls") {
+    val spark2 = spark
+    import spark2.implicits._
+    val rows = randomSeries(new scala.util.Random(136), nulls = true)
+    // even lattice ticks are left rows, odd ones quotes (a null has no parity)
+    val odd = (unix_micros(col("ts")) / 6000000L) % 2 =!= 0
+    def left(df: DataFrame) = df.filter(!odd).select(col("user_id"), col("ts"))
+    def right(df: DataFrame) =
+      df.filter(odd).withColumn("score", coalesce(col("value"), lit(-1.0)))
+    val metrics = Seq("value", "score")
+    val streamed = runRestartStream(rows, 3, df => StreamingTSDF.asofJoin(
+      left(df), right(df), "ts", key, metrics))
+    val all = rows.toDF("user_id", "ts", "value")
+    val batch = TSDF(left(all), "ts", key)
+      .asofJoin(TSDF(right(all), "ts", key)).df
+      .select(Seq("user_id", "ts", "right_ts", "right_value", "right_score")
+        .map(col): _*)
+    assert(right(all).filter(col("value").isNull).count() > 0)
+    assertDfEquality(streamed, batch)
+  }
+
   test("streaming transitionDeltas state round-trips a checkpoint restart " +
       "(file source): the summed sink equals the batch transition counts") {
     val spark2 = spark

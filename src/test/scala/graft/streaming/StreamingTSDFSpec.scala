@@ -457,4 +457,25 @@ class StreamingTSDFSpec extends SparkTestBase {
     assert(runs.head.getAs[Timestamp]("start_ts") == ts("2024-01-01 00:00:00"))
     assert(runs.head.getAs[Timestamp]("end_ts") == ts("2024-01-01 00:00:20"))
   }
+
+  test("stateful run extraction takes a null metric as a state of its own") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, Timestamp, Option[Double])]
+    val out = StreamingTSDF.stateIntervalRuns(mem.toDF().toDF("user_id", "ts", "metric"),
+      "ts", Seq("user_id"), Seq("metric"))
+    val q = out.writeStream.format("memory").queryName("runs_null")
+      .outputMode(OutputMode.Append()).start()
+    mem.addData(
+      ("u1", ts("2024-01-01 00:00:00"), Some(1.0)),
+      ("u1", ts("2024-01-01 00:00:10"), None),
+      ("u1", ts("2024-01-01 00:00:20"), None),
+      ("u1", ts("2024-01-01 00:00:30"), Some(1.0)))
+    q.processAllAvailable()
+    q.stop()
+    val runs = spark.table("runs_null").collect()
+      .map(r => (r.getAs[Timestamp]("start_ts"), r.getAs[Timestamp]("end_ts")))
+    assert(runs.toSeq == Seq((ts("2024-01-01 00:00:10"), ts("2024-01-01 00:00:20"))))
+  }
 }
