@@ -4593,6 +4593,17 @@ class PipelineUnitSpec extends SparkTestBase {
     assert(med.getAs[Long]("cents") == 5000L)
   }
 
+  test("exactQuantiles2Pass returns no rows on an input with no clean value") {
+    import spark.implicits._
+    // n = 0: no bin holds a rank, so no probe finds a value
+    val dirty = Seq(("g", Double.NaN)).toDF("g", "v")
+      .union(Seq(("g", "x")).toDF("g", "x").select(col("g"),
+        lit(null).cast("double").alias("v")))
+    for (df <- Seq(dirty, dirty.limit(0)))
+      assert(Sketch.exactQuantiles2Pass(df, col("v"), Seq(0.25, 0.5, 1.0),
+        0.0, 100.0, 10).count() == 0L)
+  }
+
   test("scd2FromLog rejects duplicate (id, ts) without tieCols and is " +
       "deterministic with them") {
     import spark.implicits._

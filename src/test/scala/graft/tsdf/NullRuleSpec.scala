@@ -21,12 +21,16 @@ class NullRuleSpec extends SparkTestBase {
   private val values: Seq[Option[Double]] = Seq(None, Some(10.0), Some(13.0),
     None, Some(11.0), None, None, Some(15.0), Some(12.0), Some(14.0), Some(16.0))
 
-  private def input(vs: Seq[(Int, Option[Double])]): DataFrame = {
+  private def input(vs: Seq[(Int, Option[Double])],
+      id: String = "a"): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
-    vs.map { case (m, v) => ("a", at(m), v) }.toDF("user_id", "ts", "value")
+    vs.map { case (m, v) => (id, at(m), v) }.toDF("user_id", "ts", "value")
   }
   private lazy val series = input(values.zipWithIndex.map(_.swap))
+  /** `series` plus a series "b" with no value, at minutes 20 and 21. */
+  private lazy val withEmpty =
+    series.unionByName(input(Seq(20 -> None, 21 -> None), id = "b"))
   private def tsdf = TSDF(series, "ts", Seq("user_id"))
   private val key = Seq("user_id")
 
@@ -37,12 +41,20 @@ class NullRuleSpec extends SparkTestBase {
 
   /** `out`'s `cols` in ts order, each row led by its minute, against
     * `expected` (None = null). */
-  private def check(out: DataFrame, cols: String*)(expected: Seq[Any]*): Unit = {
-    val got = out.orderBy("ts").select(col("ts") +: cols.map(col): _*).collect()
+  private def check(out: DataFrame, cols: String*)(expected: Seq[Any]*): Unit =
+    compare(out.orderBy("ts").select(col("ts") +: cols.map(col): _*).collect()
       .toSeq.map { r =>
         ((r.getTimestamp(0).getTime - base) / 60000L).toInt +:
           (1 to cols.size).map(i => Option(r.get(i)))
-      }
+      }, expected)
+
+  /** `out`'s `cols` in series order, one row per series led by its id. */
+  private def checkSeries(out: DataFrame, cols: String*)(expected: Seq[Any]*): Unit =
+    compare(out.orderBy("user_id").select(col("user_id") +: cols.map(col): _*)
+      .collect().toSeq.map(r => r.get(0) +: (1 to cols.size).map(i => Option(r.get(i)))),
+      expected)
+
+  private def compare(got: Seq[Seq[Any]], expected: Seq[Seq[Any]]): Unit = {
     val want = expected.map(e => e.head +: e.tail.map {
       case o: Option[_] => o
       case v => Some(v)
@@ -130,6 +142,77 @@ class NullRuleSpec extends SparkTestBase {
       Seq(0, n), Seq(1, 10.0), Seq(2, 10.0), Seq(3, 10.0), Seq(4, 11.0),
       Seq(5, 11.0), Seq(6, 11.0), Seq(7, 15.0), Seq(8, 12.0), Seq(9, 14.0),
       Seq(10, 14.0))
+  }
+
+  // The order statistics: a null is not a value, so it leaves the sorted
+  // multiset and its size n; a frame or series with no value gives null.
+  // Series "b" of `withEmpty` holds no value.
+
+  test("rollingQuantile: a null adds no value; a frame with no value is null") {
+    check(Stats.rollingQuantile(withEmpty, "ts", "value", key, window = 2,
+        p = 0.9), "rolling_p90_value")(
+      Seq(0, n), Seq(1, 10.0), Seq(2, 13.0), Seq(3, 13.0), Seq(4, 11.0),
+      Seq(5, 11.0), Seq(6, n), Seq(7, 15.0), Seq(8, 15.0), Seq(9, 14.0),
+      Seq(10, 16.0), Seq(20, n), Seq(21, n))
+  }
+
+  test("hampel: a null keeps its row null; a frame with no value is null") {
+    // minute 8: frame [12, 14, 15], med 14, deviations [0, 1, 2], mad 1
+    check(Stats.hampel(withEmpty, "ts", "value", key, w = 1),
+        "value_hampel", "value_spike")(
+      Seq(0, n, false), Seq(1, 10.0, false), Seq(2, 13.0, false),
+      Seq(3, n, false), Seq(4, 11.0, false), Seq(5, n, false),
+      Seq(6, n, false), Seq(7, 15.0, false), Seq(8, 12.0, false),
+      Seq(9, 14.0, false), Seq(10, 16.0, false), Seq(20, n, n), Seq(21, n, n))
+  }
+
+  test("resample median: a null adds no value; a bucket with no value is null") {
+    check(TSDF(withEmpty, "ts", Seq("user_id")).resample("4 minutes", "median").df,
+        "value")(
+      Seq(0, 10.0), Seq(4, 11.0), Seq(8, 14.0), Seq(20, n))
+  }
+
+  // series "a" holds 7 values: sorted [10, 11, 12, 13, 14, 15, 16]
+
+  test("quantiles: ranks count values only; a series with no value is null") {
+    // ranks ⌈0.25·7⌉ = 2, ⌈0.5·7⌉ = 4, ⌈0.9·7⌉ = 7
+    checkSeries(Stats.quantiles(withEmpty, "value", key, Seq(0.25, 0.5, 0.9)),
+        "p25", "p50", "p90")(
+      Seq("a", 11.0, 13.0, 16.0), Seq("b", n, n, n))
+  }
+
+  test("winsorize: the bounds rank values only; a null stays null") {
+    // bounds at ranks 2 and 6: [11, 15]
+    check(Stats.winsorize(withEmpty, "value", key, pLo = 0.25, pHi = 0.75),
+        "value_w")(
+      Seq(0, n), Seq(1, 11.0), Seq(2, 13.0), Seq(3, n), Seq(4, 11.0),
+      Seq(5, n), Seq(6, n), Seq(7, 15.0), Seq(8, 12.0), Seq(9, 14.0),
+      Seq(10, 15.0), Seq(20, n), Seq(21, n))
+  }
+
+  test("robustScale: the quartiles rank values only") {
+    // median 13, quartiles 11 and 15: IQR 4
+    check(Stats.robustScale(withEmpty, "value", key), "value_robust")(
+      Seq(0, n), Seq(1, -0.75), Seq(2, 0.0), Seq(3, n), Seq(4, -0.5),
+      Seq(5, n), Seq(6, n), Seq(7, 0.5), Seq(8, -0.25), Seq(9, 0.25),
+      Seq(10, 0.75), Seq(20, n), Seq(21, n))
+  }
+
+  test("robustAnomalies: n, the median and the MAD count values only") {
+    // median 13; deviations [0, 1, 1, 2, 2, 3, 3], MAD 2; 10 and 16 lie
+    // more than 1·MAD away
+    checkSeries(Stats.robustAnomalies(withEmpty, "value", key, k = 1.0),
+        "n", "med", "mad", "n_anomalies")(
+      Seq("a", 7L, 13.0, 2.0, 2L), Seq("b", 0L, n, n, 0L))
+  }
+
+  test("theilSen: a point with a null y is no point") {
+    // 7 points, 21 pairwise slopes; the 11th smallest is (15 − 13)/(7 − 2)
+    val xy = withEmpty.withColumn("x",
+      ((col("ts").cast("long") - base / 1000L) / 60L).cast("long"))
+    checkSeries(graft.pipeline.Regression.theilSen(xy, key, col("x"),
+        col("value"), col("x")), "n_pairs", "slope")(
+      Seq("a", 21L, 2.0 / 5.0))
   }
 
   test("thresholdCrossings: neither a null row nor the row after it crosses") {
