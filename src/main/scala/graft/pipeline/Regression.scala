@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
+import graft.functions.OrderStat
+
 /** Grouped multivariate least squares — the ml-lite "fit a plane per
   * group" pass (per-entity trend + seasonality coefficients, pricing
   * curves, per-source quality drift) without any ML-library dependency
@@ -79,10 +81,11 @@ object Regression {
     *
     * Determinism: x and y are exact integers (micros / cents contract),
     * each slope is ONE correctly-rounded IEEE division, and the estimator
-    * is an exact SELECTION — the ⌈m/2⌉-th smallest under the total order
-    * (slope, tie_i, tie_j) — so equal slopes cannot make the answer
-    * engine-dependent. Equal-x pairs are excluded (slope undefined), the
-    * standard convention.
+    * is an exact SELECTION — the [[graft.functions.OrderStat]] median of
+    * the m slopes, ranked under the total order (slope, tie_i, tie_j) — so
+    * equal slopes cannot make the answer engine-dependent. A point with a
+    * null x or y is no point. Equal-x pairs are excluded (slope
+    * undefined), the standard convention.
     *
     * Scale: O(n²) pairs per group BY CONSTRUCTION — run it on bounded
     * anchor groups or pre-aggregated series (hourly rollups), the
@@ -111,8 +114,7 @@ object Regression {
       .withColumn("__m", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(groupCols.map(col): _*)))
-      .filter(col("__rn") ===
-        call_function("div", col("__m") + 1L, lit(2L))) // integer ⌈m/2⌉
+      .filter(col("__rn") === OrderStat.rank(lit(0.5), col("__m")))
       .select(groupCols.map(col) ++ Seq(col("__m").alias("n_pairs"),
         col("__s").alias("slope")): _*)
   }

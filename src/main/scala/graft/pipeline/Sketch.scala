@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.OrderStat
+
 /** Deterministic cardinality sketches.
   *
   * KMV (k-minimum-values): keep the k smallest distinct hash values of a
@@ -313,11 +315,12 @@ object Sketch {
   }
 
   /** Read quantile estimates from a [[histogram]] sketch: for each q, the
-    * UPPER edge of the first bin whose cumulative count reaches
-    * rank = ceil(q·n) — a deterministic overestimate within one bin width
-    * of the true quantile. All rank arithmetic is integer except the
-    * ceil(q·n) product and the final edge expression, each a fixed
-    * sequence of IEEE ops on exact inputs (engine-bit-identical).
+    * UPPER edge of the first bin whose cumulative count reaches the
+    * [[graft.functions.OrderStat]] rank of q — a deterministic overestimate
+    * within one bin width of the true quantile. All rank arithmetic is
+    * integer except the rank's q·n product and the final edge expression,
+    * each a fixed sequence of IEEE ops on exact inputs
+    * (engine-bit-identical).
     * Output per group × q: group…, q, bin, n, q_est. */
   def histQuantiles(hist: DataFrame, groupCols: Seq[String], lo: Double,
       hi: Double, nBins: Int, qs: Seq[Double]): DataFrame = {
@@ -332,7 +335,7 @@ object Sketch {
       .withColumn("__cum", sum(col("cnt")).over(wCum))
       .withColumn("__n", sum(col("cnt")).over(wTot))
     val probe = cum.withColumn("q", explode(array(qs.map(lit): _*)))
-      .filter(col("__cum") >= ceil(col("q") * col("__n")).cast(LongType))
+      .filter(col("__cum") >= OrderStat.rank(col("q"), col("__n")))
     probe.groupBy(gc :+ col("q"): _*)
       .agg(min(col("bin")).alias("bin"), max(col("__n")).alias("n"))
       .withColumn("q_est", lit(lo) + (col("bin") + 1).cast(DoubleType) * lit(w))
@@ -377,7 +380,7 @@ object Sketch {
     * that replaces a full global sort at 100 TB: pass 1 builds the
     * [[histogram]] (map-side-combinable; its ≤ nBins rows collect to the
     * driver as a bounded literal, same discipline as the ANN codebooks)
-    * and locates the bin holding rank ceil(q·n); pass 2 counts the target
+    * and locates the bin holding q's rank; pass 2 counts the target
     * bin's rows PER DISTINCT CENTS VALUE (a map-side-combinable
     * count aggregate — no per-row ranking anywhere), then a prefix sum
     * over the ≤ distinct-cents aggregate rows finds the value whose
@@ -387,11 +390,12 @@ object Sketch {
     * many rows share it; pass-2 volume is the target bin's distinct-value
     * count, ≤ min(bin rows, value resolution). Values quantize to scaled
     * longs, so the answer is value-exact and tie-order-blind (equal cents
-    * rank to the same cents). Lower-rank convention: rank r = ceil(q·n),
-    * 1-based ascending.
+    * rank to the same cents). The rank is the [[graft.functions.OrderStat]]
+    * rank over the n clean values.
     *
     * Output one row per q: (q, rank, n, cents, value) — `value` is
-    * cents/scale, one exact IEEE division. */
+    * cents/scale, one exact IEEE division. An input with no clean value
+    * (n = 0) has no value at any rank and returns no rows. */
   def exactQuantiles2Pass(df: DataFrame, valueCol: Column, qs: Seq[Double],
       lo: Double, hi: Double, nBins: Int, scale: Long = 100L): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
@@ -412,7 +416,7 @@ object Sketch {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
     val n = hist.map(_._2).sum
     val targets = qs.map { q =>
-      val r = math.ceil(q * n).toLong
+      val r = OrderStat.rank(q, n)
       var cum = 0L
       val (bin, before) = hist.collectFirst {
         case (b, c) if { cum += c; cum >= r } => (b, cum - c)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-import graft.functions.Recurrence
+import graft.functions.{OrderStat, Recurrence}
 import graft.intervals.DisjointSweep
 import graft.tsdf.Resample
 
@@ -444,11 +444,12 @@ object StreamingTSDF {
 
   /** Streaming rolling median over the trailing `window` observations per
     * series — bounded state (window−1 slots per series), the streaming
-    * twin of [[graft.tsdf.Stats.rollingMedian]] (same lower-median rank on
-    * the same frame multiset, so bit-identical on the same data; asserted
-    * differentially). A null value takes a frame slot; a frame with no
-    * value has a null median. (The batch side keeps its bounded rows frame
-    * for the `chunkRows` hot-series path, so this step is its own.) */
+    * twin of [[graft.tsdf.Stats.rollingMedian]] (the same [[OrderStat]]
+    * median of the same frame multiset, so bit-identical on the same data;
+    * asserted differentially). A null value takes a frame slot; a frame
+    * with no value has a null median. (The batch side keeps its bounded
+    * rows frame for the `chunkRows` hot-series path, so this step is its
+    * own.) */
   def rollingMedian(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, window: Int,
       stateTtl: Option[String] = None): DataFrame = {
@@ -457,8 +458,7 @@ object StreamingTSDF {
         (String, Long, Option[Double], Option[Double])](
         df, tsCol, seriesCols, stateTtl, doubleValue(valueCol)) { (key, cur, e) =>
       val recent = cur.fold(Vector.empty[Option[Double]])(_.recent.toVector) :+ e.value
-      val fs = recent.takeRight(window).flatten.sorted
-      val med = Option.when(fs.nonEmpty)(fs(math.max(1, math.ceil(fs.size / 2.0).toInt) - 1))
+      val med = OrderStat.ofSorted(recent.takeRight(window).flatten.sorted, 0.5)
       (Some(RollMedState(recent.takeRight(window - 1), e.tsUs)),
         Some((key, e.tsUs, e.value, med)))
     }, df, tsCol, seriesCols, valueCol, s"rolling_median_$valueCol")

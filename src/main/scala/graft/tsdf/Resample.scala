@@ -3,6 +3,8 @@ package graft.tsdf
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.OrderStat
+
 /** Tumbling-bucket resampling (downsample) and dense-spine upsampling.
   *
   * Semantics mirror /root/reference/python/tempo/resample.py:114-253:
@@ -74,20 +76,12 @@ object Resample {
           .select((series.map(col) :+ col("__bucket").alias(tsdf.tsCol)) ++
             metrics.map(m => col("__c").getField(m).alias(m)): _*)
       case Median =>
-        // exact lower median (the rank convention of Stats.quantiles /
-        // rollingMedian): the bucket's values collect, sort, and index —
-        // a pure function of the bucket multiset, engine-exact with no
-        // sketch (percentile_approx would not replay in another engine).
+        // the OrderStat median of the bucket's values, engine-exact with
+        // no sketch (percentile_approx would not replay in another engine).
         // Memory is bounded by the largest single bucket, the same bound
         // resample itself implies.
-        val aggs = metrics.map { c =>
-          val arr = array_sort(collect_list(col(c)))
-          // collect_list drops nulls; an all-null bucket yields an empty
-          // array, guarded to null (ANSI element_at would throw on it)
-          when(size(arr) > 0, element_at(arr,
-            ceil(size(arr) / 2.0).cast(org.apache.spark.sql.types.IntegerType)))
-            .alias(c)
-        }
+        val aggs = metrics.map(c =>
+          OrderStat.ofFrame(collect_list(col(c)), 0.5).alias(c))
         grouped
           .agg(aggs.head, aggs.tail: _*)
           .select((series.map(col) :+ col("__bucket").alias(tsdf.tsCol)) ++

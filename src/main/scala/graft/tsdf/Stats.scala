@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.Recurrence
+import graft.functions.{OrderStat, Recurrence}
 
 /** Rolling, grouped and derived statistics over TSDFs.
   * Reference: /root/reference/python/tempo/tsdf.py:1000-1616. */
@@ -244,36 +244,27 @@ object Stats {
         col("__e.n_pairs").alias("n_pairs"), col("__e.ccf").alias("ccf")): _*)
   }
 
-  /** Exact per-series quantiles by rank arithmetic: q_p = the value at rank
-    * max(1, ceil(p·n)) in the value-sorted series — the "lower"
-    * interpolation convention, a pure function of the value multiset, so
-    * the result is deterministic under duplicate values and engine-exact
-    * (unlike `approx_percentile`'s sketch). One window pass + one aggregate
-    * on the same series exchange; output one row per series with a `p<NN>`
-    * column per probability. */
+  /** Exact per-series quantiles: for each p, the [[OrderStat]] quantile
+    * of the series' values (engine-exact, unlike `approx_percentile`'s
+    * sketch). One window pass + one aggregate on the same series exchange;
+    * output one row per series with a `p<NN>` column per probability. */
   def quantiles(df: org.apache.spark.sql.DataFrame, valueCol: String,
       seriesCols: Seq[String], probs: Seq[Double]): org.apache.spark.sql.DataFrame = {
     require(probs.nonEmpty && probs.forall(p => p > 0 && p <= 1),
       "probs must be in (0, 1]")
-    val w = Window.partitionBy(seriesCols.map(col): _*).orderBy(col(valueCol))
-    val wAll = Window.partitionBy(seriesCols.map(col): _*)
-    val ranked = df
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("__n", count(lit(1)).over(wAll))
-    val aggs = probs.map { p =>
-      val target = greatest(lit(1L), ceil(lit(p) * col("__n")).cast(LongType))
-      max(when(col("__rn") === target, col(valueCol)))
-        .alias("p" + math.round(p * 100).toInt)
-    }
-    ranked.groupBy(seriesCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    val sc = seriesCols.map(col)
+    val aggs = probs.map(p => OrderStat.atRank(col(valueCol), p)
+      .alias("p" + math.round(p * 100).toInt))
+    OrderStat.withRanks(df, sc, col(valueCol))
+      .groupBy(sc: _*).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Per-series winsorization: clip values to the [pLo, pHi] exact
     * quantiles of their own series — the robust tail-taming step before
     * scale-sensitive featurization (unlike dropping outliers, row count
-    * and alignment are preserved). Quantiles use [[quantiles]]' "lower"
-    * rank convention, so the clip bounds are members of the value multiset
-    * and the output is engine-exact (clipping selects, never computes).
+    * and alignment are preserved). The bounds are [[OrderStat]] quantiles,
+    * members of the value multiset, so the output is engine-exact
+    * (clipping selects, never computes). A null stays null.
     *
     * Plan shape: ONE series exchange — the value-ordered rank window, the
     * whole-partition bound extraction, and the clip all reuse the same
@@ -281,26 +272,22 @@ object Stats {
   def winsorize(df: DataFrame, valueCol: String, seriesCols: Seq[String],
       pLo: Double = 0.05, pHi: Double = 0.95): DataFrame = {
     require(pLo > 0 && pHi <= 1 && pLo < pHi, "need 0 < pLo < pHi <= 1")
-    val w = Window.partitionBy(seriesCols.map(col): _*).orderBy(col(valueCol))
-    val wAll = Window.partitionBy(seriesCols.map(col): _*)
-    def bound(p: Double) = {
-      val target = greatest(lit(1L), ceil(lit(p) * col("__n")).cast(LongType))
-      max(when(col("__rn") === target, col(valueCol))).over(wAll)
-    }
-    df.withColumn("__rn", row_number().over(w))
-      .withColumn("__n", count(lit(1)).over(wAll))
+    val sc = seriesCols.map(col)
+    val x = col(valueCol)
+    def bound(p: Double) = OrderStat.atRank(x, p).over(Window.partitionBy(sc: _*))
+    OrderStat.withRanks(df, sc, x)
       .withColumn(s"${valueCol}_w",
-        least(greatest(col(valueCol), bound(pLo)), bound(pHi)))
+        when(x.isNotNull, least(greatest(x, bound(pLo)), bound(pHi))))
       .drop("__rn", "__n")
   }
 
   /** Robust per-series anomaly summary via median / MAD (median absolute
     * deviation): a point is anomalous when |x − median| > k·MAD — the
     * outlier-resistant cousin of the z-score (a few extreme points cannot
-    * drag the threshold the way they drag mean/stddev). Both medians use
-    * the same "lower" rank convention as [[quantiles]] (value at rank
-    * ceil(n/2) in sorted order) so the result is an exact function of the
-    * value multiset, engine-reproducible with no sketch.
+    * drag the threshold the way they drag mean/stddev). Both medians are
+    * [[OrderStat]] medians, so the result is an exact function of the
+    * value multiset, engine-reproducible with no sketch; `n` counts the
+    * values.
     *
     * Plan shape: ONE exchange on the series key — the value-ordered and
     * deviation-ordered windows and the final groupBy all reuse the same
@@ -310,21 +297,14 @@ object Stats {
       seriesCols: Seq[String], k: Double = 3.0): DataFrame = {
     val sc = seriesCols.map(col)
     val wAll = Window.partitionBy(sc: _*)
-    def lowerMedian(rnOf: Column, of: Column): Column =
-      max(when(rnOf === greatest(lit(1L),
-        ceil(lit(0.5) * count(lit(1)).over(wAll)).cast(LongType)), of))
-        .over(wAll)
-    val wVal = wAll.orderBy(col(valueCol))
-    val withMed = df
-      .withColumn("__rn", row_number().over(wVal))
-      .withColumn("__med", lowerMedian(col("__rn"), col(valueCol)))
+    val withMed = OrderStat.withRanks(df, sc, col(valueCol))
+      .withColumn("__med", OrderStat.atRank(col(valueCol), 0.5).over(wAll))
       .withColumn("__dev", abs(col(valueCol) - col("__med")))
-    val wDev = wAll.orderBy(col("__dev"))
-    val withMad = withMed
-      .withColumn("__rn2", row_number().over(wDev))
-      .withColumn("__mad", lowerMedian(col("__rn2"), col("__dev")))
+    val withMad = OrderStat.withRanks(withMed, sc, col("__dev"), "__rn2", "__n2")
+      .withColumn("__mad",
+        OrderStat.atRank(col("__dev"), 0.5, "__rn2", "__n2").over(wAll))
     withMad.groupBy(sc: _*).agg(
-      count(lit(1)).alias("n"),
+      count(col(valueCol)).alias("n"),
       max(col("__med")).alias("med"),
       max(col("__mad")).alias("mad"),
       sum(when(col("__dev") > lit(k) * col("__mad"), 1L).otherwise(0L))
@@ -598,10 +578,8 @@ object Stats {
   }
 
   /** Exact rolling median over the previous `window` rows of each series
-    * (frame = window−1 preceding .. current). The frame's values collect
-    * into an array, sort, and take the lower median — the rank convention
-    * of [[quantiles]], a pure function of the frame multiset, so the
-    * result is engine-exact with no sketch. O(w log w) per row: meant for
+    * (frame = window−1 preceding .. current): [[rollingQuantile]] at
+    * p = 0.5, on the uncast values. O(w log w) per row: meant for
     * the usual smoothing widths (tens..hundreds); for w in the millions
     * use [[robustAnomalies]]' whole-series median instead. One series
     * exchange; `tieCols` pin frame membership under timestamp ties.
@@ -613,15 +591,19 @@ object Stats {
       seriesCols: Seq[String], window: Int,
       tieCols: Seq[String] = Nil, chunkRows: Int = 0): DataFrame = {
     require(window >= 1, "window must be >= 1")
+    trailingQuantile(df, tsCol, col(valueCol), seriesCols, window, 0.5,
+      tieCols, chunkRows, s"rolling_median_$valueCol")
+  }
+
+  /** `outCol` = the [[OrderStat]] quantile p of `x` over the trailing
+    * `window` rows (a frame with no value gives null). */
+  private def trailingQuantile(df: DataFrame, tsCol: String, x: Column,
+      seriesCols: Seq[String], window: Int, p: Double, tieCols: Seq[String],
+      chunkRows: Int, outCol: String): DataFrame =
     withChunkedFrame(df, tsCol, seriesCols, tieCols,
       -(window - 1), 0, chunkRows) { (d, w) =>
-      val frame = array_sort(collect_list(col(valueCol)).over(w))
-      // try_: a frame with no value has a null median (element_at throws)
-      val med = try_element_at(frame,
-        greatest(lit(1), ceil(size(frame) / 2.0).cast(IntegerType)))
-      d.withColumn(s"rolling_median_$valueCol", med)
+      d.withColumn(outCol, OrderStat.ofFrame(collect_list(x).over(w), p))
     }
-  }
 
   /** Rolling trend correlation: Pearson r between the value and its
     * observation index over the trailing `window` rows of each series — a
@@ -1016,17 +998,6 @@ object Stats {
         col("total").cast(DoubleType) - col("phase_mean"))
   }
 
-  /** Robust scaling: (x − median) / IQR per series, the outlier-resistant
-    * cousin of the z-score (a handful of extremes cannot drag the location
-    * or the scale). Median and quartiles use [[quantiles]]' "lower" rank
-    * convention, so both are SELECTED members of the value multiset; the
-    * subtraction and division are two fixed IEEE operations on top —
-    * engine-exact with raw doubles, no quantization needed. Zero IQR
-    * (constant-ish series) yields null. Plan shape: ONE series exchange —
-    * the value-ordered rank window, the whole-partition quartile
-    * extraction, and the scaling reuse the same partitioning (no join
-    * back; same shape as [[winsorize]]). Output: input row +
-    * `<col>_robust`. */
   /** Exponentially-weighted mean + variance (RiskMetrics volatility) per
     * series: adds `ewm_mean_<col>` and `ewm_var_<col>` from the one-pass
     * recursion in [[graft.functions.Recurrence.ewmVar]] (two doubles of state;
@@ -1044,11 +1015,11 @@ object Stats {
   /** Hampel filter: replace a point with the window median when it sits
     * more than `k`·MAD from it — the standard robust despiker (unlike a
     * rolling-mean filter, a single spike cannot drag the reference level).
-    * Window = centered ±w rows; median and MAD are exact lower-median
-    * SELECTIONS from the frame multiset (same rank convention as
-    * [[quantiles]]), and the k·MAD comparison is fixed IEEE arithmetic —
-    * engine-exact on raw doubles. A zero MAD (≥ half the frame identical)
-    * flags only exact deviations... nothing: |x−med| > 0 would flag any
+    * Window = centered ±w rows; median and MAD are [[OrderStat]] medians,
+    * SELECTIONS from the frame multiset, and the k·MAD comparison is fixed
+    * IEEE arithmetic — engine-exact on raw doubles. A frame with no value
+    * has a null median: its row keeps its (null) value. With a zero MAD
+    * (≥ half the frame identical) |x−med| > k·MAD would flag any
     * deviation, so the guard requires mad > 0 (the conservative choice —
     * constant neighborhoods never despike). Cost O(w log w) per row
     * (documented smoothing-width contract, same as [[rollingMedian]]);
@@ -1059,15 +1030,12 @@ object Stats {
       tieCols: Seq[String] = Nil, chunkRows: Int = 0): DataFrame = {
     require(w >= 1, "w must be >= 1")
     val x = col(valueCol).cast(DoubleType)
-    def lowerMed(arr: Column): Column = {
-      val sorted = array_sort(arr)
-      element_at(sorted, ceil(size(sorted) / 2.0).cast(IntegerType))
-    }
     withChunkedFrame(df, tsCol, seriesCols, tieCols, -w, w, chunkRows) {
       (d, spec) =>
       val staged = d.withColumn("__fr", collect_list(x).over(spec))
-      val med = lowerMed(col("__fr"))
-      val mad = lowerMed(transform(col("__fr"), e => abs(e - col("__med"))))
+      val med = OrderStat.ofFrame(col("__fr"), 0.5)
+      val mad = OrderStat.ofFrame(
+        transform(col("__fr"), e => abs(e - col("__med"))), 0.5)
       staged
         .withColumn("__med", med)
         .withColumn("__mad", mad)
@@ -1079,39 +1047,37 @@ object Stats {
     }
   }
 
-  /** Exact trailing-window quantile: the value at rank
-    * max(1, ⌈p·n⌉) of the sorted trailing `window`-row frame — the same
-    * "lower" rank convention as [[quantiles]], generalized from
-    * [[rollingMedian]] to any p. SELECTION from the frame multiset, so raw
-    * doubles replay engine-exact; O(w log w) per row (smoothing-width
-    * contract); ONE series exchange. Adds `rolling_p<pp>_<col>`. */
+  /** Exact trailing-window quantile: the [[OrderStat]] quantile p of the
+    * trailing `window`-row frame's values, cast to double (a frame with no
+    * value gives null). SELECTION from the frame multiset, so raw doubles
+    * replay engine-exact; O(w log w) per row (smoothing-width contract);
+    * ONE series exchange. Adds `rolling_p<pp>_<col>`. */
   def rollingQuantile(df: DataFrame, tsCol: String, valueCol: String,
       seriesCols: Seq[String], window: Int, p: Double,
       tieCols: Seq[String] = Nil, chunkRows: Int = 0): DataFrame = {
     require(window >= 1, "window must be >= 1")
     require(p > 0 && p <= 1, "p must be in (0, 1]")
-    withChunkedFrame(df, tsCol, seriesCols, tieCols,
-      -(window - 1), 0, chunkRows) { (d, spec) =>
-      val arr = array_sort(collect_list(col(valueCol).cast(DoubleType)).over(spec))
-      val target = greatest(lit(1),
-        ceil(lit(p) * size(arr)).cast(IntegerType))
-      d.withColumn(
-        s"rolling_p${math.round(p * 100)}_$valueCol", element_at(arr, target))
-    }
+    trailingQuantile(df, tsCol, col(valueCol).cast(DoubleType), seriesCols,
+      window, p, tieCols, chunkRows, s"rolling_p${math.round(p * 100)}_$valueCol")
   }
 
+  /** Robust scaling: (x − median) / IQR per series, the outlier-resistant
+    * cousin of the z-score (a handful of extremes cannot drag the location
+    * or the scale). Median and quartiles are [[OrderStat]] quantiles,
+    * SELECTED members of the value multiset; the subtraction and division
+    * are two fixed IEEE operations on top — engine-exact with raw doubles,
+    * no quantization needed. Zero IQR (constant-ish series) yields null.
+    * Plan shape: ONE series exchange — the value-ordered rank window, the
+    * whole-partition quartile extraction, and the scaling reuse the same
+    * partitioning (no join back; same shape as [[winsorize]]). Output:
+    * input row + `<col>_robust`. */
   def robustScale(df: DataFrame, valueCol: String,
       seriesCols: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(seriesCols.map(col): _*).orderBy(col(valueCol))
-    val wAll = Window.partitionBy(seriesCols.map(col): _*)
-    def q(p: Double) = {
-      val target = greatest(lit(1L), ceil(lit(p) * col("__n")).cast(LongType))
-      max(when(col("__rn") === target, col(valueCol).cast(DoubleType)))
-        .over(wAll)
-    }
+    val sc = seriesCols.map(col)
+    def q(p: Double) = OrderStat.atRank(col(valueCol).cast(DoubleType), p)
+      .over(Window.partitionBy(sc: _*))
     val iqr = q(0.75) - q(0.25)
-    df.withColumn("__rn", row_number().over(w))
-      .withColumn("__n", count(lit(1)).over(wAll))
+    OrderStat.withRanks(df, sc, col(valueCol))
       .withColumn(s"${valueCol}_robust",
         when(iqr =!= 0.0,
           (col(valueCol).cast(DoubleType) - q(0.5)) / iqr))

@@ -114,12 +114,25 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     case _ => a == b
   }
 
+  /** Bit-for-bit: doubles (also inside arrays and structs) compare by
+    * boxed `Double.equals`, so NaN equals NaN and −0.0 is not 0.0. */
+  private def exactEq(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Double, y: Double) => java.lang.Double.valueOf(x).equals(y)
+    case (x: Seq[_], y: Seq[_]) =>
+      x.size == y.size && x.zip(y).forall { case (p, q) => exactEq(p, q) }
+    case _ => a == b
+  }
+
   private def sortKey(vals: Seq[Any]): String = vals.map {
     case d: Double => f"$d%.6f"
     case other => String.valueOf(other)
   }.mkString("")
 
-  def assertDfEquality(actual: DataFrame, expected: DataFrame): Unit = {
+  /** Equal schemas and equal row multisets; doubles within [[valEq]]'s
+    * tolerance, or bit for bit ([[exactEq]]) with `exact`. */
+  def assertDfEquality(actual: DataFrame, expected: DataFrame,
+      exact: Boolean = false): Unit = {
+    val eq: (Any, Any) => Boolean = if (exact) exactEq else valEq
     val aSchema = actual.schema.fields
       .map(f => f.name.toLowerCase -> normalize(f.dataType)).sortBy(_._1).toSeq
     val eSchema = expected.schema.fields
@@ -135,7 +148,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     assert(aRows.size == eRows.size,
       s"row counts differ: actual ${aRows.size} vs expected ${eRows.size}")
     aRows.zip(eRows).zipWithIndex.foreach { case ((ar, er), i) =>
-      val ok = ar.size == er.size && ar.zip(er).forall { case (a, b) => valEq(a, b) }
+      val ok = ar.size == er.size && ar.zip(er).forall { case (a, b) => eq(a, b) }
       assert(ok, s"row $i differs (columns $cols):\n  actual:   $ar\n  expected: $er")
     }
   }

@@ -15,8 +15,9 @@ import graft.tsdf.TSDF
   * its batch twin on arbitrary series, not just the hand-built examples.
   *
   * Values are integer-valued doubles so every sum is exact in IEEE doubles
-  * regardless of partial-aggregation order — equality is bit-exact, with no
-  * tolerance to hide a real defect behind. Timestamps are distinct within a
+  * regardless of partial-aggregation order — equality is bit-exact
+  * (`assertDfEquality(..., exact = true)`), with no tolerance to hide a
+  * real defect behind. Timestamps are distinct within a
   * series, matching the operators' documented granularity contracts.
   */
 class StreamingBatchDifferentialSpec extends SparkTestBase {
@@ -103,7 +104,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         .makeDisjoint().df
         .select(col("user_id"), unix_micros(col("start_ts")).alias("start_us"),
           unix_micros(col("end_ts")).alias("end_us"), col("value"))
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -158,7 +159,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         .select(col("user_id"), unix_micros(col("start_ts")).alias("start_us"),
           unix_micros(col("end_ts")).alias("end_us"),
           col("value"), col("score"))
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -194,7 +195,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
       val batchSketch = graft.pipeline.Sketch.kmvDistinct(
         all.toSeq.toDF("src", "item"), Seq("src"), col("item"), 16,
         wide = wide)
-      withClue(s"wide=$wide: ") { assertDfEquality(folded, batchSketch) }
+      withClue(s"wide=$wide: ") { assertDfEquality(folded, batchSketch, exact = true) }
     }
   }
 
@@ -231,7 +232,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
           subset, col("item"), width = 64, depth = 3, wide = wide)
         withClue(s"wide=$wide src=$srcv: ") {
           assertDfEquality(
-            rolled.filter(col("src") === srcv).drop("src"), batchGrid)
+            rolled.filter(col("src") === srcv).drop("src"), batchGrid, exact = true)
         }
       }
     }
@@ -272,7 +273,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
           subset, col("item"), mBits = 31 * 40, depth = 3, wide = wide)
         withClue(s"wide=$wide src=$srcv: ") {
           assertDfEquality(
-            rolled.filter(col("src") === srcv).drop("src"), batchFilter)
+            rolled.filter(col("src") === srcv).drop("src"), batchFilter, exact = true)
         }
       }
     }
@@ -313,7 +314,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
       rows.toDF("user_id", "ts", "event_id", "event_type"),
       "ts", Seq("user_id"), "event_type", tieCols = Seq("event_id"))
       .select(col("from_type"), col("to_type"), col("n"))
-    assertDfEquality(rolled, batch)
+    assertDfEquality(rolled, batch, exact = true)
   }
 
   test("property: streaming kmDeltas fold to the exact batch grid and " +
@@ -341,7 +342,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val streamed = graft.pipeline.Analytics.kaplanMeierFromGrid(grid, Seq("g"))
     val batchKm = graft.pipeline.Analytics.kaplanMeier(
       all.toSeq.toDF("g", "dur", "ev"), Seq("g"), col("dur"), col("ev"))
-    assertDfEquality(streamed, batchKm)
+    assertDfEquality(streamed, batchKm, exact = true)
   }
 
   test("property: streaming noveltyOwnership scores equal batch " +
@@ -377,7 +378,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
       spark.table("novelty_diff_sink"), "doc_id")
     val batchNov = graft.pipeline.TextAnalysis.winnowNovelty(
       docs.toDF("doc_id", "text"), "text", "doc_id", k = 5, w = 4)
-    assertDfEquality(streamed, batchNov)
+    assertDfEquality(streamed, batchNov, exact = true)
   }
 
   test("noveltyOwnership OUT-OF-ORDER ingestion: streamed scores equal the " +
@@ -510,7 +511,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val streamed = graft.pipeline.Analytics.kaplanMeierFromGrid(grid, Seq("g"))
     val batchKm = graft.pipeline.Analytics.kaplanMeier(
       all.toSeq.toDF("g", "dur", "ev"), Seq("g"), col("dur"), col("ev"))
-    assertDfEquality(streamed, batchKm)
+    assertDfEquality(streamed, batchKm, exact = true)
   }
 
   test("property: streaming statsDeltas fold to the exact batch " +
@@ -539,7 +540,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val batch = all.toSeq.toDF("g", "v").groupBy(col("g"))
       .agg(count(lit(1)).alias("n"), sum(col("v")).alias("s1"),
         sum(col("v") * col("v")).alias("s2"))
-    assertDfEquality(rolled, batch)
+    assertDfEquality(rolled, batch, exact = true)
   }
 
   test("property: streaming olsMomentDeltas fold to the exact batch OLS " +
@@ -576,7 +577,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val batchOls = graft.pipeline.Regression.groupOls2(
       all.toSeq.toDF("g", "x1", "x2", "y"), Seq("g"),
       col("x1"), col("x2"), col("y"))
-    assertDfEquality(streamed, batchOls)
+    assertDfEquality(streamed, batchOls, exact = true)
   }
 
   test("property: streaming pairCountDeltas fold to the exact batch pair " +
@@ -603,7 +604,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
       .groupBy(col("w1"), col("w2")).agg(sum(col("cnt")).alias("n"))
     val batchCounts = all.toSeq.toDF("w1", "w2")
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).alias("n"))
-    assertDfEquality(rolled, batchCounts)
+    assertDfEquality(rolled, batchCounts, exact = true)
   }
 
   test("property: streaming sumDeltas fold to the exact batch grouped sums " +
@@ -630,7 +631,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
       .groupBy(col("src"), col("key")).agg(sum(col("s")).alias("s"))
     val batchSums = all.toSeq.toDF("src", "key", "v")
       .groupBy(col("src"), col("key")).agg(sum(col("v")).alias("s"))
-    assertDfEquality(rolled, batchSums)
+    assertDfEquality(rolled, batchSums, exact = true)
   }
 
   test("property: streaming gramDeltas sum-roll to the exact batch Gram " +
@@ -667,7 +668,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         col("n"), col("s"))
     val batchGram = graft.pipeline.Pca.gramMatrix(
       all.toSeq.toDF("vec"), col("vec"), dim)
-    assertDfEquality(rolled, batchGram)
+    assertDfEquality(rolled, batchGram, exact = true)
   }
 
   test("property: patternDfa deltas sum to lazy-regex non-overlapping " +
@@ -755,7 +756,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
       val batch = TSDF(rows.toDF("user_id", "ts", "value"), "ts", Seq("user_id"))
         .resample("1 minute", "mean").df
         .filter(col("ts") < sentinel)
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -777,7 +778,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         "m", "volume", "value").df
         .filter(col("ts") < sentinel)
         .select("user_id", "ts", "vwap", "max_value")
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -797,7 +798,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
           col("ema_exact_value").alias("ema"))
       // same recursion, same IEEE op order: bit-identical, alpha need not be
       // exactly representable
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -818,7 +819,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
           col("holt_level_value").alias("lvl"), col("holt_trend_value").alias("trd"))
       // same recursion, same IEEE op order: bit-identical even with
       // non-binary alpha/beta
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -872,7 +873,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
       val cols = (Seq("user_id", "ts", "value") ++ outs).map(col)
       val expected = batch(rows.toDF("user_id", "ts", "value")).select(cols: _*)
       withClue(s"$name trial $trial: ") {
-        assertDfEquality(spark.table(sink).select(cols: _*), expected)
+        assertDfEquality(spark.table(sink).select(cols: _*), expected, exact = true)
       }
     }
   }
@@ -894,7 +895,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
           col("ewm_mean_value").alias("m"), col("ewm_var_value").alias("v"))
       // same recursion, same IEEE op order: bit-identical even with
       // non-binary alpha
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -912,7 +913,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         .rsi("value", n = 14).df
         .select(col("user_id"), col("ts"), col("value"),
           col("rsi_value").alias("r"))
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -932,7 +933,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         .select(col("user_id"), col("ts"), col("value"),
           col("macd_value").alias("m"), col("macd_signal_value").alias("s"),
           col("macd_hist_value").alias("h"))
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -951,7 +952,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         .select(col("user_id"), col("ts"), col("value"),
           col("peak_value").alias("pk"), col("drawdown_value").alias("dd"))
       // running max is order-independent: bit-identical on raw doubles
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -971,7 +972,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         "ts", "value", Seq("user_id"), threshold = 500.0)
         .select(col("user_id"), col("ts"), col("prev_ts"),
           col("prev_value"), col("value"), col("direction"))
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -991,7 +992,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         "ts", "value", Seq("user_id"), window = 5)
         .select(col("user_id"), col("ts"), col("value"),
           col("pct_k"), col("pct_d"))
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -1011,7 +1012,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         "ts", "value", Seq("user_id"), window = 5)
         .select(col("user_id"), col("ts"), col("value"),
           col("dc_upper"), col("dc_lower"), col("dc_mid"))
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -1032,7 +1033,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         alpha = 0.5, beta = 0.25, gamma = 0.5, m = 5)
         .select(col("user_id"), col("ts"), col("value"),
           col("hw_level"), col("hw_trend"), col("hw_seasonal"))
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -1057,7 +1058,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
           col("kalman_gain_value").alias("k"))
       // same recursion, same IEEE op order: bit-identical even with
       // non-binary q/r
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -1077,7 +1078,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         .select(col("user_id"), col("ts"), col("value"),
           col("rolling_median_value").alias("med"))
       // identical frame multisets and rank convention: bit-identical
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -1097,7 +1098,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         "1 minute", "value")
         .select("user_id", "bucket_ts", "ts", "value")
         .filter(col("bucket_ts") < sentinel)
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -1117,7 +1118,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         .select(col("user_id"), col("ts"), col("value").cast("long"),
           col("cusum_hi"), col("cusum_lo"), col("alert"))
       // exact integer arithmetic on both sides: bit-identical always
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -1134,7 +1135,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         rows.toDF("user_id", "ts", "value"), "ts", Seq("user_id"),
         minGapSeconds = 30)
         .select("user_id", "gap_start", "gap_end", "gap_seconds")
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -1156,7 +1157,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         rows.toDF("user_id", "ts", "value"), "ts", Seq("user_id"), gapSeconds = 145)
         .select(col("user_id"), col("session_start"), col("session_end"), col("n_events"))
         .filter(col("session_start") < sentinel)
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -1191,7 +1192,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
           col("r.ts") >= col("l.ts") - expr("INTERVAL 5 minutes"), "inner")
         .select(col("l.user_id"), col("l.ts"), col("l.value"),
           col("r.ts").alias("right_ts"), col("r.rv").alias("right_rv"))
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -1232,7 +1233,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
       queryRows.map(r => (r._1, r._3)).toDF("vec_id", "v"), corpus,
       "vec_id", "v", k = 2, centroids, nprobe = 1, cbs)
       .select(col("query_id"), col("neighbor_id"), col("adc_dist"))
-    assertDfEquality(streamed, batch)
+    assertDfEquality(streamed, batch, exact = true)
   }
 
   test("property: streaming interpolate equals batch resample(floor)+interpolate") {
@@ -1251,7 +1252,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         .resample("1 minute", "floor")
         .interpolate(method, showInterpolated = true)
         .df.select("user_id", "ts", "value", "is_ts_interpolated")
-      withClue(s"trial $trial ($method): ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial ($method): ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -1294,7 +1295,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         "user_id", "ts", Seq("event_type"), tieCols = Seq("event_id"))
         .select(col("user_id"), col("valid_from").alias("ts"),
           col("event_type"))
-      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch) }
+      withClue(s"trial $trial: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -1338,7 +1339,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
         q.processAllAvailable()
       }
     })
-    assertDfEquality(multi, batchAnswer)
+    assertDfEquality(multi, batchAnswer, exact = true)
 
     // ONE batch in fully shuffled order: in-batch ties resolve to the
     // min id, so even arbitrary order matches batch when nothing is split
@@ -1346,7 +1347,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
       mem.addData(rnd.shuffle(ids.toList): _*)
       q.processAllAvailable()
     })
-    assertDfEquality(single, batchAnswer)
+    assertDfEquality(single, batchAnswer, exact = true)
   }
 
   test("fingerprintOwnership OUT-OF-ORDER ingestion: the folded sink equals " +

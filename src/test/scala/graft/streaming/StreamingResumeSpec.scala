@@ -131,11 +131,11 @@ class StreamingResumeSpec extends SparkTestBase {
   }
 
   /** One stateful twin on the per-series fold: its stream operator and
-    * its batch twin over the same (user_id, ts, value) frame, compared on
-    * `cols`. Each case runs in both harnesses — 4 micro-batches of one
-    * query, and 3 chunks with a full restart from the checkpoint between
-    * them — with a cross-batch late row per series that the stream must
-    * drop, against the batch twin over the on-time rows; and both again
+    * its batch twin over the same (user_id, ts, value) frame, compared bit
+    * for bit on `cols`. Each case runs in both harnesses — 4 micro-batches
+    * of one query, and 3 chunks with a full restart from the checkpoint
+    * between them — with a cross-batch late row per series that the stream
+    * must drop, against the batch twin over the on-time rows; and both again
     * on values of which about one in ten is null. `held` drops from the
     * batch twin's null-case output the rows the stream still holds when
     * the input ends (an append-mode difference of that operator). */
@@ -251,7 +251,8 @@ class StreamingResumeSpec extends SparkTestBase {
       val streamed = run(rows, nChunks, c.stream, true).select(c.cols.map(col): _*)
       val batch = c.batch(rows.toDF("user_id", "ts", "value"))
       assertDfEquality(streamed,
-        (if (nulls) c.held(batch) else batch).select(c.cols.map(col): _*))
+        (if (nulls) c.held(batch) else batch).select(c.cols.map(col): _*),
+        exact = true)
     }
     test(s"streaming ${c.op} over 4 micro-batches equals batch ${c.twin}") {
       check(c.chunkSeed, runChunkedStream, 4)
@@ -348,7 +349,7 @@ class StreamingResumeSpec extends SparkTestBase {
         .withColumn("start_us", unix_micros(col("start_ts")))
         .withColumn("end_us", unix_micros(col("end_ts")))
         .select(out.map(col): _*)
-      withClue(s"metrics $metrics: ") { assertDfEquality(streamed, batch) }
+      withClue(s"metrics $metrics: ") { assertDfEquality(streamed, batch, exact = true) }
     }
   }
 
@@ -368,7 +369,7 @@ class StreamingResumeSpec extends SparkTestBase {
       .asofJoin(TSDF(right(all), "ts", key)).df
       .select(col("user_id"), col("ts"), col("right_ts"), col("right_value"))
     assert(streamed.filter(col("right_ts").isNotNull).count() > 0)
-    assertDfEquality(streamed, batch)
+    assertDfEquality(streamed, batch, exact = true)
   }
 
   test("streaming asofJoin with null right values round-trips a checkpoint " +
@@ -390,7 +391,7 @@ class StreamingResumeSpec extends SparkTestBase {
       .select(Seq("user_id", "ts", "right_ts", "right_value", "right_score")
         .map(col): _*)
     assert(right(all).filter(col("value").isNull).count() > 0)
-    assertDfEquality(streamed, batch)
+    assertDfEquality(streamed, batch, exact = true)
   }
 
   test("streaming transitionDeltas state round-trips a checkpoint restart " +
@@ -405,7 +406,7 @@ class StreamingResumeSpec extends SparkTestBase {
     val batch = graft.pipeline.Analytics.transitionMatrix(
         withAttr(rows.toDF("user_id", "ts", "value")), "ts", key, "event_type")
       .select(col("from_type"), col("to_type"), col("n"))
-    assertDfEquality(rolled, batch)
+    assertDfEquality(rolled, batch, exact = true)
   }
 
   test("streaming patternDfa state round-trips a checkpoint restart (file " +
@@ -488,7 +489,7 @@ class StreamingResumeSpec extends SparkTestBase {
         col("r.ts") >= col("l.ts") - expr("INTERVAL 5 minutes"), "inner")
       .select(col("l.user_id"), col("l.ts"), col("l.value"),
         col("r.ts").alias("right_ts"), col("r.rv").alias("right_rv"))
-    assertDfEquality(streamed, batch)
+    assertDfEquality(streamed, batch, exact = true)
   }
 
   test("streaming hll changelog max-rolls to the batch register file over " +
@@ -507,7 +508,7 @@ class StreamingResumeSpec extends SparkTestBase {
         rows.toDF("user_id", "ts", "value"), Seq("user_id"),
         col("value").cast("string"), wide = wide)
       // register changelog rollup == batch register file, bit-exact
-      withClue(s"wide=$wide: ") { assertDfEquality(rolled, batch) }
+      withClue(s"wide=$wide: ") { assertDfEquality(rolled, batch, exact = true) }
     }
   }
 
@@ -527,7 +528,7 @@ class StreamingResumeSpec extends SparkTestBase {
     val batch = graft.pipeline.Sketch.hllRegisters(
       rows.toDF("user_id", "ts", "value"), Seq("user_id"),
       col("value").cast("string"))
-    assertDfEquality(rolled, batch)
+    assertDfEquality(rolled, batch, exact = true)
   }
 
   test("streaming histogram deltas sum-roll to the batch histogram over 4 batches") {
@@ -543,7 +544,7 @@ class StreamingResumeSpec extends SparkTestBase {
     val batch = graft.pipeline.Sketch.histogram(
       rows.toDF("user_id", "ts", "value"), Seq("user_id"),
       col("value"), 0.0, 1024.0, 64)
-    assertDfEquality(rolled, batch)
+    assertDfEquality(rolled, batch, exact = true)
   }
 
   test("streaming dedup state survives micro-batch boundaries") {
